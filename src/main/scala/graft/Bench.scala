@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times the BASELINE.md headline queries on
   * `SPARK_GRAFT_SF_DIR` and emits one JSON line.
@@ -29,16 +28,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    QuietLogs.silenceKnownBoundedWindowWarning()
+    val spark = LocalSpark.session()
     // Quiet-window settle (round-19, verdict #2): the round-18 OFFICIAL
     // artifact caught a dirty measurement window — +0.2–0.7 s uniform
     // inflation across dozens of UNTOUCHED queries — while same-code

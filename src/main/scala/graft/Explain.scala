@@ -1,18 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-inspection utility: `runMain graft.Explain <query_name>...` prints
   * each op's formatted physical plan at sf0.1 — the feedback loop for the
   * scale review (missed broadcasts, extra exchanges, codegen breaks). */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    QuietLogs.silenceKnownBoundedWindowWarning()
+    val spark = LocalSpark.session()
     // SPARK_GRAFT_EXEC=1: materialize first and print the FINAL adaptive
     // plan — AQE stage reuse (ReusedExchange/ReusedQueryStage) only
     // appears after execution, so the static plan under-reports reuse

@@ -1,54 +1,67 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList}
 
 import org.apache.spark.sql.SparkSession
 
-/** Central eviction point for every per-JVM derived-artifact memo
-  * (round-20 advice: the memos had no eviction API, so a long-lived
-  * JVM serving many (session, dir) corpora accumulated checkpointed
-  * blocks and collected arrays unboundedly — only Graph's edge memo
-  * had [[graft.ops.Graph.evictCopurchaseEdges]]).
+/** A per-JVM memo of one derived artifact (a checkpointed frame, a
+  * collected dictionary, a built sketch) per corpus.
   *
-  * Every memo map registers itself at declaration via [[register]];
-  * all of them key on a tuple whose FIRST two elements are the session
-  * and the data directory (extra key params — evalSource, vocab cap,
-  * checkpoint mode — vary per memo), so one [[evict]] sweep drops
-  * every artifact a retiring corpus owns across all modules. Dropping
-  * a map entry unreferences the held frame/array; the ContextCleaner
-  * reclaims any checkpoint blocks once unreferenced (the
-  * evictCopurchaseEdges discipline). A module whose object has not
-  * been initialized yet simply has nothing registered — its maps are
-  * necessarily empty, so the sweep is trivially complete.
+  * Keys are tuples whose FIRST two elements are the session and the
+  * data directory; any further elements are the memo's extra
+  * parameters (evalSource, vocab cap, checkpoint mode). Each entry
+  * carries a stamp — the relation instance the artifact was built
+  * from, as returned by Schemas' relation cache — and a lookup whose
+  * stamp is not `eq` to the stored one rebuilds, so a corpus regen or
+  * a fixture overwrite misses naturally.
   *
-  * The harness never calls this (one displacement per corpus swap is
-  * bounded by the staleness check on relation identity); it exists for
-  * the corpus-churning-service deployment the scaladocs promise. */
-object MemoRegistry {
-  private val maps =
-    new java.util.concurrent.CopyOnWriteArrayList[ConcurrentHashMap[_ <: Product, _]]
+  * Check-then-put is deliberately unlocked: builds run Spark jobs and
+  * nest (one memo's build reads another memo), so no map lock may be
+  * held across one. Two racing callers may both build; builds are
+  * deterministic and the last write wins. A dropped entry only
+  * unreferences its artifact — the ContextCleaner reclaims any
+  * checkpoint blocks once nothing else holds the frame.
+  *
+  * Every memo registers with [[MemoRegistry]] when constructed. */
+final class Memo[K <: Product, V](val name: String) {
+  private val entries = new ConcurrentHashMap[K, (AnyRef, V)]()
+  MemoRegistry.memos.add(this)
 
-  /** Register a memo map (called once per map, at object init);
-    * returns the map so declarations wrap in place. */
-  private[graft] def register[K <: Product, V](
-      m: ConcurrentHashMap[K, V]): ConcurrentHashMap[K, V] = {
-    maps.add(m)
-    m
+  /** The artifact for `key` if it was built from `stamp`; otherwise
+    * `build` it, store it under `stamp` and return it. */
+  def apply(key: K, stamp: AnyRef)(build: => V): V = {
+    val cur = entries.get(key)
+    if (cur != null && (cur._1 eq stamp)) cur._2
+    else put(key, stamp, build)
   }
 
-  /** Number of registered maps — spec surface only. */
-  private[graft] def registeredCount: Int = maps.size()
+  /** Store `v` as built from `stamp`, replacing any entry; returns `v`. */
+  def put(key: K, stamp: AnyRef, v: V): V = {
+    entries.put(key, (stamp, v))
+    v
+  }
+
+  /** The stored artifact regardless of its stamp — spec surface only. */
+  private[graft] def peek(key: K): Option[V] = Option(entries.get(key)).map(_._2)
+
+  /** Drop every entry for (session, dir), whatever its extra params. */
+  def evict(spark: SparkSession, dir: String): Unit =
+    entries.keySet().removeIf(k =>
+      k.productElement(0) == spark && k.productElement(1) == dir)
+}
+
+/** Every [[Memo]] in the JVM, and the one eviction sweep over them.
+  *
+  * A long-lived JVM serving many (session, dir) corpora calls [[evict]]
+  * when it retires one; the benchmark's `corpus_churn` workload does so
+  * on every pass. A module whose object has not been initialized yet
+  * has registered nothing — its memos are necessarily empty, so the
+  * sweep is complete anyway. */
+object MemoRegistry {
+  private[graft] val memos = new CopyOnWriteArrayList[Memo[_ <: Product, _]]()
 
   /** Drop every memoized artifact for (session, dir) across every
     * registered memo, regardless of the memo's extra key params. */
-  def evict(spark: SparkSession, dir: String): Unit = {
-    maps.forEach { m =>
-      val it = m.keySet().iterator()
-      while (it.hasNext) {
-        val k = it.next()
-        if (k.productElement(0) == spark && k.productElement(1) == dir)
-          it.remove()
-      }
-    }
-  }
+  def evict(spark: SparkSession, dir: String): Unit =
+    memos.forEach(_.evict(spark, dir))
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Spot-bench scratch main (NOT wired into the harness): times the query
@@ -10,304 +9,15 @@ import org.apache.spark.sql.functions.col
   * 118-query bench wall clock. `runMain graft.Probe q1_pricing_summary …`
   * (optional first arg `sf=<dir>` overrides the data dir). */
 object Probe {
-  /** Candidate alternate forms under A/B timing — NOT part of the library
-    * surface; winners graduate into ops/ (with the measured numbers in
-    * their scaladoc) and losers are deleted, so this map is usually
-    * empty between tuning sessions. Key convention: `x_<op>_<variant>`,
-    * probed alongside the real op. Round-10 session: colagg split-branch,
-    * q3/q4/missing_rows shuffle_hash builds and hashed-token jaccard
-    * graduated, as were percent_of_total agg-broadcast and the q17
-    * broadcast-threshold gate; quantile window-rank (0.64 vs 0.61),
-    * q5 forced-SHJ (0.95 vs 0.74), q4 pre-agg (0.49 vs 0.41),
-    * missing_rows pre-distinct (0.33 vs 0.30) and percentile_disc
-    * grouping-sets phase-1 (1.01 vs 1.03 — Expand ~= Generate here)
-    * lost to the shipped forms. Round-18 session: the
-    * recon_stream_hash_diff decomposition (scan 0.07 / checksum-proj
-    * 0.25 / full 0.70 same-JVM) drove the native RowChecksumMd5
-    * expression (checksum-proj 0.25 -> 0.18) and the shuffle_hash
-    * reference hint (full 0.66 -> 0.42; broadcast's driver-side
-    * 148k-row HashedRelation build was the floor) -- both graduated, as
-    * did market_basket_lift's SHJ self-join (1.31 -> 1.14 min same-JVM);
-    * its repartition-by-k variant (1.09 min) was REJECTED after the
-    * plan audit: AQE does not reuse a REPARTITION_BY_COL stage across
-    * the single/tot branches, tripling the corpus scan+shuffle.
-    * Round-19 session (quiet box, q1 control 0.399 vs the 81.81 s
-    * battery's 0.388): q21 min/max EXISTS folding graduated (0.699 ->
-    * 0.454 min same-JVM; the old (orderkey,supp) DISTINCT alone
-    * measured 0.441 -- the bottleneck the fold deletes), scorecard
-    * suppkey pre-agg graduated on at-scale posture (0.554 -> 0.531,
-    * join floor 0.350 of the total so the local delta is small).
-    * REJECTED with numbers: scorecard narrow-payload epoch-day
-    * projection (0.626 -- the per-row datediff-to-epoch cost exceeds
-    * the shuffle-width saving); market_basket row-local HOF pair
-    * generator off one collect_set basket frame (1.431 vs 0.987 --
-    * interpreted transform/flatten dominates; the basket-set agg
-    * alone already costs 0.752, within noise of the 0.748 distinct
-    * frame, so NO generator can beat the join by much); market_basket
-    * int-encoded brands (1.110 vs 1.068 -- wash). market_basket's
-    * distinct+join floor is hereby ACCEPTED and documented in
-    * BASELINE.md (verdict #5 closure). Post-battery attribution A/Bs
-    * (quiet, q1 0.385-0.389): the r19 battery's text_js_divergence
-    * +0.28 was run-order/ambient, NOT the new tail -- same-JVM the
-    * shipped nonnegative aggregate tail reads 0.838 vs the old signed
-    * tail's 0.961 and the frame probe's 0.912, and a per-row
-    * nonnegative candidate (verdict (c) literal, long sums) read
-    * 0.987 and was NOT graduated; dedup_audit's battery 1.75 (vs r18
-    * battery 1.06) reproduced on BOTH the r18 worktree and the r19
-    * tree same-JVM (mins 1.17/1.56, medians 1.72/1.61, plan shapes
-    * diffed IDENTICAL) -- a wide-variance allocation-heavy row, not a
-    * regression. Late-session second q21 step GRADUATED: both
-    * fixpoints + the late count fold into ONE conditional-aggregate
-    * groupBy over the single li(join)ordF pass (every qualifying key
-    * is an F order, so the full supplier set is visible there) --
-    * 0.551 -> 0.471 same-JVM (q1 0.464 ambient-matched), deleting the
-    * full-lineitem aggregation and the semi join.
-    * Round-20 session (the planning-cost round): a new `plan:<name>`
-    * probe mode times analysis/optimization/physical planning with a
-    * build/opt/phys phase split and exposed a NEW cost class —
-    * driver-side Catalyst time. text_js_divergence: explode floor
-    * 0.16, op 1.20, of which 0.74–1.2 s was ~40 eager withColumn
-    * analysis passes (~15 ms fixed analyzer cost each). GRADUATED:
-    * the native Log2MicroLattice expression (whole lattice chain =
-    * ONE plan node) + the gated single-partition window small path —
-    * op 1.20 -> 0.38-0.45 (q1 0.50). REJECTED on numbers: batched
-    * withColumns alone (0.75 — pass count, not pass size, dominates),
-    * localCheckpoint plan-cut of the 620-row base (no net win once
-    * planning was cheap), cartesian ng attach (the 1-row branch
-    * re-ran the explode subtree and UnknownPartitioning re-inserted
-    * downstream exchanges). graph_components decomposition: edge
-    * filter 0.04 / cc edge build 0.24 / rest = per-round exchanges on
-    * a 6k-node graph whose checkpointed label frame has NO stats, so
-    * AQE never broadcasts. GRADUATED: CcBroadcastEdgeGate measured
-    * off the materialized blocks (2.08 -> 1.77; dirtier window
-    * 3.96 -> 2.00). REJECTED: two-hop rounds (2.19), pointer-jump
-    * (2.74), skip-union-distinct (3.71 — the un-exchanged union
-    * checkpoints into 2x tiny partitions). graph_pagerank variance:
-    * GRADUATED the measured-cap primitive-long contribution path
-    * (min 6.61 -> 5.2-5.9, median 7.65 -> 6.06; the decimal spelling
-    * allocated BigDecimals for 2.4M rows x 8 rounds — x_pr_dec
-    * rebuilt the old spelling for the same-JVM A/B). BPE family:
-    * phase split showed bpe_segment construction 0.36 s was
-    * RE-TRAINING per call — GRADUATED the per-relation-identity memo
-    * of the trained merges (merges 0.28 -> 0.10, segment 0.88 ->
-    * 0.73). price_index decomposition: pm collapse 0.81 / +window
-    * 0.35 / full 1.36 — GRADUATED repartition(p) (one exchange
-    * satisfies groupBy AND window: frame 1.08 -> 0.66, op 1.36 ->
-    * 0.89-0.96) and the per-row long fast path for its two half-away
-    * divisions (no caps job; oversized rows take the 128-bit branch).
-    * Round-20 RESUME session (different box-day; same code 84.33 →
-    * 101.59 s with q1 0.376/0.358, so every decision was a same-JVM
-    * A/B): pagerank x_pr_oldsetup (ow-on-edges + per-call edge
-    * checkpoint, rebuilt verbatim) 7.096 vs node-side-ow 6.854; the
-    * checkpoint-cadence ladder x_pr_ck2/ck4/ck8 read 4.8-5.0 /
-    * 4.45-4.58 / 5.3-7.1 quiet-window mins vs per-round 6.9-8.3 —
-    * every-4th GRADUATED. x_cc_perround (per-round observe+checkpoint
-    * components loop) alternated 2.093/2.058/2.570 vs the every-2nd
-    * cadence's 1.965/2.296/1.888 — every-2nd GRADUATED. All variants
-    * deleted per convention; winners live in ops/Graph.scala with the
-    * numbers in their scaladocs.
-    * Round-21 session (q1 control 0.419 same-JVM): the containment
-    * parallelism ladder — decomp showed the pair stage's intersect
-    * work on ~3 AQE-byte-coalesced tasks — read x_cont_s8r (explicit
-    * repartition(N, source, salt), 8 salts) 0.543 min vs the shipped
-    * 1.190; x_cont_s32r 0.576, x_cont_s128r 0.755 (salt replication
-    * exceeds its spread benefit once the explicit exchange restores
-    * parallelism), x_cont_s32rp (pre-tokenize round-robin) 0.640 (the
-    * extra exchange costs more than the 1-task scan saves). s8r
-    * GRADUATED into saltedSourcePairs (both consumers). x_spans_shj
-    * (dup test as hash-agg + shuffle_hash LEFT SEMI instead of the
-    * g-keyed count window) REJECTED: 1.484/1.488 alternated vs the
-    * window's 1.254/1.119 (q1 0.432) — re-probing the full gram
-    * stream through the semi-join costs more than the window's
-    * in-partition sort; dedup_substring_spans' gram-keyed shuffle
-    * stays the accepted exact-substring floor. x_basket_repart (ONE
-    * explicit ok-keyed exchange feeding both the (ok, pk) distinct and
-    * the per-order count) GRADUATED: quiet alternated mins 0.472/
-    * 0.504/0.620 vs the shipped double-exchange form's 0.751/0.781/
-    * 0.787 (controls noisy that window — decision on the consistent
-    * quiet reads).
-    */
-  /** x_pr_e16's closure memo: the OLD (AQE-coalesced, un-pinned) edge
-    * artifact rebuilt verbatim, materialized once so the A/B times the
-    * steady state both forms have. */
-  private val e16cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-
-  private val variants: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // round-21 resume A/Bs: the drift ops' OLD totals-branch spelling
-    // (separate cells aggregate + broadcast join — the duplicated
-    // subtree the window-frame restructure deletes), rebuilt verbatim.
-    // streaming_cdc_apply OLD spelling: 5-scan unioned feed + window
-    // row_number compaction (vs the one-scan explode feed + max_by agg)
-    "x_cdc_old" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      val o = Tables.orders(s, d)
-      val upd7 = o.filter(col("o_orderkey") % 10 =!= 0 &&
-        col("o_orderkey") % 7 === 0 && col("o_orderkey") % 13 =!= 0)
-      val del13 = o.filter(col("o_orderkey") % 10 =!= 0 &&
-        col("o_orderkey") % 13 === 0)
-      val feed = upd7.withColumn("o_totalprice", col("o_totalprice") + 1000000)
-          .withColumn("op", lit("U")).withColumn("seq", lit(1L))
-        .unionByName(upd7
-          .withColumn("o_totalprice", round(col("o_totalprice"), 0))
-          .withColumn("o_orderpriority", lit("5-RESTATED"))
-          .withColumn("op", lit("U")).withColumn("seq", lit(2L)))
-        .unionByName(del13
-          .withColumn("o_totalprice", col("o_totalprice") + 1000000)
-          .withColumn("op", lit("U")).withColumn("seq", lit(1L)))
-        .unionByName(del13
-          .withColumn("op", lit("D")).withColumn("seq", lit(2L)))
-        .unionByName(o.filter(col("o_orderkey") % 10 === 0)
-          .withColumn("op", lit("I")).withColumn("seq", lit(1L)))
-      val w = Window.partitionBy(col("o_orderkey")).orderBy(col("seq").desc)
-      val compacted = feed.withColumn("__rn",
-          org.apache.spark.sql.functions.row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn").drop("seq")
-      val base = o.filter(col("o_orderkey") % 10 =!= 0)
-      ops.Changes.applyChanges(base, compacted, "o_orderkey")
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"),
-          ops.Recon.uncents(sum(ops.Recon.cents(col("o_totalprice"))))
-            .as("sum_price"),
-          count(when(col("o_orderpriority") === "5-RESTATED", 1)).as("n_restated"))
-        .orderBy("o_orderstatus")
-    }),
-    "x_ks_old" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-      val base = Tables.events(s, d)
-        .select(col("event_type"), unix_micros(col("ts")).as("t_us"),
-          col("value").as("v"))
-        .where(col("v").isNotNull)
-      val bounds = base.groupBy("event_type")
-        .agg(min(col("t_us")).as("lo"), max(col("t_us")).as("hi"))
-        .where(col("lo") < col("hi"))
-        .select(col("event_type"), expr("(lo + hi) div 2").as("mid"))
-      val sided = base.join(broadcast(bounds), "event_type")
-        .select(col("event_type"), col("v"),
-          when(col("t_us") <= col("mid"), 1).otherwise(2).as("side"))
-      val cells = sided.groupBy("event_type", "v")
-        .agg(count_if(col("side") === 1).as("c1"),
-          count_if(col("side") === 2).as("c2"))
-      val w = Window.partitionBy(col("event_type")).orderBy(col("v"))
-      val cum = cells.select(col("event_type"),
-        sum(col("c1")).over(w).as("cum1"), sum(col("c2")).over(w).as("cum2"))
-      val totals = cells.groupBy("event_type")
-        .agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
-      val ksRaw = col("ks_num").cast("double") /
-        (col("n1").cast("double") * col("n2"))
-      cum.join(broadcast(totals), "event_type")
-        .groupBy("event_type")
-        .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-          max(abs(col("cum1").cast(dec) * col("n2")
-            - col("cum2").cast(dec) * col("n1"))).as("ks_num"))
-        .select(col("event_type"), col("n1"), col("n2"),
-          ops.Recon.ratioRound(col("ks_num"),
-            col("n1").cast(dec) * col("n2"), 6).as("ks"),
-          (ksRaw > lit(1.36) * sqrt((col("n1").cast("double") + col("n2"))
-            / (col("n1").cast("double") * col("n2")))).as("drifted"))
-        .orderBy("event_type")
-    }),
-    "x_w1_old" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-      val base = Tables.events(s, d)
-        .select(col("event_type"), unix_micros(col("ts")).as("t_us"),
-          round(round(col("value"), 6) * 1e6, 0).cast("long").as("v"))
-        .where(col("v").isNotNull)
-      val bounds = base.groupBy("event_type")
-        .agg(min(col("t_us")).as("lo"), max(col("t_us")).as("hi"))
-        .where(col("lo") < col("hi"))
-        .select(col("event_type"), expr("(lo + hi) div 2").as("mid"))
-      val sided = base.join(broadcast(bounds), "event_type")
-        .select(col("event_type"), col("v"),
-          when(col("t_us") <= col("mid"), 1).otherwise(2).as("side"))
-      val cells = sided.groupBy("event_type", "v")
-        .agg(count_if(col("side") === 1).as("c1"),
-          count_if(col("side") === 2).as("c2"))
-      val w = Window.partitionBy(col("event_type")).orderBy(col("v"))
-      val cum = cells.select(col("event_type"), col("v"),
-        sum(col("c1")).over(w).as("cum1"), sum(col("c2")).over(w).as("cum2"),
-        lead(col("v"), 1).over(w).as("nxt"))
-      val totals = cells.groupBy("event_type")
-        .agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"),
-          (max(col("v")) - min(col("v"))).as("rng"))
-        .where(col("n1") > 0 && col("n2") > 0 && col("rng") > 0)
-      cum.join(broadcast(totals), "event_type")
-        .where(col("nxt").isNotNull)
-        .groupBy("event_type")
-        .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-          max(col("rng")).as("rng"),
-          sum(abs(col("cum1").cast(dec) * col("n2")
-              - col("cum2").cast(dec) * col("n1"))
-            * (col("nxt") - col("v")).cast(dec)).as("w1num"))
-        .select(col("event_type"), col("n1"), col("n2"),
-          ops.Recon.ratioRound(col("w1num"),
-            col("n1").cast(dec) * col("n2") * 1000000L, 6).as("w1"),
-          ops.Recon.ratioRound(col("w1num"),
-            col("n1").cast(dec) * col("n2") * col("rng"), 6).as("w1_norm"))
-        .orderBy("event_type")
-    }),
-    // round-21 continuation A/Bs (edge-artifact partition pin + the
-    // per-node r85/ow100 hoist + the degreesOf spelling):
-    "x_pr_e16" -> ((s, d) => {
-      val e = e16cache.computeIfAbsent((s, d),
-        _ => ops.Graph.copurchaseEdgesPlan(Tables.lineitem(s, d))
-          .localCheckpoint(true))
-      ops.Graph.pagerankRanks(e)
-    }),
-    "x_pr_noprescale" -> ((s, d) =>
-      ops.Graph.pagerankRanks(ops.Graph.copurchaseEdges(s, d),
-        preScale = false)),
-    "x_pr_new" -> ((s, d) =>
-      ops.Graph.pagerankRanks(ops.Graph.copurchaseEdges(s, d))),
-    "x_edges_scan" -> ((s, d) =>
-      ops.Graph.copurchaseEdges(s, d)
-        .filter(col("w") >= 2 && col("s") < col("t"))
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)))),
-    "x_deg_union" -> ((s, d) =>
-      ops.Graph.degreesOf(ops.Graph.copurchaseEdges(s, d)
-          .filter(col("w") >= 2 && col("s") < col("t"))
-          .select(col("s").as("a"), col("t").as("b")))
-        .agg(org.apache.spark.sql.functions.sum("d"),
-          org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)))),
-    "x_deg_explode" -> ((s, d) =>
-      ops.Graph.copurchaseEdges(s, d)
-        .filter(col("w") >= 2 && col("s") < col("t"))
-        .select(org.apache.spark.sql.functions.explode(
-          org.apache.spark.sql.functions.array(col("s"), col("t"))).as("v"))
-        .groupBy("v")
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("d"))
-        .agg(org.apache.spark.sql.functions.sum("d"),
-          org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)))))
-
-
   def main(args: Array[String]): Unit = {
     val (sfArgs, names) = args.partition(_.startsWith("sf="))
     val dir = sfArgs.headOption.map(_.stripPrefix("sf="))
       .getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
+    spark.conf.set("spark.sql.adaptive.enabled",
+      sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
     def materialize(name: String): Unit =
-      if (name.endsWith("_check"))
-        variants(name)(spark, dir).show(5, false)
-      else
-        variants.getOrElse(name, SparkEntry.queries(name))(spark, dir)
-          .queryExecution.toRdd.count()
+      SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
     // `plan:<name>` — time analysis+optimization+physical planning only
     // (no execution): the diagnostic that separates driver-side plan
     // cost from run cost for big unrolled plans (round-20 text_js)
@@ -425,7 +135,7 @@ object Probe {
       }
       val best = rows.minBy(_._1)
       spark.sparkContext.removeSparkListener(listener)
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+      val cpus = LocalSpark.cpus.toInt
       println(f"DECOMP $q wall=${best._1 / 1e9}%.3f construct=${best._2 / 1e9}%.3f " +
         f"plan=${best._3 / 1e9}%.3f exec=${best._4 / 1e9}%.3f " +
         f"jobs=${best._5} stages=${best._6} tasks=${best._7} " +

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1135,8 +1135,8 @@ object Events {
     * mix is a fresh distributed agg over events). Keyed by (session,
     * dir) with the events relation IDENTITY as the staleness check —
     * a corpus regen misses naturally (the edgeMemo discipline). */
-  private[graft] val markovTransMemo = graft.MemoRegistry.register(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (AnyRef, Array[(String, String, Long)])])
+  private[graft] val markovTransMemo =
+    new Memo[(SparkSession, String), Array[(String, String, Long)]]("Events.markovTrans")
 
   /** The uncached two-job build the memo holds: top-[[MarkovTypeCap]]
     * types by (count DESC, type), then the capped transition counts.
@@ -1177,15 +1177,7 @@ object Events {
   def markovStationary(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.events(spark, dir)
-    val trans = {
-      val cur = markovTransMemo.get((spark, dir))
-      if (cur != null && (cur._1 eq ev)) cur._2
-      else {
-        val built = markovTransitions(ev)
-        markovTransMemo.put((spark, dir), (ev, built))
-        built
-      }
-    }
+    val trans = markovTransMemo((spark, dir), ev)(markovTransitions(ev))
     val nodes = trans.map(_._1).distinct.sorted
     require(nodes.nonEmpty, s"markovStationary: no transitions under $dir")
     // a retained state whose every target fell OUT of the state space

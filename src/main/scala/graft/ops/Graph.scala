@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -192,9 +192,8 @@ object Graph {
     * broadcast label join + corpus agg for savings). Keyed by
     * (session, dir) with the documents relation IDENTITY as the
     * staleness check — a corpus regen misses naturally. */
-  private[graft] val minhashPairsMemo = graft.MemoRegistry.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (AnyRef, Seq[(Long, Long)])])
+  private[graft] val minhashPairsMemo =
+    new Memo[(SparkSession, String), Seq[(Long, Long)]]("Graph.minhashPairs")
 
   /** The uncached build the memo holds (spec-auditable). */
   private[graft] def minhashClusterPairsBuild(spark: SparkSession,
@@ -205,16 +204,10 @@ object Graph {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
   private def minhashClusterPairs(spark: SparkSession,
-                                  dir: String): Seq[(Long, Long)] = {
-    val rel = Tables.documents(spark, dir)
-    val cur = minhashPairsMemo.get((spark, dir))
-    if (cur != null && (cur._1 eq rel)) cur._2
-    else {
-      val built = minhashClusterPairsBuild(spark, dir)
-      minhashPairsMemo.put((spark, dir), (rel, built))
-      built
+                                  dir: String): Seq[(Long, Long)] =
+    minhashPairsMemo((spark, dir), Tables.documents(spark, dir)) {
+      minhashClusterPairsBuild(spark, dir)
     }
-  }
 
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
     val pairs = minhashClusterPairs(spark, dir)
@@ -303,8 +296,7 @@ object Graph {
     * FULL `(node, r)` rank frame in rank_ppb units. */
   private[graft] def pagerankRanks(edgesRaw: DataFrame,
                                    iters: Int = PagerankIters,
-                                   forceDecimal: Boolean = false,
-                                   preScale: Boolean = true): DataFrame = {
+                                   forceDecimal: Boolean = false): DataFrame = {
     // ow is a per-SOURCE-NODE quantity (Σw over s), so it rides the
     // node-sized rank frame, NOT the edge frame (round-20: the old
     // form joined outw back onto the edges and localCheckpointed that
@@ -346,8 +338,8 @@ object Graph {
     // and both operand chains are exact). Past the caps — the ~10⁸
     // co-occurrence corpus the scaladoc names — the 128-bit spelling
     // keeps the op correct; ANSI throws rather than wraps if the gate
-    // logic ever goes stale. `forceDecimal` exists for the Probe A/B
-    // (battery-mover discipline: old spelling rebuilt, not remembered).
+    // logic ever goes stale. `forceDecimal` pins the 128-bit spelling
+    // so GraphSpec can check both paths agree.
     val longSafe = !forceDecimal &&
       caps("mw").asInstanceOf[Long] <= 100000000L &&
       caps("ow").asInstanceOf[Long] <= 92000000000000000L
@@ -363,10 +355,8 @@ object Graph {
     // conservation) while ow·100 is exactly the gated envelope. The
     // decimal (over-envelope) path keeps the unhoisted spelling — ow·100
     // must stay 128-bit there.
-    val hoist = longSafe && preScale // preScale=false only in Probe A/Bs
     val contribC =
-      if (hoist) expr("r85 * w div ow100")
-      else if (longSafe) expr("r * 85 * w div (ow * 100)")
+      if (longSafe) expr("r85 * w div ow100")
       else expr(
         "CAST(r AS DECIMAL(38,0)) * 85 * w div (CAST(ow AS DECIMAL(38,0)) * 100)")
     val init = 1000000000L / n
@@ -402,7 +392,7 @@ object Graph {
       // truncation, never durability (localCheckpoint blocks die with
       // the executor either way).
       val next =
-        pagerankRound(edgesRaw, nodes, ranks, contribC, base, gateB, hoist)
+        pagerankRound(edgesRaw, nodes, ranks, contribC, base, gateB, longSafe)
       ranks = if (i % 4 == 0 || i == iters) truncate(next, None) else next
     }
     ranks.select(col("node"), col("r"))
@@ -489,23 +479,15 @@ object Graph {
     * IDENTITY of the stamped lineitem relation — Schemas' relation cache
     * returns the same instance until the underlying files change, so a
     * corpus regen or a test overwriting its fixture dir naturally
-    * misses. The check-then-put race is benign: losers build equivalent
-    * frames and last-write-wins (the cachedRelation discipline). A
-    * displaced entry's checkpoint blocks are reclaimed by the
-    * ContextCleaner once the superseded frame is unreferenced — fine
-    * for the harness's regen cadence (one displacement per corpus
-    * swap); a service that churns corpora per-request calls
-    * [[evictCopurchaseEdges]] on retire (round-16 verdict #6: the
-    * eviction hook is code now, not a documented wish). Likewise the
-    * executor-loss hazard: the default `localCheckpoint` truncates
-    * lineage into UNRECOVERABLE blocks, and a cluster deployment
-    * passes `checkpointDir = Some(d)` to the three-arg
-    * [[copurchaseEdges]] overload to route the memo through the
-    * RELIABLE checkpoint instead (mode is part of the memo key). The
-    * remaining harness-only trait is the unbounded per-(session, dir)
-    * growth, bounded in practice by eviction. */
-  private val edgeMemo = graft.MemoRegistry.register(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Option[String]), (AnyRef, DataFrame)])
+    * misses. A service that churns corpora evicts through
+    * [[graft.MemoRegistry.evict]] on retire. The executor-loss hazard:
+    * the default `localCheckpoint` truncates lineage into UNRECOVERABLE
+    * blocks, and a cluster deployment passes `checkpointDir = Some(d)`
+    * to the three-arg [[copurchaseEdges]] overload to route the memo
+    * through the RELIABLE checkpoint instead (mode is part of the memo
+    * key). */
+  private[graft] val edgeMemo =
+    new Memo[(SparkSession, String, Option[String]), DataFrame]("Graph.edge")
 
   /** Directed weighted co-purchase edges: s→t with w = number of order
     * baskets containing both parts (symmetric by construction). Shared
@@ -524,15 +506,11 @@ object Graph {
     * real cluster; the harness default stays `localCheckpoint`. The
     * mode participates in the memo key — a session asking for the
     * reliable frame never gets handed the volatile one (and vice
-    * versa). Pair with [[evictCopurchaseEdges]] in corpus-churning
-    * services. */
+    * versa). */
   private[graft] def copurchaseEdges(spark: SparkSession, dir: String,
       checkpointDir: Option[String]): DataFrame = {
     val li0 = Tables.lineitem(spark, dir)
-    val key = (spark, dir, checkpointDir)
-    val cur = edgeMemo.get(key)
-    if (cur != null && (cur._1 eq li0)) cur._2
-    else {
+    edgeMemo((spark, dir, checkpointDir), li0) {
       // Round-21 continuation NEGATIVE result (recorded so it is not
       // retried): pinning the artifact to numShufflePartitions
       // (REPARTITION_BY_NUM before the checkpoint — the containment
@@ -542,25 +520,7 @@ object Graph {
       // fixed cost outweighs the extra parallelism, and at 100 TB the
       // artifact is large enough that AQE's advisory sizing already
       // yields full parallelism. The coalesced build stands.
-      val built = truncate(copurchaseEdgesPlan(li0), checkpointDir)
-      edgeMemo.put(key, (li0, built))
-      built
-    }
-  }
-
-  /** Explicit eviction hook for the edge memo (the round-15 advice's
-    * "corpus-churning service" case): drops every memoized frame for
-    * (session, dir) across both truncation modes, letting the
-    * ContextCleaner reclaim the checkpoint blocks once unreferenced.
-    * The harness never needs this (one displacement per corpus swap);
-    * a service that regenerates corpora per-request calls it on
-    * retire. */
-  def evictCopurchaseEdges(spark: SparkSession, dir: String): Unit = {
-    edgeMemo.remove((spark, dir, None))
-    val it = edgeMemo.keySet().iterator()
-    while (it.hasNext) {
-      val k = it.next()
-      if (k._1 == spark && k._2 == dir) it.remove()
+      truncate(copurchaseEdgesPlan(li0), checkpointDir)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2179,9 +2179,8 @@ object Relational {
     * naturally. Same localCheckpoint durability caveat as the other
     * frame memos (blocks die with the executor; a corpus-churning
     * service evicts via [[graft.MemoRegistry]]). */
-  private[graft] val paretoMemo = graft.MemoRegistry.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (AnyRef, (DataFrame, Long, Long, Long))])
+  private[graft] val paretoMemo =
+    new Memo[(SparkSession, String), (DataFrame, Long, Long, Long)]("Relational.pareto")
 
   /** The uncached builder the memo holds — the full derived-state
     * construction (revenue checkpoint, observed value histogram,
@@ -2257,15 +2256,7 @@ object Relational {
 
   def paretoAbc(spark: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(spark, dir)
-    val (rev, t80, t95, t) = {
-      val cur = paretoMemo.get((spark, dir))
-      if (cur != null && (cur._1 eq orders)) cur._2
-      else {
-        val built = paretoState(spark, orders)
-        paretoMemo.put((spark, dir), (orders, built))
-        built
-      }
-    }
+    val (rev, t80, t95, t) = paretoMemo((spark, dir), orders)(paretoState(spark, orders))
     rev.select(
         when(col("c") >= t80, "A").when(col("c") >= t95, "B").otherwise("C")
           .as("abc_class"), col("c"))

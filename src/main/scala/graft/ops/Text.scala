@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -752,10 +752,9 @@ object Text {
     * over the train split — recomputes per call. Keyed by (session,
     * dir, evalSource) with the documents relation IDENTITY as the
     * staleness check. */
-  private[graft] val spanBloomMemo = graft.MemoRegistry.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String),
-      (AnyRef, org.apache.spark.util.sketch.BloomFilter)])
+  private[graft] val spanBloomMemo = new Memo[
+    (SparkSession, String, String), org.apache.spark.util.sketch.BloomFilter](
+    "Text.spanBloom")
 
   def decontaminateSubstring(spark: SparkSession, dir: String,
                              evalSource: String = "src0"): DataFrame = {
@@ -780,18 +779,11 @@ object Text {
     // per-JVM [[spanBloomMemo]] — a derived sketch INPUT (the
     // bloomMemo class); the exact semi-join against the re-derived
     // evalGrams frame, which alone decides the answer, runs per call.
-    val bloom = {
-      val key = (spark, dir, evalSource)
-      val cur = spanBloomMemo.get(key)
-      if (cur != null && (cur._1 eq docs(spark, dir))) cur._2
-      else {
-        val bound = math.max(evalD.agg(coalesce(sum(col("len")), lit(0L)))
-          .collect().head.getLong(0), 1L)
-        val built = spanGrams(evalD).select(xxhash64(col("g")).as("h"))
-          .stat.bloomFilter("h", bound, 0.01)
-        spanBloomMemo.put(key, (docs(spark, dir), built))
-        built
-      }
+    val bloom = spanBloomMemo((spark, dir, evalSource), docs(spark, dir)) {
+      val bound = math.max(evalD.agg(coalesce(sum(col("len")), lit(0L)))
+        .collect().head.getLong(0), 1L)
+      spanGrams(evalD).select(xxhash64(col("g")).as("h"))
+        .stat.bloomFilter("h", bound, 0.01)
     }
     val hits = spanGrams(d.filter(col("source") =!= evalSource))
       .filter(graft.functions.BloomMightContainLong.mightContain(
@@ -856,17 +848,14 @@ object Text {
     * stamped documents relation, so a corpus regen or fixture overwrite
     * misses naturally; the check-then-put race is benign (identical
     * deterministic builds, last-write-wins). */
-  private val bandedMemo = graft.MemoRegistry.register(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (AnyRef, DataFrame)])
+  private val bandedMemo = new Memo[(SparkSession, String), DataFrame]("Text.banded")
 
   /** The capped banded signature frame (doc_id, source, sig, band, bh),
     * materialized once per (session, corpus). */
   private[graft] def bandedSignatures(spark: SparkSession,
                                       dir: String): DataFrame = {
     val d0 = docs(spark, dir)
-    val cur = bandedMemo.get((spark, dir))
-    if (cur != null && (cur._1 eq d0)) cur._2
-    else {
+    bandedMemo((spark, dir), d0) {
       val sig = d0
         .select(col("doc_id"), col("source"),
           graft.functions.MinHashSig.minhash(split(col("text"), " "), NumHashes).as("sig"))
@@ -876,12 +865,10 @@ object Text {
       val bandKey = (b: Int) =>
         concat_ws(":", (b * RowsPerBand until (b + 1) * RowsPerBand)
           .map(i => col("sig").getItem(i).cast("string")): _*)
-      val built = capBuckets(
+      capBuckets(
         sig.select(col("doc_id"), col("source"), col("sig"),
           posexplode(array((0 until Bands).map(bandKey): _*)).as(Seq("band", "bh"))),
         Seq("band", "bh")).localCheckpoint(true)
-      bandedMemo.put((spark, dir), (d0, built))
-      built
     }
   }
 
@@ -928,22 +915,15 @@ object Text {
     * [[graft.ops.Graph.minhashPairsMemo]]). Keyed by (session, dir) +
     * the stamped documents relation IDENTITY, so a corpus regen misses
     * naturally. */
-  private[graft] val mhPairFrameMemo = graft.MemoRegistry.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (AnyRef, DataFrame)])
+  private[graft] val mhPairFrameMemo =
+    new Memo[(SparkSession, String), DataFrame]("Text.mhPairFrame")
 
   /** Memoized accessor over [[minhashPairs]] for the consumer ops. */
   private[graft] def minhashPairsShared(spark: SparkSession,
-                                        dir: String): DataFrame = {
-    val d0 = docs(spark, dir)
-    val cur = mhPairFrameMemo.get((spark, dir))
-    if (cur != null && (cur._1 eq d0)) cur._2
-    else {
-      val built = minhashPairs(spark, dir).localCheckpoint(true)
-      mhPairFrameMemo.put((spark, dir), (d0, built))
-      built
+                                        dir: String): DataFrame =
+    mhPairFrameMemo((spark, dir), docs(spark, dir)) {
+      minhashPairs(spark, dir).localCheckpoint(true)
     }
-  }
 
   /** Incremental near-dup dedup — the nightly-ingest shape: only the
     * NEWEST batch (here the top doc_id decile, the testdata's stand-in
@@ -1073,8 +1053,7 @@ object Text {
     * cost), and [[dedupWinnow]] AND [[decontaminateWinnow]] each re-ran
     * it over the whole corpus per call. Same keying and displacement
     * semantics as [[bandedMemo]]. */
-  private val winnowMemo = graft.MemoRegistry.register(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (AnyRef, DataFrame)])
+  private val winnowMemo = new Memo[(SparkSession, String), DataFrame]("Text.winnow")
 
   /** The UNCACHED winnow fingerprint plan — [[winnowFps]] is this plus
     * the per-JVM materialization; ScaleSpec audits THIS form (the
@@ -1088,13 +1067,7 @@ object Text {
 
   private[graft] def winnowFps(spark: SparkSession, dir: String): DataFrame = {
     val d0 = docs(spark, dir)
-    val cur = winnowMemo.get((spark, dir))
-    if (cur != null && (cur._1 eq d0)) cur._2
-    else {
-      val built = winnowFpsPlan(d0).localCheckpoint(true)
-      winnowMemo.put((spark, dir), (d0, built))
-      built
-    }
+    winnowMemo((spark, dir), d0)(winnowFpsPlan(d0).localCheckpoint(true))
   }
 
   def dedupWinnow(spark: SparkSession, dir: String): DataFrame = {
@@ -1205,22 +1178,15 @@ object Text {
     * (consumer: dedup_audit's n_simhash_pairs branch; `dedup_simhash`,
     * whose output is the top-100 presentation of this frame, always
     * recomputes). Same (session, dir) + relation-identity key. */
-  private[graft] val shPairFrameMemo = graft.MemoRegistry.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (AnyRef, DataFrame)])
+  private[graft] val shPairFrameMemo =
+    new Memo[(SparkSession, String), DataFrame]("Text.shPairFrame")
 
   /** Memoized accessor over [[simhashPairs]] for the consumer ops. */
   private[graft] def simhashPairsShared(spark: SparkSession,
-                                        dir: String): DataFrame = {
-    val d0 = docs(spark, dir)
-    val cur = shPairFrameMemo.get((spark, dir))
-    if (cur != null && (cur._1 eq d0)) cur._2
-    else {
-      val built = simhashPairs(spark, dir).localCheckpoint(true)
-      shPairFrameMemo.put((spark, dir), (d0, built))
-      built
+                                        dir: String): DataFrame =
+    shPairFrameMemo((spark, dir), docs(spark, dir)) {
+      simhashPairs(spark, dir).localCheckpoint(true)
     }
-  }
 
   /** doc_id + 64-bit simhash from a (doc_id, toks) frame — the native
     * one-pass [[graft.functions.SimHash64]] expression. The explode +
@@ -1268,20 +1234,12 @@ object Text {
     * and displacement semantics as the family's other derived-artifact
     * memos ([[bandedMemo]]). The parity reference
     * [[langidNgramJoined]] keeps the distributed trainer on purpose. */
-  private val langidMemo = graft.MemoRegistry.register(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (AnyRef, Array[org.apache.spark.sql.Row])])
+  private val langidMemo = new Memo[
+    (SparkSession, String), Array[org.apache.spark.sql.Row]]("Text.langid")
 
   private def trainedProfileRows(spark: SparkSession,
-                                 dir: String): Array[org.apache.spark.sql.Row] = {
-    val d0 = docs(spark, dir)
-    val cur = langidMemo.get((spark, dir))
-    if (cur != null && (cur._1 eq d0)) cur._2
-    else {
-      val rows = trainProfile(spark, dir).collect()
-      langidMemo.put((spark, dir), (d0, rows))
-      rows
-    }
-  }
+                                 dir: String): Array[org.apache.spark.sql.Row] =
+    langidMemo((spark, dir), docs(spark, dir))(trainProfile(spark, dir).collect())
 
   def langidNgram(spark: SparkSession, dir: String): DataFrame = {
     val rows = trainedProfileRows(spark, dir)
@@ -1422,9 +1380,9 @@ object Text {
     * re-derives the distinct eval gram set per call). Keyed by (session,
     * dir, evalSource, n, fpp) with the documents relation IDENTITY as
     * the staleness check — a corpus regen misses naturally. */
-  private[graft] val bloomMemo = graft.MemoRegistry.register(new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val bloomMemo = new Memo[
     (SparkSession, String, String, Int, Double),
-    (AnyRef, org.apache.spark.util.sketch.BloomFilter)])
+    org.apache.spark.util.sketch.BloomFilter]("Text.bloom")
 
   /** The memoized eval-split Bloom build behind the two decontaminate
     * Bloom ops. Sizing: an UPPER BOUND on distinct eval grams — the
@@ -1440,19 +1398,14 @@ object Text {
                             evalSource: String, n: Int,
                             fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
     val d = docs(spark, dir)
-    val key = (spark, dir, evalSource, n, fpp)
-    val cur = bloomMemo.get(key)
-    if (cur != null && (cur._1 eq d)) cur._2
-    else {
+    bloomMemo((spark, dir, evalSource, n, fpp), d) {
       val bound = math.max(d.filter(col("source") === evalSource)
         .agg(coalesce(sum(length(col("text"))), lit(0L)))
         .collect().head.getLong(0), 1L)
-      val bloom = d.filter(col("source") === evalSource)
+      d.filter(col("source") === evalSource)
         .select(col("doc_id"),
           explode(graft.functions.NgramHashes.ngramHashes(col("text"), n)).as("g"))
         .stat.bloomFilter("g", bound, fpp)
-      bloomMemo.put(key, (d, bloom))
-      bloom
     }
   }
 
@@ -2213,20 +2166,13 @@ object Text {
     * collect + driver log/round fold) re-ran identically per call; the
     * dictionary is a derived model input (the op's OUTPUT is the
     * per-source score rollup), the [[bpeMemo]]-for-segment class. */
-  private val lmMicroMemo = graft.MemoRegistry.register(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (AnyRef, Map[String, Long])])
+  private val lmMicroMemo =
+    new Memo[(SparkSession, String, Int), Map[String, Long]]("Text.lmMicro")
 
   private[graft] def lmScoreCapped(spark: SparkSession, dir: String,
                                    cap: Int): DataFrame = {
-    val micro = {
-      val d0 = docs(spark, dir)
-      val cur = lmMicroMemo.get((spark, dir, cap))
-      if (cur != null && (cur._1 eq d0)) cur._2
-      else {
-        val trained = lmMicroTrain(spark, dir, cap)
-        lmMicroMemo.put((spark, dir, cap), (d0, trained))
-        trained
-      }
+    val micro = lmMicroMemo((spark, dir, cap), docs(spark, dir)) {
+      lmMicroTrain(spark, dir, cap)
     }
     // scoring is MAP-ONLY: one native linear pass per document (the
     // explode → broadcast-join → per-doc agg it replaces re-streamed
@@ -2418,26 +2364,20 @@ object Text {
     * merge sequence, and serving them from a memo would turn that
     * query into a no-op after the first call instead of a computation
     * over the parquet inputs. */
-  private val bpeMemo = graft.MemoRegistry.register(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (AnyRef, Seq[(Int, String, String, Long)])])
+  private val bpeMemo =
+    new Memo[(SparkSession, String), Seq[(Int, String, String, Long)]]("Text.bpe")
 
   /** Train fresh from the corpus and refresh the memo. */
   private def bpeTrainFresh(spark: SparkSession,
-                            dir: String): Seq[(Int, String, String, Long)] = {
-    val d0 = docs(spark, dir)
-    val trained = bpeTrain(bpeWordCounts(spark, dir))
-    bpeMemo.put((spark, dir), (d0, trained))
-    trained
-  }
+                            dir: String): Seq[(Int, String, String, Long)] =
+    bpeMemo.put((spark, dir), docs(spark, dir), bpeTrain(bpeWordCounts(spark, dir)))
 
   /** Memo read for [[bpeSegment]] (derived-dictionary input). */
   private def bpeTrained(spark: SparkSession,
-                         dir: String): Seq[(Int, String, String, Long)] = {
-    val d0 = docs(spark, dir)
-    val cur = bpeMemo.get((spark, dir))
-    if (cur != null && (cur._1 eq d0)) cur._2
-    else bpeTrainFresh(spark, dir)
-  }
+                         dir: String): Seq[(Int, String, String, Long)] =
+    bpeMemo((spark, dir), docs(spark, dir)) {
+      bpeTrain(bpeWordCounts(spark, dir))
+    }
 
   def bpeMerges(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

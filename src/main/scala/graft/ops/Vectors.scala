@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -234,20 +234,13 @@ object Vectors {
     * still streams every corpus vector against the centroid literals
     * per call. Keyed by (session, dir) with the embeddings relation
     * IDENTITY as the staleness check. */
-  private[graft] val centroidRowsMemo = graft.MemoRegistry.register(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (AnyRef, Array[(Int, Int, Double)])])
+  private[graft] val centroidRowsMemo =
+    new Memo[(SparkSession, String), Array[(Int, Int, Double)]]("Vectors.centroidRows")
 
   def labelSeparability(spark: SparkSession, dir: String): DataFrame = {
-    val rel = Tables.embeddings(spark, dir)
-    val centRows = {
-      val cur = centroidRowsMemo.get((spark, dir))
-      if (cur != null && (cur._1 eq rel)) cur._2
-      else {
-        val built = embedCentroids(spark, dir).collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-        centroidRowsMemo.put((spark, dir), (rel, built))
-        built
-      }
+    val centRows = centroidRowsMemo((spark, dir), Tables.embeddings(spark, dir)) {
+      embedCentroids(spark, dir).collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
     }
     require(centRows.nonEmpty,
       "labelSeparability: no non-null embeddings to audit")
@@ -523,22 +516,16 @@ object Vectors {
     * (Schemas' relation cache), so a corpus regen misses naturally;
     * the check-then-put race is benign (the trainer is deterministic —
     * md5 seeds, exact decimal means). */
-  private val ivfCentroidMemo = graft.MemoRegistry.register(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (AnyRef, Seq[(Int, Seq[Double])])])
+  private val ivfCentroidMemo =
+    new Memo[(SparkSession, String), Seq[(Int, Seq[Double])]]("Vectors.ivfCentroid")
 
-  private def ivfCentroids(spark: SparkSession, dir: String): Seq[(Int, Seq[Double])] = {
-    // the training frame derives HERE, not from the caller (round-20
-    // advice: a caller-supplied frame could silently seed the memo with
-    // centroids trained on another call site's projection)
-    val rel = Tables.embeddings(spark, dir)
-    val cur = ivfCentroidMemo.get((spark, dir))
-    if (cur != null && (cur._1 eq rel)) cur._2
-    else {
-      val trained = kmeansCentroidsLocal(unitVectors(spark, dir))
-      ivfCentroidMemo.put((spark, dir), (rel, trained))
-      trained
+  // the training frame derives HERE, not from the caller (round-20
+  // advice: a caller-supplied frame could silently seed the memo with
+  // centroids trained on another call site's projection)
+  private def ivfCentroids(spark: SparkSession, dir: String): Seq[(Int, Seq[Double])] =
+    ivfCentroidMemo((spark, dir), Tables.embeddings(spark, dir)) {
+      kmeansCentroidsLocal(unitVectors(spark, dir))
     }
-  }
 
   private[graft] def ivfCandidates(spark: SparkSession, dir: String): DataFrame = {
     val u = unitVectors(spark, dir)
@@ -774,8 +761,8 @@ object Vectors {
     * distributed assignment pass over every corpus vector). Keyed by
     * (session, dir) with the embeddings relation IDENTITY as the
     * staleness check. */
-  private[graft] val pqBooksMemo = graft.MemoRegistry.register(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (AnyRef, Seq[(Int, Int, Array[Double])])])
+  private[graft] val pqBooksMemo =
+    new Memo[(SparkSession, String), Seq[(Int, Int, Array[Double])]]("Vectors.pqBooks")
 
   def pqCodebook(spark: SparkSession, dir: String): DataFrame = {
     val spark0 = spark
@@ -784,15 +771,7 @@ object Vectors {
     val v0 = rel
       .filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val books: Seq[(Int, Int, Array[Double])] = {
-      val cur = pqBooksMemo.get((spark, dir))
-      if (cur != null && (cur._1 eq rel)) cur._2
-      else {
-        val built = pqTrainBooks(v0)
-        pqBooksMemo.put((spark, dir), (rel, built))
-        built
-      }
-    }
+    val books = pqBooksMemo((spark, dir), rel)(pqTrainBooks(v0))
     val bookDf = books.map { case (m, cid, c) => (m, cid, c.toSeq) }
       .toDF("m", "cid", "cvec")
     // distributed final assignment: explode to sub-vectors, broadcast
@@ -1068,23 +1047,15 @@ object Vectors {
     * memoized too — `None` is a valid answer, not a miss. Keyed by
     * (session, dir) with the embeddings relation IDENTITY as the
     * staleness check — a corpus regen misses naturally. */
-  private[graft] val gramStateMemo = graft.MemoRegistry.register(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (AnyRef, Option[Seq[Long]])])
+  private[graft] val gramStateMemo =
+    new Memo[(SparkSession, String), Option[Seq[Long]]]("Vectors.gramState")
 
   def pcaPower(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val empty = Seq.empty[(Int, Int, Double, Double, Double)]
       .toDF("rk", "dim", "loading", "lambda", "explained_share")
-    val rel = Tables.embeddings(spark, dir)
-    val stOpt: Option[Seq[Long]] = {
-      val cur = gramStateMemo.get((spark, dir))
-      if (cur != null && (cur._1 eq rel)) cur._2
-      else {
-        val built = gramFrame(spark, dir).collect()
-          .headOption.map(_.getSeq[Long](0))
-        gramStateMemo.put((spark, dir), (rel, built))
-        built
-      }
+    val stOpt = gramStateMemo((spark, dir), Tables.embeddings(spark, dir)) {
+      gramFrame(spark, dir).collect().headOption.map(_.getSeq[Long](0))
     }
     if (stOpt.isEmpty) return empty
     val g = stOpt.get

@@ -1044,16 +1044,16 @@ class EventsSpec extends GraftSpec {
     // re-iterates driver-side, the observed mix re-aggregates the
     // corpus — the memo never holds the op's output)
     val out1 = Events.markovStationary(spark, sf).collect().toSeq
-    val m1 = Events.markovTransMemo.get((spark, sf))
-    assert(m1 != null, "first call must populate the transition memo")
+    val m1 = Events.markovTransMemo.peek((spark, sf))
+      .getOrElse(fail("first call must populate the transition memo"))
     val out2 = Events.markovStationary(spark, sf).collect().toSeq
-    val m2 = Events.markovTransMemo.get((spark, sf))
-    assert(m2._2 eq m1._2, "repeat call must reuse the memoized matrix")
+    val m2 = Events.markovTransMemo.peek((spark, sf)).get
+    assert(m2 eq m1, "repeat call must reuse the memoized matrix")
     assert(out2 === out1)
     // the memoized matrix equals a fresh uncached build (staleness
     // check aside, the memo is a pure cache of markovTransitions)
     val fresh = Events.markovTransitions(Tables.events(spark, sf))
-    assert(fresh.toSeq === m1._2.toSeq)
+    assert(fresh.toSeq === m1.toSeq)
   }
 }
 

@@ -118,7 +118,7 @@ class GraphSpec extends GraftSpec {
         eq Graph.copurchaseEdges(spark, sf))
       // eviction: the next call rebuilds (a fresh DataFrame instance)
       val before = Graph.copurchaseEdges(spark, sf)
-      Graph.evictCopurchaseEdges(spark, sf)
+      Graph.edgeMemo.evict(spark, sf)
       val after = Graph.copurchaseEdges(spark, sf)
       assert(!(before eq after), "evict must force a rebuild")
       assert(after.collect().map(r =>
@@ -399,14 +399,14 @@ class GraphSpec extends GraftSpec {
     // output is where the list derives from - the bpe_merges
     // discipline), and both consumers' outputs recompute per call
     val cl1 = Graph.dedupClusters(spark, sf).collect().toSeq
-    val m1 = Graph.minhashPairsMemo.get((spark, sf))
-    assert(m1 != null, "first call must populate the pairs memo")
+    val m1 = Graph.minhashPairsMemo.peek((spark, sf))
+      .getOrElse(fail("first call must populate the pairs memo"))
     val sv1 = Graph.dedupSavings(spark, sf).collect().toSeq
-    assert(Graph.minhashPairsMemo.get((spark, sf))._2 eq m1._2,
+    assert(Graph.minhashPairsMemo.peek((spark, sf)).get eq m1,
       "savings must reuse the same collected pair list")
     assert(Graph.dedupClusters(spark, sf).collect().toSeq === cl1)
     assert(Graph.dedupSavings(spark, sf).collect().toSeq === sv1)
     // the memoized list equals a fresh uncached build
-    assert(Graph.minhashClusterPairsBuild(spark, sf) === m1._2)
+    assert(Graph.minhashClusterPairsBuild(spark, sf) === m1)
   }
 }

@@ -1,12 +1,93 @@
 package graft
 
-import graft.ops.{Events, Text, Vectors}
+import scala.jdk.CollectionConverters._
 
-/** The central memo-eviction point (round-20 advice): every per-JVM
-  * derived-artifact memo registers with [[MemoRegistry]], and one
-  * evict-by-(session, dir) sweep drops a retiring corpus's artifacts
-  * across all modules regardless of extra key params. */
+import graft.ops.{Events, Graph, Relational, Text, Vectors}
+import org.apache.spark.sql.SparkSession
+
+/** The memo policy ([[Memo]]) and the central eviction point: every
+  * per-JVM derived-artifact memo is a [[Memo]] registered with
+  * [[MemoRegistry]], and one evict-by-(session, dir) sweep drops a
+  * retiring corpus's artifacts across all modules regardless of extra
+  * key params. */
 class MemoRegistrySpec extends GraftSpec {
+
+  test("Memo: a hit is the same instance, a new stamp rebuilds, keys and eviction are scoped") {
+    val m = new Memo[(SparkSession, String, Int), Array[Int]]("spec.generic")
+    try {
+      var builds = 0
+      def get(s: SparkSession, dir: String, p: Int, stamp: AnyRef): Array[Int] =
+        m((s, dir, p), stamp) { builds += 1; Array(p) }
+      val (s1, s2) = (new Object, new Object)
+
+      val a = get(spark, "/a", 1, s1)
+      assert(get(spark, "/a", 1, s1) eq a, "a hit must return the stored instance")
+      assert(builds === 1)
+
+      val a2 = get(spark, "/a", 1, s2)
+      assert(!(a2 eq a) && builds === 2, "a new stamp must rebuild")
+      assert(get(spark, "/a", 1, s2) eq a2, "the rebuild replaces the entry")
+      assert(builds === 2)
+
+      val b = get(spark, "/a", 2, s2)
+      assert(!(b eq a2) && builds === 3, "extra key params are held separately")
+      assert((get(spark, "/a", 1, s2) eq a2) && (get(spark, "/a", 2, s2) eq b))
+      assert(builds === 3)
+
+      val fresh = Array(7)
+      assert(m.put((spark, "/a", 3), s2, fresh) eq fresh)
+      assert(get(spark, "/a", 3, s2) eq fresh, "put stores under its stamp")
+      assert(builds === 3)
+
+      val other = spark.newSession()
+      val c = get(spark, "/c", 1, s2)
+      val o = get(other, "/a", 1, s2)
+      m.evict(spark, "/a")
+      assert(m.peek((spark, "/a", 1)).isEmpty && m.peek((spark, "/a", 2)).isEmpty &&
+        m.peek((spark, "/a", 3)).isEmpty, "evict drops every extra param")
+      assert(m.peek((spark, "/c", 1)).get eq c, "another dir survives")
+      assert(m.peek((other, "/a", 1)).get eq o, "another session survives")
+
+      MemoRegistry.evict(other, "/a")
+      assert(m.peek((other, "/a", 1)).isEmpty, "the registry sweep reaches every memo")
+      assert(m.peek((spark, "/c", 1)).get eq c)
+    } finally MemoRegistry.memos.remove(m)
+  }
+
+  test("exactly the 17 module memos are registered") {
+    // touching each module object runs its initializer, which registers its memos
+    assert(Seq(Events, Graph, Relational, Text, Vectors).size === 5)
+    val names = MemoRegistry.memos.asScala.map(_.name).toSeq
+    assert(names.sorted === Seq(
+      "Events.markovTrans",
+      "Graph.edge", "Graph.minhashPairs",
+      "Relational.pareto",
+      "Text.banded", "Text.bloom", "Text.bpe", "Text.langid", "Text.lmMicro",
+      "Text.mhPairFrame", "Text.shPairFrame", "Text.spanBloom", "Text.winnow",
+      "Vectors.centroidRows", "Vectors.gramState", "Vectors.ivfCentroid",
+      "Vectors.pqBooks"))
+  }
+
+  test("no memo map under ops/ bypasses Memo") {
+    // a hand-rolled ConcurrentHashMap/TrieMap in an operator module is a
+    // memo outside the registry: MemoRegistry.evict would never reach it
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      d.listFiles.toSeq.flatMap(f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val files = scalaFiles(new java.io.File("src/main/scala/graft/ops"))
+    assert(files.nonEmpty, "no sources found under src/main/scala/graft/ops")
+    val offenders = files.flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toVector finally src.close()
+      lines.zipWithIndex.collect {
+        case (l, i) if """\b(ConcurrentHashMap|TrieMap)\b""".r.findFirstIn(l).isDefined =>
+          s"${f.getPath}:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"declare memos with graft.Memo, not a raw map:\n${offenders.mkString("\n")}")
+  }
 
   test("evict drops every (session, dir) artifact across modules; ops rebuild and agree") {
     // populate memos in three modules (extra-param keys included:
@@ -14,29 +95,28 @@ class MemoRegistrySpec extends GraftSpec {
     val markov1 = Events.markovStationary(spark, sf).collect().toSeq
     val bloom1 = Text.decontaminateBloom(spark, sf).collect().toSeq
     val pca1 = Vectors.pcaPower(spark, sf).collect().toSeq
-    assert(Events.markovTransMemo.containsKey((spark, sf)))
-    assert(Text.bloomMemo.containsKey((spark, sf, "src0", 3, 0.001)))
-    assert(Vectors.gramStateMemo.containsKey((spark, sf)))
-    assert(MemoRegistry.registeredCount >= 11,
-      s"all memo maps must register, got ${MemoRegistry.registeredCount}")
+    val bloomKey = (spark, sf, "src0", 3, 0.001)
+    assert(Events.markovTransMemo.peek((spark, sf)).isDefined)
+    assert(Text.bloomMemo.peek(bloomKey).isDefined)
+    assert(Vectors.gramStateMemo.peek((spark, sf)).isDefined)
 
     // a foreign (session, dir') entry must survive the sweep
-    Events.markovTransMemo.put((spark, "/other/dir"),
-      Events.markovTransMemo.get((spark, sf)))
+    Events.markovTransMemo.put((spark, "/other/dir"), Tables.events(spark, sf),
+      Events.markovTransMemo.peek((spark, sf)).get)
 
     MemoRegistry.evict(spark, sf)
-    assert(!Events.markovTransMemo.containsKey((spark, sf)))
-    assert(!Text.bloomMemo.containsKey((spark, sf, "src0", 3, 0.001)))
-    assert(!Vectors.gramStateMemo.containsKey((spark, sf)))
-    assert(Events.markovTransMemo.containsKey((spark, "/other/dir")),
+    assert(Events.markovTransMemo.peek((spark, sf)).isEmpty)
+    assert(Text.bloomMemo.peek(bloomKey).isEmpty)
+    assert(Vectors.gramStateMemo.peek((spark, sf)).isEmpty)
+    assert(Events.markovTransMemo.peek((spark, "/other/dir")).isDefined,
       "eviction must be scoped to the (session, dir) pair")
-    Events.markovTransMemo.remove((spark, "/other/dir"))
+    Events.markovTransMemo.evict(spark, "/other/dir")
 
     // post-evict calls rebuild from the parquet inputs and agree
     assert(Events.markovStationary(spark, sf).collect().toSeq === markov1)
     assert(Text.decontaminateBloom(spark, sf).collect().toSeq === bloom1)
     assert(Vectors.pcaPower(spark, sf).collect().toSeq === pca1)
-    assert(Events.markovTransMemo.containsKey((spark, sf)),
+    assert(Events.markovTransMemo.peek((spark, sf)).isDefined,
       "the rebuild must repopulate the memo")
   }
 }

@@ -1005,14 +1005,14 @@ class RelationalSpec extends GraftSpec {
     // call from the memoized frame, and the memoized thresholds equal
     // a fresh uncached build's
     val out1 = Relational.paretoAbc(spark, sf).collect().toSeq
-    val m1 = Relational.paretoMemo.get((spark, sf))
-    assert(m1 != null, "first call must populate the pareto memo")
+    val m1 = Relational.paretoMemo.peek((spark, sf))
+      .getOrElse(fail("first call must populate the pareto memo"))
     val out2 = Relational.paretoAbc(spark, sf).collect().toSeq
-    assert(Relational.paretoMemo.get((spark, sf))._2._1 eq m1._2._1,
+    assert(Relational.paretoMemo.peek((spark, sf)).get._1 eq m1._1,
       "repeat call must reuse the checkpointed revenue frame")
     assert(out2 === out1)
     val (_, t80, t95, t) = Relational.paretoState(spark, Tables.orders(spark, sf))
-    assert((t80, t95, t) === ((m1._2._2, m1._2._3, m1._2._4)),
+    assert((t80, t95, t) === ((m1._2, m1._3, m1._4)),
       "fresh thresholds must equal the memoized ones")
   }
 }

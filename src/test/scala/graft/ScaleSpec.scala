@@ -410,15 +410,48 @@ class ScaleSpec extends GraftSpec {
   }
 
   test("cdc apply parity: compaction prunes map-side, base never shuffles") {
-    val p = SparkEntry.queries("streaming_cdc_apply")(spark, sf)
-      .queryExecution.executedPlan.toString
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plan = SparkEntry.queries("streaming_cdc_apply")(spark, sf)
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
+    val p = plan.toString
     // the merge half: the compacted feed's keys broadcast into a
     // LeftAnti against the base (the 100 TB side stays scan-shaped)
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"), p)
     assert(!p.contains("SortMergeJoin"), p)
-    // the compaction half: rank-1-per-key must prune BEFORE the key
-    // exchange (WindowGroupLimit), not sort whole feeds post-shuffle
-    assert(p.contains("WindowGroupLimit"), p)
+    // the compaction half: latest-per-key is a max_by aggregate whose
+    // PARTIAL half combines each key's changes below the o_orderkey
+    // exchange and whose FINAL half sits above it — no window, and no
+    // sort of whole feeds after the shuffle
+    def maxBy(a: BaseAggregateExec, mode: Any) = a.aggregateExpressions
+      .exists(e => e.mode == mode && e.aggregateFunction.prettyName == "max_by")
+    val keyExchanges = plan.collect {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.flatMap(_.references).exists(_.name == "o_orderkey")
+        case _ => false
+      }) => e
+    }
+    val compaction = keyExchanges.filter(e => e.child.exists {
+      case a: BaseAggregateExec => maxBy(a, Partial)
+      case _ => false
+    })
+    assert(compaction.nonEmpty, s"partial max_by must combine below the key exchange:\n$p")
+    assert(plan.exists {
+      case a: BaseAggregateExec =>
+        maxBy(a, Final) && compaction.exists(e => a.exists(_ eq e))
+      case _ => false
+    }, s"the final max_by must merge above the key exchange:\n$p")
+    assert(!p.contains("Window") && !p.contains("row_number"), p)
+    // one orders scan each for the base, the broadcast feed keys and
+    // the compacted feed: the change feed is ONE exploded scan
+    assert("Scan parquet".r.findAllIn(p).length === 3, p)
   }
 
   test("q21: single-pass min/max EXISTS folding — one fact join, no semi/anti, no fact sort") {

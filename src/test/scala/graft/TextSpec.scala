@@ -1159,14 +1159,14 @@ class TextSpec extends GraftSpec {
     // identical, and the shared build serves flags AND the oracled op
     val out1 = Text.decontaminateBloom(spark, sf).collect().toSeq
     val key = (spark, sf, "src0", 3, 0.001)
-    val b1 = Text.bloomMemo.get(key)
-    assert(b1 != null, "first call must populate the bloom memo")
+    val b1 = Text.bloomMemo.peek(key)
+      .getOrElse(fail("first call must populate the bloom memo"))
     val out2 = Text.decontaminateBloom(spark, sf).collect().toSeq
-    assert(Text.bloomMemo.get(key)._2 eq b1._2,
+    assert(Text.bloomMemo.peek(key).get eq b1,
       "repeat call must reuse the built filter")
     assert(out2 === out1)
     val flags = Text.decontaminateBloomFlags(spark, sf).collect()
-    assert(Text.bloomMemo.get(key)._2 eq b1._2,
+    assert(Text.bloomMemo.peek(key).get eq b1,
       "the flags op must share the same built filter")
     assert(flags.nonEmpty)
   }
@@ -1177,10 +1177,10 @@ class TextSpec extends GraftSpec {
     // semi-join + span collapse — the op's output — recomputes per call
     val out1 = Text.decontaminateSubstring(spark, sf).collect().toSeq
     val key = (spark, sf, "src0")
-    val b1 = Text.spanBloomMemo.get(key)
-    assert(b1 != null, "first call must populate the span-bloom memo")
+    val b1 = Text.spanBloomMemo.peek(key)
+      .getOrElse(fail("first call must populate the span-bloom memo"))
     val out2 = Text.decontaminateSubstring(spark, sf).collect().toSeq
-    assert(Text.spanBloomMemo.get(key)._2 eq b1._2,
+    assert(Text.spanBloomMemo.peek(key).get eq b1,
       "repeat call must reuse the built filter")
     assert(out2 === out1)
   }
@@ -1194,17 +1194,17 @@ class TextSpec extends GraftSpec {
     // the ops whose outputs ARE these frames — never read the memos
     val out1 = Text.dedupAudit(spark, sf).collect().toSeq
     val key = (spark, sf)
-    val mh1 = Text.mhPairFrameMemo.get(key)
-    val sh1 = Text.shPairFrameMemo.get(key)
-    assert(mh1 != null && sh1 != null,
-      "first audit call must populate both pair-frame memos")
+    val (mh1, sh1) = (Text.mhPairFrameMemo.peek(key), Text.shPairFrameMemo.peek(key)) match {
+      case (Some(mh), Some(sh)) => (mh, sh)
+      case _ => fail("first audit call must populate both pair-frame memos")
+    }
     val out2 = Text.dedupAudit(spark, sf).collect().toSeq
-    assert((Text.mhPairFrameMemo.get(key)._2 eq mh1._2) &&
-      (Text.shPairFrameMemo.get(key)._2 eq sh1._2),
+    assert((Text.mhPairFrameMemo.peek(key).get eq mh1) &&
+      (Text.shPairFrameMemo.peek(key).get eq sh1),
       "repeat call must reuse the materialized pair frames")
     assert(out2 === out1)
     // memoized frame content == fresh uncached build (order-free)
-    val memo = mh1._2.select("a_id", "b_id", "a_source", "est_jaccard")
+    val memo = mh1.select("a_id", "b_id", "a_source", "est_jaccard")
       .collect().toSeq.sortBy(r => (r.getLong(0), r.getLong(1)))
     val fresh = Text.minhashPairs(spark, sf)
       .select("a_id", "b_id", "a_source", "est_jaccard")

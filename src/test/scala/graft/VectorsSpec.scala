@@ -426,22 +426,22 @@ class VectorsSpec extends GraftSpec {
     // vector passes — are identical; embed_centroids itself always
     // recomputes (its output IS the memoized artifact)
     val sep1 = Vectors.labelSeparability(spark, sf).collect().toSeq
-    val c1 = Vectors.centroidRowsMemo.get((spark, sf))
-    assert(c1 != null, "first call must populate the centroid memo")
+    val c1 = Vectors.centroidRowsMemo.peek((spark, sf))
+      .getOrElse(fail("first call must populate the centroid memo"))
     val sep2 = Vectors.labelSeparability(spark, sf).collect().toSeq
-    assert(Vectors.centroidRowsMemo.get((spark, sf))._2 eq c1._2,
+    assert(Vectors.centroidRowsMemo.peek((spark, sf)).get eq c1,
       "repeat call must reuse the collected centroid rows")
     assert(sep2 === sep1)
     // the memoized rows equal a fresh embed_centroids collect (the op
     // that owns the artifact never reads the memo)
     val fresh = Vectors.embedCentroids(spark, sf).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-    assert(fresh.toSeq === c1._2.toSeq)
+    assert(fresh.toSeq === c1.toSeq)
     val pq1 = Vectors.pqCodebook(spark, sf).collect().toSeq
-    val b1 = Vectors.pqBooksMemo.get((spark, sf))
-    assert(b1 != null, "first call must populate the codebook memo")
+    val b1 = Vectors.pqBooksMemo.peek((spark, sf))
+      .getOrElse(fail("first call must populate the codebook memo"))
     val pq2 = Vectors.pqCodebook(spark, sf).collect().toSeq
-    assert(Vectors.pqBooksMemo.get((spark, sf))._2 eq b1._2,
+    assert(Vectors.pqBooksMemo.peek((spark, sf)).get eq b1,
       "repeat call must reuse the trained codebook")
     assert(pq2 === pq1)
   }
@@ -452,11 +452,11 @@ class VectorsSpec extends GraftSpec {
     // call reuses the SAME flat state and the full BigInt power
     // iteration — the op's output — recomputes from it per call
     val out1 = Vectors.pcaPower(spark, sf).collect().toSeq
-    val g1 = Vectors.gramStateMemo.get((spark, sf))
-    assert(g1 != null, "first call must populate the gram-state memo")
-    assert(g1._2.nonEmpty, "sf corpus has a non-degenerate gram state")
+    val g1 = Vectors.gramStateMemo.peek((spark, sf))
+      .getOrElse(fail("first call must populate the gram-state memo"))
+    assert(g1.nonEmpty, "sf corpus has a non-degenerate gram state")
     val out2 = Vectors.pcaPower(spark, sf).collect().toSeq
-    assert(Vectors.gramStateMemo.get((spark, sf))._2 eq g1._2,
+    assert(Vectors.gramStateMemo.peek((spark, sf)).get eq g1,
       "repeat call must reuse the memoized state")
     assert(out2 === out1)
   }
