@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.functions.col
-
 /** Spot-bench scratch main (NOT wired into the harness): times the query
   * names given as args with the exact [[Bench]] methodology — two warm
   * passes, then min/median of five `toRdd.count()` materializations — so a
   * single op's timing can be iterated on without paying the full
-  * 118-query bench wall clock. `runMain graft.Probe q1_pricing_summary …`
+  * bench wall clock. `runMain graft.Probe q1_pricing_summary …`
   * (optional first arg `sf=<dir>` overrides the data dir). */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -34,44 +32,6 @@ object Probe {
           f"build=${(t1 - t0) / 1e9}%.3f opt=${(t2 - t1) / 1e9}%.3f " +
           f"phys=${(t3 - t2) / 1e9}%.3f")
       }
-    }
-    // `parts:` — partition counts of the memoized frames (diagnostic:
-    // AQE coalescing at build time decides how many tasks every
-    // downstream consumer of a checkpointed artifact gets, and the
-    // checkpoint scan reports UnknownPartitioning, so the count is
-    // invisible in any plan dump)
-    if (names.contains("parts:")) {
-      println(s"PARTS copurchaseEdges=${
-        ops.Graph.copurchaseEdges(spark, dir).rdd.getNumPartitions}")
-      println(s"PARTS bandedSignatures=${
-        ops.Text.bandedSignatures(spark, dir).rdd.getNumPartitions}")
-      println(s"PARTS minhashPairsShared=${
-        ops.Text.minhashPairsShared(spark, dir).rdd.getNumPartitions}")
-      val e = ops.Graph.copurchaseEdges(spark, dir)
-      println(s"PARTS nEdgesDirected=${e.count()}")
-      println(s"PARTS nEdgesStrongHalf=${
-        e.filter(col("w") >= 2 && col("s") < col("t")).count()}")
-      // does localCheckpoint preserve an explicit hash partitioning?
-      // (decides whether a t-partitioned edge artifact can make the
-      // pagerank per-round groupBy(t) exchange-free, or only restore
-      // task parallelism)
-      val rp = e.repartition(
-        e.sparkSession.sessionState.conf.numShufflePartitions, col("t"))
-        .localCheckpoint(true)
-      println(s"PARTS rpParts=${rp.rdd.getNumPartitions}")
-      val aggPlan = rp.groupBy("t")
-        .agg(org.apache.spark.sql.functions.sum("w"))
-        .queryExecution.executedPlan.toString
-      println(s"PARTS rpAggHasExchange=${aggPlan.contains("Exchange")}")
-    }
-    // `prround:on` / `prround:off` — formatted plan of ONE pagerank
-    // contribution round with the broadcast gate forced on/off (the
-    // final checkpoint-truncated plan hides the per-round shape;
-    // `:off` rebuilds the pre-gate shuffle-join form verbatim)
-    names.filter(_.startsWith("prround")).foreach { nm =>
-      println(s"===== $nm =====")
-      ops.Graph.pagerankRoundPlan(spark, dir, gateB = !nm.endsWith(":off"))
-        .explain("formatted")
     }
     // `decomp:<name>` — the round-21 job-floor decomposition (verdict
     // #3): where does a small query's ~0.4 s wall clock go? Attaches a
@@ -182,9 +142,7 @@ object Probe {
       return
     }
     val targets = if (names.nonEmpty)
-                    names.filterNot(n => n.startsWith("plan:")
-                      || n.startsWith("decomp:") || n.startsWith("prround")
-                      || n == "parts:").toSeq
+                    names.filterNot(n => n.startsWith("plan:") || n.startsWith("decomp:")).toSeq
                   else SparkEntry.benchQueries
     for (_ <- 1 to 2) targets.foreach(materialize)
     val timed = targets.map { name =>

@@ -424,10 +424,10 @@ object Graph {
         (lit(base) + coalesce(col("sm"), lit(0L))).as("r"))
   }
 
-  /** Diagnostic plan surface for the broadcast gate (Probe `prround`
-    * / ScaleSpec): one UN-truncated round over the harness edges with
-    * the gate forced to the given value — `gateB = false` rebuilds the
-    * pre-round-21 (above-gate) shuffle-join shape verbatim. Literal
+  /** Diagnostic plan surface for the broadcast gate (ScaleSpec): one
+    * UN-truncated round over the harness edges with the gate forced to
+    * the given value — `gateB = false` rebuilds the pre-round-21
+    * (above-gate) shuffle-join shape verbatim. Literal
     * init/base stand in for the measured scalars; the join/exchange
     * shape does not depend on them. */
   private[graft] def pagerankRoundPlan(spark: SparkSession, dir: String,

@@ -2,10 +2,10 @@ package graft
 
 /** Wiring guards for the harness contract: every registered query must
   * ANALYZE against the real testdata (catches renamed columns, bad
-  * expressions and registry typos at plan time without executing 142
-  * queries), and the three registries must stay mutually consistent.
-  * Full execution coverage lives in Verify + the driver's oracle; this
-  * spec is the fast tripwire that fails inside `sbt test` the moment a
+  * expressions and registry typos at plan time without executing 248
+  * queries), and the query table must bind each name once. Full
+  * execution coverage lives in Verify + the DuckDB oracle; this spec
+  * is the fast tripwire that fails inside `sbt test` the moment a
   * refactor breaks an op's analysis. */
 class RegistrySpec extends GraftSpec {
 
@@ -18,39 +18,15 @@ class RegistrySpec extends GraftSpec {
     assert(broken.isEmpty, s"queries failing analysis:\n${broken.mkString("\n")}")
   }
 
-  test("oracleSql keys are a subset of queries; benchQueries all resolve") {
-    val qs = SparkEntry.queries.keySet
-    val orphanOracles = SparkEntry.oracleSql.keySet -- qs
-    assert(orphanOracles.isEmpty, s"oracles without a query: $orphanOracles")
-    val orphanBench = SparkEntry.benchQueries.toSet -- qs
-    assert(orphanBench.isEmpty, s"bench entries without a query: $orphanBench")
-    assert(SparkEntry.benchQueries.distinct.size === SparkEntry.benchQueries.size,
-      "benchQueries must not contain duplicates")
+  test("the query table binds each name once") {
+    val names = SparkEntry.table.map(_.name)
+    assert(names.distinct === names, s"names bound twice: ${names.diff(names.distinct)}")
   }
 
-  test("no Map literal in SparkEntry defines a key twice") {
-    // Scala Map literals silently keep the LAST duplicate key, so a
-    // repeated entry makes earlier edits vanish without any warning
-    // (round 11 shipped a ~95-line doubled oracleSql block that was
-    // harmless only because both copies were identical). The compiled
-    // Maps can't show the duplication, so count `"key" ->` bindings in
-    // each def's SOURCE region and compare against the runtime size.
-    val src = scala.io.Source.fromFile(
-      "src/main/scala/graft/SparkEntry.scala", "UTF-8")
-    val lines = try src.getLines().toVector finally src.close()
-    val binding = """^\s+"([a-z0-9_]+)"\s*->""".r
-    def regionKeys(defName: String): Seq[String] = {
-      val start = lines.indexWhere(_.contains(s"def $defName"))
-      assert(start >= 0, s"def $defName not found in SparkEntry source")
-      val end = lines.indexWhere(_.trim.startsWith("def "), start + 1)
-      lines.slice(start, if (end < 0) lines.size else end)
-        .flatMap(binding.findFirstMatchIn(_)).map(_.group(1))
-    }
-    for (d <- Seq("queries", "oracleSql")) {
-      val keys = regionKeys(d)
-      val dups = keys.groupBy(identity).filter(_._2.size > 1).keys.toSeq.sorted
-      assert(dups.isEmpty, s"$d binds keys more than once: $dups")
-    }
+  test("a Query row renders its oracle SQL only when read") {
+    val q = new SparkEntry.Query("lazy", SparkEntry.queries("recon_rowcount"),
+      sys.error("rendered"))
+    assert(intercept[RuntimeException](q.oracle).getMessage === "rendered")
   }
 
   test("unpartitioned WindowExec appears only at the known answer-sized sites") {
@@ -215,26 +191,22 @@ class RegistrySpec extends GraftSpec {
       s"benched but missing a BASELINE.md budget row: ${unbudgeted.toSeq.sorted}")
   }
 
-  test("every oracled query is benched (the budget covers the whole contract)") {
-    // the round-trip fingerprints are oracled but deliberately unbenched:
-    // they write+re-read files, which the repeated-materialization timing
+  test("the verify-only rows are exactly the ten reviewed names") {
+    // the round-trip fingerprints are deliberately unbenched: they
+    // write+re-read files, which the repeated-materialization timing
     // methodology can't time meaningfully, and BASELINE.md never budgeted
     // them; the footer-rowcount anchor is ten driver-side footer reads
     // (~0 — a bench row would time nothing while its DuckDB twin pays
-    // ten full scans). The two text_js probes are round-18 DIAGNOSTIC
-    // rows (they bisect which stage of the jsDivergence integer chain
-    // the driver's DuckDB build disagrees on — the four-round red row);
-    // benching them would time the jsDivergence frame twice more for no
-    // performance information, and they leave the registry once the row
-    // is driver-green. Any OTHER gap here is a forgotten benchQueries
-    // entry.
-    val sinkOps = Set("csv_roundtrip_fingerprint", "json_roundtrip_fingerprint",
+    // ten full scans). The text_js probes are DIAGNOSTIC rows (they
+    // bisect which stage of the jsDivergence integer chain the reference
+    // DuckDB build disagrees on); benching them would time the
+    // jsDivergence frame again for no performance information, and they
+    // leave the registry once the row is oracle-green. Any OTHER name
+    // here is a row that forgot to be benched.
+    val verifyOnly = Set("csv_roundtrip_fingerprint", "json_roundtrip_fingerprint",
       "parquet_partitioned_roundtrip", "bucketed_join_fingerprint",
       "source_footer_rowcounts", "text_js_probe_norm", "text_js_probe_interp",
       "text_js_probe_term", "text_js_probe_agg", "text_js_probe_combine")
-    val unbenched =
-      SparkEntry.oracleSql.keySet -- SparkEntry.benchQueries.toSet -- sinkOps
-    assert(unbenched.isEmpty,
-      s"oracled but missing from benchQueries: ${unbenched.toSeq.sorted}")
+    assert(SparkEntry.table.filterNot(_.benched).map(_.name).toSet === verifyOnly)
   }
 }
