@@ -9,11 +9,13 @@ import org.apache.spark.sql.SparkSession
   *
   * Keys are tuples whose FIRST two elements are the session and the
   * data directory; any further elements are the memo's extra
-  * parameters (evalSource, vocab cap, checkpoint mode). Each entry
-  * carries a stamp — the relation instance the artifact was built
-  * from, as returned by Schemas' relation cache — and a lookup whose
-  * stamp is not `eq` to the stored one rebuilds, so a corpus regen or
-  * a fixture overwrite misses naturally.
+  * parameters (evalSource, vocab cap, checkpoint mode, table). Each
+  * entry carries a stamp and a lookup whose stamp is not `==` to the
+  * stored one rebuilds, so a corpus regen or a fixture overwrite misses
+  * naturally. Operator memos stamp with the relation the artifact was
+  * built from, as returned by `Tables` (a DataFrame compares by
+  * identity); `Tables`' own relation and footer-schema memos stamp with
+  * the path's content stamp string.
   *
   * Check-then-put is deliberately unlocked: builds run Spark jobs and
   * nest (one memo's build reads another memo), so no map lock may be
@@ -31,7 +33,7 @@ final class Memo[K <: Product, V](val name: String) {
     * `build` it, store it under `stamp` and return it. */
   def apply(key: K, stamp: AnyRef)(build: => V): V = {
     val cur = entries.get(key)
-    if (cur != null && (cur._1 eq stamp)) cur._2
+    if (cur != null && cur._1 == stamp) cur._2
     else put(key, stamp, build)
   }
 
@@ -61,7 +63,8 @@ object MemoRegistry {
   private[graft] val memos = new CopyOnWriteArrayList[Memo[_ <: Product, _]]()
 
   /** Drop every memoized artifact for (session, dir) across every
-    * registered memo, regardless of the memo's extra key params. */
+    * registered memo, regardless of the memo's extra key params — the
+    * corpus's resolved relations and footer schemas included. */
   def evict(spark: SparkSession, dir: String): Unit =
     memos.forEach(_.evict(spark, dir))
 }

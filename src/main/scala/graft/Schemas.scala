@@ -12,8 +12,8 @@ import org.apache.spark.sql.types._
   *
   * `events.ts` has shipped as BOTH parquet `timestamp[ns]` and
   * `timestamp[us]` across testdata generations, so its unit is sniffed from
-  * the parquet footer (one driver-side schema probe, cached per path — no
-  * job) rather than assumed. `timestamp[ns]` is read as nanos-since-epoch
+  * the parquet footer (one driver-side schema probe, memoized per table —
+  * no job) rather than assumed. `timestamp[ns]` is read as nanos-since-epoch
   * (long) via `spark.sql.legacy.parquet.nanosAsLong` and converted with
   * integral division (`div`, not `/` — double division would lose µs
   * precision at 1e18 ns); `timestamp[us]` loads directly as TimestampType
@@ -127,22 +127,29 @@ object Tables {
     "lineitem" -> lineitem, "documents" -> documents,
     "embeddings" -> embeddings)
 
-  /** Resolved-relation cache: repeated reads of the same table path
-    * return the SAME DataFrame (an immutable logical plan), so each
-    * query skips re-listing the path and re-resolving the relation —
-    * the catalog behavior a real deployment gets from a metastore
-    * table. Keyed on (session, path) with a content STAMP as the
-    * staleness guard (round-13, on advice): a directory path's own
-    * getFileStatus reports length 0 and an mtime with possibly 1 s
-    * granularity, so a stat-of-the-path key missed a same-second
-    * in-place regen; the stamp instead folds the CHILD file count,
-    * total length and max child mtime for directories (one listStatus —
-    * still driver-side metadata, no job). Stamping the VALUE rather
-    * than the key also evicts the prior plan on refresh instead of
-    * leaking one DataFrame per regen. A vanished path stamps as
-    * "missing" and the build fails with the reader's own error. */
-  private val relationCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, DataFrame)]()
+  /** Resolved relations per (session, dir, table): repeated reads of the
+    * same table return the SAME DataFrame (an immutable logical plan),
+    * so each query skips re-listing the path and re-resolving the
+    * relation — the catalog behavior a real deployment gets from a
+    * metastore table. Every read computes the path's content stamp
+    * ([[pathStamp]]) afresh and rebuilds when it differs from the
+    * stored one: a directory path's own getFileStatus reports length 0
+    * and an mtime with possibly 1 s granularity, so a stat-of-the-path
+    * key missed a same-second in-place regen. Stamping the VALUE rather
+    * than the key also replaces the prior plan on refresh instead of
+    * leaking one DataFrame per regen, and [[MemoRegistry.evict]] drops a
+    * retired corpus's relations. A vanished path stamps as "missing" and
+    * the build fails with the reader's own error. */
+  private val relationMemo =
+    new Memo[(SparkSession, String, String), DataFrame]("Tables.relation")
+
+  /** The ACTUAL on-disk schema per (session, dir, table), under the same
+    * stamp: `spark.read.parquet(path).schema` is driver-only but still
+    * pays a file listing + footer read (~60 ms) per call — the
+    * schema-drift pre-flight probes nine tables, and the events reader
+    * sniffs its ts unit here. */
+  private[graft] val footerSchemaMemo =
+    new Memo[(SparkSession, String, String), StructType]("Tables.footerSchema")
 
   /** Content stamp for a parquet path: file → mtime + length + a hash
     * of the file's EDGE bytes; directory → child count + total child
@@ -218,33 +225,9 @@ object Tables {
       }
     } catch { case _: java.io.IOException => "missing" }
 
-  /** The builder receives the freshly computed stamp so dependent
-    * caches ([[eventsTsType]]) can reuse it instead of re-stat'ing the
-    * path (round-13 review).
-    *
-    * The stamp (a recursive listing + up to 16×2 edge preads) computes
-    * OUTSIDE any map lock (round-13 advice: inside `compute()` it
-    * serialized every concurrent reader of the same table behind
-    * per-access I/O); the check-then-put race is benign — both losers
-    * build equivalent immutable plans and last-write-wins, and a stale
-    * stamp written by a loser straddling an in-place regen heals on the
-    * next access's fresh stamp compare. */
-  private def cachedRelation(spark: SparkSession, path: String)
-                            (build: String => DataFrame): DataFrame = {
-    val key = (spark, path)
-    val stamp = pathStamp(spark, path)
-    val cur = relationCache.get(key)
-    if (cur != null && cur._1 == stamp) cur._2
-    else {
-      val built = (stamp, build(stamp))
-      relationCache.put(key, built)
-      built._2
-    }
-  }
-
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    cachedRelation(spark, path)(_ =>
+    relationMemo((spark, dir, name), pathStamp(spark, path))(
       spark.read.schema(schemas(name)).parquet(path))
   }
 
@@ -272,36 +255,15 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "embeddings")
 
-  /** Footer-sniffed ts unit per events path. A footer schema probe is a
-    * driver-side metadata read (no job), but it still lists the directory —
-    * caching keeps repeated `events()` calls (134-query Verify/Bench runs)
-    * from re-probing. Keyed on (path, stamp) — a plain path key
-    * served a STALE unit when a harness regenerated testdata in-place
-    * inside a long-lived JVM, recreating the silent mis-read class the
-    * sniff exists to prevent; the stamp is the same [[pathStamp]] the
-    * relation cache uses (round-13: directory-robust, footer-tail-
-    * probed). Stamped VALUE, not key — a refresh evicts the stale unit
-    * instead of leaking one entry per regen (round-13 review). */
-  private val eventsTsType =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataType)]()
-
-  /** Stamp-keyed footer-schema cache (the eventsTsType discipline):
-    * `spark.read.parquet(path).schema` is driver-only but still pays a
-    * file listing + footer read (~60 ms) per call — the schema-drift
-    * pre-flight probes nine tables, so repeated invocations in a
-    * Verify/Bench run would pay ~0.6 s of pure re-probing. An in-place
-    * regen changes the stamp and re-probes. */
-  private val footerSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
-
-  /** The ACTUAL on-disk schema at `path` (footer truth, not the pinned
-    * contract) — what [[graft.ops.Recon.schemaDriftDisk]] audits.
-    * Stamped value (not key): refresh evicts, nothing leaks per regen. */
-  private[graft] def diskSchema(spark: SparkSession, path: String): StructType =
-    footerSchemaCache.compute(path, (_, v) =>
-      { val stamp = pathStamp(spark, path)
-        if (v != null && v._1 == stamp) v
-        else (stamp, spark.read.parquet(path).schema) })._2
+  /** The ACTUAL on-disk schema of one table (footer truth, not the
+    * pinned contract) — what [[graft.ops.Recon.schemaDriftDisk]] audits.
+    * An in-place regen changes the stamp and re-probes. */
+  private[graft] def diskSchema(spark: SparkSession, dir: String,
+                                name: String): StructType = {
+    val path = s"$dir/$name.parquet"
+    footerSchemaMemo((spark, dir, name), pathStamp(spark, path))(
+      spark.read.parquet(path).schema)
+  }
 
   /** events with `ts` normalized to Spark TimestampType at µs precision.
     *
@@ -309,35 +271,29 @@ object Tables {
     * TIMESTAMP_MICROS loads as plain TimestampType with no rescale;
     * TIMESTAMP(NANOS) surfaces as long (requires
     * `spark.sql.legacy.parquet.nanosAsLong=true` in the session — set where
-    * the session is built; Verify, Bench, and the test harness all do) and
+    * the session is built; `LocalSpark` and the suite's `TestSpark` do) and
     * is rescaled with integral `div 1000`. Assuming one unit and rescaling
     * unconditionally sent every event to January 1970 when the testdata
     * switched units — hence the sniff.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    cachedRelation(spark, path)(stamp => eventsUncached(spark, path, stamp))
-  }
-
-  private def eventsUncached(spark: SparkSession, path: String,
-                             stamp: String): DataFrame = {
-    val diskTs = eventsTsType.compute(path, (_, v) =>
-      if (v != null && v._1 == stamp) v
-      else (stamp, spark.read.parquet(path).schema("ts").dataType))._2
-    diskTs match {
-      // TIMESTAMP_MICROS infers as LTZ when isAdjustedToUTC=true, NTZ when
-      // false (pandas/pyarrow default). Either way the stored int64 is the
-      // same µs count; pinning the LTZ schema reads it verbatim, and with
-      // session tz fixed to UTC that matches DuckDB's naive read exactly.
-      case TimestampType | TimestampNTZType =>
-        spark.read.schema(eventsMicros).parquet(path)
-      case LongType =>
-        spark.read.schema(eventsRaw).parquet(path)
-          .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case other => throw new IllegalStateException(
-        s"events.ts at $path has unsupported parquet type $other — " +
-          "expected TIMESTAMP_MICROS (reads as timestamp) or " +
-          "TIMESTAMP(NANOS) (reads as long under nanosAsLong=true)")
+    relationMemo((spark, dir, "events"), pathStamp(spark, path)) {
+      diskSchema(spark, dir, "events")("ts").dataType match {
+        // TIMESTAMP_MICROS infers as LTZ when isAdjustedToUTC=true, NTZ when
+        // false (pandas/pyarrow default). Either way the stored int64 is the
+        // same µs count; pinning the LTZ schema reads it verbatim, and with
+        // session tz fixed to UTC that matches DuckDB's naive read exactly.
+        case TimestampType | TimestampNTZType =>
+          spark.read.schema(eventsMicros).parquet(path)
+        case LongType =>
+          spark.read.schema(eventsRaw).parquet(path)
+            .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        case other => throw new IllegalStateException(
+          s"events.ts at $path has unsupported parquet type $other — " +
+            "expected TIMESTAMP_MICROS (reads as timestamp) or " +
+            "TIMESTAMP(NANOS) (reads as long under nanosAsLong=true)")
+      }
     }
   }
 }

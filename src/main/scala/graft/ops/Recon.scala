@@ -229,7 +229,7 @@ object Recon {
     val expected = schemaDriftExpected
       .map { case (t, c, ty) => (t, c) -> ty }.toMap
     val actual = Tables.driftAuditTables.flatMap { t =>
-      Tables.diskSchema(spark, s"$dir/$t.parquet").fields
+      Tables.diskSchema(spark, dir, t).fields
         .map(f => (t, f.name) -> normType(f.dataType.simpleString))
     }.toMap
     val rows = (expected.keySet ++ actual.keySet).toSeq.sorted.map {

@@ -672,8 +672,8 @@ object Relational {
     * latent driver OOM — the round-14 10× gate-crossing smoke caught
     * exactly that in [[q17Report]]. Past the gate the join shuffles
     * (AQE still broadcasts at runtime if actual stats allow); the
-    * footer-byte probe is the cached [[graft.Tables.tableBytes]], no
-    * Spark job. */
+    * on-disk byte probe is [[graft.Tables.tableBytes]], one uncached
+    * driver-side content summary per call, no Spark job. */
   private[graft] def gatedDim(spark: SparkSession, dir: String,
                               name: String, dim: DataFrame): DataFrame =
     if (Tables.tableBytes(spark, dir, name) <= SinglePassBytes) broadcast(dim)

@@ -6,7 +6,8 @@ import graft.ops.{Events, Graph, Relational, Text, Vectors}
 import org.apache.spark.sql.SparkSession
 
 /** The memo policy ([[Memo]]) and the central eviction point: every
-  * per-JVM derived-artifact memo is a [[Memo]] registered with
+  * per-JVM per-corpus memo (derived artifacts, and `Tables`' resolved
+  * relations and footer schemas) is a [[Memo]] registered with
   * [[MemoRegistry]], and one evict-by-(session, dir) sweep drops a
   * retiring corpus's artifacts across all modules regardless of extra
   * key params. */
@@ -54,14 +55,15 @@ class MemoRegistrySpec extends GraftSpec {
     } finally MemoRegistry.memos.remove(m)
   }
 
-  test("exactly the 17 module memos are registered") {
-    // touching each module object runs its initializer, which registers its memos
-    assert(Seq(Events, Graph, Relational, Text, Vectors).size === 5)
+  test("exactly the 19 memos are registered") {
+    // touching each object runs its initializer, which registers its memos
+    assert(Seq(Events, Graph, Relational, Tables, Text, Vectors).size === 6)
     val names = MemoRegistry.memos.asScala.map(_.name).toSeq
     assert(names.sorted === Seq(
       "Events.markovTrans",
       "Graph.edge", "Graph.minhashPairs",
       "Relational.pareto",
+      "Tables.footerSchema", "Tables.relation",
       "Text.banded", "Text.bloom", "Text.bpe", "Text.langid", "Text.lmMicro",
       "Text.mhPairFrame", "Text.shPairFrame", "Text.spanBloom", "Text.winnow",
       "Vectors.centroidRows", "Vectors.gramState", "Vectors.ivfCentroid",
@@ -69,14 +71,17 @@ class MemoRegistrySpec extends GraftSpec {
   }
 
   test("no memo map under ops/ bypasses Memo") {
-    // a hand-rolled ConcurrentHashMap/TrieMap in an operator module is a
-    // memo outside the registry: MemoRegistry.evict would never reach it
+    // a hand-rolled ConcurrentHashMap/TrieMap in an operator module or in
+    // Tables (Schemas.scala) is a per-corpus cache outside the registry:
+    // MemoRegistry.evict would never reach it
     def scalaFiles(d: java.io.File): Seq[java.io.File] =
       d.listFiles.toSeq.flatMap(f =>
         if (f.isDirectory) scalaFiles(f)
         else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
-    val files = scalaFiles(new java.io.File("src/main/scala/graft/ops"))
-    assert(files.nonEmpty, "no sources found under src/main/scala/graft/ops")
+    val files = scalaFiles(new java.io.File("src/main/scala/graft/ops")) :+
+      new java.io.File("src/main/scala/graft/Schemas.scala")
+    assert(files.forall(_.isFile) && files.size > 1,
+      "sources not found under src/main/scala/graft")
     val offenders = files.flatMap { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
       val lines = try src.getLines().toVector finally src.close()
@@ -87,6 +92,35 @@ class MemoRegistrySpec extends GraftSpec {
     }
     assert(offenders.isEmpty,
       s"declare memos with graft.Memo, not a raw map:\n${offenders.mkString("\n")}")
+  }
+
+  test("evict retires a corpus's relations and footer schemas") {
+    val (d1, d2) = (s"$tmpDir/evict1", s"$tmpDir/evict2")
+    val dirs = Seq(d1, d2)
+    try {
+      dirs.foreach { d =>
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
+        java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/region.parquet"),
+          java.nio.file.Paths.get(s"$d/region.parquet"))
+      }
+      val r1 = Tables.read(spark, d1, "region")
+      val r2 = Tables.read(spark, d2, "region")
+      val s1 = Tables.diskSchema(spark, d1, "region")
+      assert(Tables.read(spark, d1, "region") eq r1, "an unchanged table is a hit")
+      assert(Tables.footerSchemaMemo.peek((spark, d1, "region")).get eq s1)
+
+      MemoRegistry.evict(spark, d1)
+      assert(!(Tables.read(spark, d1, "region") eq r1),
+        "the retired corpus's relation must be rebuilt")
+      assert(Tables.read(spark, d2, "region") eq r2,
+        "another corpus keeps its relation")
+      assert(Tables.footerSchemaMemo.peek((spark, d1, "region")).isEmpty,
+        "the retired corpus's footer schema must be dropped")
+      assert(Tables.diskSchema(spark, d1, "region") === s1)
+    } finally dirs.foreach { d =>
+      MemoRegistry.evict(spark, d)
+      deleteTree(new java.io.File(d))
+    }
   }
 
   test("evict drops every (session, dir) artifact across modules; ops rebuild and agree") {

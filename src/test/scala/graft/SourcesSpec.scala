@@ -94,7 +94,7 @@ class SourcesSpec extends GraftSpec {
     // Tables.region schema (which has no `part` column)
     def readVals() = spark.read.parquet(s"$d/region.parquet")
       .select("r_name").distinct().collect().map(_.getString(0)).toSeq
-    assert(Tables.diskSchema(spark, s"$d/region.parquet")
+    assert(Tables.diskSchema(spark, d, "region")
       .fieldNames.contains("part"))
     val len1 = Tables.tableBytes(spark, d, "region")
     writeVal("bb")
@@ -103,7 +103,7 @@ class SourcesSpec extends GraftSpec {
     // the stamped footer-schema cache must re-probe (stale would throw
     // or silently keep serving gen-1 metadata); diskSchema is the
     // surface that shares pathStamp with the relation cache
-    assert(Tables.diskSchema(spark, s"$d/region.parquet")
+    assert(Tables.diskSchema(spark, d, "region")
       .fieldNames.contains("part"))
     assert(readVals() === Seq("bb"))
   }
