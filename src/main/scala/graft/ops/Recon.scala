@@ -1,9 +1,12 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.ExactDecimal.exactDecimal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnscaledValue
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.DecimalType
 
 /** One (source, target) pair in a [[Recon.reconcileAll]] run config.
@@ -34,16 +37,29 @@ object Recon {
     * decision the decimal-sum formulation makes, so downstream results
     * cannot move by an ulp — then carried as a plain long (value × 10⁴),
     * extracted by Catalyst's own `UnscaledValue` (a codegen'd field read
-    * on the compact decimal — no per-row BigDecimal multiply).
+    * on the compact decimal).
+    *
+    * The rounding is [[graft.functions.ExactDecimal]], not a Cast. A
+    * Cast of a double builds a BigDecimal per row (it prints the double
+    * with `Double.toString` and parses the string); ExactDecimal
+    * computes the same HALF_UP'd long in primitive arithmetic whenever
+    * `|x·10⁴| < 2^40` and its fraction is not within 1e-3 of .5, and
+    * hands every other value — NaN, ±∞, near-ties, large magnitudes —
+    * and every non-double column to Spark's own Cast. The value is
+    * `CAST(c AS DECIMAL(18,4))`'s in every case (ExactDecimalProps
+    * checks it against Cast, ANSI on and off).
     * Longs aggregate through Spark's primitive hash-agg buffers (8-byte
     * UnsafeRow slots, no BigDecimal allocation per update/merge), where a
     * DECIMAL(18,4) sum forces a precision-28 buffer onto the interpreted
     * BigDecimal path for every row. */
   private[graft] def cents(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ExprBridge.column(
-      org.apache.spark.sql.catalyst.expressions.UnscaledValue(
-        org.apache.spark.sql.graftbridge.ExprBridge.expression(
-          c.cast(DecimalType(18, 4)))))
+    ExprBridge.column(UnscaledValue(ExprBridge.expression(exactDecimal(c, 18, 4))))
+
+  /** A row hash's price field: `CAST(price AS DECIMAL(12,2))`, through
+    * the same exact kernel as [[cents]] — the one spelling every
+    * orders row hash in this object uses (the stream parity op keeps
+    * `StreamingOps`' literal Cast). */
+  private def hashPrice(price: Column): Column = exactDecimal(price, 12, 2)
 
   /** Inverse of [[cents]] on an aggregated long: exact decimal division
     * (never double division, so the value is exact at ANY long magnitude,
@@ -182,7 +198,7 @@ object Recon {
   def hashDiff(spark: SparkSession, dir: String): DataFrame = {
     def rowHash(price: Column) = md5(concat_ws("|",
       col("o_custkey").cast("string"), col("o_orderstatus"),
-      price.cast(DecimalType(12, 2)).cast("string")))
+      hashPrice(price).cast("string")))
     Tables.orders(spark, dir)
       .select(rowHash(col("o_totalprice")).as("h_src"),
         rowHash(round(col("o_totalprice"), 0)).as("h_tgt"))
@@ -514,7 +530,7 @@ object Recon {
     // distinct tables, [[reconcileAll]] IS the surface — one scan per
     // side, one join per pair.
     def h(price: Column) = rowHash64(Seq(
-      col("o_custkey"), col("o_orderstatus"), price.cast(DecimalType(12, 2))))
+      col("o_custkey"), col("o_orderstatus"), hashPrice(price)))
     def chk(name: String, v: Column, tgtV: Column, ok: Column) =
       struct(lit(name).as("check"), v.as("src_v"), tgtV.as("tgt_v"), ok.as("ok"))
     o.agg(
@@ -577,7 +593,7 @@ object Recon {
     val inSrc = col("o_orderkey") % 991 =!= 0
     val inTgt = col("o_orderkey") % 997 =!= 0
     def checksum(price: Column) = rowHash64(Seq(
-      col("o_custkey"), col("o_orderstatus"), price.cast(DecimalType(12, 2))))
+      col("o_custkey"), col("o_orderstatus"), hashPrice(price)))
     Tables.orders(spark, dir)
       .filter(inSrc || inTgt)
       .select(col("o_orderkey").as("k"),
@@ -618,7 +634,7 @@ object Recon {
     val inSrc = col("o_orderkey") % 89 =!= 0
     val inTgt = col("o_orderkey") % 101 =!= 0
     def checksum(price: Column) = rowChecksumOf(Seq(
-      col("o_custkey"), col("o_orderstatus"), price.cast(DecimalType(12, 2))))
+      col("o_custkey"), col("o_orderstatus"), hashPrice(price)))
     val srcPrice = when(col("o_orderkey") % 97 === 0,
       round(col("o_totalprice"), 0)).otherwise(col("o_totalprice"))
     Tables.orders(spark, dir)
@@ -779,7 +795,7 @@ object Recon {
     * one per SIDE plus a join. */
   def reconcileAllDemo(spark: SparkSession, dir: String): DataFrame = {
     def oHash(price: Column) = rowHash64(Seq(
-      col("o_custkey"), col("o_orderstatus"), price.cast(DecimalType(12, 2))))
+      col("o_custkey"), col("o_orderstatus"), hashPrice(price)))
     val orders = reconcileSameBase("orders",
       Tables.orders(spark, dir)
         .filter(col("o_orderdate") >= lit("1995-01-01").cast("timestamp")),
@@ -1192,9 +1208,9 @@ object Recon {
     * snapshot keep the generic [[snapshotDiff]]. */
   def snapshotDiffOrders(spark: SparkSession, dir: String): DataFrame = {
     val month = date_trunc("month", col("o_orderdate"))
-    val pSrc = col("o_totalprice").cast(DecimalType(12, 2))
+    val pSrc = hashPrice(col("o_totalprice"))
     val pTgt = when(col("o_orderdate") >= lit("1997-01-01").cast("timestamp"),
-      round(col("o_totalprice"), 0).cast(DecimalType(12, 2))).otherwise(pSrc)
+      hashPrice(round(col("o_totalprice"), 0))).otherwise(pSrc)
     val inTgt = month =!= lit("1995-01-01").cast("timestamp")
     def h(p: Column) = rowHash64(Seq(col("o_orderkey"),
       col("o_custkey"), col("o_orderstatus"), p))
@@ -1295,9 +1311,9 @@ object Recon {
     * partition to a scan the fingerprints pay for anyway). */
   def incrementalDiffOrders(spark: SparkSession, dir: String): DataFrame = {
     val month = date_trunc("month", col("o_orderdate"))
-    val pSrc = col("o_totalprice").cast(DecimalType(12, 2))
+    val pSrc = hashPrice(col("o_totalprice"))
     val pTgt = when(col("o_orderdate") >= lit("1997-01-01").cast("timestamp"),
-      round(col("o_totalprice"), 0).cast(DecimalType(12, 2))).otherwise(pSrc)
+      hashPrice(round(col("o_totalprice"), 0))).otherwise(pSrc)
     val inTgt = month =!= lit("1995-01-01").cast("timestamp")
     def h(p: Column) = rowHash64(Seq(col("o_orderkey"),
       col("o_custkey"), col("o_orderstatus"), p))

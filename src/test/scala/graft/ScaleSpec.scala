@@ -543,6 +543,30 @@ class ScaleSpec extends GraftSpec {
         s"range exchange that re-executes the join subtree:\n$exec")
   }
 
+  test("cents and row-hash prices round through ExactDecimal, not a double Cast") {
+    import graft.functions.ExactDecimal
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.types.{DecimalType, DoubleType}
+    Seq("q1_pricing_summary", "recon_hash_diff").foreach { q =>
+      val plan = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
+      val exprs = plan.flatMap(_.expressions).flatMap(_.collect { case e => e })
+      assert(exprs.exists(_.isInstanceOf[ExactDecimal]), s"$q:\n$plan")
+      // the per-row Double.toString + BigDecimal parse this replaced
+      val doubleCasts = exprs.collect {
+        case c: Cast if c.child.dataType == DoubleType &&
+          (c.dataType == DecimalType(18, 4) || c.dataType == DecimalType(12, 2)) => c
+      }
+      assert(doubleCasts.isEmpty, s"$q:\n$plan")
+      val text = plan.toString.toLowerCase
+      assert(!text.contains("as decimal(18,4)") && !text.contains("as decimal(12,2)"),
+        s"$q:\n$plan")
+    }
+  }
+
   test("dim stats: single-column scan, one dim-sized exchange, no join") {
     val exec = graft.ops.Vectors.dimStats(spark, sf)
       .queryExecution.executedPlan.toString
