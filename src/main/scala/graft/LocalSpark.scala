@@ -10,14 +10,19 @@ import org.apache.spark.sql.SparkSession
 object LocalSpark {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
-  def session(): SparkSession = {
-    val spark = SparkSession.builder()
+  /** The confs every local session shares, mains and test suites
+    * alike: `local[cpus]`, `cpus` shuffle partitions, nanosecond
+    * parquet timestamps as longs, UTC, no UI. */
+  def builder(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+
+  def session(): SparkSession = {
+    val spark = builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     QuietLogs.silenceKnownBoundedWindowWarning()
     spark

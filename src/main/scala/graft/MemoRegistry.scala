@@ -9,13 +9,13 @@ import org.apache.spark.sql.SparkSession
   *
   * Keys are tuples whose FIRST two elements are the session and the
   * data directory; any further elements are the memo's extra
-  * parameters (evalSource, vocab cap, checkpoint mode, table). Each
-  * entry carries a stamp and a lookup whose stamp is not `==` to the
-  * stored one rebuilds, so a corpus regen or a fixture overwrite misses
-  * naturally. Operator memos stamp with the relation the artifact was
-  * built from, as returned by `Tables` (a DataFrame compares by
-  * identity); `Tables`' own relation and footer-schema memos stamp with
-  * the path's content stamp string.
+  * parameters (evalSource, vocab cap, table). Each entry carries a
+  * stamp and a lookup whose stamp is not `==` to the stored one
+  * rebuilds, so a corpus regen or a fixture overwrite misses naturally.
+  * Operator memos stamp with the relation the artifact was built from,
+  * as returned by `Tables` (a DataFrame compares by identity);
+  * `Tables`' own relation and footer-schema memos stamp with the
+  * path's content stamp string.
   *
   * Check-then-put is deliberately unlocked: builds run Spark jobs and
   * nest (one memo's build reads another memo), so no map lock may be

@@ -59,10 +59,13 @@ object Probe {
           stages.incrementAndGet()
           for (t0 <- s.stageInfo.submissionTime; t1 <- s.stageInfo.completionTime)
             stageWallMs.addAndGet(t1 - t0)
+          // the label always comes from here: onTaskEnd runs first and
+          // opens the entry with a "?" placeholder
           val i = s.stageInfo
-          val cur = perStage.getOrDefault(i.stageId, (i.details.linesIterator
-            .find(_.contains("graft")).getOrElse(i.name).trim, 0, 0L))
-          perStage.put(i.stageId, (cur._1, cur._2 + i.numTasks, cur._3))
+          val label = i.details.linesIterator
+            .find(_.contains("graft")).getOrElse(i.name).trim
+          val cur = perStage.getOrDefault(i.stageId, ("?", 0, 0L))
+          perStage.put(i.stageId, (label, cur._2 + i.numTasks, cur._3))
         }
         override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
           tasks.incrementAndGet()

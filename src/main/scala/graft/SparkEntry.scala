@@ -120,20 +120,6 @@ object SparkEntry {
       s"(CASE WHEN list_inner_product(v, $plane) > 0 THEN ${1 << j} ELSE 0 END)"
     }.mkString(" + ") + ")"
 
-  /** DuckDB re-derivation of the ENTIRE [[graft.ops.Vectors.annIvfTopk]]
-    * pipeline — seeds, three unrolled Lloyd rounds, probe assignment,
-    * and the final argmax. Reproducible cross-engine because the Spark
-    * side was made deterministic for it (round 12): seeds order by the
-    * portable md5(vec_id) instead of xxhash64; cluster means are exact
-    * DECIMAL(18,9) sums (the embed_centroids float→decimal rule), so no
-    * partial-agg order leaks in; and every dot product is the
-    * sequential-accumulation native expression, bit-identical to
-    * DuckDB's `list_inner_product` (the contract ann_lsh_topk /
-    * cosine_knn already pin). Iteration count/k/probes interpolate from
-    * `Vectors`' own constants so the two engines cannot drift, and the
-    * training CTE applies the SAME smallest-md5 `IvfTrainCap` sample
-    * the Spark quantizer collects (round-13 advice) — parity holds at
-    * any corpus size, not just below the cap. */
   /** The shared IVF WITH-body through the candidate pair frame `p` —
     * [[ivfTopkSql]] and [[ivfRecallSql]] both compose over it. */
   private def ivfCandidateCtes: String = {
@@ -177,6 +163,20 @@ object SparkEntry {
        |  FROM pr JOIN mem USING (cid) WHERE pr.vec_id <> mem.nn)""".stripMargin
   }
 
+  /** DuckDB re-derivation of the ENTIRE [[graft.ops.Vectors.annIvfTopk]]
+    * pipeline — seeds, three unrolled Lloyd rounds, probe assignment,
+    * and the final argmax. Reproducible cross-engine because the Spark
+    * side was made deterministic for it (round 12): seeds order by the
+    * portable md5(vec_id) instead of xxhash64; cluster means are exact
+    * DECIMAL(18,9) sums (the embed_centroids float→decimal rule), so no
+    * partial-agg order leaks in; and every dot product is the
+    * sequential-accumulation native expression, bit-identical to
+    * DuckDB's `list_inner_product` (the contract ann_lsh_topk /
+    * cosine_knn already pin). Iteration count/k/probes interpolate from
+    * `Vectors`' own constants so the two engines cannot drift, and the
+    * training CTE applies the SAME smallest-md5 `IvfTrainCap` sample
+    * the Spark quantizer collects (round-13 advice) — parity holds at
+    * any corpus size, not just below the cap. */
   private def ivfTopkSql: String =
     s"""WITH $ivfCandidateCtes
        |SELECT vec_id, nn, sim FROM p
@@ -206,20 +206,6 @@ object SparkEntry {
        |    + count(*)) // (2 * count(*)) AS DOUBLE) / 1e6 AS recall_tie
        |FROM eb LEFT JOIN ab USING (vec_id)""".stripMargin
 
-  /** DuckDB re-derivation of the ENTIRE [[graft.ops.Text.bpeMerges]]
-    * trajectory — the ann_ivf_topk full-reproduction precedent applied
-    * to BPE training: the same capped (count DESC, word) dictionary
-    * (binary collation == Spark's UTF8String byte order), then
-    * [[graft.ops.Text.BpeIterations]] unrolled merge rounds. Symbol
-    * sequences are spelled as chr(1)‖sym‖chr(2)-wrapped strings so that
-    * one non-overlapping `replace` of `⟨l⟩⟨r⟩` with `⟨lr⟩` IS the
-    * greedy left-to-right merge application (wrappers anchor both
-    * symbol boundaries, so a pattern can never match mid-symbol, and
-    * matches consume no shared delimiter, so adjacent occurrences all
-    * merge); pair counts re-split the wrapped string and lead() over
-    * position. MATERIALIZED pins each round's frame — without it the
-    * recursive CTE chain re-inlines every prior round. chr(3) is the
-    * never-matching replace pattern for rounds past pair exhaustion. */
   /** The shared BPE training WITH-body: word counts → capped
     * dictionary → wrapped symbol strings → `BpeIterations` unrolled
     * (pair count, top-1, replace-apply) rounds. Both BPE oracles
@@ -329,13 +315,6 @@ object SparkEntry {
        |GROUP BY cs ORDER BY cs DESC, min_canonical""".stripMargin
   }
 
-  /** DuckDB twin of [[graft.ops.Graph.kcoreSummary]]: the strong-edge
-    * frame, then [[graft.ops.Graph.KcoreIters]] unrolled MATERIALIZED
-    * peel rounds (degree → sub-k set → edge filter); peeling is
-    * confluent, so once the Spark loop converges within the depth the
-    * extra rounds are no-ops and fixed-depth equality is exact.
-    * `rounds` = number of rounds whose sub-k set was non-empty — the
-    * Spark loop counter's definition verbatim. */
   /** Shared MATERIALIZED CTE prefix for every DuckDB oracle over the
     * STRONG (w >= 2, a < b) co-purchase edge set — ONE spelling of the
     * basket cap + edge contract (review catch: it had drifted into
@@ -350,6 +329,13 @@ object SparkEntry {
        |$edge AS MATERIALIZED (SELECT a.p a, b.p b FROM ob a JOIN ob b USING (k)
        |  WHERE a.p < b.p GROUP BY 1, 2 HAVING count(*) >= 2)""".stripMargin
 
+  /** DuckDB twin of [[graft.ops.Graph.kcoreSummary]]: the strong-edge
+    * frame, then [[graft.ops.Graph.KcoreIters]] unrolled MATERIALIZED
+    * peel rounds (degree → sub-k set → edge filter); peeling is
+    * confluent, so once the Spark loop converges within the depth the
+    * extra rounds are no-ops and fixed-depth equality is exact.
+    * `rounds` = number of rounds whose sub-k set was non-empty — the
+    * Spark loop counter's definition verbatim. */
   private def kcoreSql: String = {
     val r = graft.ops.Graph.KcoreIters
     val k = graft.ops.Graph.KcoreK
@@ -426,6 +412,20 @@ object SparkEntry {
        |CROSS JOIN ot ORDER BY event_type""".stripMargin
   }
 
+  /** DuckDB re-derivation of the ENTIRE [[graft.ops.Text.bpeMerges]]
+    * trajectory — the ann_ivf_topk full-reproduction precedent applied
+    * to BPE training: the same capped (count DESC, word) dictionary
+    * (binary collation == Spark's UTF8String byte order), then
+    * [[graft.ops.Text.BpeIterations]] unrolled merge rounds. Symbol
+    * sequences are spelled as chr(1)‖sym‖chr(2)-wrapped strings so that
+    * one non-overlapping `replace` of `⟨l⟩⟨r⟩` with `⟨lr⟩` IS the
+    * greedy left-to-right merge application (wrappers anchor both
+    * symbol boundaries, so a pattern can never match mid-symbol, and
+    * matches consume no shared delimiter, so adjacent occurrences all
+    * merge); pair counts re-split the wrapped string and lead() over
+    * position. MATERIALIZED pins each round's frame — without it the
+    * recursive CTE chain re-inlines every prior round. chr(3) is the
+    * never-matching replace pattern for rounds past pair exhaustion. */
   private def bpeMergesSql: String = {
     val iters = graft.ops.Text.BpeIterations
     val unions = (1 to iters).map { i =>

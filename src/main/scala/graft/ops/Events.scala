@@ -1253,21 +1253,6 @@ object Events {
       .orderBy("event_type")
   }
 
-  /** Lag-1 and lag-7 autocorrelation of the daily value series per
-    * event type — the memory/seasonality screen run before any
-    * forecasting model: acf1 ≈ 0 says yesterday carries no signal,
-    * acf7 > 0 says a weekly cycle survives differencing by mean.
-    *
-    * Exactness: daily sums in 6-dp micro-unit longs; the mean's
-    * denominator clears — acf_k = Σ(n·yₜ−S)(n·yₜ₋ₖ−S) / Σ(n·yₜ−S)²
-    * with every term an exact 128-bit integer (DECIMAL(38,0) ≡
-    * HUGEINT) and one identically-spelled double division per lag,
-    * round 6dp +0. A constant series has den = 0 and reports NULL on
-    * both engines, never an engine-dependent 0/0.
-    *
-    * 100 TB posture: the seasonalNaive shape — one map-side-combined
-    * daily collapse, then type-partitioned windows over the
-    * (types × days) frame; nothing corpus-sized sorts. */
   /** Wald–Wolfowitz runs test per event type — the classical
     * RANDOMNESS screen completing the test battery (ANOVA = level
     * differences, KS/W₁ = distribution drift, ACF = linear memory;
@@ -1333,6 +1318,21 @@ object Events {
       .orderBy("event_type")
   }
 
+  /** Lag-1 and lag-7 autocorrelation of the daily value series per
+    * event type — the memory/seasonality screen run before any
+    * forecasting model: acf1 ≈ 0 says yesterday carries no signal,
+    * acf7 > 0 says a weekly cycle survives differencing by mean.
+    *
+    * Exactness: daily sums in 6-dp micro-unit longs; the mean's
+    * denominator clears — acf_k = Σ(n·yₜ−S)(n·yₜ₋ₖ−S) / Σ(n·yₜ−S)²
+    * with every term an exact 128-bit integer (DECIMAL(38,0) ≡
+    * HUGEINT) and one identically-spelled double division per lag,
+    * round 6dp +0. A constant series has den = 0 and reports NULL on
+    * both engines, never an engine-dependent 0/0.
+    *
+    * 100 TB posture: the seasonalNaive shape — one map-side-combined
+    * daily collapse, then type-partitioned windows over the
+    * (types × days) frame; nothing corpus-sized sorts. */
   def autocorrelation(spark: SparkSession, dir: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val daily = Tables.events(spark, dir)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Memo, Tables}
+import graft.Checkpoint.truncate
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,29 +23,8 @@ import org.apache.spark.sql.functions._
   * component DIAMETER — near-dup clusters are dense and shallow (a
   * flood of k identical docs has diameter 1), so a handful of rounds
   * closes real corpora; `maxIter` caps pathological chains.
-  * Lineage truncation per round is pluggable (`checkpointDir`):
-  * `localCheckpoint` by default — right for a single JVM, but its
-  * blocks die with an executor — vs reliable-storage `checkpoint`
-  * when a directory is supplied, the setting a real cluster run wants
-  * (round-11 verdict #8).
   */
 object Graph {
-
-  /** Truncates `df`'s lineage: reliable `checkpoint` when `checkpointDir`
-    * is set (the frame survives executor loss — required on a real
-    * cluster, where a lost executor would otherwise force recomputing
-    * the whole iterative chain), eager `localCheckpoint` otherwise
-    * (no HDFS round-trip; fine in one JVM). `spark.sparkContext
-    * .setCheckpointDir` is process-global, so it is set lazily here
-    * rather than asked of every caller. */
-  private def truncate(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    checkpointDir match {
-      case Some(d) =>
-        val sc = df.sparkSession.sparkContext
-        if (!sc.getCheckpointDir.contains(d)) sc.setCheckpointDir(d)
-        df.checkpoint(true)
-      case None => df.localCheckpoint(true)
-    }
 
   /** (id, label) for every node appearing in `pairs`(a_id, b_id), where
     * label = min id of the node's connected component.
@@ -57,12 +37,11 @@ object Graph {
     * failure — real near-dup clusters are dense and shallow, so hitting
     * the cap means the pair graph contains a pathological chain worth
     * seeing, not suppressing. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 15,
-                          checkpointDir: Option[String] = None): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 15): DataFrame = {
     require(maxIter > 0, s"connectedComponents: maxIter must be positive: $maxIter")
     val edges = truncate(pairs.select(col("a_id").as("u"), col("b_id").as("v"))
       .unionByName(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
-      .distinct(), checkpointDir)
+      .distinct())
     // Size-gated broadcast for the per-round joins (round-20 Probe
     // decomposition): the checkpointed label frame is a LogicalRDD
     // with no stats, so AQE never discovers that a small graph's
@@ -78,7 +57,7 @@ object Graph {
     // pointer-jump and skip-the-union-distinct variants all measured
     // SLOWER (2.19 / 2.74 / 3.71 vs 1.77 — the non-deduped union
     // checkpoints into 2× tiny partitions and doubles per-round
-    // tasks); numbers in Probe.scala's history.
+    // tasks); numbers in OPTIMIZATION_r21.md's Probe appendix.
     val gateBcast = edges.count() <= CcBroadcastEdgeGate
     def gated(df: DataFrame): DataFrame = if (gateBcast) broadcast(df) else df
     // labels init stays LAZY off the materialized edge frame (one-hop
@@ -119,8 +98,7 @@ object Graph {
         val obs = new org.apache.spark.sql.Observation()
         val ckpt = truncate(
           next.observe(obs,
-            sum(when(col("label") =!= col("prev"), 1L).otherwise(0L)).as("moved")),
-          checkpointDir)
+            sum(when(col("label") =!= col("prev"), 1L).otherwise(0L)).as("moved")))
         changed = Option(obs.get("moved")).map(_.asInstanceOf[Long]).getOrElse(0L)
         labels = ckpt.drop("prev")
       } else labels = next.drop("prev")
@@ -166,20 +144,6 @@ object Graph {
     parent.keys.map(k => k -> find(k)).toMap
   }
 
-  /** Harness op: MinHash candidate pairs at estimated Jaccard ≥ 0.8 →
-    * components → one row per dup cluster with its size and canonical
-    * (minimum) doc id. The pair list is `dedupMinhash`'s top-100 frame —
-    * answer-sized by construction (a `limit`) — so the transitive
-    * closure runs as a driver-side union-find over ≤100 edges instead
-    * of paying the distributed loop's per-round job overhead; an
-    * unbounded pair stream (the 100 TB path) uses
-    * [[connectedComponents]], which stays the tested scale
-    * implementation. Both produce min-label components, asserted
-    * equivalent in GraphSpec. */
-  /** The answer-sized dup-pair list behind [[dedupClusters]] and
-    * [[dedupSavings]]: dedupMinhash's top-100 frame at est ≥ 0.8,
-    * collected. ONE definition on purpose (the saltedSourcePairs
-    * lesson) — a threshold or contract tune reaches both ops. */
   /** Per-JVM memo of the collected dup-pair list — the round-21
     * eager-construction item (planall: dedup_clusters 0.334 s +
     * dedup_savings 0.424 s of construction jobs per call, each
@@ -203,12 +167,26 @@ object Graph {
       .select("a_id", "b_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
+  /** The answer-sized dup-pair list behind [[dedupClusters]] and
+    * [[dedupSavings]]: dedupMinhash's top-100 frame at est ≥ 0.8,
+    * collected. ONE definition on purpose (the saltedSourcePairs
+    * lesson) — a threshold or contract tune reaches both ops. */
   private def minhashClusterPairs(spark: SparkSession,
                                   dir: String): Seq[(Long, Long)] =
     minhashPairsMemo((spark, dir), Tables.documents(spark, dir)) {
       minhashClusterPairsBuild(spark, dir)
     }
 
+  /** Harness op: MinHash candidate pairs at estimated Jaccard ≥ 0.8 →
+    * components → one row per dup cluster with its size and canonical
+    * (minimum) doc id. The pair list is `dedupMinhash`'s top-100 frame —
+    * answer-sized by construction (a `limit`) — so the transitive
+    * closure runs as a driver-side union-find over ≤100 edges instead
+    * of paying the distributed loop's per-round job overhead; an
+    * unbounded pair stream (the 100 TB path) uses
+    * [[connectedComponents]], which stays the tested scale
+    * implementation. Both produce min-label components, asserted
+    * equivalent in GraphSpec. */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
     val pairs = minhashClusterPairs(spark, dir)
     val clusters = unionFindLocal(pairs).groupBy(_._2)
@@ -256,39 +234,6 @@ object Graph {
     * shape (the [[CcBroadcastEdgeGate]] discipline). */
   private[graft] val PrBroadcastNodeGate = 500000L
 
-  /** Weighted PageRank over the part co-purchase graph: nodes are
-    * parts, a directed edge s→t weighted by the number of orders whose
-    * baskets contain both s and t (symmetric by construction, so the
-    * graph has no dangling nodes and no rank mass escapes). Damping
-    * 0.85, [[PagerankIters]] power iterations, top 20 parts by rank.
-    *
-    * Every rank is an exact INTEGER in parts-per-billion of total mass
-    * (the playbook's micro-unit-long discipline, taken to its
-    * conclusion: the entire iteration is integer arithmetic, so the
-    * trajectory is bit-identical on any engine and any partitioning):
-    * init = 1e9/N (integer division), per-edge contribution
-    * r·85·w div (ow·100) with 128-bit intermediates (DECIMAL(38,0) ≡
-    * DuckDB HUGEINT — r·85·w overflows a long once an edge co-occurs
-    * in ~10⁸ orders, which a 100 TB corpus reaches), new rank =
-    * 0.15e9/N + Σ contributions (an exact long sum — order-free, so
-    * map-side partial aggregation stays legal). Truncation loses <1%
-    * of total mass over 8 rounds (measured 0.994e9 at sf0.1) and is
-    * part of the contract, applied identically in the oracle.
-    *
-    * 100 TB posture: basket pairing is quadratic in basket size
-    * (bounded at 7 lineitems in TPC-H; a real corpus caps baskets
-    * first — the skew_profile op is the audit for that). The edge
-    * frame materializes ONCE (the per-JVM [[copurchaseEdges]]
-    * checkpoint — callers of the bare iteration core pass a
-    * materialized frame, since the loop scans it every round) and is
-    * reused by all 8 rounds; each round is one broadcast-or-shuffle
-    * join of the node-sized rank frame against edges plus a groupBy(t) whose
-    * partial sums collapse to ≤N rows per partition before the
-    * shuffle. Ranks are NOT force-broadcast (fact-derived — the
-    * round-14 broadcast rule): AQE sees the checkpointed frame's real
-    * size each round and picks broadcast while N is small, shuffle
-    * join once it is not. Rounds are fixed at 8, so the driver holds
-    * only N — no per-round convergence count is needed. */
   /** The iteration core over an arbitrary weighted edge list
     * `(s, t, w)` — separated from the harness op so the spec can drive
     * a hand-built graph through the EXACT production arithmetic and
@@ -321,7 +266,7 @@ object Graph {
       .agg(sum("w").as("ow"), max("w").as("mw"))
       .observe(obs, count(lit(1)).as("n"),
         max(col("mw")).as("mw"), max(col("ow")).as("ow"))
-      .select(col("node"), col("ow")), None)
+      .select(col("node"), col("ow")))
     val caps = obs.get
     val n = caps("n").asInstanceOf[Long] // driver scalar: the node count
     require(n > 0, "pagerankRanks: empty edge list")
@@ -388,12 +333,13 @@ object Graph {
       // cost AND its bench variance. Four un-truncated rounds keep the
       // optimizer's tree small (~12 operators) while the groupBy
       // shuffle boundaries inside it still persist map outputs for
-      // failure recovery — the checkpoint only ever bought plan
-      // truncation, never durability (localCheckpoint blocks die with
-      // the executor either way).
+      // failure recovery. Durability follows the deployment, like
+      // Spark's PeriodicCheckpointer: with a checkpoint directory set
+      // the truncation is a reliable checkpoint, without one its
+      // local blocks die with the executor.
       val next =
         pagerankRound(edgesRaw, nodes, ranks, contribC, base, gateB, longSafe)
-      ranks = if (i % 4 == 0 || i == iters) truncate(next, None) else next
+      ranks = if (i % 4 == 0 || i == iters) truncate(next) else next
     }
     ranks.select(col("node"), col("r"))
   }
@@ -434,7 +380,7 @@ object Graph {
                                        gateB: Boolean): DataFrame = {
     val edgesRaw = copurchaseEdges(spark, dir)
     val nodesOw = truncate(edgesRaw.groupBy(col("s").as("node"))
-      .agg(sum("w").as("ow"), max("w").as("mw")), None)
+      .agg(sum("w").as("ow"), max("w").as("mw")))
     val nodes = nodesOw.select(col("node"), col("ow"))
     val ranks = nodes.withColumn("r", lit(1000000L))
     pagerankRound(edgesRaw, nodes, ranks,
@@ -476,41 +422,23 @@ object Graph {
     * the same (s, t, w) build, which each used to recompute from scratch
     * (~1.5 s repeated across the sf0.1 battery — the round-14 verdict's
     * top perf_weak cluster). Keyed by the session, the dir AND the
-    * IDENTITY of the stamped lineitem relation — Schemas' relation cache
-    * returns the same instance until the underlying files change, so a
-    * corpus regen or a test overwriting its fixture dir naturally
+    * IDENTITY of the stamped lineitem relation — the `Tables.relation`
+    * memo returns the same instance until the underlying files change,
+    * so a corpus regen or a test overwriting its fixture dir naturally
     * misses. A service that churns corpora evicts through
-    * [[graft.MemoRegistry.evict]] on retire. The executor-loss hazard:
-    * the default `localCheckpoint` truncates lineage into UNRECOVERABLE
-    * blocks, and a cluster deployment passes `checkpointDir = Some(d)`
-    * to the three-arg [[copurchaseEdges]] overload to route the memo
-    * through the RELIABLE checkpoint instead (mode is part of the memo
-    * key). */
+    * [[graft.MemoRegistry.evict]] on retire. */
   private[graft] val edgeMemo =
-    new Memo[(SparkSession, String, Option[String]), DataFrame]("Graph.edge")
+    new Memo[(SparkSession, String), DataFrame]("Graph.edge")
 
   /** Directed weighted co-purchase edges: s→t with w = number of order
     * baskets containing both parts (symmetric by construction). Shared
     * by [[pagerankParts]] and [[copurchaseComponents]]. Baskets are
     * capped at [[MaxBasketParts]] parts — see the cap's scaladoc.
-    * Materialized once per JVM (eager localCheckpoint) and reused by
-    * every graph op over the same data. */
-  private[graft] def copurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    copurchaseEdges(spark, dir, None)
-
-  /** As above, with the lineage-truncation mode explicit (round-16
-    * verdict #6 — the cluster-deployment hazard graduated to code):
-    * `checkpointDir = Some(d)` routes the memoized frame through the
-    * RELIABLE `checkpoint` knob [[truncate]] already gives the
-    * iterative ops, so the memo's blocks survive executor loss on a
-    * real cluster; the harness default stays `localCheckpoint`. The
-    * mode participates in the memo key — a session asking for the
-    * reliable frame never gets handed the volatile one (and vice
-    * versa). */
-  private[graft] def copurchaseEdges(spark: SparkSession, dir: String,
-      checkpointDir: Option[String]): DataFrame = {
+    * Materialized once per JVM ([[graft.Checkpoint.truncate]]) and
+    * reused by every graph op over the same data. */
+  private[graft] def copurchaseEdges(spark: SparkSession, dir: String): DataFrame = {
     val li0 = Tables.lineitem(spark, dir)
-    edgeMemo((spark, dir, checkpointDir), li0) {
+    edgeMemo((spark, dir), li0) {
       // Round-21 continuation NEGATIVE result (recorded so it is not
       // retried): pinning the artifact to numShufflePartitions
       // (REPARTITION_BY_NUM before the checkpoint — the containment
@@ -520,7 +448,7 @@ object Graph {
       // fixed cost outweighs the extra parallelism, and at 100 TB the
       // artifact is large enough that AQE's advisory sizing already
       // yields full parallelism. The coalesced build stands.
-      truncate(copurchaseEdgesPlan(li0), checkpointDir)
+      truncate(copurchaseEdgesPlan(li0))
     }
   }
 
@@ -581,7 +509,7 @@ object Graph {
   def copurchaseTriangles(spark: SparkSession, dir: String): DataFrame = {
     val e = truncate(copurchaseEdges(spark, dir)
       .filter(col("w") >= 2 && col("s") < col("t"))
-      .select(col("s").as("a"), col("t").as("b")), None)
+      .select(col("s").as("a"), col("t").as("b")))
     val nEdges = e.count() // driver scalar for the summary row
     // the count above doubles as the census-family broadcast gate
     // (round-20, nodeJaccard's comment): under it the wedge build and
@@ -669,7 +597,7 @@ object Graph {
   def nodeJaccard(spark: SparkSession, dir: String): DataFrame = {
     val e = truncate(copurchaseEdges(spark, dir)
       .filter(col("w") >= 2 && col("s") < col("t"))
-      .select(col("s").as("a"), col("t").as("b")), None)
+      .select(col("s").as("a"), col("t").as("b")))
     // Measured broadcast gate (round-20, the CcBroadcastEdgeGate
     // precedent spread to the census family): the checkpointed edge
     // frame is a LogicalRDD with NO stats, so AQE never discovers that
@@ -739,7 +667,7 @@ object Graph {
     val k = KcoreK
     var e = truncate(copurchaseEdges(spark, dir)
       .filter(col("w") >= 2 && col("s") < col("t"))
-      .select(col("s").as("a"), col("t").as("b")), None)
+      .select(col("s").as("a"), col("t").as("b")))
     var deg = degreesOf(e)
     var rounds = 0
     var converged = false
@@ -749,7 +677,7 @@ object Graph {
       // the old spelling paid a separate isEmpty action per round
       val obs = new org.apache.spark.sql.Observation()
       val bad = truncate(deg.filter(col("d") < k).select("v")
-        .observe(obs, count(lit(1)).as("nbad")), None)
+        .observe(obs, count(lit(1)).as("nbad")))
       val nbad = Option(obs.get("nbad")).map(_.asInstanceOf[Long]).getOrElse(0L)
       if (nbad == 0) converged = true
       else {
@@ -771,7 +699,7 @@ object Graph {
         e = truncate(
           e.join(badSide("a"), Seq("a"), "left_anti")
             .join(badSide("b"), Seq("b"), "left_anti")
-            .select("a", "b"), None)
+            .select("a", "b"))
         rounds += 1
         deg = degreesOf(e)
       }
@@ -838,6 +766,39 @@ object Graph {
           .as("assortativity"))
   }
 
+  /** Weighted PageRank over the part co-purchase graph: nodes are
+    * parts, a directed edge s→t weighted by the number of orders whose
+    * baskets contain both s and t (symmetric by construction, so the
+    * graph has no dangling nodes and no rank mass escapes). Damping
+    * 0.85, [[PagerankIters]] power iterations, top 20 parts by rank.
+    *
+    * Every rank is an exact INTEGER in parts-per-billion of total mass
+    * (the playbook's micro-unit-long discipline, taken to its
+    * conclusion: the entire iteration is integer arithmetic, so the
+    * trajectory is bit-identical on any engine and any partitioning):
+    * init = 1e9/N (integer division), per-edge contribution
+    * r·85·w div (ow·100) with 128-bit intermediates (DECIMAL(38,0) ≡
+    * DuckDB HUGEINT — r·85·w overflows a long once an edge co-occurs
+    * in ~10⁸ orders, which a 100 TB corpus reaches), new rank =
+    * 0.15e9/N + Σ contributions (an exact long sum — order-free, so
+    * map-side partial aggregation stays legal). Truncation loses <1%
+    * of total mass over 8 rounds (measured 0.994e9 at sf0.1) and is
+    * part of the contract, applied identically in the oracle.
+    *
+    * 100 TB posture: basket pairing is quadratic in basket size
+    * (bounded at 7 lineitems in TPC-H; a real corpus caps baskets
+    * first — the skew_profile op is the audit for that). The edge
+    * frame materializes ONCE (the per-JVM [[copurchaseEdges]]
+    * checkpoint — callers of the bare iteration core pass a
+    * materialized frame, since the loop scans it every round) and is
+    * reused by all 8 rounds; each round is one broadcast-or-shuffle
+    * join of the node-sized rank frame against edges plus a groupBy(t) whose
+    * partial sums collapse to ≤N rows per partition before the
+    * shuffle. Ranks are NOT force-broadcast (fact-derived — the
+    * round-14 broadcast rule): AQE sees the checkpointed frame's real
+    * size each round and picks broadcast while N is small, shuffle
+    * join once it is not. Rounds are fixed at 8, so the driver holds
+    * only N — no per-round convergence count is needed. */
   def pagerankParts(spark: SparkSession, dir: String): DataFrame = {
     val edgesRaw = copurchaseEdges(spark, dir)
     pagerankRanks(edgesRaw)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Checkpoint, Tables}
 import graft.functions.ExactDecimal.exactDecimal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UnscaledValue
@@ -1251,8 +1251,8 @@ object Recon {
     require(src.columns.contains("part") && tgt.columns.contains("part"),
       "incrementalDiff: both frames must carry a 'part' partition column")
     // Each side's (part, key, row-hash) projection is computed ONCE and
-    // materialized (localCheckpoint: one eager job per side over the
-    // narrow projection, executor-memory storage, lineage truncated), then
+    // materialized (Checkpoint.truncate: one eager job per side over the
+    // narrow projection, lineage truncated), then
     // REUSED by both consumers — the snapshot fingerprints and the scoped
     // row-level detail. The round-8 form re-derived it per consumer: four
     // scans and four checksum passes over the same files per run. The
@@ -1262,9 +1262,8 @@ object Recon {
     // the portable md5 form. At 100 TB only the detail pass touches raw
     // rows, and only in moved partitions.
     def side(df: DataFrame, alias: String) =
-      df.select(col("part"), col(key).as("k"),
-          rowHash64(cols.map(col)).as(alias))
-        .localCheckpoint()
+      Checkpoint.truncate(df.select(col("part"), col(key).as("k"),
+        rowHash64(cols.map(col)).as(alias)))
     val s = side(src, "h_src")
     val t = side(tgt, "h_tgt")
     val moved = snapshotDiff(

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Memo, Tables}
+import graft.{Checkpoint, Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1526,11 +1526,6 @@ object Relational {
       .limit(100)
   }
 
-  /** TPC-H-Q22-shaped lapsed-customer report: above-average balances with
-    * no recent orders. The scalar average broadcasts as a 1-row cross
-    * join (no correlated re-scan per row); the NOT EXISTS is a left-anti
-    * join against the date-filtered order keys — the anti side is
-    * pre-shrunk by the pushed date predicate before it shuffles. */
   /** Year-over-year revenue growth — the board-deck staple: yearly order
     * count and exact revenue, plus each year's growth vs the prior year.
     * The fact collapses to a |years|-row frame in one two-phase hash agg
@@ -1739,6 +1734,11 @@ object Relational {
       .orderBy("r_seg", "f_seg")
   }
 
+  /** TPC-H-Q22-shaped lapsed-customer report: above-average balances with
+    * no recent orders. The scalar average broadcasts as a 1-row cross
+    * join (no correlated re-scan per row); the NOT EXISTS is a left-anti
+    * join against the date-filtered order keys — the anti side is
+    * pre-shrunk by the pushed date predicate before it shuffles. */
   def q22IdleCustomers(spark: SparkSession, dir: String): DataFrame = {
     val c = Tables.customer(spark, dir)
     val avgBal = c.filter(col("c_acctbal") > 0)
@@ -2073,32 +2073,6 @@ object Relational {
       .orderBy(desc("lift"), col("brand_a"), col("brand_b")).limit(30)
   }
 
-  /** Pareto / ABC classification of customers by lifetime revenue:
-    * class A = the top customers holding the first 80 % of total
-    * revenue, B = the next 15 %, C = the tail. Classes are defined at
-    * REVENUE-VALUE granularity (every customer with the same total
-    * lands in the same class; the crossing value belongs wholly to the
-    * upper class): v is A iff 5·cumBefore(v) < 4·T where cumBefore is
-    * the revenue strictly above v and T the grand total — exact long
-    * comparisons, no ratio doubles anywhere near a boundary.
-    *
-    * The naive spelling is a GLOBAL ordered running sum over every
-    * customer — an unpartitioned window, the textbook all-to-one scale
-    * cliff. This op instead finds the two value thresholds with the
-    * [[Selection]] two-round histogram discipline: (1) per-value
-    * weights bucketed into ≤1025 fixed-width bins whose per-bin sums
-    * collect to the driver (bounded by the CONSTANT bin count — the
-    * same class as valueAtRanks' bucket frame); the desc-cumulative
-    * bin walk locates each threshold's bin and its exact weight
-    * offset; (2) one pass over ONLY the boundary bins (≈1/1024 of
-    * distinct values) with a bin-PARTITIONED window yields the exact
-    * thresholds; (3) the final classification is a map-side CASE on
-    * the checkpointed per-customer frame — no global sort, no
-    * unpartitioned window, every shuffle group- or bin-sized.
-    * Monotonicity of cumBefore in v proves the threshold form
-    * (v ≥ t80 ⟺ 5·cumBefore(v) < 4T) equal to the oracle's direct
-    * window spelling; the spec pins it on a boundary-splitting
-    * fixture. Money in exact 1e-4-unit longs ([[Recon.cents]]). */
   /** Per-priority monthly revenue trend: ordinary-least-squares fit of
     * monthly revenue against the month index, with the next-month
     * forecast and R² — the closed-form forecasting op a reporting
@@ -2176,9 +2150,10 @@ object Relational {
     * still computed per call by the distributed classify+aggregate
     * over the memoized frame. Keyed by (session, dir) with the orders
     * relation IDENTITY as the staleness check — a corpus regen misses
-    * naturally. Same localCheckpoint durability caveat as the other
-    * frame memos (blocks die with the executor; a corpus-churning
-    * service evicts via [[graft.MemoRegistry]]). */
+    * naturally. Durability is [[graft.Checkpoint.truncate]]'s, like the
+    * other frame memos (local blocks die with the executor unless the
+    * deployment sets a checkpoint directory; a corpus-churning service
+    * evicts via [[graft.MemoRegistry]]). */
   private[graft] val paretoMemo =
     new Memo[(SparkSession, String), (DataFrame, Long, Long, Long)]("Relational.pareto")
 
@@ -2189,18 +2164,17 @@ object Relational {
     * discipline). */
   private[graft] def paretoState(spark: SparkSession,
                                  orders: DataFrame): (DataFrame, Long, Long, Long) = {
-    val rev = orders.groupBy(col("o_custkey"))
-      .agg(sum(Recon.cents(col("o_totalprice"))).as("c"))
-      .localCheckpoint(true)
+    val rev = Checkpoint.truncate(orders.groupBy(col("o_custkey"))
+      .agg(sum(Recon.cents(col("o_totalprice"))).as("c")))
     // min/max/total ride the vals materialization as observe metrics
     // (round-20 — the connectedComponents observe discipline): the old
     // form paid a separate 1-row agg job over the just-checkpointed
     // frame
     val obs = new org.apache.spark.sql.Observation()
-    val vals = rev.groupBy(col("c").as("v")).agg(sum("c").as("w"))
-      .observe(obs, min(col("v")).as("mn"), max(col("v")).as("mx"),
-        sum(col("w")).as("t"))
-      .localCheckpoint(true)
+    val vals = Checkpoint.truncate(
+      rev.groupBy(col("c").as("v")).agg(sum("c").as("w"))
+        .observe(obs, min(col("v")).as("mn"), max(col("v")).as("mx"),
+          sum(col("w")).as("t")))
     val (mn, mx, t) = (
       Option(obs.get("mn")).map(_.asInstanceOf[Long]).getOrElse(0L),
       Option(obs.get("mx")).map(_.asInstanceOf[Long]).getOrElse(0L),
@@ -2254,6 +2228,32 @@ object Relational {
     (rev, thr.getLong(0), thr.getLong(1), t)
   }
 
+  /** Pareto / ABC classification of customers by lifetime revenue:
+    * class A = the top customers holding the first 80 % of total
+    * revenue, B = the next 15 %, C = the tail. Classes are defined at
+    * REVENUE-VALUE granularity (every customer with the same total
+    * lands in the same class; the crossing value belongs wholly to the
+    * upper class): v is A iff 5·cumBefore(v) < 4·T where cumBefore is
+    * the revenue strictly above v and T the grand total — exact long
+    * comparisons, no ratio doubles anywhere near a boundary.
+    *
+    * The naive spelling is a GLOBAL ordered running sum over every
+    * customer — an unpartitioned window, the textbook all-to-one scale
+    * cliff. This op instead finds the two value thresholds with the
+    * [[Selection]] two-round histogram discipline: (1) per-value
+    * weights bucketed into ≤1025 fixed-width bins whose per-bin sums
+    * collect to the driver (bounded by the CONSTANT bin count — the
+    * same class as valueAtRanks' bucket frame); the desc-cumulative
+    * bin walk locates each threshold's bin and its exact weight
+    * offset; (2) one pass over ONLY the boundary bins (≈1/1024 of
+    * distinct values) with a bin-PARTITIONED window yields the exact
+    * thresholds; (3) the final classification is a map-side CASE on
+    * the checkpointed per-customer frame — no global sort, no
+    * unpartitioned window, every shuffle group- or bin-sized.
+    * Monotonicity of cumBefore in v proves the threshold form
+    * (v ≥ t80 ⟺ 5·cumBefore(v) < 4T) equal to the oracle's direct
+    * window spelling; the spec pins it on a boundary-splitting
+    * fixture. Money in exact 1e-4-unit longs ([[Recon.cents]]). */
   def paretoAbc(spark: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(spark, dir)
     val (rev, t80, t95, t) = paretoMemo((spark, dir), orders)(paretoState(spark, orders))

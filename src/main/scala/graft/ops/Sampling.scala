@@ -138,6 +138,11 @@ object Sampling {
       .orderBy("source")
   }
 
+  /** The harness cap — interpolated into BOTH the registry call and
+    * the DuckDB oracle so the engines cannot drift (the IvfTrainCap /
+    * BpeIterations rule). Small enough to bite at the verify SF. */
+  private[graft] val HarnessCapK = 10
+
   /** Per-source document cap — source BALANCING, the third leg next to
     * stratified fractions and weighted mixing: no source may contribute
     * more than `k` docs, and WHICH k survive is a deterministic
@@ -152,11 +157,6 @@ object Sampling {
     * O(sources·k) rows per task, never the corpus; the skewed-source
     * flood this op exists to cap is exactly what the map-side limit
     * absorbs. */
-  /** The harness cap — interpolated into BOTH the registry call and
-    * the DuckDB oracle so the engines cannot drift (the IvfTrainCap /
-    * BpeIterations rule). Small enough to bite at the verify SF. */
-  private[graft] val HarnessCapK = 10
-
   def capPerSource(spark: SparkSession, dir: String, k: Int = 100): DataFrame = {
     require(k > 0, s"capPerSource: k must be positive: $k")
     val w = org.apache.spark.sql.expressions.Window

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Memo, Tables}
+import graft.{Checkpoint, Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -640,31 +640,6 @@ object Text {
     * into the oracle (the LmVocabCap pattern). */
   private[graft] val DupSpanLen = 16
 
-  /** Substring-level EXACT duplicate-span audit — the dup-span flavor
-    * of suffix-array corpus dedup (deduplicate-text-datasets): a
-    * position is duplicated when its [[DupSpanLen]]-char gram occurs
-    * ≥ 2 times ANYWHERE in the corpus (other docs or elsewhere in the
-    * same doc — real grams compared, not hashes: this op is the exact
-    * auditor; [[dedupWinnow]] is the fingerprinted approximation and
-    * [[dedupMinhash]] the candidate generator). Runs of duplicated
-    * positions merge gaps-and-islands-style into maximal spans — a new
-    * island only when the position gap exceeds the gram length, so
-    * span char ranges never overlap and dup_chars counts each
-    * duplicated character exactly once. Top-100 docs by duplicated
-    * characters — the "which documents are mostly boilerplate" cut an
-    * exact-substring pass exists to answer.
-    *
-    * Exactness: everything is integer counts except dup_ratio, one
-    * identically-spelled double division rounded 6 dp (always ≥ 0 — no
-    * sign guard needed); the rank key (dup_chars DESC, doc_id) is an
-    * exact-integer total order.
-    *
-    * 100 TB posture: NO quadratic pair frame anywhere — position
-    * enumeration happens inside the scan stage, the dup test is ONE
-    * gram-keyed window (shuffle linear in corpus chars × gram bytes —
-    * the honest price of exact substring semantics; a suffix array
-    * pays the same corpus-sized sort), islands are one doc-keyed
-    * window, and the result is TakeOrdered-bounded. */
   /** [[DupSpanLen]]-gram position enumeration for the exact-substring
     * family: (doc_id, pos, g) with the gram projected INSIDE the scan
     * stage — only the compact triple ever shuffles. Round 16: grams
@@ -706,6 +681,31 @@ object Text {
         sum(col("e") - col("s") + L).as("span_chars"))
   }
 
+  /** Substring-level EXACT duplicate-span audit — the dup-span flavor
+    * of suffix-array corpus dedup (deduplicate-text-datasets): a
+    * position is duplicated when its [[DupSpanLen]]-char gram occurs
+    * ≥ 2 times ANYWHERE in the corpus (other docs or elsewhere in the
+    * same doc — real grams compared, not hashes: this op is the exact
+    * auditor; [[dedupWinnow]] is the fingerprinted approximation and
+    * [[dedupMinhash]] the candidate generator). Runs of duplicated
+    * positions merge gaps-and-islands-style into maximal spans — a new
+    * island only when the position gap exceeds the gram length, so
+    * span char ranges never overlap and dup_chars counts each
+    * duplicated character exactly once. Top-100 docs by duplicated
+    * characters — the "which documents are mostly boilerplate" cut an
+    * exact-substring pass exists to answer.
+    *
+    * Exactness: everything is integer counts except dup_ratio, one
+    * identically-spelled double division rounded 6 dp (always ≥ 0 — no
+    * sign guard needed); the rank key (dup_chars DESC, doc_id) is an
+    * exact-integer total order.
+    *
+    * 100 TB posture: NO quadratic pair frame anywhere — position
+    * enumeration happens inside the scan stage, the dup test is ONE
+    * gram-keyed window (shuffle linear in corpus chars × gram bytes —
+    * the honest price of exact substring semantics; a suffix array
+    * pays the same corpus-sized sort), islands are one doc-keyed
+    * window, and the result is TakeOrdered-bounded. */
   def dupSpans(spark: SparkSession, dir: String): DataFrame = {
     val L = DupSpanLen
     val d = docs(spark, dir)
@@ -722,6 +722,19 @@ object Text {
         Recon.ratioRound(col("span_chars"), col("len"), 6).as("dup_ratio"))
       .orderBy(desc("dup_chars"), col("doc_id")).limit(100)
   }
+
+  /** Per-JVM memo of the eval-split SPAN-gram Bloom filter behind
+    * [[decontaminateSubstring]] — the round-21 eager-construction item
+    * (decomp: 0.274 s of construction jobs per call). Exactly the
+    * [[bloomMemo]] class (xxhash64'd [[DupSpanLen]]-char grams instead
+    * of token n-gram hashes): a derived sketch INPUT with no false
+    * negatives; the op's output — the exact semi-join + span collapse
+    * over the train split — recomputes per call. Keyed by (session,
+    * dir, evalSource) with the documents relation IDENTITY as the
+    * staleness check. */
+  private[graft] val spanBloomMemo = new Memo[
+    (SparkSession, String, String), org.apache.spark.util.sketch.BloomFilter](
+    "Text.spanBloom")
 
   /** Exact-substring decontamination — the fourth decontaminate
     * modality (n-gram broadcast / bloom scan / winnow fingerprints /
@@ -743,19 +756,6 @@ object Text {
     * this testbed and the shuffled form is the one that survives a fat
     * eval suite); the train stream is scan-side enumeration + the
     * semi-probe + one doc-keyed islands window. */
-  /** Per-JVM memo of the eval-split SPAN-gram Bloom filter behind
-    * [[decontaminateSubstring]] — the round-21 eager-construction item
-    * (decomp: 0.274 s of construction jobs per call). Exactly the
-    * [[bloomMemo]] class (xxhash64'd [[DupSpanLen]]-char grams instead
-    * of token n-gram hashes): a derived sketch INPUT with no false
-    * negatives; the op's output — the exact semi-join + span collapse
-    * over the train split — recomputes per call. Keyed by (session,
-    * dir, evalSource) with the documents relation IDENTITY as the
-    * staleness check. */
-  private[graft] val spanBloomMemo = new Memo[
-    (SparkSession, String, String), org.apache.spark.util.sketch.BloomFilter](
-    "Text.spanBloom")
-
   def decontaminateSubstring(spark: SparkSession, dir: String,
                              evalSource: String = "src0"): DataFrame = {
     val L = DupSpanLen
@@ -865,10 +865,10 @@ object Text {
       val bandKey = (b: Int) =>
         concat_ws(":", (b * RowsPerBand until (b + 1) * RowsPerBand)
           .map(i => col("sig").getItem(i).cast("string")): _*)
-      capBuckets(
+      Checkpoint.truncate(capBuckets(
         sig.select(col("doc_id"), col("source"), col("sig"),
           posexplode(array((0 until Bands).map(bandKey): _*)).as(Seq("band", "bh"))),
-        Seq("band", "bh")).localCheckpoint(true)
+        Seq("band", "bh")))
     }
   }
 
@@ -922,7 +922,7 @@ object Text {
   private[graft] def minhashPairsShared(spark: SparkSession,
                                         dir: String): DataFrame =
     mhPairFrameMemo((spark, dir), docs(spark, dir)) {
-      minhashPairs(spark, dir).localCheckpoint(true)
+      Checkpoint.truncate(minhashPairs(spark, dir))
     }
 
   /** Incremental near-dup dedup — the nightly-ingest shape: only the
@@ -1022,6 +1022,30 @@ object Text {
       .orderBy("est_decile")
   }
 
+  /** Per-JVM memo of the MATERIALIZED winnow fingerprint frame
+    * (doc_id, source, fp) — the banded-signature memo's sibling for the
+    * substring modality: the native [[graft.functions.WinnowSet]] pass
+    * digests an md5 per character shingle (the family's dominant map
+    * cost), and [[dedupWinnow]] AND [[decontaminateWinnow]] each re-ran
+    * it over the whole corpus per call. Same keying and displacement
+    * semantics as [[bandedMemo]]. */
+  private val winnowMemo = new Memo[(SparkSession, String), DataFrame]("Text.winnow")
+
+  /** The UNCACHED winnow fingerprint plan — [[winnowFps]] is this plus
+    * the per-JVM materialization; ScaleSpec audits THIS form (the
+    * memoized frame's plan is just the checkpoint scan — the
+    * [[graft.ops.Graph]] copurchaseEdgesPlan discipline). */
+  private[graft] def winnowFpsPlan(d0: DataFrame): DataFrame =
+    graft.FanOut(d0)
+      .select(col("doc_id"), col("source"),
+        explode(graft.functions.WinnowSet.winnowSet(col("text"), 8, 16))
+          .as("fp"))
+
+  private[graft] def winnowFps(spark: SparkSession, dir: String): DataFrame = {
+    val d0 = docs(spark, dir)
+    winnowMemo((spark, dir), d0)(Checkpoint.truncate(winnowFpsPlan(d0)))
+  }
+
   /** Winnowing (MOSS) substring-overlap near-dup detection — the
     * SUBSTRING-level modality the token-set detectors can't see: a
     * copied passage inside two otherwise-different documents moves
@@ -1046,30 +1070,6 @@ object Text {
     * [[minhashPairs]] discipline). Oracle re-derives the identical
     * set via a vectorized ROWS-frame window min over the shingle
     * stream (full windows only) + DISTINCT. */
-  /** Per-JVM memo of the MATERIALIZED winnow fingerprint frame
-    * (doc_id, source, fp) — the banded-signature memo's sibling for the
-    * substring modality: the native [[graft.functions.WinnowSet]] pass
-    * digests an md5 per character shingle (the family's dominant map
-    * cost), and [[dedupWinnow]] AND [[decontaminateWinnow]] each re-ran
-    * it over the whole corpus per call. Same keying and displacement
-    * semantics as [[bandedMemo]]. */
-  private val winnowMemo = new Memo[(SparkSession, String), DataFrame]("Text.winnow")
-
-  /** The UNCACHED winnow fingerprint plan — [[winnowFps]] is this plus
-    * the per-JVM materialization; ScaleSpec audits THIS form (the
-    * memoized frame's plan is just the checkpoint scan — the
-    * [[graft.ops.Graph]] copurchaseEdgesPlan discipline). */
-  private[graft] def winnowFpsPlan(d0: DataFrame): DataFrame =
-    graft.FanOut(d0)
-      .select(col("doc_id"), col("source"),
-        explode(graft.functions.WinnowSet.winnowSet(col("text"), 8, 16))
-          .as("fp"))
-
-  private[graft] def winnowFps(spark: SparkSession, dir: String): DataFrame = {
-    val d0 = docs(spark, dir)
-    winnowMemo((spark, dir), d0)(winnowFpsPlan(d0).localCheckpoint(true))
-  }
-
   def dedupWinnow(spark: SparkSession, dir: String): DataFrame = {
     val wins = winnowFps(spark, dir).select("doc_id", "fp")
     val capped = capBuckets(wins, Seq("fp"))
@@ -1185,7 +1185,7 @@ object Text {
   private[graft] def simhashPairsShared(spark: SparkSession,
                                         dir: String): DataFrame =
     shPairFrameMemo((spark, dir), docs(spark, dir)) {
-      simhashPairs(spark, dir).localCheckpoint(true)
+      Checkpoint.truncate(simhashPairs(spark, dir))
     }
 
   /** doc_id + 64-bit simhash from a (doc_id, toks) frame — the native
@@ -1198,6 +1198,20 @@ object Text {
     docToks
       .withColumn("simhash", graft.functions.SimHash64.simhash64(col("toks")))
       .drop("toks")
+
+  /** Per-JVM memo of the COLLECTED language profile (top-30 bigrams per
+    * language, schema-bounded like a broadcast dim) — the trained
+    * dictionary shared by [[langidNgram]] and [[langidEval]], which
+    * each re-ran the distributed bigram-count job per call. Same keying
+    * and displacement semantics as the family's other derived-artifact
+    * memos ([[bandedMemo]]). The parity reference
+    * [[langidNgramJoined]] keeps the distributed trainer on purpose. */
+  private val langidMemo = new Memo[
+    (SparkSession, String), Array[org.apache.spark.sql.Row]]("Text.langid")
+
+  private def trainedProfileRows(spark: SparkSession,
+                                 dir: String): Array[org.apache.spark.sql.Row] =
+    langidMemo((spark, dir), docs(spark, dir))(trainProfile(spark, dir).collect())
 
   /** Language ID via char-bigram profiles: the profile (top-30 bigrams per
     * language) is trained distributed from the corpus itself, then each doc
@@ -1227,20 +1241,6 @@ object Text {
     * — is kept as [[langidNgramJoined]], the parity-spec'd reference;
     * it measured 1.17 s vs 0.9 s DuckDB at sf0.1, with the gram
     * re-explode and the per-(doc,lang) aggregate as the residual cost.) */
-  /** Per-JVM memo of the COLLECTED language profile (top-30 bigrams per
-    * language, schema-bounded like a broadcast dim) — the trained
-    * dictionary shared by [[langidNgram]] and [[langidEval]], which
-    * each re-ran the distributed bigram-count job per call. Same keying
-    * and displacement semantics as the family's other derived-artifact
-    * memos ([[bandedMemo]]). The parity reference
-    * [[langidNgramJoined]] keeps the distributed trainer on purpose. */
-  private val langidMemo = new Memo[
-    (SparkSession, String), Array[org.apache.spark.sql.Row]]("Text.langid")
-
-  private def trainedProfileRows(spark: SparkSession,
-                                 dir: String): Array[org.apache.spark.sql.Row] =
-    langidMemo((spark, dir), docs(spark, dir))(trainProfile(spark, dir).collect())
-
   def langidNgram(spark: SparkSession, dir: String): DataFrame = {
     val rows = trainedProfileRows(spark, dir)
     val langs = rows.map(_.getString(0)).distinct.sorted
@@ -1352,23 +1352,6 @@ object Text {
       .orderBy("lang", "pred")
   }
 
-  /** Scale path for [[decontaminateNgram]]: the eval split's distinct
-    * gram hashes compact into a Bloom filter (distributed build via
-    * `stat.bloomFilter`'s treeAggregate — only the bitmap reaches the
-    * driver) and the train side probes it as a codegen'd SCAN-SIDE
-    * FILTER — no join at all. Why it matters at 100 TB: a broadcast
-    * hash relation costs ~16 B per distinct gram, the bitmap ~1.2 B at
-    * 1% fpp, so an eval set whose hash relation blows the broadcast
-    * budget (billions of grams) still ships to every executor as a few
-    * GB of bits. Approximate one-way: no false negatives — a
-    * contaminated doc is NEVER missed — and fpp false positives that
-    * can only inflate a doc's hit count.
-    *
-    * Only (doc_id, hit) pairs that survive the probe reach the shuffle,
-    * so post-scan traffic is proportional to contamination, not corpus
-    * size — the same property the exact path's broadcast join has, with
-    * a 10–100× cheaper broadcast. Production path:
-    * [[decontaminateBloomFlags]]. */
   /** Per-JVM memo of the BUILT eval-split gram Bloom filter shared by
     * [[decontaminateBloom]] and [[decontaminateBloomFlags]] — the
     * round-21 eager-construction item: the two construction-time jobs
@@ -1409,6 +1392,23 @@ object Text {
     }
   }
 
+  /** Scale path for [[decontaminateNgram]]: the eval split's distinct
+    * gram hashes compact into a Bloom filter (distributed build via
+    * `stat.bloomFilter`'s treeAggregate — only the bitmap reaches the
+    * driver) and the train side probes it as a codegen'd SCAN-SIDE
+    * FILTER — no join at all. Why it matters at 100 TB: a broadcast
+    * hash relation costs ~16 B per distinct gram, the bitmap ~1.2 B at
+    * 1% fpp, so an eval set whose hash relation blows the broadcast
+    * budget (billions of grams) still ships to every executor as a few
+    * GB of bits. Approximate one-way: no false negatives — a
+    * contaminated doc is NEVER missed — and fpp false positives that
+    * can only inflate a doc's hit count.
+    *
+    * Only (doc_id, hit) pairs that survive the probe reach the shuffle,
+    * so post-scan traffic is proportional to contamination, not corpus
+    * size — the same property the exact path's broadcast join has, with
+    * a 10–100× cheaper broadcast. Production path:
+    * [[decontaminateBloomFlags]]. */
   def decontaminateBloomFlags(spark: SparkSession, dir: String,
                               evalSource: String = "src0", n: Int = 3,
                               fpp: Double = 0.001): DataFrame = {
@@ -1495,23 +1495,6 @@ object Text {
       .orderBy("source", "rn")
   }
 
-  /** Cross-document boilerplate detector — the top-k token n-grams by
-    * DOCUMENT frequency (each document votes once per distinct gram):
-    * headers, footers, license banners and template fragments that
-    * repeat across a crawl are the highest-document-frequency n-grams,
-    * and a training pipeline strips them before dedup ever sees the
-    * text (within-document repetition is [[textRepetition]]'s job; this
-    * is the across-document complement). Grams build row-locally
-    * (filter → sliding slice → array_distinct, all codegen'd collection
-    * expressions — per-doc state is bounded by document length), the
-    * (gram, count) agg partial-combines map-side, and the top-k runs as
-    * TakeOrderedAndProject over the gram-dictionary-sized count frame —
-    * nothing global ever sorts except the k survivors. (n_docs DESC,
-    * gram) is a total order, so ids are deterministic. At extreme scale
-    * the refinement is hash-first ([[graft.functions.NgramHashes]] for
-    * the count pass, then resolve the k surviving hashes to text with
-    * one semi-join) — the dictionary state shrinks 10×, the semantics
-    * don't change. */
   /** RAKE stopword list — the phrase delimiters. Deliberately the
     * SAME five words [[qualityScore]] counts, embedded as literals in
     * the oracle's NOT IN; case-sensitive by contract (tokens are kept
@@ -1573,6 +1556,23 @@ object Text {
         round(col("psm") / 1e6, 6).as("rake_score"))
   }
 
+  /** Cross-document boilerplate detector — the top-k token n-grams by
+    * DOCUMENT frequency (each document votes once per distinct gram):
+    * headers, footers, license banners and template fragments that
+    * repeat across a crawl are the highest-document-frequency n-grams,
+    * and a training pipeline strips them before dedup ever sees the
+    * text (within-document repetition is [[textRepetition]]'s job; this
+    * is the across-document complement). Grams build row-locally
+    * (filter → sliding slice → array_distinct, all codegen'd collection
+    * expressions — per-doc state is bounded by document length), the
+    * (gram, count) agg partial-combines map-side, and the top-k runs as
+    * TakeOrderedAndProject over the gram-dictionary-sized count frame —
+    * nothing global ever sorts except the k survivors. (n_docs DESC,
+    * gram) is a total order, so ids are deterministic. At extreme scale
+    * the refinement is hash-first ([[graft.functions.NgramHashes]] for
+    * the count pass, then resolve the k surviving hashes to text with
+    * one semi-join) — the dictionary state shrinks 10×, the semantics
+    * don't change. */
   def boilerplateNgrams(spark: SparkSession, dir: String,
                         n: Int = 5, k: Int = 20): DataFrame = {
     require(n >= 2 && k > 0, s"boilerplateNgrams: bad n=$n k=$k")
@@ -1753,7 +1753,7 @@ object Text {
     * the same chain was retired in round 20 because its ~20 eager
     * analysis passes per prefix dominated the op's bench time
     * (planning 0.74–1.2 s warm vs a 0.16 s execution floor — numbers
-    * in Probe.scala's history). `num` and `den` must be positive
+    * in OPTIMIZATION_r21.md's Probe appendix). `num` and `den` must be positive
     * DECIMAL(38,0) columns; the probes ([[jsProbeNorm]]) aggregate the
     * diagnostics to localize which stage of the chain the driver's
     * DuckDB build disagrees on. */
@@ -2116,15 +2116,18 @@ object Text {
       .orderBy("source")
   }
 
-  /** Zipf power-law fit over the token rank–frequency curve — the other
-    * half of the corpus health check [[vocabRichness]] starts: natural
-    * text follows ln(freq) ≈ a − s·ln(rank) with s near 1; a flat slope
-    * flags templated/synthetic text, a cliff flags truncated vocab. The
-    * regression runs over the top-k count frame only (TakeOrdered — the
-    * vocab_top_tokens plan), so the fit is k-sized at any corpus scale;
-    * (cnt DESC, tok) is a total order making ranks deterministic.
-    * Integer (cnt, rank) into `ln` and a 4-dp round keep the regression
-    * cross-engine stable (the regr_funcs/collocations precedent). */
+  /** Bigram-vocabulary cap for [[lmScore]]'s driver-side model build.
+    * Alphabet² alone bounded the old collect — fine for Latin-script
+    * corpora, ~10⁸ rows on a CJK-like one (round-13 advice). The
+    * [[BpeWordCap]] discipline applies verbatim: top-k by (count DESC,
+    * gram UTF-8 ASC — Spark string order IS DuckDB binary collation),
+    * mirrored in the oracle CTE. 2¹⁶ comfortably exceeds every
+    * Latin-script bigram alphabet (today's corpus uses a few thousand),
+    * so the cap only engages on the corpora that need it; out-of-vocab
+    * grams score zero micro-bits but still count in `n` (the scan's
+    * total-gram contract), mirrored by the oracle's LEFT JOIN. */
+  private[graft] val LmVocabCap: Int = 1 << 16
+
   /** Character-bigram language-model quality scoring — the LM-filter
     * stage of a training-data pipeline (the CCNet/KenLM pattern, with
     * the corpus as its own reference model): train bigram statistics
@@ -2144,18 +2147,6 @@ object Text {
     * the vocab log-prob table broadcasts back onto the gram stream, and
     * the per-doc then per-source aggs each end answer-sized. Nothing
     * row-count-sized shuffles beyond the first combine. */
-  /** Bigram-vocabulary cap for [[lmScore]]'s driver-side model build.
-    * Alphabet² alone bounded the old collect — fine for Latin-script
-    * corpora, ~10⁸ rows on a CJK-like one (round-13 advice). The
-    * [[BpeWordCap]] discipline applies verbatim: top-k by (count DESC,
-    * gram UTF-8 ASC — Spark string order IS DuckDB binary collation),
-    * mirrored in the oracle CTE. 2¹⁶ comfortably exceeds every
-    * Latin-script bigram alphabet (today's corpus uses a few thousand),
-    * so the cap only engages on the corpora that need it; out-of-vocab
-    * grams score zero micro-bits but still count in `n` (the scan's
-    * total-gram contract), mirrored by the oracle's LEFT JOIN. */
-  private[graft] val LmVocabCap: Int = 1 << 16
-
   def lmScore(spark: SparkSession, dir: String): DataFrame =
     lmScoreCapped(spark, dir, LmVocabCap)
 
@@ -2241,6 +2232,15 @@ object Text {
         Recon.ratioRound(max(col("mb")), lit(1000000L), 4).as("max_bits"))
       .orderBy("source")
 
+  /** Zipf power-law fit over the token rank–frequency curve — the other
+    * half of the corpus health check [[vocabRichness]] starts: natural
+    * text follows ln(freq) ≈ a − s·ln(rank) with s near 1; a flat slope
+    * flags templated/synthetic text, a cliff flags truncated vocab. The
+    * regression runs over the top-k count frame only (TakeOrdered — the
+    * vocab_top_tokens plan), so the fit is k-sized at any corpus scale;
+    * (cnt DESC, tok) is a total order making ranks deterministic.
+    * Integer (cnt, rank) into `ln` and a 4-dp round keep the regression
+    * cross-engine stable (the regr_funcs/collocations precedent). */
   def zipfSlope(spark: SparkSession, dir: String, k: Int = 1000): DataFrame = {
     val counts = Tables.documents(spark, dir)
       .select(explode(split(lower(col("text")), " ")).as("tok"))
@@ -2307,30 +2307,6 @@ object Text {
     * the DuckDB oracle remains a FULL-trajectory reproduction). */
   private[graft] val BpeWordCap = 20000
 
-  /** Byte-Pair-Encoding merge-pair training — the tokenizer-pipeline
-    * step (Sennrich et al. 2016) between [[vocabTopTokens]]'s frequency
-    * vocab and an actual subword tokenizer: start from character
-    * symbols, repeatedly merge the globally most frequent adjacent
-    * symbol pair (greedy left-to-right application, Sennrich's
-    * convention; no end-of-word marker — corpus-internal merges only),
-    * emitting one (step, lhs, rhs, pair_count) row per iteration.
-    *
-    * Architecture: ONE distributed job — the vocabulary-sized word
-    * count aggregate (map-side combinable) with a deterministic
-    * (count DESC, word) top-[[BpeWordCap]] selection — then the 16
-    * iterations run driver-side over that bounded table with exact
-    * integer pair counts: per-iteration distributed pair counting
-    * would pay 32 jobs of fixed overhead to re-derive what a capped
-    * dictionary yields in microseconds. Determinism contract (what the
-    * DuckDB oracle re-derives end-to-end): word and pair tie-breaks
-    * compare UTF-8 BYTES (Spark's UTF8String order == DuckDB binary
-    * collation — the Scala loop must match both), symbols split on
-    * CODEPOINTS (RE2 `.` semantics), pair counts weight by word
-    * frequency and count overlapping adjacencies, and merges apply
-    * greedily left-to-right (= non-overlapping string replace on the
-    * oracle's delimiter-wrapped spelling). Words containing the
-    * oracle's U+0001/U+0002 wrapper chars are excluded on BOTH
-    * engines. */
   /** The capped word-frequency dictionary both BPE ops train on — ONE
     * distributed vocabulary-sized count agg with a deterministic
     * (count DESC, word) TakeOrdered, collected bounded like a
@@ -2379,6 +2355,30 @@ object Text {
       bpeTrain(bpeWordCounts(spark, dir))
     }
 
+  /** Byte-Pair-Encoding merge-pair training — the tokenizer-pipeline
+    * step (Sennrich et al. 2016) between [[vocabTopTokens]]'s frequency
+    * vocab and an actual subword tokenizer: start from character
+    * symbols, repeatedly merge the globally most frequent adjacent
+    * symbol pair (greedy left-to-right application, Sennrich's
+    * convention; no end-of-word marker — corpus-internal merges only),
+    * emitting one (step, lhs, rhs, pair_count) row per iteration.
+    *
+    * Architecture: ONE distributed job — the vocabulary-sized word
+    * count aggregate (map-side combinable) with a deterministic
+    * (count DESC, word) top-[[BpeWordCap]] selection — then the 16
+    * iterations run driver-side over that bounded table with exact
+    * integer pair counts: per-iteration distributed pair counting
+    * would pay 32 jobs of fixed overhead to re-derive what a capped
+    * dictionary yields in microseconds. Determinism contract (what the
+    * DuckDB oracle re-derives end-to-end): word and pair tie-breaks
+    * compare UTF-8 BYTES (Spark's UTF8String order == DuckDB binary
+    * collation — the Scala loop must match both), symbols split on
+    * CODEPOINTS (RE2 `.` semantics), pair counts weight by word
+    * frequency and count overlapping adjacencies, and merges apply
+    * greedily left-to-right (= non-overlapping string replace on the
+    * oracle's delimiter-wrapped spelling). Words containing the
+    * oracle's U+0001/U+0002 wrapper chars are excluded on BOTH
+    * engines. */
   def bpeMerges(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     bpeTrainFresh(spark, dir)

@@ -196,6 +196,19 @@ object Vectors {
           .as("c"))
       .orderBy("label", "pos")
 
+  /** Per-JVM memo of the COLLECTED [[embedCentroids]] rows read by
+    * [[labelSeparability]] — the round-21 eager-construction item: the
+    * op re-ran the centroid aggregation job at construction time per
+    * call. The centroid table IS the `embed_centroids` query's output,
+    * so that op always re-computes (and never reads this memo) — the
+    * [[graft.ops.Text]] bpe_merges→bpe_segment boundary discipline;
+    * labelSeparability reads it as a labels×d dictionary input and
+    * still streams every corpus vector against the centroid literals
+    * per call. Keyed by (session, dir) with the embeddings relation
+    * IDENTITY as the staleness check. */
+  private[graft] val centroidRowsMemo =
+    new Memo[(SparkSession, String), Array[(Int, Int, Double)]]("Vectors.centroidRows")
+
   /** Label separability audit — the embedding-quality diagnostic that
     * decides whether labels are LEARNABLE from the vectors before
     * anyone trains on them (the centroid-margin complement of
@@ -224,19 +237,6 @@ object Vectors {
     * vectors stream row-local against their label's literal centroid
     * (a when-chain, no join, no shuffle before the label-sized agg);
     * the label² inter table is driver-trivial. */
-  /** Per-JVM memo of the COLLECTED [[embedCentroids]] rows read by
-    * [[labelSeparability]] — the round-21 eager-construction item: the
-    * op re-ran the centroid aggregation job at construction time per
-    * call. The centroid table IS the `embed_centroids` query's output,
-    * so that op always re-computes (and never reads this memo) — the
-    * [[graft.ops.Text]] bpe_merges→bpe_segment boundary discipline;
-    * labelSeparability reads it as a labels×d dictionary input and
-    * still streams every corpus vector against the centroid literals
-    * per call. Keyed by (session, dir) with the embeddings relation
-    * IDENTITY as the staleness check. */
-  private[graft] val centroidRowsMemo =
-    new Memo[(SparkSession, String), Array[(Int, Int, Double)]]("Vectors.centroidRows")
-
   def labelSeparability(spark: SparkSession, dir: String): DataFrame = {
     val centRows = centroidRowsMemo((spark, dir), Tables.embeddings(spark, dir)) {
       embedCentroids(spark, dir).collect()
@@ -403,6 +403,14 @@ object Vectors {
     normalized(spark, dir)
       .select(col("vec_id"), transform(col("v"), x => x / col("nrm")).as("u"))
 
+  /** Largest training set the coarse quantizer will collect. Training an
+    * IVF quantizer on a bounded sample is the standard contract (FAISS
+    * trains on ~max(10k·k) points regardless of index size); past the
+    * cap, the deterministic smallest-md5 rows ARE the sample. Below it —
+    * every test SF — training sees the full corpus, which is what keeps
+    * the DuckDB oracle a FULL-trajectory reproduction. */
+  private[graft] val IvfTrainCap = 50000
+
   /** Distributed spherical k-means: deterministic seeds (the k vectors
     * with the smallest md5(vec_id) — the portable cross-engine hash, so
     * the DuckDB oracle picks the identical seed set; xxhash64 does not
@@ -420,14 +428,6 @@ object Vectors {
     * `list_inner_product` (the proven ann_lsh_topk contract), so with
     * exact means the whole training trajectory is deterministic.
     * Returns (cid, cvec) with unit-norm cvec. */
-  /** Largest training set the coarse quantizer will collect. Training an
-    * IVF quantizer on a bounded sample is the standard contract (FAISS
-    * trains on ~max(10k·k) points regardless of index size); past the
-    * cap, the deterministic smallest-md5 rows ARE the sample. Below it —
-    * every test SF — training sees the full corpus, which is what keeps
-    * the DuckDB oracle a FULL-trajectory reproduction. */
-  private[graft] val IvfTrainCap = 50000
-
   private def kmeansCentroidsLocal(u: DataFrame): Seq[(Int, Seq[Double])] = {
     // Train the k×Dim quantizer DRIVER-SIDE from one bounded collect:
     // the distributed Lloyd loop (one job per round, Dim decimal-sum
@@ -503,9 +503,6 @@ object Vectors {
   def annIvfTopk(spark: SparkSession, dir: String): DataFrame =
     bestNeighbor(ivfCandidates(spark, dir)).orderBy("vec_id").limit(50)
 
-  /** The IVF candidate pair stream (vec_id, nn, sim) — the whole
-    * pipeline short of the per-vector argmax, shared by [[annIvfTopk]]
-    * and the [[annIvfRecall]] calibration. */
   /** Per-JVM memo of the TRAINED k×Dim coarse quantizer — the Graph
     * edge-memo / BPE-segment pattern for the ANN family: the bounded
     * training collect + driver Lloyd fold (~0.55–0.65 s per call,
@@ -513,7 +510,7 @@ object Vectors {
     * derived dictionary input shared by [[annIvfTopk]] AND
     * [[annIvfRecall]], re-trained identically on every call. Keyed by
     * session, dir and the IDENTITY of the stamped embeddings relation
-    * (Schemas' relation cache), so a corpus regen misses naturally;
+    * (the `Tables.relation` memo), so a corpus regen misses naturally;
     * the check-then-put race is benign (the trainer is deterministic —
     * md5 seeds, exact decimal means). */
   private val ivfCentroidMemo =
@@ -527,6 +524,9 @@ object Vectors {
       kmeansCentroidsLocal(unitVectors(spark, dir))
     }
 
+  /** The IVF candidate pair stream (vec_id, nn, sim) — the whole
+    * pipeline short of the per-vector argmax, shared by [[annIvfTopk]]
+    * and the [[annIvfRecall]] calibration. */
   private[graft] def ivfCandidates(spark: SparkSession, dir: String): DataFrame = {
     val u = unitVectors(spark, dir)
     val cents = ivfCentroids(spark, dir)
@@ -725,6 +725,19 @@ object Vectors {
   private[graft] val PqCentroids = 8
   private[graft] val PqTrainCap = IvfTrainCap
 
+  /** Per-JVM memo of the TRAINED PQ codebook behind [[pqCodebook]] —
+    * the round-21 eager-construction item: the trainer (capped
+    * content-ordered sample collect + per-subspace Lloyd round) re-ran
+    * identically per call, ~0.15 s of serial driver time. The codebook
+    * is a derived model input bounded at [[PqSubspaces]]·[[PqCentroids]]
+    * rows (the ivfCentroidMemo class — the op's OUTPUT, the per-cell
+    * population/distortion table, is still computed per call by the
+    * distributed assignment pass over every corpus vector). Keyed by
+    * (session, dir) with the embeddings relation IDENTITY as the
+    * staleness check. */
+  private[graft] val pqBooksMemo =
+    new Memo[(SparkSession, String), Seq[(Int, Int, Array[Double])]]("Vectors.pqBooks")
+
   /** Product-quantization codebook audit — the OTHER workhorse ANN
     * sketch next to IVF/LSH: the vector splits into [[PqSubspaces]]
     * sub-vectors, each subspace trains its own [[PqCentroids]]-entry
@@ -751,19 +764,6 @@ object Vectors {
     * M sub-vectors joined against the M·K-row literal codebook
     * (broadcast by construction) and immediately aggregated — shuffle
     * is (M·K)-keyed. */
-  /** Per-JVM memo of the TRAINED PQ codebook behind [[pqCodebook]] —
-    * the round-21 eager-construction item: the trainer (capped
-    * content-ordered sample collect + per-subspace Lloyd round) re-ran
-    * identically per call, ~0.15 s of serial driver time. The codebook
-    * is a derived model input bounded at [[PqSubspaces]]·[[PqCentroids]]
-    * rows (the ivfCentroidMemo class — the op's OUTPUT, the per-cell
-    * population/distortion table, is still computed per call by the
-    * distributed assignment pass over every corpus vector). Keyed by
-    * (session, dir) with the embeddings relation IDENTITY as the
-    * staleness check. */
-  private[graft] val pqBooksMemo =
-    new Memo[(SparkSession, String), Seq[(Int, Int, Array[Double])]]("Vectors.pqBooks")
-
   def pqCodebook(spark: SparkSession, dir: String): DataFrame = {
     val spark0 = spark
     import spark0.implicits._
@@ -848,33 +848,6 @@ object Vectors {
       }
   }
 
-  /** Top-20 most correlated embedding-dimension pairs — the redundancy
-    * audit behind dimensionality reduction and PQ subspace design:
-    * |corr| → 1 means two dimensions carry the same signal and the
-    * index wastes capacity.
-    *
-    * Exactness: elements quantize to 6-dp micro-unit longs; every
-    * sufficient statistic (Σxᵢ, Σxᵢ², Σxᵢxⱼ) is an exact 128-bit
-    * integer, Pearson's denominators clear — num = n·Sij − Si·Sj,
-    * den = n·Sii − Si² — and the only doubles are the final
-    * identically-spelled chain (two IEEE sqrts, one division), round
-    * 6dp +0. Zero-variance dims drop via den > 0 on both engines.
-    * Ranking sorts the ROUNDED |corr| with (i, j) tie-break, so the
-    * top-20 cut is engine-independent.
-    *
-    * 100 TB posture (round 16 — the one-pass Gram rewrite): the whole
-    * sufficient-statistic set (n, Σxᵢ and the FULL upper-triangle
-    * Σxᵢxⱼ) accumulates in ONE typed
-    * [[graft.functions.GramAgg]] pass — a flat long array per task, so
-    * nothing row-count-sized ever fans out (the previous inline
-    * expansion emitted d(d−1)/2 pair structs per row into a d²-keyed
-    * hash aggregate: scale-safe but ~2 000 aggregate-map probes per
-    * row; the bench halved its 2.28 s). Only ~(d²/2 + d) longs per
-    * task shuffle; the pair frame then unpacks from the SINGLE state
-    * row via a sequence/inline transform (answer-sized by the schema's
-    * dimensionality) into the identical exact decimal chain, so the
-    * oracle is unchanged. Overflow is loud, not silent — GramAgg
-    * accumulates with Math.addExact (envelope in its scaladoc). */
   /** The one-pass [[graft.functions.GramAgg]] state frame shared by
     * [[dimCorrelation]] and [[pcaPower]]: ≤ 1 row holding the flat
     * `[d, n, s₁..s_d, G upper triangle]` long array. Rows with a null
@@ -946,6 +919,33 @@ object Vectors {
       .orderBy(col(s"abs_$name").desc, col("dim_i"), col("dim_j"))
       .limit(20)
 
+  /** Top-20 most correlated embedding-dimension pairs — the redundancy
+    * audit behind dimensionality reduction and PQ subspace design:
+    * |corr| → 1 means two dimensions carry the same signal and the
+    * index wastes capacity.
+    *
+    * Exactness: elements quantize to 6-dp micro-unit longs; every
+    * sufficient statistic (Σxᵢ, Σxᵢ², Σxᵢxⱼ) is an exact 128-bit
+    * integer, Pearson's denominators clear — num = n·Sij − Si·Sj,
+    * den = n·Sii − Si² — and the only doubles are the final
+    * identically-spelled chain (two IEEE sqrts, one division), round
+    * 6dp +0. Zero-variance dims drop via den > 0 on both engines.
+    * Ranking sorts the ROUNDED |corr| with (i, j) tie-break, so the
+    * top-20 cut is engine-independent.
+    *
+    * 100 TB posture (round 16 — the one-pass Gram rewrite): the whole
+    * sufficient-statistic set (n, Σxᵢ and the FULL upper-triangle
+    * Σxᵢxⱼ) accumulates in ONE typed
+    * [[graft.functions.GramAgg]] pass — a flat long array per task, so
+    * nothing row-count-sized ever fans out (the previous inline
+    * expansion emitted d(d−1)/2 pair structs per row into a d²-keyed
+    * hash aggregate: scale-safe but ~2 000 aggregate-map probes per
+    * row; the bench halved its 2.28 s). Only ~(d²/2 + d) longs per
+    * task shuffle; the pair frame then unpacks from the SINGLE state
+    * row via a sequence/inline transform (answer-sized by the schema's
+    * dimensionality) into the identical exact decimal chain, so the
+    * oracle is unchanged. Overflow is loud, not silent — GramAgg
+    * accumulates with Math.addExact (envelope in its scaladoc). */
   def dimCorrelation(spark: SparkSession, dir: String): DataFrame = {
     val gram = gramFrame(spark, dir)
       .withColumn("d", element_at(col("g"), 1).cast("int"))
@@ -1008,6 +1008,23 @@ object Vectors {
     * exact 3-dp denominator. */
   private[graft] val PcaVScale = 1000L
 
+  /** Per-JVM memo of the COLLECTED [[graft.functions.GramAgg]] state
+    * read by [[pcaPower]] — the round-21 eager-construction item: the
+    * op re-ran the one-pass distributed Gram collapse at construction
+    * time per call, ~0.2 s of corpus-sized work for a ≤
+    * (d²/2+d+2)-long flat state (~17 KB at d = 64 — bounded by the
+    * SCHEMA's dimensionality, the ivfCentroidMemo collect class). The
+    * state is a derived statistic INPUT — the op's output (the
+    * rk/loading/λ frame) is still computed per call by the full
+    * [[PcaIters]]-round BigInt power iteration over it; embed_dim_
+    * correlation keeps its own distributed gramFrame (its plan is the
+    * corpus pass, untouched). Empty-corpus calls (empty state) are
+    * memoized too — `None` is a valid answer, not a miss. Keyed by
+    * (session, dir) with the embeddings relation IDENTITY as the
+    * staleness check — a corpus regen misses naturally. */
+  private[graft] val gramStateMemo =
+    new Memo[(SparkSession, String), Option[Seq[Long]]]("Vectors.gramState")
+
   /** Top principal component of the embedding cloud by EXACT-INTEGER
     * power iteration — the spectrum headline behind [[dimCorrelation]]
     * (which pair of dims is redundant) and [[pqCodebook]] (how to
@@ -1033,23 +1050,6 @@ object Vectors {
     * BigInt, so no overflow envelope at all. A degenerate cloud
     * (constant or empty — C ≡ 0) answers with an empty frame on both
     * engines (the oracle's d2 > 0 guard). */
-  /** Per-JVM memo of the COLLECTED [[graft.functions.GramAgg]] state
-    * read by [[pcaPower]] — the round-21 eager-construction item: the
-    * op re-ran the one-pass distributed Gram collapse at construction
-    * time per call, ~0.2 s of corpus-sized work for a ≤
-    * (d²/2+d+2)-long flat state (~17 KB at d = 64 — bounded by the
-    * SCHEMA's dimensionality, the ivfCentroidMemo collect class). The
-    * state is a derived statistic INPUT — the op's output (the
-    * rk/loading/λ frame) is still computed per call by the full
-    * [[PcaIters]]-round BigInt power iteration over it; embed_dim_
-    * correlation keeps its own distributed gramFrame (its plan is the
-    * corpus pass, untouched). Empty-corpus calls (empty state) are
-    * memoized too — `None` is a valid answer, not a miss. Keyed by
-    * (session, dir) with the embeddings relation IDENTITY as the
-    * staleness check — a corpus regen misses naturally. */
-  private[graft] val gramStateMemo =
-    new Memo[(SparkSession, String), Option[Seq[Long]]]("Vectors.gramState")
-
   def pcaPower(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val empty = Seq.empty[(Int, Int, Double, Double, Double)]

@@ -309,11 +309,6 @@ object Sources {
       .toDF("tbl", "n_rows")
   }
 
-  /** Write orders to `format` under the JVM temp dir (deterministic
-    * per-(format, source-dir) location, overwrite mode — idempotent under
-    * harness re-runs), read it back schema-pinned, fingerprint per
-    * status. The write is a bounded side effect at plan-build time:
-    * sf-sized, replaced on every call, never read by any other op. */
   /** PARTITIONED-parquet round trip — the partitioned-sink half of the
     * §2.2 surface the flat CSV/JSON round trips don't touch: orders →
     * `partitionBy(o_orderstatus)` parquet layout → partition-DISCOVERY
@@ -410,6 +405,11 @@ object Sources {
     (s"graft_bkt_orders_$sfx", s"graft_bkt_customer_$sfx")
   }
 
+  /** Write orders to `format` under the JVM temp dir (deterministic
+    * per-(format, source-dir) location, overwrite mode — idempotent under
+    * harness re-runs), read it back schema-pinned, fingerprint per
+    * status. The write is a bounded side effect at plan-build time:
+    * sf-sized, replaced on every call, never read by any other op. */
   private def roundtripFingerprint(spark: SparkSession, dir: String,
                                    format: String): DataFrame = {
     import org.apache.spark.sql.functions.col

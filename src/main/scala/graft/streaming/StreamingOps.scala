@@ -49,19 +49,6 @@ object StreamingOps {
       .select(col("session_window.start").as("ss"),
         col("session_window.end").as("se"), col("user_id"), col("n"))
 
-  /** Continuous reconciliation — the ingestion-time twin of the batch
-    * [[graft.ops.Recon.hashDiffDetail]]: every micro-batch of the stream
-    * is checked against a static reference table as it arrives, emitting
-    * (key, status) for rows whose checksum diverges ("mismatch") or that
-    * have no reference counterpart ("missing_in_reference"). Uses the
-    * same length-prefixed null-safe checksum as the batch APIs.
-    *
-    * Stateless by construction: a per-row stream-static LEFT join needs
-    * no watermark and holds no state, so it runs forever at any rate. The
-    * reference's extra-in-reference set is undefined until the stream
-    * ends — a streaming full-outer against a static side would need
-    * unbounded state — and stays a batch-API concern. At scale the
-    * static side is broadcast (bounded dim) or bucketed on the key. */
   /** Continuous bounded top-k — [[graft.functions.MinK]] as a STREAMING
     * aggregate: per group, the smallest-k values seen so far across all
     * micro-batches. The state store keeps exactly the ≤k-element sorted
@@ -78,6 +65,19 @@ object StreamingOps {
       .agg(mink(col(valueCol).cast("double")).as("smallest"))
   }
 
+  /** Continuous reconciliation — the ingestion-time twin of the batch
+    * [[graft.ops.Recon.hashDiffDetail]]: every micro-batch of the stream
+    * is checked against a static reference table as it arrives, emitting
+    * (key, status) for rows whose checksum diverges ("mismatch") or that
+    * have no reference counterpart ("missing_in_reference"). Uses the
+    * same length-prefixed null-safe checksum as the batch APIs.
+    *
+    * Stateless by construction: a per-row stream-static LEFT join needs
+    * no watermark and holds no state, so it runs forever at any rate. The
+    * reference's extra-in-reference set is undefined until the stream
+    * ends — a streaming full-outer against a static side would need
+    * unbounded state — and stays a batch-API concern. At scale the
+    * static side is broadcast (bounded dim) or bucketed on the key. */
   def streamingHashDiff(stream: DataFrame, reference: DataFrame,
                         key: String, cols: Seq[String]): DataFrame = {
     val s = stream.select(col(key).as("k"),

@@ -28,22 +28,18 @@ class GraphSpec extends GraftSpec {
   }
 
   test("reliable-storage checkpoint path yields the same components") {
-    // checkpointDir routes lineage truncation to `checkpoint` (survives
-    // executor loss on a real cluster) instead of localCheckpoint; the
-    // labels must be identical and the checkpoint dir actually used
-    val spark0 = spark
-    import spark0.implicits._
+    // with a checkpoint directory set, Checkpoint.truncate writes a
+    // reliable `checkpoint` (survives executor loss on a real cluster)
+    // instead of a localCheckpoint; the labels must be identical and
+    // the checkpoint dir actually used
     val dir = java.nio.file.Files.createTempDirectory("graph-ckpt").toString
     try {
-      val got = Graph.connectedComponents(
-          Seq((1L, 2L), (2L, 3L), (5L, 4L)).toDF("a_id", "b_id"),
-          checkpointDir = Some(dir)).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = withCheckpointDir(dir)(components(Seq((1L, 2L), (2L, 3L), (5L, 4L))))
       assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L))
-      def treeSize(p: java.io.File): Int =
-        if (p.isDirectory) p.listFiles.map(treeSize).sum else 1
-      assert(treeSize(new java.io.File(dir)) > 0,
+      assert(fileCount(new java.io.File(dir)) > 0,
         s"no checkpoint files written under $dir")
+      assert(spark.sparkContext.getCheckpointDir.isEmpty,
+        "the fixture must unset the checkpoint directory")
     } finally deleteTree(new java.io.File(dir))
   }
 
@@ -95,35 +91,42 @@ class GraphSpec extends GraftSpec {
   }
 
   test("edge memo: reliable-checkpoint mode matches local mode; eviction drops both") {
-    // the round-16 verdict's cluster-deployment graduation: the memoized
-    // co-purchase edge frame must be buildable through the RELIABLE
-    // checkpoint knob (blocks survive executor loss), yield the same
-    // edges as the localCheckpoint default, key the memo per mode, and
-    // evict on request
+    // the memoized co-purchase edge frame must be buildable through the
+    // RELIABLE checkpoint (blocks survive executor loss) when the
+    // deployment sets a checkpoint directory, yield the same edges as
+    // the local mode, hit in either mode, and evict on request
+    def edgeSet(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val ckptDir = java.nio.file.Files.createTempDirectory("edge-ckpt").toString
     try {
-      val local = Graph.copurchaseEdges(spark, sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val reliable = Graph.copurchaseEdges(spark, sf, Some(ckptDir)).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(reliable === local, "modes must produce identical edge sets")
-      def treeSize(p: java.io.File): Int =
-        if (p.isDirectory) p.listFiles.map(treeSize).sum else 1
-      assert(treeSize(new java.io.File(ckptDir)) > 0,
-        s"no checkpoint files written under $ckptDir")
-      // memoized per mode: same instance back on a second call
-      assert(Graph.copurchaseEdges(spark, sf, Some(ckptDir))
-        eq Graph.copurchaseEdges(spark, sf, Some(ckptDir)))
+      Graph.edgeMemo.evict(spark, sf)
+      val local = edgeSet(Graph.copurchaseEdges(spark, sf))
+      // memoized: same instance back on a second call
       assert(Graph.copurchaseEdges(spark, sf)
         eq Graph.copurchaseEdges(spark, sf))
-      // eviction: the next call rebuilds (a fresh DataFrame instance)
+      val reliable = withCheckpointDir(ckptDir) {
+        Graph.edgeMemo.evict(spark, sf)
+        val frame = Graph.copurchaseEdges(spark, sf)
+        assert(fileCount(new java.io.File(ckptDir)) > 0,
+          s"no checkpoint files written under $ckptDir")
+        assert(Graph.copurchaseEdges(spark, sf) eq frame)
+        edgeSet(frame)
+      }
+      assert(spark.sparkContext.getCheckpointDir.isEmpty,
+        "the fixture must unset the checkpoint directory")
+      assert(reliable === local, "modes must produce identical edge sets")
+      // eviction: the next call rebuilds (a fresh DataFrame instance),
+      // back in local mode
       val before = Graph.copurchaseEdges(spark, sf)
       Graph.edgeMemo.evict(spark, sf)
       val after = Graph.copurchaseEdges(spark, sf)
       assert(!(before eq after), "evict must force a rebuild")
-      assert(after.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2))).toSet === local)
-    } finally deleteTree(new java.io.File(ckptDir))
+      assert(edgeSet(after) === local)
+    } finally {
+      // never leave a memoized frame whose checkpoint files are deleted
+      Graph.edgeMemo.evict(spark, sf)
+      deleteTree(new java.io.File(ckptDir))
+    }
   }
 
   test("pagerank: a symmetric two-node graph is an exact fixed point") {

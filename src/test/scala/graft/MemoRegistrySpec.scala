@@ -74,24 +74,60 @@ class MemoRegistrySpec extends GraftSpec {
     // a hand-rolled ConcurrentHashMap/TrieMap in an operator module or in
     // Tables (Schemas.scala) is a per-corpus cache outside the registry:
     // MemoRegistry.evict would never reach it
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      d.listFiles.toSeq.flatMap(f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
-    val files = scalaFiles(new java.io.File("src/main/scala/graft/ops")) :+
-      new java.io.File("src/main/scala/graft/Schemas.scala")
-    assert(files.forall(_.isFile) && files.size > 1,
-      "sources not found under src/main/scala/graft")
-    val offenders = files.flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      val lines = try src.getLines().toVector finally src.close()
+    val files = scalaSources("src/main/scala/graft/ops",
+      "src/main/scala/graft/Schemas.scala")
+    assert(files.size > 1, "sources not found under src/main/scala/graft")
+    val offenders = files.flatMap { case (path, lines) =>
       lines.zipWithIndex.collect {
         case (l, i) if """\b(ConcurrentHashMap|TrieMap)\b""".r.findFirstIn(l).isDefined =>
-          s"${f.getPath}:${i + 1}: ${l.trim}"
+          s"$path:${i + 1}: ${l.trim}"
       }
     }
     assert(offenders.isEmpty,
       s"declare memos with graft.Memo, not a raw map:\n${offenders.mkString("\n")}")
+  }
+
+  test("no lineage truncation outside Checkpoint.truncate") {
+    // the local-or-reliable choice is made once, in Checkpoint.scala; a
+    // bare localCheckpoint elsewhere ignores the deployment's checkpoint
+    // directory, and a bare checkpoint fails without one
+    val files = scalaSources("src/main/scala/graft")
+    assert(files.exists(_._1.endsWith("/graft/Checkpoint.scala")),
+      "sources not found under src/main/scala/graft")
+    val offenders = files.filterNot(_._1.endsWith("/graft/Checkpoint.scala"))
+      .flatMap { case (path, lines) =>
+        lines.zipWithIndex.collect {
+          case (l, i) if l.contains("localCheckpoint(") || l.contains(".checkpoint(") =>
+            s"$path:${i + 1}: ${l.trim}"
+        }
+      }
+    assert(offenders.isEmpty,
+      s"truncate lineage with graft.Checkpoint.truncate:\n${offenders.mkString("\n")}")
+  }
+
+  test("with a checkpoint directory set, a frame memo builds a reliable checkpoint") {
+    // the Text frame memos go through Checkpoint.truncate like the graph
+    // ops: a deployment's checkpoint directory reaches them with no
+    // call-site option, and the rows do not change
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val local = rows(Text.bandedSignatures(spark, sf))
+    val dir = java.nio.file.Files.createTempDirectory("banded-ckpt").toString
+    try {
+      val reliable = withCheckpointDir(dir) {
+        MemoRegistry.evict(spark, sf)
+        val frame = Text.bandedSignatures(spark, sf)
+        assert(fileCount(new java.io.File(dir)) > 0,
+          s"no checkpoint files written under $dir")
+        rows(frame)
+      }
+      assert(spark.sparkContext.getCheckpointDir.isEmpty,
+        "the fixture must unset the checkpoint directory")
+      assert(reliable === local)
+    } finally {
+      // never leave a memoized frame whose checkpoint files are deleted
+      MemoRegistry.evict(spark, sf)
+      deleteTree(new java.io.File(dir))
+    }
   }
 
   test("evict retires a corpus's relations and footer schemas") {

@@ -6,7 +6,8 @@ package graft
   * queries), and the query table must bind each name once. Full
   * execution coverage lives in Verify + the DuckDB oracle; this spec
   * is the fast tripwire that fails inside `sbt test` the moment a
-  * refactor breaks an op's analysis. */
+  * refactor breaks an op's analysis. The sources' scaladoc must also
+  * stay attached to the definitions it documents. */
 class RegistrySpec extends GraftSpec {
 
   test("every registered query analyzes against sf0.001") {
@@ -208,5 +209,24 @@ class RegistrySpec extends GraftSpec {
       "source_footer_rowcounts", "text_js_probe_norm", "text_js_probe_interp",
       "text_js_probe_term", "text_js_probe_agg", "text_js_probe_combine")
     assert(SparkEntry.table.filterNot(_.benched).map(_.name).toSet === verifyOnly)
+  }
+
+  test("no doc comment is directly followed by another doc comment") {
+    // scaladoc attaches only the LAST of two stacked doc comments to
+    // the definition below them; the first one documents nothing
+    val files = scalaSources("src/main/scala/graft")
+    assert(files.nonEmpty, "sources not found under src/main/scala/graft")
+    val orphans = files.flatMap { case (path, lines) =>
+      lines.indices.filter(i => lines(i).trim.startsWith("/**")).flatMap { start =>
+        val end = lines.indexWhere(_.contains("*/"), start)
+        val next = lines.indexWhere(_.trim.nonEmpty, end + 1)
+        if (end >= 0 && next >= 0 && lines(next).trim.startsWith("/**"))
+          Some(s"$path:${start + 1}: ${lines(start).trim}")
+        else None
+      }
+    }
+    assert(orphans.isEmpty,
+      s"doc comments attached to nothing (move each onto its definition):\n" +
+        orphans.mkString("\n"))
   }
 }
