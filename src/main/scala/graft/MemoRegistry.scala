@@ -14,8 +14,8 @@ import org.apache.spark.sql.SparkSession
   * rebuilds, so a corpus regen or a fixture overwrite misses naturally.
   * Operator memos stamp with the relation the artifact was built from,
   * as returned by `Tables` (a DataFrame compares by identity);
-  * `Tables`' own relation and footer-schema memos stamp with the
-  * path's content stamp string.
+  * `Tables`' own relation, footer-schema and row-count memos stamp
+  * with the path's content stamp string.
   *
   * Check-then-put is deliberately unlocked: builds run Spark jobs and
   * nest (one memo's build reads another memo), so no map lock may be
@@ -64,7 +64,8 @@ object MemoRegistry {
 
   /** Drop every memoized artifact for (session, dir) across every
     * registered memo, regardless of the memo's extra key params — the
-    * corpus's resolved relations and footer schemas included. */
+    * corpus's resolved relations, footer schemas and row counts
+    * included. */
   def evict(spark: SparkSession, dir: String): Unit =
     memos.forEach(_.evict(spark, dir))
 }

@@ -60,10 +60,13 @@ object Probe {
           for (t0 <- s.stageInfo.submissionTime; t1 <- s.stageInfo.completionTime)
             stageWallMs.addAndGet(t1 - t0)
           // the label always comes from here: onTaskEnd runs first and
-          // opens the entry with a "?" placeholder
+          // opens the entry with a "?" placeholder. Stages AQE submits
+          // from a CompletableFuture carry no graft frame; their
+          // operators name them instead
           val i = s.stageInfo
-          val label = i.details.linesIterator
-            .find(_.contains("graft")).getOrElse(i.name).trim
+          val label = i.details.linesIterator.find(_.contains("graft"))
+            .getOrElse(org.apache.spark.graftbridge.ListenerBridge.stageOperators(i))
+            .trim
           val cur = perStage.getOrDefault(i.stageId, ("?", 0, 0L))
           perStage.put(i.stageId, (label, cur._2 + i.numTasks, cur._3))
         }

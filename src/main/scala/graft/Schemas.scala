@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -151,79 +154,97 @@ object Tables {
   private[graft] val footerSchemaMemo =
     new Memo[(SparkSession, String, String), StructType]("Tables.footerSchema")
 
-  /** Content stamp for a parquet path: file → mtime + length + a hash
-    * of the file's EDGE bytes; directory → child count + total child
-    * length + max child mtime + the edge hash of the first few children.
-    * The edge probe reads the first and last [[StampEdgeBytes]] bytes:
-    * the head lands inside the first column chunk's data pages (value
-    * bytes — a tail-only probe missed value edits whose footer tail,
-    * schema + created_by, is unchanged), the tail inside the footer.
-    * Together they close the one hole a pure stat stamp leaves: a
-    * value-only in-place regen of identical byte length landing inside
-    * the same coarse mtime tick (round-13 review; regression-tested
-    * with pinned mtimes in SourcesSpec, single-file and partitioned).
-    * Layouts up to [[StampAllProbeFiles]] files probe EVERY leaf (2
-    * preads/file, driver-cheap — closes the interior-file hole for
-    * every layout the testdata can take). Residual accepted risk: past
-    * that threshold a same-total-length same-tick rewrite confined to
-    * INTERIOR files evades the first-2/last-2 spread probe. Cost
-    * today: ≤16 files × two ≤64-byte preads, driver-side. */
-  private val StampEdgeBytes = 64
-  private val StampTailFiles = 4
-  private val StampAllProbeFiles = 16
-  private def tailHash(fs: org.apache.hadoop.fs.FileSystem,
-                       st: org.apache.hadoop.fs.FileStatus): Long = {
-    val n = math.min(st.getLen, StampEdgeBytes.toLong).toInt
-    if (n <= 0) 0L
-    else {
-      val head = new Array[Byte](n)
-      val tail = new Array[Byte](n)
-      val in = fs.open(st.getPath)
-      try {
-        in.readFully(0L, head, 0, n)
-        in.readFully(st.getLen - n, tail, 0, n)
-      } finally in.close()
-      (head ++ tail).foldLeft(1125899906842597L)((h, b) => 31 * h + b)
+  /** Footer row counts per (session, dir, table), under the same stamp
+    * — see [[rowCount]]. */
+  private[graft] val rowCountMemo =
+    new Memo[(SparkSession, String, String), Long]("Tables.rowCount")
+
+  /** The data files of one parquet path, listed once: the path itself
+    * when it is a file, else every leaf under it, recursively (a
+    * hive-partitioned tree has no direct file children), skipping any
+    * name that starts with `_` or `.` (`_SUCCESS`, `.crc` checksums,
+    * `_temporary`) — the hidden-file rule Hadoop's and Spark's readers
+    * apply. The content stamp, [[tableBytes]] and [[rowCount]] all come
+    * from this one listing; it throws `FileNotFoundException` for a
+    * missing path. */
+  private[graft] final class Listing(spark: SparkSession, path: String) {
+    val conf = spark.sessionState.newHadoopConf()
+    private val fs = new Path(path).getFileSystem(conf)
+    private val root = fs.getFileStatus(new Path(path))
+    val files: Seq[FileStatus] = {
+      def walk(st: FileStatus): Seq[FileStatus] =
+        if (!st.isDirectory) Seq(st)
+        else fs.listStatus(st.getPath).toSeq
+          .filterNot { c =>
+            val n = c.getPath.getName
+            n.startsWith("_") || n.startsWith(".")
+          }
+          .sortBy(_.getPath.getName).flatMap(walk)
+      walk(root)
     }
-  }
-  private def pathStamp(spark: SparkSession, path: String): String =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val st = fs.getFileStatus(p)
-      if (st.isFile)
-        s"f:${st.getModificationTime}:${st.getLen}:${tailHash(fs, st)}"
+    def bytes: Long = files.map(_.getLen).sum
+
+    /** Sum of the files' footer row counts — driver-side metadata reads
+      * only, no Spark job, no data page touched. */
+    def footerRows: Long = files.map { st =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+
+    /** Content stamp: file → mtime + length + a hash of the file's EDGE
+      * bytes; directory → data-file count + total length + max mtime +
+      * the edge hash of the data files. The edge probe reads the first
+      * and last [[StampEdgeBytes]] bytes: the head lands inside the
+      * first column chunk's data pages (value bytes — a tail-only probe
+      * missed value edits whose footer tail, schema + created_by, is
+      * unchanged), the tail inside the footer. Together they close the
+      * one hole a pure stat stamp leaves: a value-only in-place regen of
+      * identical byte length landing inside the same coarse mtime tick
+      * (regression-tested with pinned mtimes in SourcesSpec,
+      * single-file and partitioned). Layouts up to [[StampAllProbeFiles]]
+      * data files probe EVERY file (2 preads/file, driver-cheap);
+      * past that, a deterministic spread (the first and last files in
+      * listing order, which is by name). Residual accepted risk: past the threshold a
+      * same-total-length same-tick rewrite confined to INTERIOR files
+      * evades the spread probe. A file path costs one getFileStatus
+      * and two preads. */
+    def stamp: String =
+      if (root.isFile)
+        s"f:${root.getModificationTime}:${root.getLen}:${edgeHash(root)}"
       else {
-        // RECURSIVE leaf listing (hive-partitioned trees have no direct
-        // file children — a top-level listStatus saw only subdirs, whose
-        // length is 0 and whose mtime may not move on an in-place
-        // rewrite); same driver-side cost class as the file listing the
-        // read itself performs
-        val it = fs.listFiles(p, true)
-        val files = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.hadoop.fs.FileStatus]
-        while (it.hasNext) files += it.next()
-        var n = 0L; var len = 0L; var mt = st.getModificationTime
-        files.foreach { c =>
-          n += 1; len += c.getLen
-          if (c.getModificationTime > mt) mt = c.getModificationTime
-        }
-        // edge-probe every non-empty leaf while the layout is small
-        // (2 preads/file is driver-cheap and closes the interior-file
-        // hole entirely — round-13 advice); past the threshold fall
-        // back to a deterministic SPREAD (first and last by name —
-        // probing only the head of the name order wasted slots on
-        // _SUCCESS and left later part files unguarded)
+        val mt = (root +: files).map(_.getModificationTime).max
         val data = files.filter(_.getLen > 0)
-          .sortBy(_.getPath.toString).toSeq
         val picks =
           if (data.size <= StampAllProbeFiles) data
           else (data.take(StampTailFiles / 2) ++
             data.takeRight(StampTailFiles / 2)).distinct
-        val th = picks.map(tailHash(fs, _)).mkString(",")
-        s"d:$n:$len:$mt:$th"
+        s"d:${files.size}:$bytes:$mt:${picks.map(edgeHash).mkString(",")}"
       }
-    } catch { case _: java.io.IOException => "missing" }
+
+    private def edgeHash(st: FileStatus): Long = {
+      val n = math.min(st.getLen, StampEdgeBytes.toLong).toInt
+      if (n <= 0) 0L
+      else {
+        val head = new Array[Byte](n)
+        val tail = new Array[Byte](n)
+        val in = fs.open(st.getPath)
+        try {
+          in.readFully(0L, head, 0, n)
+          in.readFully(st.getLen - n, tail, 0, n)
+        } finally in.close()
+        (head ++ tail).foldLeft(1125899906842597L)((h, b) => 31 * h + b)
+      }
+    }
+  }
+  private val StampEdgeBytes = 64
+  private val StampTailFiles = 4
+  private val StampAllProbeFiles = 16
+
+  /** The path's content stamp, or "missing" when it cannot be listed —
+    * the build then fails with the reader's own error. */
+  private def pathStamp(spark: SparkSession, path: String): String =
+    try new Listing(spark, path).stamp
+    catch { case _: java.io.IOException => "missing" }
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
@@ -231,18 +252,49 @@ object Tables {
       spark.read.schema(schemas(name)).parquet(path))
   }
 
-  /** On-disk footprint of one table's parquet path — pure driver-side
-    * filesystem metadata, no Spark job. This is the size gate the
-    * dual-form ops use to pick between a single-pass small-input plan
-    * (fewer jobs, per-group buffering acceptable) and the bounded-state
-    * large-input plan: at 100 TB the gate routes to the scale form, on a
-    * sub-GB reconciliation window it avoids paying 3 jobs where 1 is
-    * exact. Missing path reads as Long.MaxValue so a misconfigured dir
-    * fails toward the conservative (bounded-state) plan. */
-  def tableBytes(spark: SparkSession, dir: String, name: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.getContentSummary(p).getLength else Long.MaxValue
+  /** On-disk footprint of one table's data files — pure driver-side
+    * filesystem metadata, no Spark job. Missing path reads as
+    * Long.MaxValue so a misconfigured dir fails toward the conservative
+    * (bounded-state) plan. */
+  def tableBytes(spark: SparkSession, dir: String, name: String): Long =
+    try new Listing(spark, s"$dir/$name.parquet").bytes
+    catch { case _: java.io.FileNotFoundException => Long.MaxValue }
+
+  /** Size gate for dual-form (single-pass vs bounded-state) operators:
+    * on-disk parquet below this routes to the 1-job exact form whose
+    * per-group buffering is proportional to DISTINCT values (≤ 256 MiB
+    * compressed input keeps the worst-case buffer comfortably inside one
+    * executor); above it, the selection / bucket-refine plans whose
+    * state is answer-sized at any input scale. */
+  private val SinglePassBytes: Long = 256L * 1024 * 1024
+
+  /** Whether one table is small enough for the single-pass form of a
+    * dual-form operator (fewer jobs, per-group buffering acceptable)
+    * rather than the bounded-state large-input plan: at 100 TB the gate
+    * routes to the scale form, on a sub-GB reconciliation window it
+    * avoids paying 3 jobs where 1 is exact. Driver-side metadata, no
+    * job. */
+  def singlePass(spark: SparkSession, dir: String, name: String): Boolean =
+    tableBytes(spark, dir, name) <= SinglePassBytes
+
+  /** Exact row count per (session, dir, table) from the parquet footers,
+    * stamped with the content stamp of the same listing: a repeated
+    * call re-lists and re-stamps but reads no footer, and any rewrite
+    * the stamp sees — a same-tick, same-file-count overwrite included —
+    * re-counts. Recursive, so a partitioned layout counts fully (a
+    * non-recursive listing returned 0 there, which would wave
+    * arbitrarily large data past the O(n²) guards); zero data files is
+    * an error for the same reason, never a zero. Feeds the fail-fast
+    * guards of the deliberately quadratic ops and every gate that needs
+    * a raw table's row count, so none of them runs a `count()` job. */
+  def rowCount(spark: SparkSession, dir: String, name: String): Long = {
+    val path = s"$dir/$name.parquet"
+    val l = new Listing(spark, path)
+    rowCountMemo((spark, dir, name), l.stamp) {
+      require(l.files.nonEmpty,
+        s"rowCount: no parquet part files under $path — refusing to report 0")
+      l.footerRows
+    }
   }
 
   def region(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "region")

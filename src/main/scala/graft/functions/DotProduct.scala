@@ -8,14 +8,47 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
+/** Shared kernel for [[DotProduct]] — one implementation for both the
+  * interpreted and generated paths, like [[SimHashScan]]. */
+object DotScan extends Serializable {
+
+  /** Whether `x·y` is defined: equal lengths and, when `checkNulls`, no
+    * null element on either side. */
+  def defined(x: ArrayData, y: ArrayData, checkNulls: Boolean): Boolean = {
+    val n = x.numElements()
+    if (n != y.numElements()) return false
+    if (checkNulls) {
+      var i = 0
+      while (i < n) {
+        if (x.isNullAt(i) || y.isNullAt(i)) return false
+        i += 1
+      }
+    }
+    true
+  }
+
+  /** Sequential left-to-right sum of the element products from 0.0 —
+    * callers check [[defined]] first. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = x.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      s += x.getDouble(i) * y.getDouble(i)
+      i += 1
+    }
+    s
+  }
+}
+
 /** Native Catalyst dot product over two double arrays, with `doGenCode` —
   * the one place (SURVEY §2.10) where a custom expression beats every
   * built-in alternative: `zip_with`/`aggregate` are CodegenFallback
   * (interpreted, ~3× slower at millions of pairs — round-1 bench), and a
   * literal `element_at` unroll fixes the dimensionality at plan time and
   * overflows janino's nesting depth when several chains share a codegen
-  * method (round-2 ERROR CodeGenerator). The generated loop is tiny,
-  * dimension-agnostic, and stays inside whole-stage codegen.
+  * method (round-2 ERROR CodeGenerator). The [[DotScan]] loop is tiny,
+  * dimension-agnostic, and called from inside whole-stage codegen.
   *
   * Accumulation is sequential left-to-right from 0.0 — bit-identical to
   * the `aggregate(zip_with(...))` fold it replaces, so oracle hashes are
@@ -26,8 +59,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * element all yield NULL — never a silently-truncated partial sum. An
   * upstream dimensionality bug must surface as a visible null, not a
   * plausible wrong similarity (round-2 review finding). The per-element
-  * null check is only generated when an input's `containsNull` says it
-  * can fire, so trusted pipelines pay nothing for it.
+  * null check only runs when an input's `containsNull` says it can
+  * fire, so trusted pipelines pay nothing for it.
   */
 case class DotProduct(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -60,40 +93,17 @@ case class DotProduct(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    val checkNulls = elementsNullable
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (checkNulls && (x.isNullAt(i) || y.isNullAt(i))) return null
-      s += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    s
+    if (DotScan.defined(x, y, elementsNullable)) DotScan.dot(x, y) else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val nullElementGuard = if (elementsNullable)
-        s"""if ($a.isNullAt($i) || $b.isNullAt($i)) {
-           |    ${ev.isNull} = true;
-           |    ${ev.value} = 0.0;
-           |    break;
-           |  }""".stripMargin
-      else ""
+      val scan = ctx.addReferenceObj("dotScan", DotScan, DotScan.getClass.getName)
       s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
+         |if ($scan.defined($a, $b, $elementsNullable)) {
+         |  ${ev.value} = $scan.dot($a, $b);
          |} else {
-         |  ${ev.value} = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $nullElementGuard
-         |    ${ev.value} += $a.getDouble($i) * $b.getDouble($i);
-         |  }
+         |  ${ev.isNull} = true;
          |}
        """.stripMargin
     })

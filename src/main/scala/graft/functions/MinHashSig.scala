@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.security.MessageDigest
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -7,6 +9,45 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+
+/** Shared scanner for [[MinHashSig]] — one implementation for both the
+  * interpreted and generated paths, like [[ShingleScan]]. A
+  * MessageDigest is not thread-safe and tasks share the expression's
+  * reference objects, so each executor thread keeps its own instance. */
+object MinHashScan extends Serializable {
+
+  @transient private lazy val md5 = new ThreadLocal[MessageDigest] {
+    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
+  }
+
+  /** The signature of `arr` under the coefficient pairs (`as(i)`,
+    * `bs(i)`), or null when no token contributed. */
+  def signature(arr: ArrayData, as: Array[Long], bs: Array[Long]): ArrayData = {
+    val n = arr.numElements()
+    val mins = new Array[Long](as.length)
+    java.util.Arrays.fill(mins, Long.MaxValue)
+    val md = md5.get()
+    var contributed = false
+    var j = 0
+    while (j < n) {
+      if (!arr.isNullAt(j)) {
+        contributed = true
+        val dig = md.digest(arr.getUTF8String(j).getBytes)
+        var b07 = 0L; var k = 0
+        while (k < 8) { b07 = (b07 << 8) | (dig(k) & 0xffL); k += 1 }
+        val x = b07 >>> 4 // first 15 hex chars (60 bits) — same slice the oracle takes
+        var i = 0
+        while (i < as.length) {
+          val h = MinHashSig.affineModP(as(i), x, bs(i))
+          if (h < mins(i)) mins(i) = h
+          i += 1
+        }
+      }
+      j += 1
+    }
+    if (!contributed) null else new GenericArrayData(mins)
+  }
+}
 
 /** Native one-pass MinHash signature over a token array: element i of the
   * result is `min over tokens t of ((a_i·x(t) + b_i) mod p)` with
@@ -55,69 +96,17 @@ case class MinHashSig(child: Expression, numHashes: Int)
   private lazy val as: Array[Long] = Array.tabulate(numHashes)(MinHashSig.coeffA)
   private lazy val bs: Array[Long] = Array.tabulate(numHashes)(MinHashSig.coeffB)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    var contributed = false
-    var j = 0
-    while (j < n) {
-      if (!arr.isNullAt(j)) {
-        contributed = true
-        val dig = md.digest(arr.getUTF8String(j).getBytes)
-        var b07 = 0L; var k = 0
-        while (k < 8) { b07 = (b07 << 8) | (dig(k) & 0xffL); k += 1 }
-        val x = b07 >>> 4 // first 15 hex chars (60 bits) — same slice the oracle takes
-        var i = 0
-        while (i < numHashes) {
-          val h = MinHashSig.affineModP(as(i), x, bs(i))
-          if (h < mins(i)) mins(i) = h
-          i += 1
-        }
-      }
-      j += 1
-    }
-    if (!contributed) null else new GenericArrayData(mins)
-  }
+  override def nullSafeEval(input: Any): Any =
+    MinHashScan.signature(input.asInstanceOf[ArrayData], as, bs)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
-      // one MessageDigest per operator instance, reset by digest() itself
-      val md = ctx.addMutableState("java.security.MessageDigest", "minhashMd",
-        v => s"""try { $v = java.security.MessageDigest.getInstance("MD5"); }
-                |catch (java.security.NoSuchAlgorithmException e) { throw new RuntimeException(e); }""".stripMargin)
+      val scan = ctx.addReferenceObj("minhashScan", MinHashScan, MinHashScan.getClass.getName)
       val asRef = ctx.addReferenceObj("minhashA", as, "long[]")
       val bsRef = ctx.addReferenceObj("minhashB", bs, "long[]")
-      val (n, j, i, k, mins, dig, b07, x, h, contributed) =
-        (ctx.freshName("n"), ctx.freshName("j"), ctx.freshName("i"),
-          ctx.freshName("k"), ctx.freshName("mins"), ctx.freshName("dig"),
-          ctx.freshName("b07"), ctx.freshName("x"), ctx.freshName("h"),
-          ctx.freshName("contributed"))
-      val sig = classOf[MinHashSig].getName
       s"""
-         |final int $n = $a.numElements();
-         |long[] $mins = new long[$numHashes];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |boolean $contributed = false;
-         |for (int $j = 0; $j < $n; $j++) {
-         |  if (!$a.isNullAt($j)) {
-         |    $contributed = true;
-         |    final byte[] $dig = $md.digest($a.getUTF8String($j).getBytes());
-         |    long $b07 = 0L; int $k = 0;
-         |    for (; $k < 8; $k++) $b07 = ($b07 << 8) | ($dig[$k] & 0xffL);
-         |    final long $x = $b07 >>> 4;
-         |    for (int $i = 0; $i < $numHashes; $i++) {
-         |      final long $h = $sig.affineModP($asRef[$i], $x, $bsRef[$i]);
-         |      if ($h < $mins[$i]) $mins[$i] = $h;
-         |    }
-         |  }
-         |}
-         |if (!$contributed) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-         |}
+         |${ev.value} = $scan.signature($a, $asRef, $bsRef);
+         |${ev.isNull} = ${ev.value} == null;
        """.stripMargin
     })
 
@@ -132,8 +121,7 @@ object MinHashSig {
 
   /** Exact `(a·x + b) mod P` for 0 ≤ a, b < P and 0 ≤ x < 2^60, via the
     * 128-bit product split (`Math.multiplyHigh` is a JIT intrinsic) and
-    * Mersenne folding. Static (Java-callable) so generated code links it
-    * directly. DuckDB evaluates the same function as
+    * Mersenne folding. DuckDB evaluates the same function as
     * `(CAST(a AS HUGEINT) * x + b) % 2305843009213693951`. */
   @inline def affineModP(a: Long, x: Long, b: Long): Long = {
     val hi = Math.multiplyHigh(a, x) // a, x ≥ 0 so signed == unsigned high

@@ -680,15 +680,14 @@ object Events {
     * column ships a NULL (round-11 advice).
     *
     * Size-gated dispatch (the [[graft.ops.Relational.quantileSummary]]
-    * discipline): below [[graft.ops.Relational.SinglePassBytes]] of
-    * on-disk parquet the whole report is ONE `percentile_disc WITHIN
-    * GROUP` aggregate pass — per-group value buffering is exactly right
-    * when the table fits a reconciliation window, and it collapses 3
-    * jobs to 1 (measured sf0.1 same-JVM: 0.91 s 3-pass → see scaladoc
+    * discipline): under [[graft.Tables.singlePass]] the whole report
+    * is ONE `percentile_disc WITHIN GROUP` aggregate pass — per-group
+    * value buffering is exactly right when the table fits a
+    * reconciliation window, and it collapses 3 jobs to 1 (measured sf0.1 same-JVM: 0.91 s 3-pass → see scaladoc
     * of [[valuePercentilesSmall]]). Above the gate, the bounded-state
     * selection plan — at 100 TB nothing row-count-sized may buffer. */
   def valuePercentilesByType(spark: SparkSession, dir: String): DataFrame =
-    if (Tables.tableBytes(spark, dir, "events") <= Relational.SinglePassBytes)
+    if (Tables.singlePass(spark, dir, "events"))
       valuePercentilesSmall(spark, dir)
     else valuePercentilesSelection(spark, dir)
 
@@ -763,8 +762,7 @@ object Events {
     * that broadcasts back onto the stream. */
   def madOutliers(spark: SparkSession, dir: String): DataFrame =
     madOutliersWith(spark, dir,
-      selection = Tables.tableBytes(spark, dir, "events")
-        > Relational.SinglePassBytes)
+      selection = !Tables.singlePass(spark, dir, "events"))
 
   /** Branch-forced form backing [[madOutliers]] — parity-spec'd
     * bit-identical across the gate. */

@@ -18,14 +18,6 @@ import org.apache.spark.sql.types.DecimalType
 object Relational {
   import Recon.decSum
 
-  /** Size gate for dual-form (single-pass vs bounded-state) operators:
-    * on-disk parquet below this routes to the 1-job exact form whose
-    * per-group buffering is proportional to DISTINCT values (≤ 256 MiB
-    * compressed input keeps the worst-case buffer comfortably inside one
-    * executor); above it, the selection / bucket-refine plans whose
-    * state is answer-sized at any input scale. */
-  private[graft] val SinglePassBytes: Long = 256L * 1024 * 1024
-
   /** TPC-H-Q1-style pricing summary: filter → 5 aggregates → sort.
     *
     * The partial aggregation happens in the scan stage. When the five
@@ -251,16 +243,16 @@ object Relational {
     * accuracy at even smaller state is [[quantileApprox]] (GK sketch,
     * mergeable map-side).
     *
-    * Size-gated dispatch (round-9 verdict #3): below
-    * [[Relational.SinglePassBytes]] of on-disk parquet (driver-side
-    * metadata, no job) the whole summary is ONE `percentile` aggregate
-    * pass — the buffering the scaladoc above warns about is exactly
+    * Size-gated dispatch (round-9 verdict #3): under
+    * [[graft.Tables.singlePass]] (on-disk bytes, driver-side metadata,
+    * no job) the whole summary is ONE `percentile` aggregate pass — the
+    * buffering the scaladoc above warns about is exactly
     * right when the table fits a reconciliation window, and it collapses
     * 3 jobs to 1. Above the gate, the bounded-state selection plan. Both
     * forms compute lo + (hi-lo)·frac at pos = q·(n-1) in double
     * arithmetic — bit-identical (spec-asserted). */
   def quantileSummary(spark: SparkSession, dir: String): DataFrame =
-    if (Tables.tableBytes(spark, dir, "orders") <= SinglePassBytes)
+    if (Tables.singlePass(spark, dir, "orders"))
       quantileSummarySmall(spark, dir)
     else quantileSummarySelection(spark, dir)
 
@@ -587,7 +579,7 @@ object Relational {
     * cent-sums (spec-asserted equal), so the gate can never move a
     * result. */
   def q17AvgQuantity(spark: SparkSession, dir: String): DataFrame =
-    if (Tables.tableBytes(spark, dir, "part") <= SinglePassBytes)
+    if (Tables.singlePass(spark, dir, "part"))
       q17Broadcast(spark, dir)
     else q17Window(spark, dir)
 
@@ -671,12 +663,12 @@ object Relational {
     * spec-constant region/nation), so a pinned `broadcast()` is a
     * latent driver OOM — the round-14 10× gate-crossing smoke caught
     * exactly that in [[q17Report]]. Past the gate the join shuffles
-    * (AQE still broadcasts at runtime if actual stats allow); the
-    * on-disk byte probe is [[graft.Tables.tableBytes]], one uncached
-    * driver-side content summary per call, no Spark job. */
+    * (AQE still broadcasts at runtime if actual stats allow); the gate
+    * is [[graft.Tables.singlePass]], one driver-side listing of the
+    * table's data files per call, no Spark job. */
   private[graft] def gatedDim(spark: SparkSession, dir: String,
                               name: String, dim: DataFrame): DataFrame =
-    if (Tables.tableBytes(spark, dir, name) <= SinglePassBytes) broadcast(dim)
+    if (Tables.singlePass(spark, dir, name)) broadcast(dim)
     else dim
 
   /** Array / higher-order-function battery over the document corpus —
@@ -1774,17 +1766,17 @@ object Relational {
     * fill convention (larger buckets first), and the unique tiebreak
     * makes the assignment deterministic.
     *
-    * Size-gated dispatch (round-10 verdict #6): below
-    * [[SinglePassBytes]] the direct window form — a single-partition
-    * sort is the cheapest correct plan when the table fits a
-    * reconciliation window (1 job vs 5). Above the gate,
+    * Size-gated dispatch (round-10 verdict #6): under
+    * [[graft.Tables.singlePass]] the direct window form — a
+    * single-partition sort is the cheapest correct plan when the table
+    * fits a reconciliation window (1 job vs 5). Above the gate,
     * [[ntileFuncsSelection]] — the same answer with no row-count-sized
     * sort anywhere (per-quartile stats are tie-ORDER-invariant, so the
     * exact form distributes; see its scaladoc). Both forms are exact
     * and bit-identical (spec-asserted), so the gate is purely a plan
     * choice, never a semantics choice. */
   def ntileFuncs(spark: SparkSession, dir: String): DataFrame =
-    if (Tables.tableBytes(spark, dir, "orders") <= SinglePassBytes)
+    if (Tables.singlePass(spark, dir, "orders"))
       ntileFuncsSmall(spark, dir)
     else ntileFuncsSelection(spark, dir)
 
@@ -1834,7 +1826,7 @@ object Relational {
     import spark.implicits._
     val price = Tables.orders(spark, dir)
       .select(col("o_totalprice").as("v"))
-    val n = price.count()
+    val n = Tables.rowCount(spark, dir, "orders")
     if (n < 4L) return ntileFuncsSmall(spark, dir)
     // ntile(4) bucket sizes and cumulative boundary ranks (1-based)
     val sizes = Array.tabulate(4)(k => n / 4 + (if (k < n % 4) 1L else 0L))

@@ -576,7 +576,7 @@ object Text {
     * helps if the join actually distributes on (source, salt). */
   private def saltedSourcePairs(spark: SparkSession, dir: String,
                                 opName: String, maxDocs: Long): DataFrame = {
-    val n = graft.sources.Sources.parquetRowCount(spark, s"$dir/documents.parquet")
+    val n = Tables.rowCount(spark, dir, "documents")
     require(n <= maxDocs,
       s"$opName is exact all-pairs within each source block: n=$n exceeds " +
         s"maxDocs=$maxDocs; use Text.dedupMinhash (LSH-bucketed, property-tested) at this scale")
@@ -1923,7 +1923,7 @@ object Text {
       .select(col("source"), explode(split(lower(col("text")), " ")).as("tok"))
       .filter(col("tok") =!= "")
     val scRaw = toks.groupBy("source", "tok").agg(count(lit(1)).as("cs"))
-    val onePart = docs(spark, dir).count() <= JsCoalesceDocsGate
+    val onePart = Tables.rowCount(spark, dir, "documents") <= JsCoalesceDocsGate
     val joined = if (onePart) {
       // single-partition small path: cg/na/ng as window sums over the
       // coalesced count frame — SinglePartition satisfies every window

@@ -75,12 +75,12 @@ object Vectors {
     * it refuses to run past `maxRows` rather than silently becoming the
     * 100 TB bottleneck — [[annLshTopk]] / [[annIvfTopk]] are the bucketed
     * scale paths. The count comes from parquet footers (driver-side
-    * metadata, cached per path — [[graft.sources.Sources.parquetRowCount]]),
-    * not a Spark job: round 4's eager `count()` ran a job per invocation
-    * inside the benchmarked region. */
+    * metadata, memoized under the table's content stamp —
+    * [[graft.Tables.rowCount]]), not a Spark job: round 4's eager
+    * `count()` ran a job per invocation inside the benchmarked region. */
   def cosineKnn(spark: SparkSession, dir: String,
                 maxRows: Long = MaxBruteForceRows): DataFrame = {
-    val n = graft.sources.Sources.parquetRowCount(spark, s"$dir/embeddings.parquet")
+    val n = Tables.rowCount(spark, dir, "embeddings")
     require(n <= maxRows,
       s"cosineKnn is exact O(n^2) brute force: n=$n exceeds maxRows=$maxRows; " +
         "use Vectors.annLshTopk or Vectors.annIvfTopk (bucketed, recall-tested) at this scale")
@@ -118,7 +118,7 @@ object Vectors {
     * eval verbatim. */
   def knnLabelAccuracy(spark: SparkSession, dir: String, k: Int = 5,
                        maxRows: Long = MaxBruteForceRows): DataFrame = {
-    val n = graft.sources.Sources.parquetRowCount(spark, s"$dir/embeddings.parquet")
+    val n = Tables.rowCount(spark, dir, "embeddings")
     require(n <= maxRows,
       s"knnLabelAccuracy is exact O(n^2) brute force: n=$n exceeds maxRows=$maxRows; " +
         "evaluate on a sample — the eval's contract — or use the ANN ops for search")
@@ -411,23 +411,21 @@ object Vectors {
     * the DuckDB oracle a FULL-trajectory reproduction. */
   private[graft] val IvfTrainCap = 50000
 
-  /** Distributed spherical k-means: deterministic seeds (the k vectors
-    * with the smallest md5(vec_id) — the portable cross-engine hash, so
-    * the DuckDB oracle picks the identical seed set; xxhash64 does not
-    * exist there, the same reason MinHashSig moved off it), then
-    * `IvfIterations` Lloyd rounds of broadcast-assign +
-    * elementwise-mean + renormalize. Every step is a DataFrame op — no
-    * driver-side state; the only data that ever concentrates is the
-    * k×Dim centroid table, which is broadcast by construction. Cluster
-    * means go through exact DECIMAL(18,9) sums (the embed_centroids
-    * rule): a float `avg` depends on partition order, which would make
-    * the centroids — and every downstream assignment — unreproducible
-    * across engines AND across partition layouts of the same data.
-    * All dot products are the sequential-accumulation native
+  /** Spherical k-means trained on the driver: one bounded collect of
+    * the [[IvfTrainCap]] unit vectors with the smallest md5(vec_id) —
+    * the portable cross-engine hash, so the DuckDB oracle picks the
+    * identical set; xxhash64 does not exist there, the same reason
+    * MinHashSig moved off it — whose first [[IvfClusters]] rows by that
+    * hash seed the centroids, then [[IvfIterations]] Lloyd rounds of
+    * assign + elementwise-mean + renormalize run in a driver loop. No
+    * Spark job runs after the collect. Cluster means are exact
+    * DECIMAL(18,9)-scaled long sums (the embed_centroids rule): a float
+    * `avg` depends on summation order, which would make the centroids
+    * — and every downstream assignment — unreproducible across engines.
+    * Dots accumulate in index order like the native
     * [[graft.functions.DotProduct]], bit-identical to DuckDB's
-    * `list_inner_product` (the proven ann_lsh_topk contract), so with
-    * exact means the whole training trajectory is deterministic.
-    * Returns (cid, cvec) with unit-norm cvec. */
+    * `list_inner_product`, so the whole training trajectory is
+    * deterministic. Returns (cid, cvec) with unit-norm cvec. */
   private def kmeansCentroidsLocal(u: DataFrame): Seq[(Int, Seq[Double])] = {
     // Train the k×Dim quantizer DRIVER-SIDE from one bounded collect:
     // the distributed Lloyd loop (one job per round, Dim decimal-sum
@@ -568,7 +566,7 @@ object Vectors {
     * with the index. Ratios are exact-int / n with one identically-
     * spelled double division each. */
   def annIvfRecall(spark: SparkSession, dir: String): DataFrame = {
-    val n = graft.sources.Sources.parquetRowCount(spark, s"$dir/embeddings.parquet")
+    val n = Tables.rowCount(spark, dir, "embeddings")
     require(n <= MaxBruteForceRows,
       s"annIvfRecall brute-forces the exact side: n=$n exceeds $MaxBruteForceRows; " +
         "calibrate on a bounded sample at this scale")

@@ -6,7 +6,6 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
-import scala.collection.concurrent.TrieMap
 
 /** Source/sink surface beyond the primary parquet path (SURVEY.md §2.2):
   * CSV and JSON ingest (typical recon-tool source extracts), ORC — the
@@ -99,35 +98,23 @@ object Sources {
               targetFileBytes: Long = 128L * 1024 * 1024,
               partitionCols: Seq[String] = Nil): (Int, Int) = {
     require(targetFileBytes > 0, s"targetFileBytes must be positive: $targetFileBytes")
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(inPath)
-    val fs = root.getFileSystem(conf)
-    def leaves(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (st.isDirectory)
-        fs.listStatus(st.getPath).toSeq
-          .filterNot { s =>
-            val n = s.getPath.getName
-            n.startsWith("_") || n.startsWith(".")
-          }
-          .flatMap(leaves)
-      else Seq(st)
-    val parts = leaves(fs.getFileStatus(root))
+    val in = new Tables.Listing(spark, inPath)
+    val parts = in.files
     require(parts.nonEmpty, s"compact: no data files under $inPath")
-    val totalBytes = parts.map(_.getLen).sum
+    val totalBytes = in.bytes
     val df = spark.read.parquet(inPath)
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
     if (partitionCols.isEmpty) {
       df.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(outPath)
     } else {
-      val rows = parquetRowCount(spark, inPath)
-      val bytesPerRow = math.max(1L, totalBytes / math.max(1L, rows))
+      val bytesPerRow = math.max(1L, totalBytes / math.max(1L, in.footerRows))
       df.repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
         .write.mode(SaveMode.Overwrite)
         .option("maxRecordsPerFile", math.max(1L, targetFileBytes / bytesPerRow))
         .partitionBy(partitionCols: _*)
         .parquet(outPath)
     }
-    (parts.length, leaves(fs.getFileStatus(new Path(outPath))).length)
+    (parts.length, new Tables.Listing(spark, outPath).files.length)
   }
 
   /** Z-order (Morton) clustered write on two numeric columns — the data-
@@ -197,16 +184,10 @@ object Sources {
     * quality without trusting the writer. */
   def fileColumnRanges(spark: SparkSession, path: String,
                        column: String): Seq[(Long, Long)] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    fs.listStatus(root).toSeq
-      .filterNot { s =>
-        val n = s.getPath.getName
-        n.startsWith("_") || n.startsWith(".")
-      }
+    val listing = new Tables.Listing(spark, path)
+    listing.files
       .map { st =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, listing.conf))
         try {
           val stats = r.getFooter.getBlocks.toArray.map { b =>
             b.asInstanceOf[org.apache.parquet.hadoop.metadata.BlockMetaData]
@@ -221,47 +202,6 @@ object Sources {
             stats.map(_.genericGetMax.asInstanceOf[Number].longValue).max)
         } finally r.close()
       }
-  }
-
-  private val rowCountCache = TrieMap.empty[(String, Long, Int), Long]
-
-  /** Exact row count from parquet footers: driver-side metadata reads
-    * only — no Spark job, no data pages touched. Used by the fail-fast
-    * guards on the deliberately-quadratic ops ([[graft.ops.Vectors
-    * .cosineKnn]], [[graft.ops.Text.ngramJaccard]]), which previously ran
-    * an eager `count()` job per invocation inside the benchmarked region
-    * (round-4 verdict #6).
-    *
-    * Recurses into subdirectories so a partitioned layout counts fully —
-    * a non-recursive listing silently returned 0 there, which would have
-    * waved arbitrarily large data past the O(n^2) guards (round-5
-    * advice). Zero part files is an error for the same reason, never a
-    * zero. The footer reads are cached keyed on (path, latest
-    * modification time, file count), so a guard check on a repeated
-    * input is free but an overwritten path re-counts; the listing itself
-    * always runs (cheap driver metadata). */
-  def parquetRowCount(spark: SparkSession, path: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    def leaves(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (st.isDirectory)
-        fs.listStatus(st.getPath).toSeq
-          .filterNot { s =>
-            val n = s.getPath.getName
-            n.startsWith("_") || n.startsWith(".")
-          }
-          .flatMap(leaves)
-      else Seq(st)
-    val parts = leaves(fs.getFileStatus(root))
-    require(parts.nonEmpty,
-      s"parquetRowCount: no parquet part files under $path — refusing to report 0")
-    val key = (path, parts.map(_.getModificationTime).max, parts.length)
-    rowCountCache.getOrElseUpdate(key,
-      parts.map { st =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-        try r.getRecordCount finally r.close()
-      }.sum)
   }
 
   /** Register all ten driver tables as temp views for spark.sql access. */
@@ -294,18 +234,19 @@ object Sources {
     roundtripFingerprint(spark, dir, "json")
 
   /** Footer-metadata row counts for every corpus table — the §2.2
-    * "don't scan 100 TB to count it" path ([[parquetRowCount]], the
-    * same footer reads every fail-fast guard trusts), chained to the
-    * DuckDB oracle's REAL count(*) scans: a footer that lies about
-    * num_rows (truncated write, botched compaction) fails this row
-    * before it silently mis-sizes a guard. Driver-side by design —
-    * the footer read IS the operation; no Spark job runs at all. */
+    * "don't scan 100 TB to count it" path ([[graft.Tables.rowCount]],
+    * the same footer reads every fail-fast guard trusts, memoized under
+    * the table's content stamp), chained to the DuckDB oracle's REAL
+    * count(*) scans: a footer that lies about num_rows (truncated
+    * write, botched compaction) fails this row before it silently
+    * mis-sizes a guard. Driver-side by design — the footer read IS the
+    * operation; no Spark job runs at all. */
   def footerRowcounts(spark: SparkSession, dir: String): DataFrame = {
     val tables = Seq("region", "nation", "supplier", "part", "customer",
       "orders", "lineitem", "events", "documents", "embeddings")
     import spark.implicits._
     tables.sorted
-      .map(t => (t, parquetRowCount(spark, s"$dir/$t.parquet")))
+      .map(t => (t, Tables.rowCount(spark, dir, t)))
       .toDF("tbl", "n_rows")
   }
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The memo policy ([[Memo]]) and the central eviction point: every
   * per-JVM per-corpus memo (derived artifacts, and `Tables`' resolved
-  * relations and footer schemas) is a [[Memo]] registered with
+  * relations, footer schemas and row counts) is a [[Memo]] registered with
   * [[MemoRegistry]], and one evict-by-(session, dir) sweep drops a
   * retiring corpus's artifacts across all modules regardless of extra
   * key params. */
@@ -55,7 +55,7 @@ class MemoRegistrySpec extends GraftSpec {
     } finally MemoRegistry.memos.remove(m)
   }
 
-  test("exactly the 19 memos are registered") {
+  test("exactly the 20 memos are registered") {
     // touching each object runs its initializer, which registers its memos
     assert(Seq(Events, Graph, Relational, Tables, Text, Vectors).size === 6)
     val names = MemoRegistry.memos.asScala.map(_.name).toSeq
@@ -63,7 +63,7 @@ class MemoRegistrySpec extends GraftSpec {
       "Events.markovTrans",
       "Graph.edge", "Graph.minhashPairs",
       "Relational.pareto",
-      "Tables.footerSchema", "Tables.relation",
+      "Tables.footerSchema", "Tables.relation", "Tables.rowCount",
       "Text.banded", "Text.bloom", "Text.bpe", "Text.langid", "Text.lmMicro",
       "Text.mhPairFrame", "Text.shPairFrame", "Text.spanBloom", "Text.winnow",
       "Vectors.centroidRows", "Vectors.gramState", "Vectors.ivfCentroid",
@@ -71,11 +71,13 @@ class MemoRegistrySpec extends GraftSpec {
   }
 
   test("no memo map under ops/ bypasses Memo") {
-    // a hand-rolled ConcurrentHashMap/TrieMap in an operator module or in
-    // Tables (Schemas.scala) is a per-corpus cache outside the registry:
-    // MemoRegistry.evict would never reach it
+    // a hand-rolled ConcurrentHashMap/TrieMap in an operator module, in
+    // Tables (Schemas.scala) or in the source and streaming surfaces is
+    // a per-corpus cache outside the registry: MemoRegistry.evict would
+    // never reach it
     val files = scalaSources("src/main/scala/graft/ops",
-      "src/main/scala/graft/Schemas.scala")
+      "src/main/scala/graft/Schemas.scala", "src/main/scala/graft/sources",
+      "src/main/scala/graft/streaming")
     assert(files.size > 1, "sources not found under src/main/scala/graft")
     val offenders = files.flatMap { case (path, lines) =>
       lines.zipWithIndex.collect {
@@ -142,8 +144,11 @@ class MemoRegistrySpec extends GraftSpec {
       val r1 = Tables.read(spark, d1, "region")
       val r2 = Tables.read(spark, d2, "region")
       val s1 = Tables.diskSchema(spark, d1, "region")
+      val n = Tables.rowCount(spark, d1, "region")
+      assert(Tables.rowCount(spark, d2, "region") === n)
       assert(Tables.read(spark, d1, "region") eq r1, "an unchanged table is a hit")
       assert(Tables.footerSchemaMemo.peek((spark, d1, "region")).get eq s1)
+      assert(Tables.rowCountMemo.peek((spark, d1, "region")).contains(n))
 
       MemoRegistry.evict(spark, d1)
       assert(!(Tables.read(spark, d1, "region") eq r1),
@@ -152,7 +157,12 @@ class MemoRegistrySpec extends GraftSpec {
         "another corpus keeps its relation")
       assert(Tables.footerSchemaMemo.peek((spark, d1, "region")).isEmpty,
         "the retired corpus's footer schema must be dropped")
+      assert(Tables.rowCountMemo.peek((spark, d1, "region")).isEmpty,
+        "the retired corpus's row count must be dropped")
+      assert(Tables.rowCountMemo.peek((spark, d2, "region")).contains(n),
+        "another corpus keeps its row count")
       assert(Tables.diskSchema(spark, d1, "region") === s1)
+      assert(Tables.rowCount(spark, d1, "region") === n)
     } finally dirs.foreach { d =>
       MemoRegistry.evict(spark, d)
       deleteTree(new java.io.File(d))

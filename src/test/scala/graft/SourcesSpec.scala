@@ -257,30 +257,52 @@ class SourcesSpec extends GraftSpec {
     assert(byName("documents") === Tables.documents(spark, sf).count())
   }
 
-  test("parquetRowCount: recursive over partitioned layouts, refuses empty, invalidates on overwrite") {
-    val part = s"$tmpDir/orders_bymonth"
+  test("Tables.rowCount: recursive, refuses empty, invalidates on overwrite") {
     val orders = Tables.orders(spark, sf)
     orders
       .withColumn("mo", org.apache.spark.sql.functions.date_format(
         org.apache.spark.sql.functions.col("o_orderdate"), "yyyy-MM"))
-      .write.partitionBy("mo").mode("overwrite").parquet(part)
+      .write.partitionBy("mo").mode("overwrite")
+      .parquet(s"$tmpDir/orders_bymonth.parquet")
     // partitioned = part files in SUBdirectories: a non-recursive listing
     // saw 0 here and would have waved the O(n^2) guards through
-    assert(Sources.parquetRowCount(spark, part) === orders.count())
+    assert(Tables.rowCount(spark, tmpDir, "orders_bymonth") === orders.count())
     // a dir with no part files must throw, never report 0
-    val empty = s"$tmpDir/empty_dir"
-    new java.io.File(empty).mkdirs()
+    new java.io.File(s"$tmpDir/empty_dir.parquet").mkdirs()
     val e = intercept[IllegalArgumentException] {
-      Sources.parquetRowCount(spark, empty)
+      Tables.rowCount(spark, tmpDir, "empty_dir")
     }
     assert(e.getMessage.contains("no parquet part files"), e.getMessage)
-    // overwriting a path must invalidate the cached count
-    val flat = s"$tmpDir/orders_flat"
+    // overwriting a path must invalidate the memoized count
+    val flat = s"$tmpDir/orders_flat.parquet"
     orders.limit(100).write.mode("overwrite").parquet(flat)
-    assert(Sources.parquetRowCount(spark, flat) === 100L)
+    assert(Tables.rowCount(spark, tmpDir, "orders_flat") === 100L)
     orders.limit(37).write.mode("overwrite").parquet(flat)
-    assert(Sources.parquetRowCount(spark, flat) === 37L,
-      "stale cache after overwrite")
+    assert(Tables.rowCount(spark, tmpDir, "orders_flat") === 37L,
+      "stale count after overwrite")
+  }
+
+  test("Tables.rowCount: a same-tick, same-file-count overwrite re-counts") {
+    // the hole a (path, max mtime, file count) key leaves: one part file
+    // before and after, every mtime pinned to one instant — only the
+    // content stamp tells the generations apart
+    val orders = Tables.orders(spark, sf)
+    val d = s"$tmpDir/rowcount_tick"
+    val fixed = java.nio.file.attribute.FileTime.fromMillis(1700000000000L)
+    def write(n: Int): Unit = {
+      orders.limit(n).coalesce(1).write.mode("overwrite").parquet(s"$d/orders.parquet")
+      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$d/orders.parquet"))
+        .forEach(p => java.nio.file.Files.setLastModifiedTime(p, fixed))
+    }
+    def parts = new java.io.File(s"$d/orders.parquet").listFiles
+      .count(_.getName.startsWith("part-"))
+    write(100)
+    assert(Tables.rowCount(spark, d, "orders") === 100L)
+    val files = parts
+    write(37)
+    assert(parts === files, "fixture must keep the file count or it tests nothing")
+    assert(Tables.rowCount(spark, d, "orders") === 37L,
+      "a same-tick, same-file-count overwrite must re-count")
   }
 
   test("partitioned catalog tables: windowed recon prunes through the metastore") {
