@@ -3,9 +3,8 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
@@ -26,29 +25,20 @@ import org.apache.spark.util.sketch.BloomFilter
   * virtual call + bitmap reads with no boxing.
   */
 case class BloomMightContainLong(child: Expression, bloomBytes: Array[Byte])
-    extends UnaryExpression {
+    extends NativeUnaryExpression("bloom_might_contain", LongType) {
 
   override def dataType: DataType = BooleanType
-  override def prettyName: String = "bloom_might_contain"
   override def nullable: Boolean = child.nullable
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bloom_might_contain expects bigint, got $t")
-  }
-
-  @transient private lazy val bloom: BloomFilter =
+  @transient override protected lazy val kernel: BloomFilter =
     BloomFilter.readFrom(new ByteArrayInputStream(bloomBytes))
+  // the runtime class is package-private
+  override protected def kernelClass: String = classOf[BloomFilter].getName
 
-  override def nullSafeEval(input: Any): Any =
-    bloom.mightContainLong(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloom", bloom,
-      classOf[BloomFilter].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.mightContainLong($c)")
-  }
+  override protected def scalaCall(input: Any): Any =
+    kernel.mightContainLong(input.asInstanceOf[Long])
+  override protected def javaCall(ctx: CodegenContext, k: String, in: String): String =
+    s"$k.mightContainLong($in)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -70,27 +69,18 @@ class CharNgramScan(n: Int) extends Serializable {
   * langid gram pass (0.81 → 0.24 s sf0.1, same JVM) and 4.4× on the
   * whole text_langid query vs the original position form (5.0 → 1.14 s,
   * both gram passes replaced). */
-case class CharNgrams(child: Expression, n: Int) extends UnaryExpression {
+case class CharNgrams(child: Expression, n: Int)
+    extends NativeUnaryExpression("char_ngrams", StringType) {
   require(n >= 1, s"char_ngrams: n must be >= 1: $n")
 
-  @transient private lazy val scan = new CharNgramScan(n)
-
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "char_ngrams"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"char_ngrams expects string, got $t")
-  }
+  @transient override protected lazy val kernel: CharNgramScan = new CharNgramScan(n)
 
-  override def nullSafeEval(input: Any): Any =
-    scan.grams(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text => {
-      val s = ctx.addReferenceObj("charNgramScan", scan, classOf[CharNgramScan].getName)
-      s"${ev.value} = $s.grams($text);"
-    })
+  override protected def scalaCall(input: Any): Any =
+    kernel.grams(input.asInstanceOf[UTF8String])
+  override protected def javaCall(ctx: CodegenContext, k: String, in: String): String =
+    s"$k.grams($in)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

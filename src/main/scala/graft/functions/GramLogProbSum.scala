@@ -2,10 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -61,30 +59,19 @@ class GramLogProbScan(n: Int, micro: Map[String, Long]) extends Serializable {
   * zero-copy gram wrappers probe a UTF8String-keyed table and bump two
   * longs. Map-only; after this only source-sized frames exist. */
 case class GramLogProbSum(child: Expression, micro: Map[String, Long], n: Int)
-    extends UnaryExpression {
+    extends NativeUnaryExpression("gram_logprob_sum", StringType) {
   require(n >= 1, s"gram_logprob_sum: n must be >= 1: $n")
-
-  @transient private lazy val scan = new GramLogProbScan(n, micro)
 
   override def dataType: DataType = StructType(Seq(
     StructField("sm", LongType, nullable = false),
     StructField("n", LongType, nullable = false)))
-  override def prettyName: String = "gram_logprob_sum"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"gram_logprob_sum expects string, got $t")
-  }
+  @transient override protected lazy val kernel: GramLogProbScan = new GramLogProbScan(n, micro)
 
-  override def nullSafeEval(input: Any): Any =
-    scan.score(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text => {
-      val s = ctx.addReferenceObj("gramLogProbScan", scan,
-        classOf[GramLogProbScan].getName)
-      s"${ev.value} = $s.score($text);"
-    })
+  override protected def scalaCall(input: Any): Any =
+    kernel.score(input.asInstanceOf[UTF8String])
+  override protected def javaCall(ctx: CodegenContext, k: String, in: String): String =
+    s"$k.score($in)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

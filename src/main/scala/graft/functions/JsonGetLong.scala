@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.graftbridge.ExprBridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared scanner for [[JsonGetLong]] — ONE implementation called by both
@@ -392,42 +391,24 @@ object JsonScan extends Serializable {
   * typed contract is "bare integer or nothing"); keys written with JSON
   * escape sequences are not matched. Use `get_json_object` when the
   * documents are not flat telemetry. */
-case class JsonGetLong(child: Expression, key: String) extends UnaryExpression {
+case class JsonGetLong(child: Expression, key: String)
+    extends NativeUnaryExpression("json_get_long", StringType, kernelReturnsNull = true) {
 
   require(key.nonEmpty, "json_get_long: empty key")
 
   override def dataType: DataType = LongType
-  override def prettyName: String = "json_get_long"
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"json_get_long expects string, got $t")
-  }
 
   private lazy val keyBytes: Array[Byte] =
     key.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
-  override def nullSafeEval(input: Any): Any =
-    JsonScan.extractLong(input.asInstanceOf[UTF8String], keyBytes)
+  override protected def kernel: JsonScan.type = JsonScan
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, json => {
-      // the scanner object and key bytes ride along as references; the
-      // call stays inside whole-stage codegen (no CodegenFallback)
-      val scan = ctx.addReferenceObj("jsonScan", JsonScan, JsonScan.getClass.getName)
-      val kb = ctx.addReferenceObj("jsonKey", keyBytes, "byte[]")
-      val r = ctx.freshName("jl")
-      s"""
-         |java.lang.Long $r = $scan.extractLong($json, $kb);
-         |if ($r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $r.longValue();
-         |}
-       """.stripMargin
-    })
+  override protected def scalaCall(input: Any): Any =
+    JsonScan.extractLong(input.asInstanceOf[UTF8String], keyBytes)
+  // the key bytes ride along as a reference too
+  override protected def javaCall(ctx: CodegenContext, k: String, in: String): String =
+    s"$k.extractLong($in, ${ctx.addReferenceObj("jsonKey", keyBytes, "byte[]")})"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -440,26 +421,18 @@ case class JsonGetLong(child: Expression, key: String) extends UnaryExpression {
   * tail) behind the SAME validity rule the DuckDB oracles apply —
   * codegen-friendly, allocation-free beyond the reused per-thread
   * container stack. */
-case class JsonValid(child: Expression) extends UnaryExpression {
+case class JsonValid(child: Expression)
+    extends NativeUnaryExpression("json_valid_strict", StringType) {
 
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def prettyName: String = "json_valid_strict"
+  override def dataType: DataType = BooleanType
   override def nullable: Boolean = child.nullable
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"json_valid_strict expects string, got $t")
-  }
+  override protected def kernel: JsonScan.type = JsonScan
 
-  override def nullSafeEval(input: Any): Any =
+  override protected def scalaCall(input: Any): Any =
     JsonScan.validJson(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, json => {
-      val scan = ctx.addReferenceObj("jsonScan", JsonScan, JsonScan.getClass.getName)
-      s"${ev.value} = $scan.validJson($json);"
-    })
+  override protected def javaCall(ctx: CodegenContext, k: String, in: String): String =
+    s"$k.validJson($in)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,24 +1,16 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Shared scanner for [[MinHashSig]] — one implementation for both the
-  * interpreted and generated paths, like [[ShingleScan]]. A
-  * MessageDigest is not thread-safe and tasks share the expression's
-  * reference objects, so each executor thread keeps its own instance. */
+  * interpreted and generated paths, like [[ShingleScan]], hashing with
+  * the per-thread [[Md5]] digest. */
 object MinHashScan extends Serializable {
-
-  @transient private lazy val md5 = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
 
   /** The signature of `arr` under the coefficient pairs (`as(i)`,
     * `bs(i)`), or null when no token contributed. */
@@ -26,7 +18,7 @@ object MinHashScan extends Serializable {
     val n = arr.numElements()
     val mins = new Array[Long](as.length)
     java.util.Arrays.fill(mins, Long.MaxValue)
-    val md = md5.get()
+    val md = Md5.get()
     var contributed = false
     var j = 0
     while (j < n) {
@@ -79,36 +71,23 @@ object MinHashScan extends Serializable {
   * array yields NULL. Token arrays are never empty in practice (`split`
   * returns [""] for empty text). */
 case class MinHashSig(child: Expression, numHashes: Int)
-  extends UnaryExpression {
+    extends NativeUnaryExpression("minhash_sig", ArrayType(StringType), kernelReturnsNull = true) {
 
   require(numHashes > 0, s"minhash_sig: numHashes must be positive: $numHashes")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig expects array<string>, got $t")
-  }
 
   private lazy val as: Array[Long] = Array.tabulate(numHashes)(MinHashSig.coeffA)
   private lazy val bs: Array[Long] = Array.tabulate(numHashes)(MinHashSig.coeffB)
 
-  override def nullSafeEval(input: Any): Any =
-    MinHashScan.signature(input.asInstanceOf[ArrayData], as, bs)
+  override protected def kernel: MinHashScan.type = MinHashScan
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val scan = ctx.addReferenceObj("minhashScan", MinHashScan, MinHashScan.getClass.getName)
-      val asRef = ctx.addReferenceObj("minhashA", as, "long[]")
-      val bsRef = ctx.addReferenceObj("minhashB", bs, "long[]")
-      s"""
-         |${ev.value} = $scan.signature($a, $asRef, $bsRef);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
+  override protected def scalaCall(input: Any): Any =
+    MinHashScan.signature(input.asInstanceOf[ArrayData], as, bs)
+  override protected def javaCall(ctx: CodegenContext, k: String, in: String): String =
+    s"$k.signature($in, ${ctx.addReferenceObj("minhashA", as, "long[]")}, " +
+      s"${ctx.addReferenceObj("minhashB", bs, "long[]")})"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,26 +1,16 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared scanner for [[MinShingleMd5]] — one implementation for both the
-  * interpreted and generated paths. A MessageDigest is not thread-safe
-  * and tasks share the expression's reference objects, so each executor
-  * thread keeps its own instance. */
+  * interpreted and generated paths, hashing with the per-thread [[Md5]]
+  * digest. */
 object ShingleScan extends Serializable {
-
-  @transient private lazy val md5 = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
-  private val hexDigits = "0123456789abcdef".getBytes
 
   /** Minimum MD5 over all `width`-CHAR shingles of `text`, as lowercase
     * hex — bit-identical to
@@ -35,7 +25,7 @@ object ShingleScan extends Serializable {
   def minShingleMd5(text: UTF8String, width: Int): UTF8String = {
     val b = text.getBytes
     val n = b.length
-    val digest = md5.get()
+    val digest = Md5.get()
     var min: Array[Byte] = null
     // end0 = byte offset after the first window's `width` chars
     var end = 0
@@ -50,32 +40,14 @@ object ShingleScan extends Serializable {
       digest.reset()
       digest.update(b, start, end - start)
       val d = digest.digest()
-      if (min == null || unsignedLess(d, min)) min = d
+      if (min == null || Md5.order.lt(d, min)) min = d
       if (end >= n) done = true
       else {
         start += UTF8String.numBytesForFirstByte(b(start))
         end += UTF8String.numBytesForFirstByte(b(end))
       }
     }
-    val hex = new Array[Byte](32)
-    var i = 0
-    while (i < 16) {
-      hex(2 * i) = hexDigits((min(i) >> 4) & 0xf)
-      hex(2 * i + 1) = hexDigits(min(i) & 0xf)
-      i += 1
-    }
-    UTF8String.fromBytes(hex)
-  }
-
-  private def unsignedLess(a: Array[Byte], b: Array[Byte]): Boolean = {
-    var i = 0
-    while (i < 16) {
-      val x = a(i) & 0xff
-      val y = b(i) & 0xff
-      if (x != y) return x < y
-      i += 1
-    }
-    false
+    Md5.hex(min)
   }
 }
 
@@ -91,28 +63,20 @@ object ShingleScan extends Serializable {
   * `array_min` scans them. This expression slides one two-cursor window
   * over the UTF-8 bytes, keeps the minimum 16-byte digest, and encodes
   * hex once per ROW, inside whole-stage codegen. */
-case class MinShingleMd5(child: Expression, width: Int) extends UnaryExpression {
+case class MinShingleMd5(child: Expression, width: Int)
+    extends NativeUnaryExpression("min_shingle_md5", StringType) {
 
   require(width > 0, s"min_shingle_md5: width must be positive: $width")
 
   override def dataType: DataType = StringType
-  override def prettyName: String = "min_shingle_md5"
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"min_shingle_md5 expects string, got $t")
-  }
+  override protected def kernel: ShingleScan.type = ShingleScan
 
-  override def nullSafeEval(input: Any): Any =
+  override protected def scalaCall(input: Any): Any =
     ShingleScan.minShingleMd5(input.asInstanceOf[UTF8String], width)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text => {
-      val scan = ctx.addReferenceObj("shingleScan", ShingleScan, ShingleScan.getClass.getName)
-      s"${ev.value} = $scan.minShingleMd5($text, $width);"
-    })
+  override protected def javaCall(ctx: CodegenContext, k: String, in: String): String =
+    s"$k.minShingleMd5($in, $width)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

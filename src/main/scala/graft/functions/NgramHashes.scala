@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -94,28 +93,20 @@ object NgramScan extends Serializable {
   * set, and stays inside whole-stage codegen. Downstream joins then key
   * on 8-byte longs instead of multi-word strings — smaller broadcast,
   * cheaper probe. */
-case class NgramHashes(child: Expression, n: Int) extends UnaryExpression {
+case class NgramHashes(child: Expression, n: Int)
+    extends NativeUnaryExpression("ngram_hashes", StringType) {
 
   require(n > 0, s"ngram_hashes: n must be positive: $n")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "ngram_hashes"
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ngram_hashes expects string, got $t")
-  }
+  override protected def kernel: NgramScan.type = NgramScan
 
-  override def nullSafeEval(input: Any): Any =
+  override protected def scalaCall(input: Any): Any =
     NgramScan.distinctNgramHashes(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text => {
-      val scan = ctx.addReferenceObj("ngramScan", NgramScan, NgramScan.getClass.getName)
-      s"${ev.value} = $scan.distinctNgramHashes($text, $n);"
-    })
+  override protected def javaCall(ctx: CodegenContext, k: String, in: String): String =
+    s"$k.distinctNgramHashes($in, $n)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
@@ -62,29 +61,20 @@ class ProfileHitsScan(n: Int, profile: Map[String, Array[Int]], nLangs: Int)
   * int array. Map-only, so at any corpus scale the only thing that
   * shuffles afterward is the language-pair confusion matrix. */
 case class ProfileHits(child: Expression, profile: Map[String, Array[Int]],
-                       nLangs: Int, n: Int) extends UnaryExpression {
+                       nLangs: Int, n: Int)
+    extends NativeUnaryExpression("profile_hits", StringType) {
   require(nLangs >= 1, s"profile_hits: nLangs must be >= 1: $nLangs")
   require(n >= 1, s"profile_hits: n must be >= 1: $n")
 
-  @transient private lazy val scan = new ProfileHitsScan(n, profile, nLangs)
-
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "profile_hits"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"profile_hits expects string, got $t")
-  }
+  @transient override protected lazy val kernel: ProfileHitsScan =
+    new ProfileHitsScan(n, profile, nLangs)
 
-  override def nullSafeEval(input: Any): Any =
-    scan.hits(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text => {
-      val s = ctx.addReferenceObj("profileHitsScan", scan,
-        classOf[ProfileHitsScan].getName)
-      s"${ev.value} = $s.hits($text);"
-    })
+  override protected def scalaCall(input: Any): Any =
+    kernel.hits(input.asInstanceOf[UTF8String])
+  override protected def javaCall(ctx: CodegenContext, k: String, in: String): String =
+    s"$k.hits($in)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

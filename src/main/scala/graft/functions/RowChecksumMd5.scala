@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -13,23 +11,10 @@ import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared scanner for [[RowChecksumMd5]] — one implementation for both
-  * the interpreted and generated paths. A MessageDigest is not
-  * thread-safe and tasks share the expression's reference objects, so
-  * each executor thread keeps its own instance (the [[ShingleScan]]
-  * discipline). */
+  * the interpreted and generated paths, hashing with the per-thread
+  * [[Md5]] digest. */
 object ChecksumScan extends Serializable {
 
-  @transient private lazy val md5 = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
-  // reusable per-thread scratch for the length-prefix digits (max 10
-  // digits for an int char count, plus the ':')
-  @transient private lazy val digits = new ThreadLocal[Array[Byte]] {
-    override def initialValue(): Array[Byte] = new Array[Byte](11)
-  }
-
-  private val hexDigits = "0123456789abcdef".getBytes
   private val nullMarker = "~null~".getBytes
   private val pipe = "|".getBytes
 
@@ -46,9 +31,12 @@ object ChecksumScan extends Serializable {
     * MessageDigest.getInstance (commons-codec's md5 path pays both;
     * measured 2.3x on the recon_stream_hash_diff checksum projection). */
   def rowChecksumMd5(vals: Array[UTF8String]): UTF8String = {
-    val digest = md5.get()
+    val digest = Md5.get()
     digest.reset()
-    val dig = digits.get()
+    // the row's 32-byte hex result doubles as the scratch for the
+    // length-prefix digits (at most 10 for an int char count) until
+    // the digest is encoded into it
+    val buf = new Array[Byte](32)
     var i = 0
     while (i < vals.length) {
       if (i > 0) digest.update(pipe)
@@ -57,28 +45,20 @@ object ChecksumScan extends Serializable {
       else {
         var n = v.numChars()
         // render n's decimal digits right-to-left into the scratch
-        var pos = dig.length
+        var pos = buf.length
         do {
           pos -= 1
-          dig(pos) = ('0' + n % 10).toByte
+          buf(pos) = ('0' + n % 10).toByte
           n /= 10
         } while (n > 0)
-        digest.update(dig, pos, dig.length - pos)
+        digest.update(buf, pos, buf.length - pos)
         digest.update(':'.toByte)
         val b = v.getBytes
         digest.update(b, 0, b.length)
       }
       i += 1
     }
-    val d = digest.digest()
-    val hex = new Array[Byte](32)
-    var j = 0
-    while (j < 16) {
-      hex(2 * j) = hexDigits((d(j) >> 4) & 0xf)
-      hex(2 * j + 1) = hexDigits(d(j) & 0xf)
-      j += 1
-    }
-    UTF8String.fromBytes(hex)
+    Md5.hex(digest.digest(), buf)
   }
 }
 

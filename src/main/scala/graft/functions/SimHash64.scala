@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -27,7 +26,7 @@ object SimHashScan extends Serializable {
   def simhash64(arr: ArrayData): Long = {
     val n = arr.numElements()
     val votes = new Array[Int](64)
-    val md = java.security.MessageDigest.getInstance("MD5")
+    val md = Md5.get()
     var j = 0
     while (j < n) {
       if (!arr.isNullAt(j)) {
@@ -63,26 +62,18 @@ object SimHashScan extends Serializable {
   * in-place inside whole-stage codegen: no explode, no shuffle, no
   * aggregation state. An empty array yields 0L (no votes); `split` never
   * produces one in practice (empty text → [""]). */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression)
+    extends NativeUnaryExpression("simhash64", ArrayType(StringType)) {
 
   override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"simhash64 expects array<string>, got $t")
-  }
+  override protected def kernel: SimHashScan.type = SimHashScan
 
-  override def nullSafeEval(input: Any): Any =
+  override protected def scalaCall(input: Any): Any =
     SimHashScan.simhash64(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val scan = ctx.addReferenceObj("simhashScan", SimHashScan, SimHashScan.getClass.getName)
-      s"${ev.value} = $scan.simhash64($a);"
-    })
+  override protected def javaCall(ctx: CodegenContext, k: String, in: String): String =
+    s"$k.simhash64($in)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

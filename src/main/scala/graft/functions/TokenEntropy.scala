@@ -2,10 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.Platform
@@ -88,28 +86,20 @@ object EntropyScan extends Serializable {
   * entropy is a pure per-row property of the text. This expression
   * computes it map-only inside whole-stage codegen; the only remaining
   * exchange in the query is the presentation sort. */
-case class TokenEntropy(child: Expression) extends UnaryExpression {
+case class TokenEntropy(child: Expression)
+    extends NativeUnaryExpression("token_entropy", StringType) {
 
   override def dataType: DataType = StructType(Seq(
     StructField("entropy", DoubleType, nullable = false),
     StructField("n_tokens", LongType, nullable = false)))
-  override def prettyName: String = "token_entropy"
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"token_entropy expects string, got $t")
-  }
+  override protected def kernel: EntropyScan.type = EntropyScan
 
-  override def nullSafeEval(input: Any): Any =
+  override protected def scalaCall(input: Any): Any =
     EntropyScan.entropyRow(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text => {
-      val scan = ctx.addReferenceObj("entropyScan", EntropyScan, EntropyScan.getClass.getName)
-      s"${ev.value} = (InternalRow) $scan.entropyRow($text);"
-    })
+  override protected def javaCall(ctx: CodegenContext, k: String, in: String): String =
+    s"(InternalRow) $k.entropyRow($in)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -2,10 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType, StructField, StructType}
 
@@ -74,7 +72,8 @@ object WavScan extends Serializable {
   * As a codegen'd expression the parse runs inside the scan stage over
   * the binary column: at 100 TB of audio, the metadata pass reads only
   * the leading bytes of each blob and shuffles nothing. */
-case class WavMeta(child: Expression) extends UnaryExpression {
+case class WavMeta(child: Expression)
+    extends NativeUnaryExpression("wav_meta", BinaryType, kernelReturnsNull = true) {
 
   override def dataType: DataType = StructType(Seq(
     StructField("sample_rate", IntegerType, nullable = false),
@@ -82,30 +81,14 @@ case class WavMeta(child: Expression) extends UnaryExpression {
     StructField("bits", IntegerType, nullable = false),
     StructField("n_frames", LongType, nullable = false),
     StructField("duration_ms", LongType, nullable = false)))
-  override def prettyName: String = "wav_meta"
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"wav_meta expects binary, got $t")
-  }
+  override protected def kernel: WavScan.type = WavScan
 
-  override def nullSafeEval(input: Any): Any =
+  override protected def scalaCall(input: Any): Any =
     WavScan.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes => {
-      val scan = ctx.addReferenceObj("wavScan", WavScan, WavScan.getClass.getName)
-      val r = ctx.freshName("wav")
-      s"""
-         |InternalRow $r = $scan.parse($bytes);
-         |if ($r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $r;
-         |}
-       """.stripMargin
-    })
+  override protected def javaCall(ctx: CodegenContext, k: String, in: String): String =
+    s"$k.parse($in)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

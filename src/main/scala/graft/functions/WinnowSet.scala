@@ -1,13 +1,10 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -23,25 +20,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * substring-level overlap detectable from the set intersection. */
 object WinnowScan extends Serializable {
 
-  @transient private lazy val md5 = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
-  private val hexDigits = "0123456789abcdef".getBytes
-
-  private object UnsignedBytes extends Ordering[Array[Byte]] {
-    def compare(a: Array[Byte], b: Array[Byte]): Int = {
-      var i = 0
-      while (i < 16) {
-        val x = a(i) & 0xff
-        val y = b(i) & 0xff
-        if (x != y) return x - y
-        i += 1
-      }
-      0
-    }
-  }
-
   /** Distinct per-window md5 minima, sorted ascending, as lowercase-hex
     * strings. Shingle walk and clamp semantics are byte-identical to
     * [[ShingleScan.minShingleMd5]] (texts shorter than `width` hash once;
@@ -53,7 +31,7 @@ object WinnowScan extends Serializable {
   def winnowSet(text: UTF8String, width: Int, window: Int): ArrayData = {
     val b = text.getBytes
     val n = b.length
-    val digest = md5.get()
+    val digest = Md5.get()
     val digs = mutable.ArrayBuffer.empty[Array[Byte]]
     var end = 0
     var chars = 0
@@ -75,14 +53,14 @@ object WinnowScan extends Serializable {
     }
     val m = digs.length
     val nwin = math.max(m - window + 1, 1)
-    val mins = mutable.TreeSet.empty[Array[Byte]](UnsignedBytes)
+    val mins = mutable.TreeSet.empty[Array[Byte]](Md5.order)
     var p = 0
     while (p < nwin) {
       var mn = digs(p)
       val lim = math.min(p + window, m)
       var j = p + 1
       while (j < lim) {
-        if (UnsignedBytes.compare(digs(j), mn) < 0) mn = digs(j)
+        if (Md5.order.lt(digs(j), mn)) mn = digs(j)
         j += 1
       }
       mins += mn
@@ -91,14 +69,7 @@ object WinnowScan extends Serializable {
     val out = new Array[AnyRef](mins.size)
     var i = 0
     mins.foreach { d =>
-      val hex = new Array[Byte](32)
-      var k = 0
-      while (k < 16) {
-        hex(2 * k) = hexDigits((d(k) >> 4) & 0xf)
-        hex(2 * k + 1) = hexDigits(d(k) & 0xf)
-        k += 1
-      }
-      out(i) = UTF8String.fromBytes(hex)
+      out(i) = Md5.hex(d)
       i += 1
     }
     new GenericArrayData(out)
@@ -114,29 +85,20 @@ object WinnowScan extends Serializable {
   * digests once and scans windows over the digest buffer in one pass
   * inside whole-stage codegen). */
 case class WinnowSet(child: Expression, width: Int, window: Int)
-    extends UnaryExpression {
+    extends NativeUnaryExpression("winnow_set", StringType) {
 
   require(width > 0, s"winnow_set: width must be positive: $width")
   require(window > 0, s"winnow_set: window must be positive: $window")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "winnow_set"
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"winnow_set expects string, got $t")
-  }
+  override protected def kernel: WinnowScan.type = WinnowScan
 
-  override def nullSafeEval(input: Any): Any =
+  override protected def scalaCall(input: Any): Any =
     WinnowScan.winnowSet(input.asInstanceOf[UTF8String], width, window)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text => {
-      val scan = ctx.addReferenceObj("winnowScan", WinnowScan, WinnowScan.getClass.getName)
-      s"${ev.value} = $scan.winnowSet($text, $width, $window);"
-    })
+  override protected def javaCall(ctx: CodegenContext, k: String, in: String): String =
+    s"$k.winnowSet($in, $width, $window)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

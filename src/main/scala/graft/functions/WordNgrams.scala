@@ -3,9 +3,8 @@ package graft.functions
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -92,29 +91,19 @@ class WordNgramScan(n: Int) extends Serializable {
   * (boundaries found once, common-case grams wrapped zero-copy over the
   * input bytes, dedup in the same pass) runs the identical contract
   * inside whole-stage codegen. */
-case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
+case class WordNgrams(child: Expression, n: Int)
+    extends NativeUnaryExpression("word_ngrams", StringType) {
   require(n >= 1, s"word_ngrams: n must be >= 1: $n")
 
-  @transient private lazy val scan = new WordNgramScan(n)
-
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_ngrams"
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"word_ngrams expects string, got $t")
-  }
+  @transient override protected lazy val kernel: WordNgramScan = new WordNgramScan(n)
 
-  override def nullSafeEval(input: Any): Any =
-    scan.grams(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text => {
-      val ref = ctx.addReferenceObj("wordNgramScan", scan, scan.getClass.getName)
-      s"${ev.value} = $ref.grams($text);"
-    })
+  override protected def scalaCall(input: Any): Any =
+    kernel.grams(input.asInstanceOf[UTF8String])
+  override protected def javaCall(ctx: CodegenContext, k: String, in: String): String =
+    s"$k.grams($in)"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -305,6 +305,20 @@ object Events {
         col("event_type"), col("n"), col("v"))
       .orderBy("ws", "event_type")
 
+  /** A funnel stage's first-event frame over `ev` (user_id, ts,
+    * event_type): per user, the first `typ` event as `tcol`, strictly
+    * after the user's instant in the previous stage's frame `after`. */
+  private def funnelStage(ev: DataFrame, typ: String, after: Option[DataFrame],
+                          tcol: String): DataFrame = {
+    val base = ev.filter(col("event_type") === typ)
+    val scoped = after match {
+      case Some(prev) => base.join(prev, "user_id")
+        .filter(col("ts") > col(prev.columns.last))
+      case None => base
+    }
+    scoped.groupBy("user_id").agg(min(col("ts")).as(tcol))
+  }
+
   /** Ordered funnel conversion — the product-analytics staple: how many
     * users progressed view → click → purchase IN THAT ORDER? A user
     * counts for stage k+1 only with an event STRICTLY after their stage-k
@@ -321,18 +335,9 @@ object Events {
     * (user, min-ts) pairs after the first map-side combine. */
   def funnelConversion(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir).select("user_id", "ts", "event_type")
-    def first(typ: String, after: Option[DataFrame], tcol: String): DataFrame = {
-      val base = ev.filter(col("event_type") === typ)
-      val scoped = after match {
-        case Some(prev) => base.join(prev, "user_id")
-          .filter(col("ts") > col(prev.columns.last))
-        case None => base
-      }
-      scoped.groupBy("user_id").agg(min(col("ts")).as(tcol))
-    }
-    val t1 = first("view", None, "t1")
-    val t2 = first("click", Some(t1), "t2")
-    val t3 = first("purchase", Some(t2), "t3")
+    val t1 = funnelStage(ev, "view", None, "t1")
+    val t2 = funnelStage(ev, "click", Some(t1), "t2")
+    val t3 = funnelStage(ev, "purchase", Some(t2), "t3")
     def stage(name: String, df: DataFrame) =
       df.agg(count(lit(1)).as("users")).select(lit(name).as("stage"), col("users"))
     stage("1_view", t1)
@@ -344,24 +349,15 @@ object Events {
   /** Time-to-convert through the strict view→click→purchase funnel —
     * the metric the funnel COUNTS hide: among fully-converted users, how
     * long did the journey take? Reuses [[funnelConversion]]'s staged
-    * first-event frames (per-user min aggregates, user-keyed exchanges,
-    * each stage frame ≤ |users| rows), takes purchase−view in exact
-    * integer microseconds per converted user, and aggregates to one
-    * row: only the final presentation divisions are float (the
-    * event_gap_stats discipline). */
+    * first-event frames ([[funnelStage]]: per-user min aggregates,
+    * user-keyed exchanges, each stage frame ≤ |users| rows), takes
+    * purchase−view in exact integer microseconds per converted user,
+    * and aggregates to one row: only the final presentation divisions
+    * are float (the event_gap_stats discipline). */
   def funnelTimeToConvert(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir).select("user_id", "ts", "event_type")
-    def first(typ: String, after: Option[DataFrame], tcol: String): DataFrame = {
-      val base = ev.filter(col("event_type") === typ)
-      val scoped = after match {
-        case Some(prev) => base.join(prev, "user_id")
-          .filter(col("ts") > col(prev.columns.last))
-        case None => base
-      }
-      scoped.groupBy("user_id").agg(min(col("ts")).as(tcol))
-    }
-    val t1 = first("view", None, "t1")
-    val t3 = first("purchase", Some(first("click", Some(t1), "t2")), "t3")
+    val t1 = funnelStage(ev, "view", None, "t1")
+    val t3 = funnelStage(ev, "purchase", Some(funnelStage(ev, "click", Some(t1), "t2")), "t3")
     t3.join(t1, "user_id")
       .select((unix_micros(col("t3")) - unix_micros(col("t1"))).as("us"))
       .agg(count(lit(1)).as("n_converted"), sum(col("us")).as("sm"),

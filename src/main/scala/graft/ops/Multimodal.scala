@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.Md5
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -60,7 +61,7 @@ object Multimodal {
     * no-oracle ones. A real codec replaces everything below `n`. */
   private[graft] def decodeStub(r: MediaRecord): MediaFeatures = {
     val n = r.payload.length
-    val dig = java.security.MessageDigest.getInstance("MD5").digest(r.payload)
+    val dig = Md5.get().digest(r.payload)
     val h = ((dig(0) & 0xffL) << 24) | ((dig(1) & 0xffL) << 16) |
       ((dig(2) & 0xffL) << 8) | (dig(3) & 0xffL)
     r.kind match {

@@ -1047,6 +1047,25 @@ object Recon {
       .orderBy("bucket")
   }
 
+  /** The per-type half-split cell frame of [[ksDrift]] and
+    * [[wassersteinDrift]]: `events` (event_type, t_us, v) drops null
+    * values, splits each type at its midpoint instant (side 1 up to and
+    * including it, side 2 after; types whose events share one instant
+    * drop out) and counts each (type, v) cell per side as c1 and c2. */
+  private def halfSplitCells(events: DataFrame): DataFrame = {
+    val base = events.where(col("v").isNotNull)
+    val bounds = base.groupBy("event_type")
+      .agg(min(col("t_us")).as("lo"), max(col("t_us")).as("hi"))
+      .where(col("lo") < col("hi"))
+      .select(col("event_type"), expr("(lo + hi) div 2").as("mid"))
+    val sided = base.join(broadcast(bounds), "event_type")
+      .select(col("event_type"), col("v"),
+        when(col("t_us") <= col("mid"), 1).otherwise(2).as("side"))
+    sided.groupBy("event_type", "v")
+      .agg(count_if(col("side") === 1).as("c1"),
+        count_if(col("side") === 2).as("c2"))
+  }
+
   /** Two-sample Kolmogorov–Smirnov drift test per event type: the
     * value distribution of each type's FIRST time-half against its
     * SECOND (split at the per-type midpoint instant) — the
@@ -1073,20 +1092,9 @@ object Recon {
     * agg. Nothing row-count-sized sorts or buffers. */
   def ksDrift(spark: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val base = Tables.events(spark, dir)
+    val cells = halfSplitCells(Tables.events(spark, dir)
       .select(col("event_type"), unix_micros(col("ts")).as("t_us"),
-        col("value").as("v"))
-      .where(col("v").isNotNull)
-    val bounds = base.groupBy("event_type")
-      .agg(min(col("t_us")).as("lo"), max(col("t_us")).as("hi"))
-      .where(col("lo") < col("hi"))
-      .select(col("event_type"), expr("(lo + hi) div 2").as("mid"))
-    val sided = base.join(broadcast(bounds), "event_type")
-      .select(col("event_type"), col("v"),
-        when(col("t_us") <= col("mid"), 1).otherwise(2).as("side"))
-    val cells = sided.groupBy("event_type", "v")
-      .agg(count_if(col("side") === 1).as("c1"),
-        count_if(col("side") === 2).as("c2"))
+        col("value").as("v")))
     val w = Window.partitionBy(col("event_type")).orderBy(col("v"))
     // totals ride the SAME type-partitioned window pass as the CDFs
     // (whole-partition frame — sum(c1) over the full partition IS the
@@ -1140,20 +1148,9 @@ object Recon {
     * windows over the cell frame partitioned by type. */
   def wassersteinDrift(spark: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val base = Tables.events(spark, dir)
+    val cells = halfSplitCells(Tables.events(spark, dir)
       .select(col("event_type"), unix_micros(col("ts")).as("t_us"),
-        round(round(col("value"), 6) * 1e6, 0).cast("long").as("v"))
-      .where(col("v").isNotNull)
-    val bounds = base.groupBy("event_type")
-      .agg(min(col("t_us")).as("lo"), max(col("t_us")).as("hi"))
-      .where(col("lo") < col("hi"))
-      .select(col("event_type"), expr("(lo + hi) div 2").as("mid"))
-    val sided = base.join(broadcast(bounds), "event_type")
-      .select(col("event_type"), col("v"),
-        when(col("t_us") <= col("mid"), 1).otherwise(2).as("side"))
-    val cells = sided.groupBy("event_type", "v")
-      .agg(count_if(col("side") === 1).as("c1"),
-        count_if(col("side") === 2).as("c2"))
+        round(round(col("value"), 6) * 1e6, 0).cast("long").as("v")))
     val w = Window.partitionBy(col("event_type")).orderBy(col("v"))
     // totals ride the SAME type-partitioned window pass as the CDFs
     // (the ksDrift round-21 restructure — §7.2/§2.4): the old separate
