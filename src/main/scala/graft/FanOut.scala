@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 
 /** Task fan-out for CPU-dense row-local operators.
   *
@@ -15,8 +16,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * the box: whenever the frame already has >= cores partitions this is an
   * identity (no exchange appears in the plan; asserted in TextSpec).
   *
-  * The split count is estimated by replaying Spark's own FilePartition
-  * packing over driver-side file metadata from the plan's file relations —
+  * The split count is estimated by running Spark's own split planning
+  * over driver-side file metadata from the plan's file relations —
   * NOT via `df.rdd.getNumPartitions`, which forces a full physical-plan +
   * RDD-DAG compile of `df` that is then thrown away when `repartition`
   * plans the real query (round-6 advice: double planning per call).
@@ -33,42 +34,25 @@ object FanOut {
   }
 
   /** Estimated scan partition count per file relation in `df`'s plan:
-    * Spark's maxSplitBytes formula + greedy open-cost bin packing
-    * (`FilePartition.getFilePartitions`) replayed over the file lengths
-    * the relation's FileIndex already holds on the driver. Deterministic,
-    * no Spark job, no physical planning; both decision boundaries
-    * (fan-out on a single-split scan, identity on a well-split one) are
-    * asserted in TextSpec against the executed plan.
+    * the file scan's own split planning (`FilePartition.maxSplitBytes`,
+    * `PartitionedFileUtil.splitFiles`, then `FilePartition.getFilePartitions`
+    * over the splits largest first, as `FileSourceScanExec` runs it), fed
+    * the file statuses the relation's FileIndex already holds on the
+    * driver. Deterministic, no Spark job, no physical planning; both
+    * decision boundaries (fan-out on a single-split scan, identity on a
+    * well-split one) are asserted in TextSpec against the executed plan.
     */
-  private def estimatedScanSplits(df: DataFrame): Seq[Int] = {
-    val sess = df.sparkSession
-    val conf = sess.sessionState.conf
-    val openCost = conf.filesOpenCostInBytes
-    val minPartitionNum = conf.filesMinPartitionNum
-      .getOrElse(sess.sparkContext.defaultParallelism)
+  private def estimatedScanSplits(df: DataFrame): Seq[Int] =
     df.queryExecution.analyzed.collect {
       case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
         val fs = lr.relation.asInstanceOf[HadoopFsRelation]
-        val sizes = fs.location.listFiles(Nil, Nil).flatMap(_.files.map(_.getLen))
-        val totalBytes = sizes.map(_ + openCost).sum
-        val maxSplit = math.min(conf.filesMaxPartitionBytes,
-          math.max(openCost, totalBytes / math.max(1L, minPartitionNum.toLong)))
-        // parquet is splittable: each file becomes ceil(len/maxSplit)
-        // ranges, then ranges pack greedily (largest first) with openCost
-        // padding — same as FilePartition.getFilePartitions
-        val ranges = sizes.filter(_ > 0).flatMap { len =>
-          (0L until len by maxSplit).map(off => math.min(maxSplit, len - off))
-        }.sortBy(-_)
-        var nParts = 0
-        var current = 0L
-        var open = false
-        ranges.foreach { r =>
-          if (open && current + r > maxSplit) { nParts += 1; current = 0L; open = false }
-          current += r + openCost
-          open = true
-        }
-        if (open) nParts += 1
-        nParts
+        val sess = fs.sparkSession
+        val dirs = fs.location.listFiles(Nil, Nil)
+        val maxSplit = FilePartition.maxSplitBytes(sess, dirs)
+        val splits = dirs.flatMap(d => d.files.flatMap { f =>
+          PartitionedFileUtil.splitFiles(f, f.getPath,
+            fs.fileFormat.isSplitable(sess, fs.options, f.getPath), maxSplit, d.values)
+        }).sortBy(-_.length)
+        FilePartition.getFilePartitions(sess, splits, maxSplit).size
     }
-  }
 }

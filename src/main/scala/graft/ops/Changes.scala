@@ -100,13 +100,8 @@ object Changes {
     val deletes = o.filter(col("o_orderkey") % 10 =!= 0 &&
         col("o_orderkey") % 13 === 0)
       .withColumn("op", lit("D"))
-    val fin = applyChanges(base, inserts.unionByName(updates).unionByName(deletes),
-      "o_orderkey")
-    fin.groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"),
-        Recon.decSum(col("o_totalprice")).as("sum_price"),
-        count(when(col("o_orderpriority") === "5-RESTATED", 1)).as("n_restated"))
-      .orderBy("o_orderstatus")
+    restatedSummary(applyChanges(base,
+      inserts.unionByName(updates).unionByName(deletes), "o_orderkey"))
   }
 
   /** Deterministic CDC micro-batch carrying SEVERAL seq'd changes per key
@@ -179,7 +174,13 @@ object Changes {
     * seqs split across two micro-batches — converges to the identical
     * snapshot (the `recon_stream_hash_diff` recipe). */
   def cdcApplyParity(spark: SparkSession, dir: String): DataFrame =
-    cdcApplyFinal(spark, dir).groupBy(col("o_orderstatus"))
+    restatedSummary(cdcApplyFinal(spark, dir))
+
+  /** The CDC summary both harness ops end in: per o_orderstatus, the
+    * rowcount, the exact decimal money sum and the restated-row count of
+    * a final snapshot state. */
+  private def restatedSummary(fin: DataFrame): DataFrame =
+    fin.groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"),
         Recon.decSum(col("o_totalprice")).as("sum_price"),
         count(when(col("o_orderpriority") === "5-RESTATED", 1)).as("n_restated"))

@@ -61,6 +61,13 @@ object Recon {
     * `StreamingOps`' literal Cast). */
   private def hashPrice(price: Column): Column = exactDecimal(price, 12, 2)
 
+  /** The orders demo row hash: (o_custkey, o_orderstatus, [[hashPrice]])
+    * through the in-flight [[rowHash64]], or through `hash` where a demo
+    * exercises another row-hash path. */
+  private def ordersRowHash(price: Column,
+                            hash: Seq[Column] => Column = rowHash64): Column =
+    hash(Seq(col("o_custkey"), col("o_orderstatus"), hashPrice(price)))
+
   /** Inverse of [[cents]] on an aggregated long: exact decimal division
     * (never double division, so the value is exact at ANY long magnitude,
     * not just below 2^53) then one presentation cast. */
@@ -529,8 +536,6 @@ object Recon {
     // [[reconcileAll]] shape). For genuinely two-sided reports over
     // distinct tables, [[reconcileAll]] IS the surface — one scan per
     // side, one join per pair.
-    def h(price: Column) = rowHash64(Seq(
-      col("o_custkey"), col("o_orderstatus"), hashPrice(price)))
     def chk(name: String, v: Column, tgtV: Column, ok: Column) =
       struct(lit(name).as("check"), v.as("src_v"), tgtV.as("tgt_v"), ok.as("ok"))
     o.agg(
@@ -538,7 +543,8 @@ object Recon {
         decSum(col("o_totalprice")).as("sum_src"),
         decSum(round(col("o_totalprice"), 0)).as("sum_tgt"),
         count(when(col("o_custkey").isNull, 1)).cast("double").as("nulls"),
-        count(when(h(col("o_totalprice")) =!= h(round(col("o_totalprice"), 0)), 1))
+        count(when(ordersRowHash(col("o_totalprice"))
+          =!= ordersRowHash(round(col("o_totalprice"), 0)), 1))
           .cast("double").as("mism"))
       .select(explode(array(
         chk("hash_mismatches", col("mism"), lit(0.0), col("mism") === lit(0.0)),
@@ -557,6 +563,39 @@ object Recon {
       .orderBy("check")
   }
 
+  /** The row-status rule: `status` of each row of a frame carrying
+    * (h_src, h_tgt), a side's hash null where that side lacks the key —
+    * extra_in_target, missing_in_target, mismatch or match — after the
+    * `keep` columns. Both the generic APIs' full-outer joins and the
+    * same-base twins' [[sameBaseKeys]] produce that shape. */
+  private def classified(keyed: DataFrame, keep: String*): DataFrame =
+    keyed.select(keep.map(col) :+
+      when(col("h_src").isNull, "extra_in_target")
+        .when(col("h_tgt").isNull, "missing_in_target")
+        .when(col("h_src") =!= col("h_tgt"), "mismatch")
+        .otherwise("match").as("status"): _*)
+
+  /** The per-key (k, h_src, h_tgt) shape for a same-base pair, whose two
+    * sides derive ROW-LOCALLY from one scan of `base`: a side's hash is
+    * null where the key is absent from that side, exactly what the
+    * full-outer join of two (k, h) projections gives when the key is
+    * unique — one scan, no join. `carry` columns ride along. */
+  private def sameBaseKeys(base: DataFrame, key: Column,
+                           inSrc: Column, inTgt: Column,
+                           hSrc: Column, hTgt: Column, carry: Column*): DataFrame =
+    base.filter(inSrc || inTgt)
+      .select(carry ++ Seq(key.as("k"),
+        when(inSrc, hSrc).as("h_src"), when(inTgt, hTgt).as("h_tgt")): _*)
+
+  /** The seeded orders diff fixture: the source drops every 991st key,
+    * the target drops every 997th and rounds prices, so all three
+    * divergence statuses appear. */
+  private def ordersDiffKeys(orders: DataFrame): DataFrame =
+    sameBaseKeys(orders, col("o_orderkey"),
+      col("o_orderkey") % 991 =!= 0, col("o_orderkey") % 997 =!= 0,
+      ordersRowHash(col("o_totalprice")),
+      ordersRowHash(round(col("o_totalprice"), 0)))
+
   /** Row-level diff detail — the reference's full §0.3 surface: the actual
     * key sets, not just counts. One full-outer join of map-side (key, hash)
     * pairs, classifying each key as mismatch / missing_in_target /
@@ -565,47 +604,28 @@ object Recon {
     * the join co-locates with zero shuffle. */
   def hashDiffDetail(src: DataFrame, tgt: DataFrame,
                      key: String, cols: Seq[String],
-                     window: Option[Column] = None): DataFrame = {
-    keyedChecksum(windowed(src, window), key, cols, "h_src")
-      .join(keyedChecksum(windowed(tgt, window), key, cols, "h_tgt"), Seq("k"), "full_outer")
-      .select(col("k"),
-        when(col("h_src").isNull, "extra_in_target")
-          .when(col("h_tgt").isNull, "missing_in_target")
-          .when(col("h_src") =!= col("h_tgt"), "mismatch")
-          .otherwise("match").as("status"))
+                     window: Option[Column] = None): DataFrame =
+    classified(keyedChecksum(windowed(src, window), key, cols, "h_src")
+      .join(keyedChecksum(windowed(tgt, window), key, cols, "h_tgt"),
+        Seq("k"), "full_outer"), "k")
       .filter(col("status") =!= "match")
-  }
 
-  /** Harness twin of [[hashDiffDetail]]: source drops every 991st key,
-    * target drops every 997th and rounds prices — so all three statuses
-    * appear. Prices normalize through DECIMAL(12,2) before hashing so the
-    * concat text is engine-identical.
+  /** Harness twin of [[hashDiffDetail]] over [[ordersDiffKeys]]. Prices
+    * normalize through DECIMAL(12,2) before hashing.
     *
     * Both sides derive row-locally from the SAME orders row and the join
     * key is unique, so the full-outer join over two filtered projections
-    * of one file is equivalent to classifying each base row in place:
-    * side membership from the key predicates, mismatch from the two
-    * checksums of the same projection. One scan, both md5s computed once,
-    * no join, and the sort+limit plans as TakeOrderedAndProject — where
-    * the round-8 form scanned the file twice and shuffled both hash sets.
-    * Distinct-table diffs keep the generic [[hashDiffDetail]] full-outer. */
-  def diffDetail(spark: SparkSession, dir: String): DataFrame = {
-    val inSrc = col("o_orderkey") % 991 =!= 0
-    val inTgt = col("o_orderkey") % 997 =!= 0
-    def checksum(price: Column) = rowHash64(Seq(
-      col("o_custkey"), col("o_orderstatus"), hashPrice(price)))
-    Tables.orders(spark, dir)
-      .filter(inSrc || inTgt)
-      .select(col("o_orderkey").as("k"),
-        when(!inTgt, "missing_in_target")
-          .when(!inSrc, "extra_in_target")
-          .when(checksum(col("o_totalprice"))
-            =!= checksum(round(col("o_totalprice"), 0)), "mismatch")
-          .otherwise("match").as("status"))
+    * of one file is equivalent to classifying each base row in place
+    * ([[sameBaseKeys]]). One scan, both hashes computed once, no join,
+    * and the sort+limit plans as TakeOrderedAndProject — where the
+    * round-8 form scanned the file twice and shuffled both hash sets.
+    * Distinct-table diffs keep the generic [[hashDiffDetail]] full-outer
+    * (parity-tested in ReconSpec). */
+  def diffDetail(spark: SparkSession, dir: String): DataFrame =
+    classified(ordersDiffKeys(Tables.orders(spark, dir)), "k")
       .filter(col("status") =!= "match")
       .orderBy("status", "k")
       .limit(200)
-  }
 
   /** Registry anchor for the SAMPLE-then-diff recon shape
     * ([[sampleDiff]] — the cheap continuous smoke check at 100 TB):
@@ -631,20 +651,12 @@ object Recon {
   def sampleDiffOrders(spark: SparkSession, dir: String): DataFrame = {
     val member =
       substring(md5(col("o_orderkey").cast("string")), 1, 1) === "0"
-    val inSrc = col("o_orderkey") % 89 =!= 0
-    val inTgt = col("o_orderkey") % 101 =!= 0
-    def checksum(price: Column) = rowChecksumOf(Seq(
-      col("o_custkey"), col("o_orderstatus"), hashPrice(price)))
     val srcPrice = when(col("o_orderkey") % 97 === 0,
       round(col("o_totalprice"), 0)).otherwise(col("o_totalprice"))
-    Tables.orders(spark, dir)
-      .filter(member && (inSrc || inTgt))
-      .select(col("o_orderkey").as("k"),
-        when(!inTgt, "missing_in_target")
-          .when(!inSrc, "extra_in_target")
-          .when(checksum(srcPrice) =!= checksum(col("o_totalprice")),
-            "mismatch")
-          .otherwise("match").as("status"))
+    classified(sameBaseKeys(Tables.orders(spark, dir).filter(member),
+        col("o_orderkey"), col("o_orderkey") % 89 =!= 0,
+        col("o_orderkey") % 101 =!= 0, ordersRowHash(srcPrice, rowChecksumOf),
+        ordersRowHash(col("o_totalprice"), rowChecksumOf)), "k")
       .groupBy("status")
       .agg(count(lit(1)).as("n_keys"),
         min(col("k")).as("min_k"), max(col("k")).as("max_k"))
@@ -739,13 +751,14 @@ object Recon {
                          perKey: DataFrame): DataFrame = {
     def chk(cname: String, v: Column, tgtV: Column, ok: Column) =
       struct(lit(cname).as("check"), v.as("src_v"), tgtV.as("tgt_v"), ok.as("ok"))
-    perKey.agg(
+    def keys(status: String) =
+      count(when(col("status") === status, 1)).cast("double")
+    classified(perKey, "n_src", "n_tgt").agg(
         coalesce(sum(col("n_src")), lit(0L)).cast("double").as("src_n"),
         coalesce(sum(col("n_tgt")), lit(0L)).cast("double").as("tgt_n"),
-        // =!= is null-rejecting, so a missing/extra key never double-counts
-        count(when(col("h_src") =!= col("h_tgt"), 1)).cast("double").as("mism"),
-        count(when(col("h_tgt").isNull, 1)).cast("double").as("miss"),
-        count(when(col("h_src").isNull, 1)).cast("double").as("extra"),
+        keys("mismatch").as("mism"),
+        keys("missing_in_target").as("miss"),
+        keys("extra_in_target").as("extra"),
         count(when(col("n_src") > 1, 1)).cast("double").as("dup_src"),
         count(when(col("n_tgt") > 1, 1)).cast("double").as("dup_tgt"))
       .select(lit(name).as("table"), explode(array(
@@ -773,35 +786,30 @@ object Recon {
   def reconcileSameBase(name: String, base: DataFrame, key: Column,
                         inSrc: Column, inTgt: Column,
                         hSrc: Column, hTgt: Column): DataFrame =
+    reconcileKeys(name, sameBaseKeys(base, key, inSrc, inTgt, hSrc, hTgt))
+
+  /** [[reconcileSameBase]] over a [[sameBaseKeys]] frame: one groupBy
+    * gives each side's per-key (h, n), a side's n null where it lacks
+    * the key. */
+  private def reconcileKeys(name: String, keyed: DataFrame): DataFrame =
     pairReport(name, 0.0,
-      base.filter(inSrc || inTgt)
-        .select(key.as("k"),
-          when(inSrc, hSrc).as("hs"), when(inTgt, hTgt).as("ht"))
-        .groupBy("k")
-        .agg(max(col("hs")).as("h_src"), count(col("hs")).as("ns"),
-          max(col("ht")).as("h_tgt"), count(col("ht")).as("nt"))
+      keyed.groupBy("k")
+        .agg(max(col("h_src")).as("h_src"), count(col("h_src")).as("ns"),
+          max(col("h_tgt")).as("h_tgt"), count(col("h_tgt")).as("nt"))
         .select(col("h_src"), col("h_tgt"),
           when(col("ns") > 0, col("ns")).as("n_src"),
           when(col("nt") > 0, col("nt")).as("n_tgt")))
 
   /** Harness twin of [[reconcileAll]]: two pairs with seeded divergence —
-    * orders (src drops every 991st key, tgt drops every 997th and rounds
-    * prices, both scoped to the 1995+ load window) and customer (tgt
-    * drops every 500th key). Prices normalize through DECIMAL(12,2)
-    * pre-hash exactly as in [[diffDetail]]. Both pairs' sides derive
+    * orders ([[ordersDiffKeys]], scoped to the 1995+ load window) and
+    * customer (tgt drops every 500th key). Both pairs' sides derive
     * row-locally from one table, so each rides [[reconcileSameBase]] —
     * one scan and one shuffle per TABLE where the generic config-driven
     * [[reconcileAll]] (the surface for genuinely distinct tables) pays
-    * one per SIDE plus a join. */
+    * one per SIDE plus a join (parity-tested in ReconSpec). */
   def reconcileAllDemo(spark: SparkSession, dir: String): DataFrame = {
-    def oHash(price: Column) = rowHash64(Seq(
-      col("o_custkey"), col("o_orderstatus"), hashPrice(price)))
-    val orders = reconcileSameBase("orders",
-      Tables.orders(spark, dir)
-        .filter(col("o_orderdate") >= lit("1995-01-01").cast("timestamp")),
-      col("o_orderkey"),
-      col("o_orderkey") % 991 =!= 0, col("o_orderkey") % 997 =!= 0,
-      oHash(col("o_totalprice")), oHash(round(col("o_totalprice"), 0)))
+    val orders = reconcileKeys("orders", ordersDiffKeys(Tables.orders(spark, dir)
+      .filter(col("o_orderdate") >= lit("1995-01-01").cast("timestamp"))))
     val cHash = rowHash64(Seq(
       col("c_name"), col("c_mktsegment"), col("c_acctbal")))
     val customer = reconcileSameBase("customer",
@@ -939,27 +947,43 @@ object Recon {
     * bit-identical. */
   def fingerprintSnapshot(df: DataFrame, partCol: Column,
                           cols: Seq[String]): DataFrame =
-    fingerprintOfChecksum(
-      df.select(partCol.as("part"), rowChecksum(cols).as("__c")))
+    fingerprintOfHash64(df.select(partCol.as("part"),
+      conv(substring(rowChecksum(cols), 1, 15), 16, 10).cast("long").as("__h")))
 
-  /** [[fingerprintSnapshot]]'s channel aggregation over an already-
-    * computed (part, __c row-md5) projection — shared with
-    * [[incrementalDiff]], whose detail pass reuses the same projection so
-    * each row is hashed exactly once. */
-  private def fingerprintOfChecksum(keyed: DataFrame): DataFrame =
-    fingerprintOfHash64(keyed.select(col("part"),
-      conv(substring(col("__c"), 1, 15), 16, 10).cast("long").as("__h")))
+  /** The fingerprint-channel format, in the persisted snapshot's column
+    * order: row count, XOR, and the sums of the unsigned high and low
+    * 32-bit halves of a long row hash. */
+  private val Channels = Seq("n", "fp_xor", "fp_sum_hi", "fp_sum_lo")
 
-  /** Channel aggregation over a (part, __h long-hash) projection. The
-    * split sums run over the hash's unsigned 32-bit halves, so they stay
-    * exact while each partition holds < 2³¹ rows — beyond that a single
-    * load window is too coarse to reconcile as one unit anyway. */
-  private def fingerprintOfHash64(keyed: DataFrame): DataFrame =
-    keyed.groupBy("part")
-      .agg(count(lit(1)).as("n"),
-        expr("bit_xor(__h)").as("fp_xor"),
-        sum(shiftrightunsigned(col("__h"), 32)).as("fp_sum_hi"),
-        sum(col("__h").bitwiseAND(lit(0xffffffffL))).as("fp_sum_lo"))
+  /** The [[Channels]] aggregates of long hash `h`, named with `suffix`.
+    * Every channel skips null hashes, so over a side's conditional hash
+    * (null for rows that side lacks) they fingerprint that side alone.
+    * The split sums stay exact while each partition holds < 2³¹ rows —
+    * beyond that a single load window is too coarse to reconcile as one
+    * unit anyway. */
+  private def channels(h: Column, suffix: String = ""): Seq[Column] =
+    Seq(count(h), bit_xor(h), sum(shiftrightunsigned(h, 32)),
+      sum(h.bitwiseAND(lit(0xffffffffL))))
+      .zip(Channels).map { case (c, name) => c.as(name + suffix) }
+
+  /** The snapshot of a (part, __h long-hash) projection. */
+  private def fingerprintOfHash64(keyed: DataFrame): DataFrame = {
+    val c = channels(col("__h"))
+    keyed.groupBy("part").agg(c.head, c.tail: _*)
+  }
+
+  /** Partitions whose fingerprint moved, from per-partition channels
+    * suffixed `_prev` and `_curr` (a side's `n` is null where it lacks
+    * the partition): `new`, `dropped` or `changed` (any channel
+    * differs), with the `keep` columns. Unchanged partitions emit
+    * nothing. */
+  private def movedParts(perPart: DataFrame, keep: String*): DataFrame =
+    perPart.select(col("part") +: (when(col("n_prev").isNull, "new")
+        .when(col("n_curr").isNull, "dropped")
+        .when(Channels.map(c => col(c + "_prev") =!= col(c + "_curr"))
+          .reduce(_ || _), "changed")
+        .otherwise("unchanged").as("status")) +: keep.map(col): _*)
+      .filter(col("status") =!= "unchanged")
 
   /** Diff two [[fingerprintSnapshot]] frames → one row per partition
     * whose state moved: `changed` (any channel differs), `new` (absent
@@ -967,24 +991,12 @@ object Recon {
     * nothing — the output IS the next run's work list. Snapshots are
     * partition-count-sized, so this join is trivially small at any data
     * scale. */
-  def snapshotDiff(prev: DataFrame, curr: DataFrame): DataFrame =
-    prev.select(col("part"), col("n").as("n_prev"),
-        col("fp_xor").as("x_prev"),
-        col("fp_sum_hi").as("sh_prev"), col("fp_sum_lo").as("sl_prev"))
-      .join(curr.select(col("part"), col("n").as("n_curr"),
-        col("fp_xor").as("x_curr"),
-        col("fp_sum_hi").as("sh_curr"), col("fp_sum_lo").as("sl_curr")),
-        Seq("part"), "full_outer")
-      .select(col("part"),
-        when(col("n_prev").isNull, "new")
-          .when(col("n_curr").isNull, "dropped")
-          .when(col("n_prev") =!= col("n_curr") ||
-            col("x_prev") =!= col("x_curr") ||
-            col("sh_prev") =!= col("sh_curr") ||
-            col("sl_prev") =!= col("sl_curr"), "changed")
-          .otherwise("unchanged").as("status"),
-        col("n_prev"), col("n_curr"))
-      .filter(col("status") =!= "unchanged")
+  def snapshotDiff(prev: DataFrame, curr: DataFrame): DataFrame = {
+    def side(snap: DataFrame, suffix: String) =
+      snap.select(col("part") +: Channels.map(c => col(c).as(c + suffix)): _*)
+    movedParts(side(prev, "_prev").join(side(curr, "_curr"), Seq("part"), "full_outer"),
+      "n_prev", "n_curr")
+  }
 
   /** Key-space coverage per fixed-width key range — the load-completeness
     * screen: for each bucket of the surrogate-key space, how many keys
@@ -1188,48 +1200,50 @@ object Recon {
       .orderBy("event_type")
   }
 
-  /** Harness twin of snapshot recon: last night's snapshot is the clean
+  /** The seeded snapshot fixture: last night's snapshot is the clean
     * orders table by load month; tonight's is a bad replica (prices
-    * rounded from 1997 on, the 1995-01 load missing). The diff must name
-    * exactly the moved months.
-    *
-    * The replica derives row-locally from the same orders row, so BOTH
-    * snapshots' channels (the count / xor / split-sum construction of
-    * [[fingerprintSnapshot]], over the in-flight [[rowHash64]] — this
-    * demo persists nothing, so the portable-md5 form stays with the
-    * cross-run API) aggregate in ONE groupBy(month) pass over one scan —
-    * the tgt-side channels simply aggregate the conditional hash, null
-    * for rows outside the replica. The round-8 form built two snapshot
-    * pipelines and full-outer-joined them: two scans, two shuffles, two
-    * md5 passes over the same file. Cross-run diffs against a PERSISTED
-    * snapshot keep the generic [[snapshotDiff]]. */
-  def snapshotDiffOrders(spark: SparkSession, dir: String): DataFrame = {
+    * rounded from 1997 on, the 1995-01 load missing). Per orders row:
+    * (part, k, h_src, h_tgt) over the in-flight [[rowHash64]] of
+    * (o_orderkey, o_custkey, o_orderstatus, [[hashPrice]]), h_tgt null
+    * for rows outside the replica. */
+  private def ordersSnapshotKeys(spark: SparkSession, dir: String): DataFrame = {
     val month = date_trunc("month", col("o_orderdate"))
     val pSrc = hashPrice(col("o_totalprice"))
     val pTgt = when(col("o_orderdate") >= lit("1997-01-01").cast("timestamp"),
       hashPrice(round(col("o_totalprice"), 0))).otherwise(pSrc)
-    val inTgt = month =!= lit("1995-01-01").cast("timestamp")
     def h(p: Column) = rowHash64(Seq(col("o_orderkey"),
       col("o_custkey"), col("o_orderstatus"), p))
-    val lo = lit(0xffffffffL)
-    Tables.orders(spark, dir)
-      .select(month.as("part"), h(pSrc).as("hs"), when(inTgt, h(pTgt)).as("ht"))
-      .groupBy("part")
-      .agg(count(lit(1)).as("n_prev"), count(col("ht")).as("n_curr0"),
-        expr("bit_xor(hs)").as("xs"), expr("bit_xor(ht)").as("xt"),
-        sum(shiftrightunsigned(col("hs"), 32)).as("shs"),
-        sum(col("hs").bitwiseAND(lo)).as("sls"),
-        sum(shiftrightunsigned(col("ht"), 32)).as("sht"),
-        sum(col("ht").bitwiseAND(lo)).as("slt"))
-      .select(col("part"),
-        when(col("n_curr0") === 0, "dropped")
-          .when(col("n_prev") =!= col("n_curr0") || col("xs") =!= col("xt")
-            || col("shs") =!= col("sht") || col("sls") =!= col("slt"), "changed")
-          .otherwise("unchanged").as("status"),
-        col("n_prev"), when(col("n_curr0") > 0, col("n_curr0")).as("n_curr"))
-      .filter(col("status") =!= "unchanged")
-      .orderBy("part")
+    sameBaseKeys(Tables.orders(spark, dir), col("o_orderkey"), lit(true),
+      month =!= lit("1995-01-01").cast("timestamp"), h(pSrc), h(pTgt),
+      month.as("part"))
   }
+
+  /** Both sides' [[channels]] per partition from ONE groupBy over a
+    * row-local (part, h_src, h_tgt) frame, plus the `extra` aggregates.
+    * A side's `n` is nulled where it has no rows in the partition, as
+    * the full-outer join of two snapshots leaves it. */
+  private def fusedChannels(keyed: DataFrame, extra: Column*): DataFrame = {
+    val aggs = channels(col("h_src"), "_prev") ++ channels(col("h_tgt"), "_curr") ++ extra
+    keyed.groupBy("part").agg(aggs.head, aggs.tail: _*)
+      .withColumn("n_prev", when(col("n_prev") > 0, col("n_prev")))
+      .withColumn("n_curr", when(col("n_curr") > 0, col("n_curr")))
+  }
+
+  /** Harness twin of snapshot recon over [[ordersSnapshotKeys]]: the diff
+    * must name exactly the moved months.
+    *
+    * The replica derives row-locally from the same orders row, so BOTH
+    * snapshots' channels (the [[fingerprintSnapshot]] format over the
+    * in-flight [[rowHash64]] — this demo persists nothing, so the
+    * portable-md5 form stays with the cross-run API) aggregate in ONE
+    * groupBy(month) pass over one scan ([[fusedChannels]]). The round-8
+    * form built two snapshot pipelines and full-outer-joined them: two
+    * scans, two shuffles, two md5 passes over the same file. Cross-run
+    * diffs against a PERSISTED snapshot keep the generic [[snapshotDiff]]
+    * (parity-tested in ReconSpec). */
+  def snapshotDiffOrders(spark: SparkSession, dir: String): DataFrame =
+    movedParts(fusedChannels(ordersSnapshotKeys(spark, dir)), "n_prev", "n_curr")
+      .orderBy("part")
 
   /** Incremental reconciliation end-to-end — the composition the whole
     * snapshot machinery exists for: diff cheap per-partition fingerprints
@@ -1269,34 +1283,26 @@ object Recon {
       .select("part")
     def scoped(df: DataFrame) =
       df.join(broadcast(moved), Seq("part"), "left_semi")
-    scoped(s)
-      .join(scoped(t), Seq("part", "k"), "full_outer")
-      .select(col("part"),
-        when(col("h_src").isNull, "extra_in_target")
-          .when(col("h_tgt").isNull, "missing_in_target")
-          .when(col("h_src") =!= col("h_tgt"), "mismatch")
-          .otherwise("match").as("status"))
+    classified(scoped(s).join(scoped(t), Seq("part", "k"), "full_outer"), "part")
       .filter(col("status") =!= "match")
       .groupBy("part", "status").agg(count(lit(1)).as("n"))
       .orderBy("part", "status")
   }
 
-  /** Harness twin of [[incrementalDiff]] over the [[snapshotDiffOrders]]
-    * corruption fixture (prices rounded from 1997 on, 1995-01 load
-    * missing): snapshot, moved-partition work list, scoped detail,
-    * ending in the per-month divergence profile.
+  /** Harness twin of [[incrementalDiff]] over [[ordersSnapshotKeys]]:
+    * snapshot, moved-partition work list, scoped detail, ending in the
+    * per-month divergence profile.
     *
     * Like [[snapshotDiffOrders]], the demo's target derives ROW-LOCALLY
     * from the same orders row, so BOTH phases of the incremental design
     * collapse into ONE groupBy(month) pass over one scan: the snapshot
-    * channels for both sides AND the per-status detail counts (missing /
-    * mismatch are conditional counts of the same row-local hash pair)
-    * aggregate together, the moved-partition predicate filters the tiny
+    * channels for both sides AND the per-status detail counts
+    * (conditional counts of the same row-local status) aggregate
+    * together, the moved-partition predicate filters the tiny
     * aggregated frame, and the per-status rows explode row-locally —
     * no join, no broadcast, no second scan (the round-9 form checkpointed
     * each side, built two snapshot pipelines, full-outer-joined them,
     * then re-joined the work list into a scoped detail pass: four+ jobs).
-    * `extra_in_target` is impossible by construction; the keys are 1:1.
     * Output is bit-identical to routing through [[incrementalDiff]]
     * (parity-tested in ReconSpec). The two-phase pruned design is NOT
     * dead — it lives in the generic [[incrementalDiff]], whose point is
@@ -1304,37 +1310,16 @@ object Recon {
     * snapshot, re-scan only moved partitions); this op demos the
     * composition in-flight, where one fused pass is strictly cheaper at
     * any scale (the detail counts add a few longs of agg state per
-    * partition to a scan the fingerprints pay for anyway). */
+    * partition to a scan the fingerprints pay for anyway). Unmoved
+    * partitions carry zero detail by definition. */
   def incrementalDiffOrders(spark: SparkSession, dir: String): DataFrame = {
-    val month = date_trunc("month", col("o_orderdate"))
-    val pSrc = hashPrice(col("o_totalprice"))
-    val pTgt = when(col("o_orderdate") >= lit("1997-01-01").cast("timestamp"),
-      hashPrice(round(col("o_totalprice"), 0))).otherwise(pSrc)
-    val inTgt = month =!= lit("1995-01-01").cast("timestamp")
-    def h(p: Column) = rowHash64(Seq(col("o_orderkey"),
-      col("o_custkey"), col("o_orderstatus"), p))
-    val lo = lit(0xffffffffL)
-    Tables.orders(spark, dir)
-      .select(month.as("part"), h(pSrc).as("hs"),
-        when(inTgt, h(pTgt)).as("ht"))
-      .groupBy("part")
-      .agg(count(lit(1)).as("n_prev"), count(col("ht")).as("n_curr"),
-        expr("bit_xor(hs)").as("xs"), expr("bit_xor(ht)").as("xt"),
-        sum(shiftrightunsigned(col("hs"), 32)).as("shs"),
-        sum(col("hs").bitwiseAND(lo)).as("sls"),
-        sum(shiftrightunsigned(col("ht"), 32)).as("sht"),
-        sum(col("ht").bitwiseAND(lo)).as("slt"),
-        count(when(col("ht").isNull, 1)).as("n_missing"),
-        count(when(col("hs") =!= col("ht"), 1)).as("n_mismatch"))
-      // a partition moved iff it dropped (no tgt rows) or any channel
-      // pair differs; unmoved partitions carry zero detail by definition
-      .filter(col("n_curr") === 0 || col("n_prev") =!= col("n_curr") ||
-        col("xs") =!= col("xt") || col("shs") =!= col("sht") ||
-        col("sls") =!= col("slt"))
-      .select(col("part"), explode(array(
-        struct(lit("mismatch").as("status"), col("n_mismatch").as("n")),
-        struct(lit("missing_in_target").as("status"), col("n_missing").as("n"))))
-        .as("e"))
+    val diverged = Seq("extra_in_target", "mismatch", "missing_in_target")
+    val perPart = fusedChannels(
+      classified(ordersSnapshotKeys(spark, dir), "part", "h_src", "h_tgt"),
+      diverged.map(s => count(when(col("status") === s, 1)).as(s)): _*)
+    movedParts(perPart, diverged: _*)
+      .select(col("part"), explode(array(diverged.map(s =>
+        struct(lit(s).as("status"), col(s).as("n"))): _*)).as("e"))
       .select(col("part"), col("e.status").as("status"), col("e.n").as("n"))
       .filter(col("n") > 0)
       .orderBy("part", "status")

@@ -253,11 +253,6 @@ object Vectors {
         rows.foreach { case (_, p, c) => arr(p - 1) = c }
         (l, arr)
       }.sortBy(_._1)
-    def dotSeq(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < dim) { s += a(i) * b(i); i += 1 }
-      s
-    }
     // mirror DuckDB's round(x, 6) = std::round(x·1e6)/1e6 operationally
     // (multiply, half-away, divide) rather than BigDecimal-on-the-exact-
     // binary-value: the two disagree in the ±1-ulp window around every
@@ -435,54 +430,25 @@ object Vectors {
     // the standard IVF contract), so the collect is bounded like a
     // broadcast dim, and assignment/probing below stays fully
     // distributed against the literal centroid table. The driver loop
-    // REPLICATES the engine arithmetic bit-for-bit, which is what the
-    // oracle then verifies end-to-end: per-dim means are exact scaled-
-    // long sums of round-half-up(x·1e9) — identical to the SQL's
-    // CAST(x AS DECIMAL(18,9)) sums (BigDecimal(x).setScale(9) rounds
-    // the exact binary value, NOT the shortest string) — divided as
-    // nearest-double-of-exact-decimal over count; dots and norms
-    // accumulate in index order like the native DotProduct; ties take
-    // the lowest cid; empty clusters drop as a GROUP BY loses groups.
-    val rows = u
-      .select(col("vec_id"), col("u"), md5(col("vec_id").cast("string")).as("h"))
-      .orderBy("h", "vec_id").limit(IvfTrainCap)
-      .collect().toIndexedSeq
-      .map(r => (r.getSeq[Double](1).toArray, r.getString(2), r.getLong(0)))
-    val train = rows.sortBy { case (_, h, id) => (h, id) }.map(_._1)
+    // REPLICATES the engine arithmetic bit-for-bit ([[lloydMeans]],
+    // [[dotSeq]]), which is what the oracle then verifies end-to-end;
+    // ties take the lowest cid.
+    val train = trainingSample(u, "u", IvfTrainCap)
     var cents: Seq[(Int, Array[Double])] =
       train.take(IvfClusters).zipWithIndex.map { case (c, cid) => (cid, c) }
     for (_ <- 1 to IvfIterations) {
-      val sums = new java.util.TreeMap[Int, (Array[Long], Long)]()
-      train.foreach { v =>
+      cents = lloydMeans(train, Dim) { v =>
         var bestCid = -1
         var best = Double.NegativeInfinity
         cents.foreach { case (cid, c) =>
-          var s = 0.0
-          var i = 0
-          while (i < Dim) { s += v(i) * c(i); i += 1 }
+          val s = dotSeq(v, c)
           if (s > best) { best = s; bestCid = cid }
         }
-        val acc = sums.computeIfAbsent(bestCid, _ => (new Array[Long](Dim), 0L))
-        var i = 0
-        while (i < Dim) {
-          acc._1(i) += new java.math.BigDecimal(v(i))
-            .setScale(9, java.math.RoundingMode.HALF_UP).unscaledValue().longValueExact()
-          i += 1
-        }
-        sums.put(bestCid, (acc._1, acc._2 + 1))
+        bestCid
+      }.map { case (cid, m) =>
+        val mn = math.sqrt(dotSeq(m, m))
+        (cid, m.map(_ / mn))
       }
-      cents = sums.entrySet().toArray(Array.empty[java.util.Map.Entry[Int, (Array[Long], Long)]])
-        .toIndexedSeq.map { e =>
-          val (sl, cnt) = e.getValue
-          val m = Array.tabulate(Dim)(i =>
-            new java.math.BigDecimal(java.math.BigInteger.valueOf(sl(i)), 9)
-              .doubleValue() / cnt)
-          var s = 0.0
-          var i = 0
-          while (i < Dim) { s += m(i) * m(i); i += 1 }
-          val mn = math.sqrt(s)
-          (e.getKey, m.map(_ / mn))
-        }
     }
     cents.map { case (cid, c) => (cid, c.toIndexedSeq) }
   }
@@ -798,52 +764,63 @@ object Vectors {
     * one exact-decimal Lloyd round per subspace (the IVF contract).
     * Separated so a spec can audit the build against a memoized call. */
   private[graft] def pqTrainBooks(v0: DataFrame): Seq[(Int, Int, Array[Double])] = {
-    // bounded, content-ordered training sample (the IVF contract)
-    val train = v0
-      .select(col("vec_id"), col("v"), md5(col("vec_id").cast("string")).as("h"))
-      .orderBy("h", "vec_id").limit(PqTrainCap)
+    val train = trainingSample(v0, "v", PqTrainCap)
+    // per-subspace: seed, one exact-decimal Lloyd round
+    (0 until PqSubspaces).flatMap { m =>
+      val subs = train.map(_.slice(m * PqSubDim, (m + 1) * PqSubDim))
+      val cents = subs.take(PqCentroids).zipWithIndex.map { case (c, cid) => (cid, c) }
+      lloydMeans(subs, PqSubDim) { x =>
+        val xx = dotSeq(x, x)
+        var bestCid = -1
+        var best = Double.PositiveInfinity
+        cents.foreach { case (cid, c) =>
+          val d2 = xx - 2 * dotSeq(x, c) + dotSeq(c, c)
+          if (d2 < best) { best = d2; bestCid = cid }
+        }
+        bestCid
+      }.map { case (cid, mean) => (m, cid, mean) }
+    }
+  }
+
+  /** The driver-side trainers' bounded, content-ordered training sample:
+    * the `cap` rows of (vec_id, `vec`) with the smallest md5(vec_id) —
+    * the portable cross-engine hash, so the DuckDB oracles pick the
+    * identical set — in (md5, vec_id) order. */
+  private def trainingSample(df: DataFrame, vec: String,
+                             cap: Int): IndexedSeq[Array[Double]] =
+    df.select(col("vec_id"), col(vec), md5(col("vec_id").cast("string")).as("h"))
+      .orderBy("h", "vec_id").limit(cap)
       .collect().toIndexedSeq
       .sortBy(r => (r.getString(2), r.getLong(0)))
       .map(_.getSeq[Double](1).toArray)
-    def dotSeq(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
+
+  /** One Lloyd update on the driver: each point joins the cluster
+    * `assign` picks, and each cluster's mean is the nearest double of its
+    * exact DECIMAL(18,9) sum over its count — per-element
+    * round-half-up(x·1e9) longs, the SQL's CAST(x AS DECIMAL(18,9)) sums
+    * (BigDecimal(x) rounds the exact binary value, not the shortest
+    * string), so summation order cannot move a bit. Clusters come back
+    * in cid order; empty ones drop, as a GROUP BY loses groups. */
+  private def lloydMeans(points: Seq[Array[Double]], dim: Int)(
+      assign: Array[Double] => Int): Seq[(Int, Array[Double])] =
+    points.groupBy(assign).toSeq.sortBy(_._1).map { case (cid, xs) =>
+      (cid, Array.tabulate(dim) { i =>
+        val sum = xs.iterator.map(x => new java.math.BigDecimal(x(i))
+          .setScale(9, java.math.RoundingMode.HALF_UP)
+          .unscaledValue().longValueExact()).sum
+        new java.math.BigDecimal(java.math.BigInteger.valueOf(sum), 9)
+          .doubleValue() / xs.length
+      })
     }
-    // per-subspace: seed, one exact-decimal Lloyd round
-    (0 until PqSubspaces).flatMap { m =>
-        val subs = train.map(_.slice(m * PqSubDim, (m + 1) * PqSubDim))
-        var cents: Seq[(Int, Array[Double])] =
-          subs.take(PqCentroids).zipWithIndex.map { case (c, cid) => (cid, c) }
-        val sums = new java.util.TreeMap[Int, (Array[Long], Long)]()
-        subs.foreach { x =>
-          val xx = dotSeq(x, x)
-          var bestCid = -1
-          var best = Double.PositiveInfinity
-          cents.foreach { case (cid, c) =>
-            val d2 = xx - 2 * dotSeq(x, c) + dotSeq(c, c)
-            if (d2 < best) { best = d2; bestCid = cid }
-          }
-          val acc = sums.computeIfAbsent(bestCid,
-            _ => (new Array[Long](PqSubDim), 0L))
-          var i = 0
-          while (i < PqSubDim) {
-            acc._1(i) += new java.math.BigDecimal(x(i))
-              .setScale(9, java.math.RoundingMode.HALF_UP)
-              .unscaledValue().longValueExact()
-            i += 1
-          }
-          sums.put(bestCid, (acc._1, acc._2 + 1))
-        }
-        sums.entrySet().toArray(
-          Array.empty[java.util.Map.Entry[Int, (Array[Long], Long)]])
-          .toIndexedSeq.map { e =>
-            val (sl, cnt) = e.getValue
-            (m, e.getKey, Array.tabulate(PqSubDim)(i =>
-              new java.math.BigDecimal(
-                java.math.BigInteger.valueOf(sl(i)), 9).doubleValue() / cnt))
-          }
-      }
+
+  /** Sequential index-order dot product — the accumulation order of the
+    * native [[graft.functions.DotProduct]] and of DuckDB's
+    * `list_inner_product`, so driver-side scores match both bit-for-bit. */
+  private def dotSeq(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < a.length) { s += a(i) * b(i); i += 1 }
+    s
   }
 
   /** The one-pass [[graft.functions.GramAgg]] state frame shared by

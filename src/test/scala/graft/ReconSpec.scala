@@ -437,6 +437,71 @@ class ReconSpec extends GraftSpec {
     assert(fused.nonEmpty, "the corruption fixture must surface divergence")
   }
 
+  /** Orders with the demo row hash's price normalization applied up
+    * front, so the generic APIs hash what the fused ops hash. */
+  private def decimalPrice(price: org.apache.spark.sql.Column) =
+    price.cast(org.apache.spark.sql.types.DecimalType(12, 2))
+
+  test("snapshotDiffOrders: fused same-base path matches fingerprintSnapshot + snapshotDiff") {
+    // the same corruption fixture as incrementalDiffOrders: prices
+    // rounded from 1997 on, the 1995-01 load missing from tonight's
+    // replica; the generic route persists md5 fingerprints, the fused
+    // op compares in-flight hashes, and both must name the same months
+    val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+    val month = date_trunc("month", col("o_orderdate"))
+    val o = Tables.orders(spark, sf)
+    val prev = o.withColumn("o_totalprice", decimalPrice(col("o_totalprice")))
+    val curr = o
+      .withColumn("o_totalprice", decimalPrice(
+        when(col("o_orderdate") >= lit("1997-01-01").cast("timestamp"),
+          round(col("o_totalprice"), 0)).otherwise(col("o_totalprice"))))
+      .filter(month =!= lit("1995-01-01").cast("timestamp"))
+    val generic = Recon.snapshotDiff(
+        Recon.fingerprintSnapshot(prev, month, cols),
+        Recon.fingerprintSnapshot(curr, month, cols))
+      .orderBy("part").collect().toSeq
+    val fused = Recon.snapshotDiffOrders(spark, sf).collect().toSeq
+    assert(fused === generic)
+    assert(fused.map(_.getString(1)).toSet === Set("changed", "dropped"),
+      "the fixture must surface both a changed and a dropped month")
+  }
+
+  test("diffDetail: fused same-base path matches hashDiffDetail") {
+    // source drops every 991st key, target every 997th and rounds prices
+    val cols = Seq("o_custkey", "o_orderstatus", "o_totalprice")
+    val o = Tables.orders(spark, sf)
+    val src = o.filter(col("o_orderkey") % 991 =!= 0)
+      .withColumn("o_totalprice", decimalPrice(col("o_totalprice")))
+    val tgt = o.filter(col("o_orderkey") % 997 =!= 0)
+      .withColumn("o_totalprice", decimalPrice(round(col("o_totalprice"), 0)))
+    val generic = Recon.hashDiffDetail(src, tgt, "o_orderkey", cols)
+      .orderBy("status", "k").limit(200).collect().toSeq
+    val fused = Recon.diffDetail(spark, sf).collect().toSeq
+    assert(fused === generic)
+    // the first 200 by (status, k) end inside the mismatch block
+    assert(fused.map(_.getString(1)).toSet === Set("extra_in_target", "mismatch"))
+  }
+
+  test("reconcileAllDemo: fused same-base path matches reconcileAll") {
+    val o = Tables.orders(spark, sf)
+      .filter(col("o_orderdate") >= lit("1995-01-01").cast("timestamp"))
+    val src = o.filter(col("o_orderkey") % 991 =!= 0)
+      .withColumn("o_totalprice", decimalPrice(col("o_totalprice")))
+    val tgt = o.filter(col("o_orderkey") % 997 =!= 0)
+      .withColumn("o_totalprice", decimalPrice(round(col("o_totalprice"), 0)))
+    val c = Tables.customer(spark, sf)
+    val generic = Recon.reconcileAll(Seq(
+      TablePair("orders", src, tgt, "o_orderkey",
+        Seq("o_custkey", "o_orderstatus", "o_totalprice")),
+      TablePair("customer", c, c.filter(col("c_custkey") % 500 =!= 0),
+        "c_custkey", Seq("c_name", "c_mktsegment", "c_acctbal"))))
+      .collect().toSeq
+    val fused = Recon.reconcileAllDemo(spark, sf).collect().toSeq
+    assert(fused === generic)
+    assert(fused.exists(r => r.getString(0) == "orders" && !r.getBoolean(4)),
+      "the orders fixture must fail at least one check")
+  }
+
   test("observedLoad: the write action itself yields the load fingerprint") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-obs").toString
     val (observed, obs) = Recon.observedLoad(

@@ -192,6 +192,15 @@ class RegistrySpec extends GraftSpec {
       s"benched but missing a BASELINE.md budget row: ${unbudgeted.toSeq.sorted}")
   }
 
+  test("README names every recon_ query in the registry") {
+    val src = scala.io.Source.fromFile("README.md", "UTF-8")
+    val readme = try src.mkString finally src.close()
+    val undocumented = SparkEntry.table.map(_.name)
+      .filter(n => n.startsWith("recon_") && !readme.contains(s"`$n`"))
+    assert(undocumented.isEmpty,
+      s"registered but not named in README.md: ${undocumented.sorted}")
+  }
+
   test("the verify-only rows are exactly the ten reviewed names") {
     // the round-trip fingerprints are deliberately unbenched: they
     // write+re-read files, which the repeated-materialization timing
