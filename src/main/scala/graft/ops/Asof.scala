@@ -103,7 +103,7 @@ object Asof {
       .withColumn("e", col("s") + 9)
     rangeJoin(o, "d", iv, "s", "e", bucketWidth = 7L)
       .groupBy("mstart")
-      .agg(count(lit(1)).as("n"), Recon.decSum(col("o_totalprice")).as("rev"))
+      .agg(count(lit(1)).as("n"), Exact.decSum(col("o_totalprice")).as("rev"))
       .orderBy("mstart")
   }
 

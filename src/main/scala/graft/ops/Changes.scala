@@ -32,10 +32,10 @@ object Changes {
   def compactChanges(changes: DataFrame, key: String, seqCol: String): DataFrame = {
     require(!changes.columns.contains("__last"),
       "compactChanges: input must not already contain a __last column")
-    val payload = changes.columns.filterNot(_ == key)
+    val payload = changes.columns.toSeq.filterNot(_ == key)
     changes.groupBy(col(key))
       .agg(max_by(struct(payload.map(col): _*), col(seqCol)).as("__last"))
-      .select(changes.columns.map(c =>
+      .select(changes.columns.toSeq.map(c =>
         if (c == key) col(key) else col(s"__last.$c").as(c)): _*)
   }
 
@@ -143,7 +143,7 @@ object Changes {
           col("o_totalprice").as("price"),
           col("o_orderpriority").as("prio"))))
     // unmatched keys yield a NULL array, which explode drops
-    o.select(o.columns.map(col) :+ explode(legs).as("__chg"): _*)
+    o.select(o.columns.toSeq.map(col) :+ explode(legs).as("__chg"): _*)
       .withColumn("o_totalprice", col("__chg.price"))
       .withColumn("o_orderpriority", col("__chg.prio"))
       .withColumn("op", col("__chg.op"))
@@ -182,7 +182,7 @@ object Changes {
   private def restatedSummary(fin: DataFrame): DataFrame =
     fin.groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"),
-        Recon.decSum(col("o_totalprice")).as("sum_price"),
+        Exact.decSum(col("o_totalprice")).as("sum_price"),
         count(when(col("o_orderpriority") === "5-RESTATED", 1)).as("n_restated"))
       .orderBy("o_orderstatus")
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Memo, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * aggregate (map-side partials, one shuffle).
   */
 object Events {
-  import Recon.decSum
+  import Exact.{Huge, decSum}
 
   /** Extract `$.k` from the JSON props column, aggregate per event type.
     * Uses the native [[graft.functions.JsonGetLong]] extractor:
@@ -139,7 +139,7 @@ object Events {
     * engines — previously the prefix scan yielded 5 where json_valid
     * rejected, a documented-not-planted divergence; fuzz02 now plants
     * all three shapes. Shares present through
-    * [[graft.ops.Recon.ratioRound]]; k aggregates are exact longs
+    * [[Exact.ratioRound]]; k aggregates are exact longs
     * over the usable rows.
     *
     * 100 TB posture: one row-local classification projection over the
@@ -163,9 +163,9 @@ object Events {
         max(col("k")).as("k_max"))
       .select(col("event_type"), col("n"), col("n_blank"), col("n_int_k"),
         col("n_other"),
-        graft.ops.Recon.ratioRound(col("n_int_k"), col("n"), 6)
+        Exact.ratioRound(col("n_int_k"), col("n"), 6)
           .as("int_share"),
-        graft.ops.Recon.ratioRound(col("n_blank"), col("n"), 6)
+        Exact.ratioRound(col("n_blank"), col("n"), 6)
           .as("blank_share"),
         col("k_sum"), col("k_min"), col("k_max"))
       .orderBy("event_type")
@@ -270,7 +270,7 @@ object Events {
       .filter(col("gap").isNotNull)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
-        Recon.ratioRound(sum(col("gap")), count(lit(1)), 4).as("avg_gap_s"),
+        Exact.ratioRound(sum(col("gap")), count(lit(1)), 4).as("avg_gap_s"),
         max(col("gap")).as("max_gap_s"))
       .orderBy("event_type")
   }
@@ -368,7 +368,7 @@ object Events {
       // min/max have exactly 6 decimal digits, so their 6-dp rounds
       // have no tie digit and keep the double spelling
       .select(col("n_converted"),
-        Recon.ratioRound(col("sm"), Recon.micro(col("n_converted")), 3)
+        Exact.ratioRound(col("sm"), Exact.micro(col("n_converted")), 3)
           .as("avg_s"),
         round(col("mn_us") / lit(1000000.0), 6).as("mn_s"),
         round(col("mx_us") / lit(1000000.0), 6).as("mx_s"))
@@ -388,7 +388,7 @@ object Events {
     val totals = cells.groupBy("d").agg(sum("n").as("day_n"))
     cells.join(totals, "d")
       .select(col("d"), col("event_type"), col("n"),
-        Recon.ratioRound(col("n"), col("day_n"), 6).as("pct"))
+        Exact.ratioRound(col("n"), col("day_n"), 6).as("pct"))
       .orderBy("d", "event_type")
   }
 
@@ -487,7 +487,7 @@ object Events {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_kept"),
         countDistinct(col("user_id")).as("n_users"),
-        sum(round(round(col("value"), 6) * 1e6, 0).cast("long")).as("vm"))
+        sum(Exact.micros(col("value"))).as("vm"))
       .join(broadcast(fed), Seq("event_type"))
       .select(col("event_type"), col("n_fed"), col("n_kept"),
         (col("n_fed") - col("n_kept")).as("n_dupes"), col("n_users"),
@@ -539,7 +539,7 @@ object Events {
         sum(when(dropped, 1L).otherwise(0L)).as("n_late_dropped"),
         sum(when(!dropped, 1L).otherwise(0L)).as("n_kept"),
         sum(when(!dropped && col("value").isNotNull,
-          round(round(col("value"), 6) * 1e6, 0).cast("long"))).as("vm"),
+          Exact.micros(col("value")))).as("vm"),
         countDistinct(when(!dropped, date_trunc("hour", col("ts"))))
           .as("n_windows"))
       .select(col("event_type"), col("n_fed"), col("n_late_dropped"),
@@ -652,7 +652,7 @@ object Events {
       // exact-integer half-away mean — the supplier_scorecard /2^k tie
       // class reaches through the /1e6 chain (see funnelTimeToConvert)
       .select(col("event_type"), col("n_gaps"),
-        Recon.ratioRound(col("sm"), Recon.micro(col("n_gaps")), 3)
+        Exact.ratioRound(col("sm"), Exact.micro(col("n_gaps")), 3)
           .as("avg_gap_s"),
         round(col("mn_us") / lit(1000000.0), 6).as("mn_gap_s"),
         round(col("mx_us") / lit(1000000.0), 6).as("mx_gap_s"))
@@ -702,6 +702,10 @@ object Events {
         expr("percentile_disc(0.99) WITHIN GROUP (ORDER BY v)").as("p99"))
       .orderBy("event_type")
 
+  /** The discrete rank of `percentile_disc(p/100)` over a group of
+    * `cnt` values, ceil(p·cnt/100), in exact integer arithmetic. */
+  private def discRank(p: Int): Column = expr(s"($p * cnt + 99) div 100")
+
   /** Bounded-state large-input form of [[valuePercentilesByType]]. */
   private[graft] def valuePercentilesSelection(spark: SparkSession,
                                                dir: String): DataFrame = {
@@ -711,11 +715,11 @@ object Events {
     val counts = base.groupBy("event_type").agg(count(lit(1)).as("cnt"))
     val tagged = counts.select(col("event_type"), col("cnt"), explode(array(
         struct(lit("p50").as("tag"),
-          expr("(50 * cnt + 99) div 100").as("rank")),
+          discRank(50).as("rank")),
         struct(lit("p90").as("tag"),
-          expr("(90 * cnt + 99) div 100").as("rank")),
+          discRank(90).as("rank")),
         struct(lit("p99").as("tag"),
-          expr("(99 * cnt + 99) div 100").as("rank")))).as("t"))
+          discRank(99).as("rank")))).as("t"))
       .select(col("event_type"), col("cnt"), col("t.tag"), col("t.rank"))
     val vals = Selection.valueAtRanks(base, Seq("event_type"), "v",
       tagged.select(col("event_type"), col("rank")).distinct())
@@ -794,7 +798,7 @@ object Events {
           .as(outName))
     else {
       val ranks = frame.groupBy("event_type").agg(count(lit(1)).as("cnt"))
-        .select(col("event_type"), expr("(50 * cnt + 99) div 100").as("rank"))
+        .select(col("event_type"), discRank(50).as("rank"))
       Selection.valueAtRanks(frame.select(col("event_type"), col(vcol)),
           Seq("event_type"), vcol, ranks)
         .select(col("event_type"), col("value").as(outName))
@@ -870,13 +874,13 @@ object Events {
       .agg(count(lit(1)).as("n"), sum(col("gap_s")).as("sm"),
         sum(col("gap_s") * col("gap_s")).as("sq"))
       .select(col("event_type"), col("n").as("n_gaps"),
-        // mean rounds in EXACT INTEGER arithmetic (Recon.ratioRound —
+        // mean rounds in EXACT INTEGER arithmetic (Exact.ratioRound —
         // the supplier_scorecard tie class; the helper's DECIMAL(38,0)
         // keeps 2000·Σgap_s exact past the long range a 100 TB type's
         // second-sums would overflow); sd and burstiness pass through
         // sqrt, which leaves the dyadic lattice, so their rounds keep
         // the double spelling
-        Recon.ratioRound(col("sm"), col("n"), 3).as("mean_gap_s"),
+        Exact.ratioRound(col("sm"), col("n"), 3).as("mean_gap_s"),
         round(sqrt(variance), 3).as("sd_gap_s"),
         round((sqrt(variance) - mean) / (sqrt(variance) + mean), 4)
           .as("burstiness"))
@@ -993,7 +997,7 @@ object Events {
   def rowsFrameWindow(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.events(spark, dir)
       .groupBy(col("ts").cast("date").as("d_day"))
-      .agg(count(lit(1)).as("n"), Recon.decSum(col("value")).as("v"))
+      .agg(count(lit(1)).as("n"), Exact.decSum(col("value")).as("v"))
     // lit(0) partition key: the frame is the calendar-day grid
     // (answer-sized), and naming a partition silences the WindowExec
     // single-partition warning that otherwise buries real ones
@@ -1047,11 +1051,10 @@ object Events {
     * combined daily collapse, then type-partitioned lags over the
     * (types × days) frame. */
   def seasonalNaive(spark: SparkSession, dir: String): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val daily = Tables.events(spark, dir)
       .filter(col("value").isNotNull)
       .groupBy(col("event_type"), date_trunc("DAY", col("ts")).as("d"))
-      .agg(sum(round(round(col("value"), 6) * 1e6, 0).cast("long")).as("y"))
+      .agg(sum(Exact.micros(col("value"))).as("y"))
     val w = Window.partitionBy("event_type").orderBy("d")
     val s = daily
       .withColumn("y7", lag(col("y"), 7).over(w))
@@ -1064,16 +1067,16 @@ object Events {
         sum(when(col("y1").isNotNull, 1L).otherwise(0L)).as("n1"))
     s.select(col("event_type"), col("n_days"),
         when(col("n7") > 0,
-          Recon.ratioRound(col("e7"), Recon.micro(col("n7")), 6))
+          Exact.ratioRound(col("e7"), Exact.micro(col("n7")), 6))
           .as("mae_seasonal"),
         when(col("n1") > 0,
-          Recon.ratioRound(col("d1"), Recon.micro(col("n1")), 6))
+          Exact.ratioRound(col("d1"), Exact.micro(col("n1")), 6))
           .as("mae_naive"),
         when(col("n7") > 0 && col("d1") > 0,
-          Recon.ratioRound(col("e7").cast(dec) * col("n1"),
-            col("d1").cast(dec) * col("n7"), 6)).as("mase"),
+          Exact.ratioRound(col("e7").cast(Huge) * col("n1"),
+            col("d1").cast(Huge) * col("n7"), 6)).as("mase"),
         when(col("n7") > 0 && col("d1") > 0,
-          col("e7").cast(dec) * col("n1") < col("d1").cast(dec) * col("n7"))
+          col("e7").cast(Huge) * col("n1") < col("d1").cast(Huge) * col("n7"))
           .as("seasonal_wins"))
       .orderBy("event_type")
   }
@@ -1102,7 +1105,7 @@ object Events {
       .groupBy(col("mon").as("month"), col("mau"))
       .agg(count(lit(1)).as("n_days"), sum(col("dau")).as("dau_total"))
       .select(col("month"), col("n_days"), col("dau_total"), col("mau"),
-        Recon.ratioRound(col("dau_total"), col("n_days") * col("mau"), 6)
+        Exact.ratioRound(col("dau_total"), col("n_days") * col("mau"), 6)
           .as("stickiness"))
       .orderBy("month")
   }
@@ -1172,7 +1175,7 @@ object Events {
     import spark.implicits._
     val ev = Tables.events(spark, dir)
     val trans = markovTransMemo((spark, dir), ev)(markovTransitions(ev))
-    val nodes = trans.map(_._1).distinct.sorted
+    val nodes = trans.map(_._1).distinct.sorted.toIndexedSeq
     require(nodes.nonEmpty, s"markovStationary: no transitions under $dir")
     // a retained state whose every target fell OUT of the state space
     // would otherwise keep no out-row and its π mass would evaporate at
@@ -1197,8 +1200,8 @@ object Events {
     val tot = obs.agg(sum("n_obs").as("n_tot"))
     broadcast(piDf).join(obs, "event_type").crossJoin(broadcast(tot))
       .select(col("event_type"), col("pi_ppb"),
-        Recon.ratioRound(col("pi_ppb"), lit(1000000000L), 6).as("pi"),
-        Recon.ratioRound(col("n_obs"), col("n_tot"), 6).as("obs_share"))
+        Exact.ratioRound(col("pi_ppb"), lit(1000000000L), 6).as("pi"),
+        Exact.ratioRound(col("n_obs"), col("n_tot"), 6).as("obs_share"))
       .orderBy("event_type")
   }
 
@@ -1223,7 +1226,7 @@ object Events {
     val daily = Tables.events(spark, dir)
       .filter(col("value").isNotNull)
       .groupBy(col("event_type"), date_trunc("DAY", col("ts")).as("d"))
-      .agg(sum(round(round(col("value"), 6) * 1e6, 0).cast("long")).as("x"))
+      .agg(sum(Exact.micros(col("value"))).as("x"))
     val wOrd = Window.partitionBy("event_type").orderBy("d")
     val wAll = Window.partitionBy("event_type")
     daily
@@ -1237,13 +1240,13 @@ object Events {
         Window.partitionBy("event_type").orderBy(col("cv").desc, col("d"))))
       .filter(col("rn") === 1)
       .select(col("event_type"), col("n").as("n_days"), col("d").as("cp_day"),
-        Recon.ratioRound(col("cv"), Recon.micro(col("n")), 6)
+        Exact.ratioRound(col("cv"), Exact.micro(col("n")), 6)
           .as("cusum_max"),
-        Recon.ratioRound(col("p"), Recon.micro(col("i")), 6)
+        Exact.ratioRound(col("p"), Exact.micro(col("i")), 6)
           .as("mean_before"),
         when(col("i") < col("n"),
-          Recon.ratioRound(col("t") - col("p"),
-            Recon.micro(col("n") - col("i")), 6)).as("mean_after"))
+          Exact.ratioRound(col("t") - col("p"),
+            Exact.micro(col("n") - col("i")), 6)).as("mean_after"))
       .orderBy("event_type")
   }
 
@@ -1260,7 +1263,7 @@ object Events {
     * Exactness: values quantize to 6-dp micro-longs; above-mean
     * clears the denominator (vµ·n > Σvµ — exact 128-bit integers, no
     * mean double ever materializes); n₁/n₂/runs are exact counts;
-    * expected runs (2n₁n₂ + n)/n presents via [[Recon.ratioRound]];
+    * expected runs (2n₁n₂ + n)/n presents via [[Exact.ratioRound]];
     * the z-score is sqrt-chained (Class B per §7.4.9) — ONE
     * identically-spelled double expression over exact integer inputs
     * (a = 2n₁n₂: z = (R − 1 − a/n) / sqrt(a(a−n) / (n²(n−1)))),
@@ -1273,17 +1276,16 @@ object Events {
     * type's timeline once — the sessionize shuffle shape; output rows
     * = event types. */
   def runsTest(spark: SparkSession, dir: String): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val vm = round(round(col("value"), 6) * 1e6, 0).cast("long")
+    val vm = Exact.micros(col("value"))
     val base = Tables.events(spark, dir)
       .filter(col("value").isNotNull)
       .select(col("event_type"), col("ts"), col("event_id"), vm.as("vm"))
     val stats = base.groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum(col("vm").cast(dec)).as("s"))
+      .agg(count(lit(1)).as("n"), sum(col("vm").cast(Huge)).as("s"))
     val w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     val flagged = base.join(broadcast(stats), "event_type")
       .select(col("event_type"), col("ts"), col("event_id"), col("n"),
-        (col("vm").cast(dec) * col("n") > col("s")).as("up"))
+        (col("vm").cast(Huge) * col("n") > col("s")).as("up"))
     val runs = flagged
       .select(col("event_type"), col("n"), col("up"),
         when(lag(col("up"), 1).over(w).isNull ||
@@ -1294,20 +1296,20 @@ object Events {
         sum(when(col("up"), 1L).otherwise(0L)).as("n1"),
         sum(when(!col("up"), 1L).otherwise(0L)).as("n2"),
         sum(col("brk")).as("runs"))
-    val a = (col("n1").cast(dec) * col("n2") * 2).cast("double")
+    val a = (col("n1").cast(Huge) * col("n2") * 2).cast("double")
     val nD = col("n").cast("double")
     val z = (col("runs").cast("double") - lit(1.0) - a / nD) /
       sqrt(a * (a - nD) / (nD * nD * (nD - lit(1.0))))
     runs.select(col("event_type"), col("n"), col("n1"), col("n2"),
         col("runs"),
-        graft.ops.Recon.ratioRound(
-          col("n1").cast(dec) * col("n2") * 2 + col("n"), col("n"), 6)
+        Exact.ratioRound(
+          col("n1").cast(Huge) * col("n2") * 2 + col("n"), col("n"), 6)
           .as("exp_runs"),
         when(col("n") > 1 &&
-          col("n1").cast(dec) * col("n2") * 2 > col("n"),
+          col("n1").cast(Huge) * col("n2") * 2 > col("n"),
           round(z, 6)).as("z"),
         when(col("n") > 1 &&
-          col("n1").cast(dec) * col("n2") * 2 > col("n"),
+          col("n1").cast(Huge) * col("n2") * 2 > col("n"),
           abs(z) > lit(1.96)).as("nonrandom"))
       .orderBy("event_type")
   }
@@ -1328,15 +1330,14 @@ object Events {
     * daily collapse, then type-partitioned windows over the
     * (types × days) frame; nothing corpus-sized sorts. */
   def autocorrelation(spark: SparkSession, dir: String): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val daily = Tables.events(spark, dir)
       .filter(col("value").isNotNull)
       .groupBy(col("event_type"), date_trunc("DAY", col("ts")).as("d"))
-      .agg(sum(round(round(col("value"), 6) * 1e6, 0).cast("long")).as("y"))
+      .agg(sum(Exact.micros(col("value"))).as("y"))
     val pw = Window.partitionBy("event_type").orderBy("d")
     val aw = Window.partitionBy("event_type")
     val dev = (yc: org.apache.spark.sql.Column) =>
-      col("n").cast(dec) * yc - col("s")
+      col("n").cast(Huge) * yc - col("s")
     val a = daily
       .withColumn("y1", lag(col("y"), 1).over(pw))
       .withColumn("y7", lag(col("y"), 7).over(pw))
@@ -1351,9 +1352,9 @@ object Events {
           .as("num7"))
     a.select(col("event_type"), col("n_days"),
         when(col("den") > 0,
-          Recon.ratioRound(col("num1"), col("den"), 6)).as("acf1"),
+          Exact.ratioRound(col("num1"), col("den"), 6)).as("acf1"),
         when(col("den") > 0,
-          Recon.ratioRound(col("num7"), col("den"), 6)).as("acf7"))
+          Exact.ratioRound(col("num7"), col("den"), 6)).as("acf7"))
       .orderBy("event_type")
   }
 
@@ -1385,9 +1386,9 @@ object Events {
       .drop("t")
       .select(col("ta").as("type_a"), col("tb").as("type_b"),
         col("n_a"), col("n_b"), col("i").as("n_common"),
-        Recon.ratioRound(col("i"),
+        Exact.ratioRound(col("i"),
           col("n_a") + col("n_b") - col("i"), 6).as("jaccard"),
-        Recon.ratioRound(col("i"), least(col("n_a"), col("n_b")), 6)
+        Exact.ratioRound(col("i"), least(col("n_a"), col("n_b")), 6)
           .as("overlap_coef"))
       .orderBy("type_a", "type_b")
   }
@@ -1420,11 +1421,10 @@ object Events {
     * daily collapse, one type-partitioned window pass for the variance
     * clearing, one types-sized aggregate. */
   def weeklySpectrum(spark: SparkSession, dir: String): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val daily = Tables.events(spark, dir)
       .filter(col("value").isNotNull)
       .groupBy(col("event_type"), date_trunc("DAY", col("ts")).as("d"))
-      .agg(sum(round(round(col("value"), 6) * 1e6, 0).cast("long")).as("y"))
+      .agg(sum(Exact.micros(col("value"))).as("y"))
     val aw = Window.partitionBy("event_type")
     val cosArr = array(WeeklyCos.map(lit): _*)
     val sinArr = array(WeeklySin.map(lit): _*)
@@ -1437,15 +1437,15 @@ object Events {
       .withColumn("sv", element_at(sinArr, col("dow") + 1))
       .groupBy("event_type")
       .agg(max(col("n")).as("n"), sum(col("y")).as("sy"),
-        sum(col("y").cast(dec) * col("c")).as("a0"),
-        sum(col("y").cast(dec) * col("sv")).as("b0"),
+        sum(col("y").cast(Huge) * col("c")).as("a0"),
+        sum(col("y").cast(Huge) * col("sv")).as("b0"),
         sum(col("c")).as("cs"), sum(col("sv")).as("ss"),
-        sum((col("n").cast(dec) * col("y") - col("s"))
-          * (col("n").cast(dec) * col("y") - col("s"))).as("den"))
-      .withColumn("aa", col("n").cast(dec) * col("a0")
-        - col("sy").cast(dec) * col("cs"))
-      .withColumn("bb", col("n").cast(dec) * col("b0")
-        - col("sy").cast(dec) * col("ss"))
+        sum((col("n").cast(Huge) * col("y") - col("s"))
+          * (col("n").cast(Huge) * col("y") - col("s"))).as("den"))
+      .withColumn("aa", col("n").cast(Huge) * col("a0")
+        - col("sy").cast(Huge) * col("cs"))
+      .withColumn("bb", col("n").cast(Huge) * col("b0")
+        - col("sy").cast(Huge) * col("ss"))
     g.select(col("event_type"), col("n").as("n_days"),
         round(lit(2) * sqrt(col("aa").cast("double") * col("aa").cast("double")
           + col("bb").cast("double") * col("bb").cast("double"))
@@ -1496,10 +1496,8 @@ object Events {
       .select(col("f").as("from_type"), col("cf").as("n_trans"),
         col("n_targets"),
         round(col("hm") / 1e6, 6).as("entropy_bits"),
-        Recon.ratioRound(
-          col("cf").cast(org.apache.spark.sql.types.DecimalType(38, 0))
-            * col("hm"),
-          Recon.micro(col("nn")), 6).as("rate_contrib_bits"))
+        Exact.ratioRound(col("cf").cast(Huge) * col("hm"),
+          Exact.micro(col("nn")), 6).as("rate_contrib_bits"))
       .orderBy("from_type")
   }
 
@@ -1537,9 +1535,9 @@ object Events {
       .select(date_add(lit("1970-01-01").cast("date"),
           (col("wk") * 7).cast("int")).as("week_start"),
         col("n_active"), col("n_retained"), col("n_churned"),
-        Recon.ratioRound(col("n_churned"), col("n_active"), 6)
+        Exact.ratioRound(col("n_churned"), col("n_active"), 6)
           .as("churn_rate"),
-        Recon.ratioRound(col("n_retained"), col("n_active"), 6)
+        Exact.ratioRound(col("n_retained"), col("n_active"), 6)
           .as("retention_rate"))
       .orderBy("week_start")
   }
@@ -1567,17 +1565,17 @@ object Events {
         countDistinct(d).as("active_days"),
         countDistinct(col("event_type")).as("n_types"),
         sum(when(col("value").isNotNull,
-          round(round(col("value"), 6) * 1e6, 0).cast("long"))).as("sv"),
+          Exact.micros(col("value")))).as("sv"),
         sum(when(col("value").isNotNull, 1L).otherwise(0L)).as("nv"),
         min(d).as("first_day"), max(d).as("last_day"))
       .select(col("user_id"), col("n_events"), col("active_days"),
         col("n_types"),
         when(col("nv") > 0,
-          Recon.ratioRound(col("sv"), Recon.micro(col("nv")), 6))
+          Exact.ratioRound(col("sv"), Exact.micro(col("nv")), 6))
           .as("mean_value"),
         (datediff(col("last_day"), col("first_day")) + 1).cast("long")
           .as("span_days"),
-        Recon.ratioRound(col("active_days"),
+        Exact.ratioRound(col("active_days"),
           datediff(col("last_day"), col("first_day")) + 1, 6)
           .as("activity_density"))
       .orderBy("user_id")
@@ -1610,12 +1608,12 @@ object Events {
     val pt = ev.crossJoin(broadcast(cut))
       .select(col("event_type").as("t"),
         (date_trunc("DAY", col("ts")).cast("date") < col("c")).as("pre"),
-        round(round(col("value"), 6) * 1e6, 0).cast("long").as("v6"))
+        Exact.micros(col("value")).as("v6"))
       .groupBy("t", "pre")
       .agg(sum(col("v6")).as("sv"), count(lit(1)).as("n"))
     def m6(svC: org.apache.spark.sql.Column,
            nC: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      Recon.ratioScaled(svC, nC, 0)
+      Exact.ratioScaled(svC, nC, 0)
     val w = pt.groupBy("t")
       .agg(max(when(col("pre"), m6(col("sv"), col("n")))).as("mb"),
         max(when(!col("pre"), m6(col("sv"), col("n")))).as("ma"),
@@ -1663,17 +1661,16 @@ object Events {
     * 100 TB posture: ONE map-combined (type) moment pass; everything
     * after is types-sized with a 1-row broadcast F frame. */
   def valueAnova(spark: SparkSession, dir: String): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val g = Tables.events(spark, dir)
       .filter(col("value").isNotNull)
       .select(col("event_type").as("t"),
-        round(round(col("value"), 6) * 1e6, 0).cast("long").as("v6"))
+        Exact.micros(col("value")).as("v6"))
       .groupBy("t")
       .agg(count(lit(1)).as("n"), sum(col("v6")).as("s"),
-        sum(col("v6").cast(dec) * col("v6")).as("q"))
+        sum(col("v6").cast(Huge) * col("v6")).as("q"))
     def ss6(qC: org.apache.spark.sql.Column, nC: org.apache.spark.sql.Column,
             sC: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      Recon.ratioScaled(qC * nC - sC.cast(dec) * sC, Recon.micro(nC), 0)
+      Exact.ratioScaled(qC * nC - sC.cast(Huge) * sC, Exact.micro(nC), 0)
     val gw = g.withColumn("ssw_micro", ss6(col("q"), col("n"), col("s")))
     val tot = gw.agg(sum(col("n")).as("nn"), sum(col("s")).as("ss"),
       sum(col("q")).as("qq"), count(lit(1)).as("k"),
@@ -1682,20 +1679,20 @@ object Events {
       .withColumn("sst", ss6(col("qq"), col("nn"), col("ss")))
       .withColumn("ssb", col("sst") - col("ssw"))
       // ratio presentations in exact integer half-away arithmetic
-      // (Recon.ratioRound — the supplier_scorecard tie class): f_stat,
+      // (Exact.ratioRound — the supplier_scorecard tie class): f_stat,
       // eta², the mean and var_pop are all integer/integer quotients
       .withColumn("f_stat", when(col("ssw") > 0 && col("k") > 1
           && col("nn") > col("k"),
-        Recon.ratioRound(col("ssb").cast(dec) * (col("nn") - col("k")),
-          col("ssw").cast(dec) * (col("k") - 1), 6)))
+        Exact.ratioRound(col("ssb").cast(Huge) * (col("nn") - col("k")),
+          col("ssw").cast(Huge) * (col("k") - 1), 6)))
     gw.crossJoin(broadcast(f.select("k", "sst", "ssb", "f_stat")))
       .select(col("t").as("event_type"), col("n"),
-        Recon.ratioRound(col("s"), Recon.micro(col("n")), 6)
+        Exact.ratioRound(col("s"), Exact.micro(col("n")), 6)
           .as("mean_value"),
-        Recon.ratioRound(col("ssw_micro"), Recon.micro(col("n")), 6)
+        Exact.ratioRound(col("ssw_micro"), Exact.micro(col("n")), 6)
           .as("var_pop"),
         col("k").as("k_groups"), col("f_stat"),
-        when(col("sst") > 0, Recon.ratioRound(col("ssb"), col("sst"), 6))
+        when(col("sst") > 0, Exact.ratioRound(col("ssb"), col("sst"), 6))
           .as("eta_squared"))
       .orderBy("event_type")
   }
@@ -1719,7 +1716,6 @@ object Events {
     * scale), never over a per-user frame, so there is no users-sized
     * sort behind a 5-partition window. */
   def userGini(spark: SparkSession, dir: String): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val cnts = Tables.events(spark, dir)
       .groupBy(col("event_type"), col("user_id"))
       .agg(count(lit(1)).as("c"))
@@ -1731,16 +1727,16 @@ object Events {
       .withColumn("wp", coalesce(sum("w").over(wCum), lit(0L)))
       .groupBy("event_type")
       .agg(sum(col("w")).as("n"),
-        sum(col("v").cast(dec) * col("w")).as("sx"),
+        sum(col("v").cast(Huge) * col("w")).as("sx"),
         // w and wp promote to DECIMAL(38,0) BEFORE their products —
         // w·wp in raw longs overflows once a type's user count nears
         // ~3e9 (round-14 advice), breaking the exact-128-bit claim
-        sum(col("v").cast(dec) * (col("w").cast(dec) * col("wp") * 2
-          + col("w").cast(dec) * (col("w") + 1))).as("six2"))
+        sum(col("v").cast(Huge) * (col("w").cast(Huge) * col("wp") * 2
+          + col("w").cast(Huge) * (col("w") + 1))).as("six2"))
       .select(col("event_type"),
         col("n").as("n_users"), col("sx").cast("long").as("total_events"),
-        Recon.ratioRound(col("six2") - (col("n") + 1) * col("sx"),
-          col("n").cast(dec) * col("sx"), 6).as("gini"))
+        Exact.ratioRound(col("six2") - (col("n") + 1) * col("sx"),
+          col("n").cast(Huge) * col("sx"), 6).as("gini"))
       .orderBy("event_type")
   }
 }

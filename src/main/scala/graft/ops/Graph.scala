@@ -4,6 +4,7 @@ import graft.{Memo, Tables}
 import graft.Checkpoint.truncate
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Exact.Huge
 
 /** Connected components over a near-duplicate pair list — the clustering
   * step a dedup pipeline runs AFTER MinHash/SimHash emit candidate
@@ -529,7 +530,7 @@ object Graph {
       .select(col("n_nodes"), lit(nEdges).as("n_edges"),
         col("triangles"), col("wedges"),
         when(col("wedges") > 0,
-          graft.ops.Recon.ratioRound(col("triangles") * 3, col("wedges"), 6))
+          Exact.ratioRound(col("triangles") * 3, col("wedges"), 6))
           .as("transitivity"))
   }
 
@@ -557,7 +558,7 @@ object Graph {
     val tot = hist.agg(sum(col("n_nodes")).as("tn"))
     hist.crossJoin(broadcast(tot))
       .select(col("degree"), col("n_nodes"),
-        graft.ops.Recon.ratioRound(col("n_nodes"), col("tn"), 6)
+        Exact.ratioRound(col("n_nodes"), col("tn"), 6)
           .as("node_share"))
       .orderBy("degree")
   }
@@ -588,7 +589,7 @@ object Graph {
     * combinable endpoint count; the union clears as deg(a)+deg(b)−
     * common (never 0 on an edge: both degrees ≥ 1). Everything is
     * exact integers; the one ratio presents through
-    * [[Recon.ratioRound]], and ORDER BY uses the rounded value (bit-
+    * [[Exact.ratioRound]], and ORDER BY uses the rounded value (bit-
     * identical on both engines) with the (a, b) tiebreak.
     *
     * 100 TB posture: cost is the wedge frame Σ deg² — bounded by the
@@ -621,7 +622,7 @@ object Graph {
       .join(gated(deg.select(col("v").as("a"), col("d").as("deg_a"))), "a")
       .join(gated(deg.select(col("v").as("b"), col("d").as("deg_b"))), "b")
       .select(col("a"), col("b"), col("deg_a"), col("deg_b"), col("common"),
-        graft.ops.Recon.ratioRound(col("common"),
+        Exact.ratioRound(col("common"),
           col("deg_a") + col("deg_b") - col("common"), 6).as("jaccard"))
       .orderBy(desc("jaccard"), col("a"), col("b")).limit(100)
   }
@@ -729,7 +730,7 @@ object Graph {
     * marginals IDENTICAL, so Pearson's two sqrt factors collapse into
     * one integer denominator — r = (M·Sxy − Sx²) / (M·Sxx − Sx²) with
     * every term an exact DECIMAL(38,0) ≡ HUGEINT integer and ONE
-    * [[Recon.ratioRound]] presentation. No sqrt, no double, no tie
+    * [[Exact.ratioRound]] presentation. No sqrt, no double, no tie
     * class anywhere — rare for a correlation statistic. NULL when the
     * denominator is 0 (degree-regular graph: zero variance).
     *
@@ -737,7 +738,6 @@ object Graph {
     * edge frame (degrees are map-combinable endpoint counts), one
     * 1-row aggregate. */
   def assortativity(spark: SparkSession, dir: String): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val e = copurchaseEdges(spark, dir)
       .filter(col("w") >= 2 && col("s") < col("t"))
       .select(col("s").as("a"), col("t").as("b"))
@@ -753,16 +753,16 @@ object Graph {
       .join(gated(deg.select(col("v").as("b"), col("d").as("db"))), "b")
     val agg = dd.agg(
       count(lit(1)).as("ne"),
-      sum((col("da") + col("db")).cast(dec)).as("sx"),
-      sum(col("da").cast(dec) * col("da")
-        + col("db").cast(dec) * col("db")).as("sxx"),
-      sum(col("da").cast(dec) * col("db")).as("sxy_half"))
-    val m = col("ne").cast(dec) * 2
+      sum((col("da") + col("db")).cast(Huge)).as("sx"),
+      sum(col("da").cast(Huge) * col("da")
+        + col("db").cast(Huge) * col("db")).as("sxx"),
+      sum(col("da").cast(Huge) * col("db")).as("sxy_half"))
+    val m = col("ne").cast(Huge) * 2
     val num = m * (col("sxy_half") * 2) - col("sx") * col("sx")
     val den = m * col("sxx") - col("sx") * col("sx")
     agg.crossJoin(broadcast(nodes))
       .select(col("n_nodes"), col("ne").as("n_edges"),
-        when(den > 0, graft.ops.Recon.ratioRound(num, den, 6))
+        when(den > 0, Exact.ratioRound(num, den, 6))
           .as("assortativity"))
   }
 
@@ -803,7 +803,7 @@ object Graph {
     val edgesRaw = copurchaseEdges(spark, dir)
     pagerankRanks(edgesRaw)
       .select(col("node").as("l_partkey"), col("r").as("rank_ppb"),
-        graft.ops.Recon.ratioRound(col("r"), lit(1000000000L), 6).as("rank"))
+        Exact.ratioRound(col("r"), lit(1000000000L), 6).as("rank"))
       .orderBy(desc("rank_ppb"), col("l_partkey")).limit(20)
   }
 }

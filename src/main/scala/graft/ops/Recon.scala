@@ -3,10 +3,8 @@ package graft.ops
 import graft.{Checkpoint, Tables}
 import graft.functions.ExactDecimal.exactDecimal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.UnscaledValue
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types.DecimalType
 
 /** One (source, target) pair in a [[Recon.reconcileAll]] run config.
@@ -32,31 +30,10 @@ case class TablePair(
   * (key, hash) pairs ever move, not full rows.
   */
 object Recon {
-  /** Exact scale-4 fixed-point representation of a numeric column: the
-    * value is first rounded through DECIMAL(18,4) — the SAME rounding
-    * decision the decimal-sum formulation makes, so downstream results
-    * cannot move by an ulp — then carried as a plain long (value × 10⁴),
-    * extracted by Catalyst's own `UnscaledValue` (a codegen'd field read
-    * on the compact decimal).
-    *
-    * The rounding is [[graft.functions.ExactDecimal]], not a Cast. A
-    * Cast of a double builds a BigDecimal per row (it prints the double
-    * with `Double.toString` and parses the string); ExactDecimal
-    * computes the same HALF_UP'd long in primitive arithmetic whenever
-    * `|x·10⁴| < 2^40` and its fraction is not within 1e-3 of .5, and
-    * hands every other value — NaN, ±∞, near-ties, large magnitudes —
-    * and every non-double column to Spark's own Cast. The value is
-    * `CAST(c AS DECIMAL(18,4))`'s in every case (ExactDecimalProps
-    * checks it against Cast, ANSI on and off).
-    * Longs aggregate through Spark's primitive hash-agg buffers (8-byte
-    * UnsafeRow slots, no BigDecimal allocation per update/merge), where a
-    * DECIMAL(18,4) sum forces a precision-28 buffer onto the interpreted
-    * BigDecimal path for every row. */
-  private[graft] def cents(c: Column): Column =
-    ExprBridge.column(UnscaledValue(ExprBridge.expression(exactDecimal(c, 18, 4))))
+  import Exact.{Huge, cents, decSum, ratioRound, uncents}
 
   /** A row hash's price field: `CAST(price AS DECIMAL(12,2))`, through
-    * the same exact kernel as [[cents]] — the one spelling every
+    * the same exact kernel as [[Exact.cents]] — the one spelling every
     * orders row hash in this object uses (the stream parity op keeps
     * `StreamingOps`' literal Cast). */
   private def hashPrice(price: Column): Column = exactDecimal(price, 12, 2)
@@ -67,91 +44,6 @@ object Recon {
   private def ordersRowHash(price: Column,
                             hash: Seq[Column] => Column = rowHash64): Column =
     hash(Seq(col("o_custkey"), col("o_orderstatus"), hashPrice(price)))
-
-  /** Inverse of [[cents]] on an aggregated long: exact decimal division
-    * (never double division, so the value is exact at ANY long magnitude,
-    * not just below 2^53) then one presentation cast. */
-  private[graft] def uncents(c: Column): Column =
-    (c.cast(DecimalType(38, 4)) / lit(10000)).cast("double")
-
-  /** round-half-away(num/den, scale) in EXACT 128-bit integer
-    * arithmetic — the cross-engine-safe presentation round for
-    * integer/integer ratios, replacing `round(num/den AS DOUBLE,
-    * scale)`. The double spelling genuinely splits the engines on
-    * tie-adjacent quotients: Spark's Round goes through
-    * `BigDecimal.valueOf(double)` — the double's SHORTEST decimal
-    * string — and HALF_UPs that, while DuckDB computes
-    * `std::round(x·10^scale)`; a quotient whose shortest repr ends in
-    * a trailing 5 one digit past the scale (64.6625, 0.0078125, any
-    * odd/2^k…) rounds UP on Spark and DOWN on DuckDB whenever the
-    * underlying double sits below the decimal boundary — caught live
-    * by supplier_scorecard's sf0.001 sweep (round 15). Exact-integer
-    * half-away — sign·((2·|num|·10^scale + den) div (2·den)) — cannot
-    * tie and cannot split: both engines' integral division truncates
-    * toward zero. Preconditions: `den` must be > 0 (group counts,
-    * lengths) AND `num` must be INTEGRAL-VALUED (long/int columns or
-    * scale-0 decimals — the DECIMAL(38,0) cast HALF_UP-rounds a
-    * fractional numerator first, a hidden double rounding the
-    * exactness claim does not cover; fractional inputs must be
-    * micro-scaled into longs by the caller before the call);
-    * DECIMAL(38,0) ≡ HUGEINT keeps the 2·10^scale-magnified products
-    * exact at corpus scale. Oracle twin:
-    * `CAST(sign·((2·|num|·10^s + den) // (2·den)) AS DOUBLE) / 1e{s}`. */
-  private[graft] def ratioRound(num: Column, den: Column, scale: Int): Column = {
-    val p = lit(math.pow(10, scale).toLong)
-    val b = den.cast(DecimalType(38, 0))
-    val mag = intDiv(abs(num.cast(DecimalType(38, 0))) * p * 2 + b, b * 2)
-    when(num >= 0, mag).otherwise(-mag).cast("double") /
-      lit(math.pow(10, scale))
-  }
-
-  /** [[ratioRound]]'s integer magnitude WITHOUT the presentation
-    * division: round-half-away(num·10^scale / den) as a LONG column —
-    * the exact scaled-unit form micro-long SUMMATION sites need (a
-    * per-row round that feeds `sum(...)` must stay integral; routing
-    * through ratioRound's double and re-extracting with
-    * `round(x·1e6, 0)` would reintroduce the very double-multiply tie
-    * class this family exists to remove). Same contract as ratioRound:
-    * `den` > 0, `num` integral-valued and either sign, DECIMAL(38,0)
-    * ≡ HUGEINT intermediates (envelope: 2·|num|·10^s + den < 10³⁸).
-    * Oracle twin: `CAST(sign·((2·|num|·10^s + den) // (2·den)) AS
-    * BIGINT)`. */
-  private[graft] def ratioScaled(num: Column, den: Column, scale: Int): Column = {
-    val p = lit(math.pow(10, scale).toLong)
-    val b = den.cast(DecimalType(38, 0))
-    val mag = intDiv(abs(num.cast(DecimalType(38, 0))) * p * 2 + b, b * 2)
-    when(num >= 0, mag).otherwise(-mag).cast("long")
-  }
-
-  /** Corpus-proof micro-scaled denominator for [[ratioRound]]/
-    * [[ratioScaled]] callers: den·10⁶ with the cast to DECIMAL(38,0)
-    * BEFORE the multiply — a corpus-sized count times 10⁶ overflows
-    * the long multiply past ~9.2×10¹² rows on the Spark side, where
-    * every DuckDB twin already spells `CAST(den AS HUGEINT) * 1000000`
-    * (round-16 review). */
-  private[graft] def micro(den: Column): Column =
-    den.cast(DecimalType(38, 0)) * 1000000
-
-  /** Integral division (Spark's `div`, DuckDB's `//`) — both truncate
-    * toward zero, so the pair is cross-engine parity-safe on exact
-    * integer operands. */
-  private[graft] def intDiv(a: Column, b: Column): Column =
-    org.apache.spark.sql.graftbridge.ExprBridge.column(
-      org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-        org.apache.spark.sql.graftbridge.ExprBridge.expression(a),
-        org.apache.spark.sql.graftbridge.ExprBridge.expression(b)))
-
-  /** Money-exact aggregation: fixed-point long sum so partial-aggregation
-    * order cannot change final ulps (SURVEY §7.4.1), surfaced as double.
-    * Bit-identical to `sum(cast(c as DECIMAL(18,4)))` — same per-row
-    * rounding, exact integer addition — while keeping the aggregation
-    * buffer primitive. Envelope: the long holds |Σ| ≤ 9.2×10¹⁴ in value
-    * units (2⁶³ / 10⁴); a single group exceeding that (≳ $10¹⁴ of
-    * revenue in one group) needs the wide-decimal form
-    * `sum(c.cast(DecimalType(38,4)))` instead — at that magnitude the
-    * sum is no longer bench-floor-bound and the decimal buffer is the
-    * right trade. */
-  private[ops] def decSum(c: Column): Column = uncents(sum(cents(c)))
 
   /** Per-table row counts — the most basic source/target compare. */
   def rowcount(spark: SparkSession, dir: String): DataFrame = {
@@ -186,10 +78,10 @@ object Recon {
     val li = Tables.lineitem(spark, dir)
     val agg = li.agg(
       count(lit(1)).as("cnt"),
-      uncents(sum(cents(col("l_quantity")))).as("sq"),
+      decSum(col("l_quantity")).as("sq"),
       min(col("l_extendedprice")).as("mn"),
       max(col("l_extendedprice")).as("mx"),
-      uncents(sum(cents(col("l_extendedprice") * col("l_discount")))).as("rev"))
+      decSum(col("l_extendedprice") * col("l_discount")).as("rev"))
     val dk = li.select(col("l_orderkey")).distinct().agg(count(lit(1)).as("dk"))
     agg.crossJoin(dk)
       .select(col("cnt"), col("dk"), col("sq"), col("mn"), col("mx"), col("rev"))
@@ -674,7 +566,7 @@ object Recon {
     *
     * Everything is exact integer microseconds (unix_micros ↔
     * epoch_us): staleness is one truncating integral division (div ≡
-    * //), the 24-h share rides [[ratioRound]], and the presented
+    * //), the 24-h share rides [[Exact.ratioRound]], and the presented
     * instant truncates to whole seconds (the §7.4.2 timestamp rule).
     * One 1-row global-max broadcast onto the scan, one type-keyed
     * map-combined aggregate; output rows = event types. */
@@ -1103,7 +995,6 @@ object Recon {
     * frame within each type partition; the final max is a type-sized
     * agg. Nothing row-count-sized sorts or buffers. */
   def ksDrift(spark: SparkSession, dir: String): DataFrame = {
-    val dec = DecimalType(38, 0)
     val cells = halfSplitCells(Tables.events(spark, dir)
       .select(col("event_type"), unix_micros(col("ts")).as("t_us"),
         col("value").as("v")))
@@ -1126,14 +1017,14 @@ object Recon {
       (col("n1").cast("double") * col("n2"))
     cum.groupBy("event_type")
       .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-        max(abs(col("cum1").cast(dec) * col("n2")
-          - col("cum2").cast(dec) * col("n1"))).as("ks_num"))
+        max(abs(col("cum1").cast(Huge) * col("n2")
+          - col("cum2").cast(Huge) * col("n1"))).as("ks_num"))
       .select(col("event_type"), col("n1"), col("n2"),
         // the presentation round goes through exact integer half-away
         // arithmetic (the ratioRound class); the critical-value COMPARE
         // keeps the raw identically-spelled double chain — both engines
         // evaluate the same doubles and sqrt is correctly rounded
-        ratioRound(col("ks_num"), col("n1").cast(dec) * col("n2"), 6).as("ks"),
+        ratioRound(col("ks_num"), col("n1").cast(Huge) * col("n2"), 6).as("ks"),
         (ksRaw > lit(1.36) * sqrt((col("n1").cast("double") + col("n2"))
           / (col("n1").cast("double") * col("n2")))).as("drifted"))
       .orderBy("event_type")
@@ -1159,10 +1050,9 @@ object Recon {
     * to (type, value) cells with map-side partials, everything after
     * windows over the cell frame partitioned by type. */
   def wassersteinDrift(spark: SparkSession, dir: String): DataFrame = {
-    val dec = DecimalType(38, 0)
     val cells = halfSplitCells(Tables.events(spark, dir)
       .select(col("event_type"), unix_micros(col("ts")).as("t_us"),
-        round(round(col("value"), 6) * 1e6, 0).cast("long").as("v")))
+        Exact.micros(col("value")).as("v")))
     val w = Window.partitionBy(col("event_type")).orderBy(col("v"))
     // totals ride the SAME type-partitioned window pass as the CDFs
     // (the ksDrift round-21 restructure — §7.2/§2.4): the old separate
@@ -1185,18 +1075,18 @@ object Recon {
       .groupBy("event_type")
       .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
         max(col("rng")).as("rng"),
-        sum(abs(col("cum1").cast(dec) * col("n2")
-            - col("cum2").cast(dec) * col("n1"))
-          * (col("nxt") - col("v")).cast(dec)).as("w1num"))
+        sum(abs(col("cum1").cast(Huge) * col("n2")
+            - col("cum2").cast(Huge) * col("n1"))
+          * (col("nxt") - col("v")).cast(Huge)).as("w1num"))
       .where(col("n1") > 0 && col("n2") > 0 && col("rng") > 0)
       .select(col("event_type"), col("n1"), col("n2"),
         // both presentations are exact integer ratios (ratioRound —
         // the int/int tie class); envelope: w1num·2·10⁶ ≤ n1·n2·rng·2·10⁶
         // stays inside DECIMAL(38,0) to ~10¹¹ events per side
         ratioRound(col("w1num"),
-          col("n1").cast(dec) * col("n2") * 1000000L, 6).as("w1"),
+          col("n1").cast(Huge) * col("n2") * 1000000L, 6).as("w1"),
         ratioRound(col("w1num"),
-          col("n1").cast(dec) * col("n2") * col("rng"), 6).as("w1_norm"))
+          col("n1").cast(Huge) * col("n2") * col("rng"), 6).as("w1_norm"))
       .orderBy("event_type")
   }
 

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.DecimalType
   * `TakeOrderedAndProject` — no global sort materialization.
   */
 object Relational {
-  import Recon.decSum
+  import Exact.{Huge, decSum}
 
   /** TPC-H-Q1-style pricing summary: filter → 5 aggregates → sort.
     *
@@ -89,10 +89,10 @@ object Relational {
         && col("l_shipdate") < lit("1995-10-01").cast("timestamp"))
       .join(Tables.part(spark, dir), col("l_partkey") === col("p_partkey"))
       .agg(
-        Recon.ratioRound(
-          coalesce(sum(Recon.cents(when(col("p_type").startsWith("PROMO"), rev))),
+        Exact.ratioRound(
+          coalesce(sum(Exact.cents(when(col("p_type").startsWith("PROMO"), rev))),
             lit(0L)) * 100,
-          sum(Recon.cents(rev)), 4).as("promo_pct"),
+          sum(Exact.cents(rev)), 4).as("promo_pct"),
         count(lit(1)).as("n"))
   }
 
@@ -159,7 +159,7 @@ object Relational {
     Tables.orders(spark, dir)
       .select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
         col("o_totalprice"),
-        Recon.uncents(sum(Recon.cents(col("o_totalprice"))).over(w)).as("run"))
+        Exact.uncents(sum(Exact.cents(col("o_totalprice"))).over(w)).as("run"))
       .orderBy("o_custkey", "o_orderdate", "o_orderkey")
       .limit(100)
       .drop("o_orderkey")
@@ -177,10 +177,10 @@ object Relational {
         lead(col("o_totalprice"), 1).over(w).as("next_price"),
         ntile(4).over(w).as("quartile"),
         // percent_rank = (rank−1)/(n−1) respelled as the exact integer
-        // ratio (Recon.ratioRound — the int/int tie class); single-row
+        // ratio (Exact.ratioRound — the int/int tie class); single-row
         // partitions are 0.0 by the percent_rank contract
         when(count(lit(1)).over(Window.partitionBy(col("o_custkey"))) > 1,
-          Recon.ratioRound(rank().over(w) - 1,
+          Exact.ratioRound(rank().over(w) - 1,
             count(lit(1)).over(Window.partitionBy(col("o_custkey"))) - 1, 6))
           .otherwise(lit(0.0)).as("prank"),
         first(col("o_orderkey")).over(w).as("first_key"))
@@ -587,7 +587,7 @@ object Relational {
   private[graft] def q17Broadcast(spark: SparkSession, dir: String): DataFrame = {
     val th = Tables.lineitem(spark, dir)
       .groupBy(col("l_partkey"))
-      .agg(((Recon.uncents(sum(Recon.cents(col("l_quantity")))) / count(lit(1)))
+      .agg(((decSum(col("l_quantity")) / count(lit(1)))
         * 0.2).as("threshold"))
     q17Report(Tables.lineitem(spark, dir)
       .join(broadcast(th), Seq("l_partkey"))
@@ -599,7 +599,7 @@ object Relational {
     val w = Window.partitionBy(col("l_partkey"))
     q17Report(Tables.lineitem(spark, dir)
       .withColumn("threshold",
-        (Recon.uncents(sum(Recon.cents(col("l_quantity"))).over(w))
+        (Exact.uncents(sum(Exact.cents(col("l_quantity"))).over(w))
           / count(lit(1)).over(w)) * 0.2)
       .where(col("l_quantity") < col("threshold")), spark, dir)
   }
@@ -653,7 +653,7 @@ object Relational {
     val tot = hist.agg(sum(col("n_baskets")).as("tb"))
     hist.crossJoin(broadcast(tot))
       .select(col("basket_size"), col("n_baskets"),
-        Recon.ratioRound(col("n_baskets"), col("tb"), 6)
+        Exact.ratioRound(col("n_baskets"), col("tb"), 6)
           .as("basket_share"))
       .orderBy("basket_size")
   }
@@ -708,8 +708,8 @@ object Relational {
       sum(col("n")).as("total_rows"), count(lit(1)).as("distinct_keys"))
     counts.crossJoin(broadcast(totals))
       .select(col(keyCol), col("n"),
-        Recon.ratioRound(col("n") * 100, col("total_rows"), 4).as("pct"),
-        Recon.ratioRound(col("n") * col("distinct_keys"), col("total_rows"), 4)
+        Exact.ratioRound(col("n") * 100, col("total_rows"), 4).as("pct"),
+        Exact.ratioRound(col("n") * col("distinct_keys"), col("total_rows"), 4)
           .as("x_avg"))
       .orderBy(col("n").desc, col(keyCol))
       .limit(topK)
@@ -859,8 +859,8 @@ object Relational {
       .select(col("o_orderkey"), col("o_orderstatus"),
         // cume_dist = rank/n; the (price, key) order is total (unique
         // key) so rank ≡ row_number and the ratio is exact integers
-        // through Recon.ratioRound (the int/int tie class)
-        Recon.ratioRound(row_number().over(w1),
+        // through Exact.ratioRound (the int/int tie class)
+        Exact.ratioRound(row_number().over(w1),
           count(lit(1)).over(Window.partitionBy(col("o_orderstatus"))), 6)
           .as("cd"),
         col("dr"),
@@ -881,7 +881,7 @@ object Relational {
       .rangeBetween(-2592000L, 0L)
     Tables.orders(spark, dir)
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-        Recon.uncents(sum(Recon.cents(col("o_totalprice"))).over(w))
+        Exact.uncents(sum(Exact.cents(col("o_totalprice"))).over(w))
           .as("trailing30d"))
       .orderBy("o_custkey", "o_orderdate", "o_orderkey").limit(200)
   }
@@ -915,10 +915,10 @@ object Relational {
   def percentOfTotal(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
     val totals = o.groupBy(col("o_orderstatus"))
-      .agg(sum(Recon.cents(col("o_totalprice"))).as("tot_cents"))
+      .agg(sum(Exact.cents(col("o_totalprice"))).as("tot_cents"))
     o.join(broadcast(totals), Seq("o_orderstatus"))
       .select(col("o_orderkey"), col("o_orderstatus"),
-        Recon.ratioRound(Recon.cents(col("o_totalprice")) * 100,
+        Exact.ratioRound(Exact.cents(col("o_totalprice")) * 100,
           col("tot_cents"), 6).as("pct"))
       .orderBy("o_orderkey").limit(200)
   }
@@ -1414,13 +1414,13 @@ object Relational {
       // ~2^51 unscaled units — the DuckDB twin derives the integer
       // from the decimal sum exactly at any magnitude)
       .agg(
-        sum(Recon.cents(rev)).as("rc"),
-        coalesce(sum(Recon.cents(when(col("s_nationkey") === 1, rev))),
+        sum(Exact.cents(rev)).as("rc"),
+        coalesce(sum(Exact.cents(when(col("s_nationkey") === 1, rev))),
           lit(0L)).as("nc"))
       .select(col("yr"),
-        Recon.uncents(col("rc")).as("total_rev"),
-        Recon.uncents(col("nc")).as("nation1_rev"),
-        Recon.ratioRound(col("nc"), col("rc"), 6).as("mkt_share"))
+        Exact.uncents(col("rc")).as("total_rev"),
+        Exact.uncents(col("nc")).as("nation1_rev"),
+        Exact.ratioRound(col("nc"), col("rc"), 6).as("mkt_share"))
       .orderBy("yr")
   }
 
@@ -1530,7 +1530,7 @@ object Relational {
   def yoyGrowth(spark: SparkSession, dir: String): DataFrame = {
     val yearly = Tables.orders(spark, dir)
       .groupBy(year(col("o_orderdate")).as("yr"))
-      .agg(sum(Recon.cents(col("o_totalprice"))).as("rc"),
+      .agg(sum(Exact.cents(col("o_totalprice"))).as("rc"),
         count(lit(1)).as("n_orders"))
     // answer-sized frame (one row per year); lit(0) names a partition
     // so the known-bounded sort stops tripping the WindowExec warning
@@ -1538,10 +1538,9 @@ object Relational {
     yearly
       .withColumn("prev_rc", lag(col("rc"), 1).over(w))
       .select(col("yr"), col("n_orders"),
-        Recon.uncents(col("rc")).as("revenue"),
+        Exact.uncents(col("rc")).as("revenue"),
         when(col("prev_rc").isNotNull,
-          Recon.ratioRound((col("rc") - col("prev_rc"))
-              .cast(org.apache.spark.sql.types.DecimalType(38, 0)) * 100,
+          Exact.ratioRound((col("rc") - col("prev_rc")).cast(Huge) * 100,
             col("prev_rc"), 4)).as("yoy_pct"))
       .orderBy("yr")
   }
@@ -1578,12 +1577,12 @@ object Relational {
         min(col("lag_d")).as("mn_lag_d"), max(col("lag_d")).as("mx_lag_d"),
         count_if(col("lag_d") > 90).as("miss"))
       // the mean and the share round in EXACT INTEGER arithmetic
-      // (Recon.ratioRound — the supplier_scorecard tie class; sign
+      // (Exact.ratioRound — the supplier_scorecard tie class; sign
       // handled inside, DECIMAL(38,0) products exact at any corpus)
       .select(col("o_orderpriority"), col("n"),
-        Recon.ratioRound(col("lag_sum"), col("n"), 3).as("avg_lag_d"),
+        Exact.ratioRound(col("lag_sum"), col("n"), 3).as("avg_lag_d"),
         col("mn_lag_d"), col("mx_lag_d"),
-        Recon.ratioRound(col("miss"), col("n"), 6).as("sla_miss_share"))
+        Exact.ratioRound(col("miss"), col("n"), 6).as("sla_miss_share"))
       .orderBy("o_orderpriority")
   }
 
@@ -1630,7 +1629,7 @@ object Relational {
         datediff(col("l_shipdate"), col("o_orderdate")).as("lag_d"),
         (col("l_shipdate") >= col("o_orderdate") + expr("INTERVAL 60 DAYS"))
           .as("late"),
-        Recon.cents(col("l_extendedprice") * (lit(1) - col("l_discount")))
+        Exact.cents(col("l_extendedprice") * (lit(1) - col("l_discount")))
           .as("rev_c"))
       .groupBy(col("l_suppkey"))
       .agg(count(lit(1)).as("n_lines"),
@@ -1650,9 +1649,9 @@ object Relational {
         sum(col("late_rev_c")).as("late_rev_c"))
       .select(col("s_name"), col("n_name").as("nation"), col("n_lines"),
         col("n_late"),
-        Recon.ratioRound(col("n_late"), col("n_lines"), 6).as("late_share"),
-        Recon.ratioRound(col("lag_sum"), col("n_lines"), 3).as("avg_lag_d"),
-        Recon.uncents(col("late_rev_c")).as("late_revenue"))
+        Exact.ratioRound(col("n_late"), col("n_lines"), 6).as("late_share"),
+        Exact.ratioRound(col("lag_sum"), col("n_lines"), 3).as("avg_lag_d"),
+        Exact.uncents(col("late_rev_c")).as("late_revenue"))
       .orderBy(desc("n_late"), col("s_name"), col("nation")).limit(100)
   }
 
@@ -1669,12 +1668,11 @@ object Relational {
   def supplierHhi(spark: SparkSession, dir: String): DataFrame = {
     val perSup = Tables.lineitem(spark, dir)
       .groupBy(col("l_suppkey"))
-      .agg(sum(Recon.cents(col("l_extendedprice") * (lit(1) - col("l_discount"))))
+      .agg(sum(Exact.cents(col("l_extendedprice") * (lit(1) - col("l_discount"))))
         .as("rc"))
       .join(gatedDim(spark, dir, "supplier", Tables.supplier(spark, dir)
         .select(col("s_suppkey"), col("s_nationkey"))),
         col("l_suppkey") === col("s_suppkey"))
-    val dec = DecimalType(38, 0)
     val perNation = perSup.groupBy(col("s_nationkey"))
       .agg(count(lit(1)).as("n_sup"),
         sum(col("rc")).as("tot"), max(col("rc")).as("mx"),
@@ -1682,14 +1680,14 @@ object Relational {
         // old double sum was partial-agg-order-dependent in its ulps):
         // rc² ≤ 10³² even at ~$10¹⁰ per supplier, Σ stays inside 38
         // digits to ~10⁶ suppliers per nation
-        sum(col("rc").cast(dec) * col("rc")).as("sq"))
+        sum(col("rc").cast(Huge) * col("rc")).as("sq"))
     perNation
       .join(broadcast(Tables.nation(spark, dir)),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("n_name"), col("n_sup"),
-        Recon.ratioRound(col("sq"), col("tot").cast(dec) * col("tot"), 6)
+        Exact.ratioRound(col("sq"), col("tot").cast(Huge) * col("tot"), 6)
           .as("hhi"),
-        Recon.ratioRound(col("mx"), col("tot"), 6).as("top_share"))
+        Exact.ratioRound(col("mx"), col("tot"), 6).as("top_share"))
       .orderBy("n_name")
   }
 
@@ -1712,7 +1710,7 @@ object Relational {
     val maxD = o.agg(max(col("o_orderdate")).as("mx"))
     o.groupBy(col("o_custkey"))
       .agg(max(col("o_orderdate")).as("last_d"), count(lit(1)).as("freq"),
-        sum(Recon.cents(col("o_totalprice"))).as("sp_cents"))
+        sum(Exact.cents(col("o_totalprice"))).as("sp_cents"))
       .crossJoin(broadcast(maxD))
       .select(
         when(datediff(col("mx"), col("last_d")) <= 365, "active")
@@ -1722,7 +1720,7 @@ object Relational {
         col("freq"), col("sp_cents"))
       .groupBy("r_seg", "f_seg")
       .agg(count(lit(1)).as("n_cust"), sum("freq").as("n_orders"),
-        Recon.uncents(sum(col("sp_cents"))).as("total_spend"))
+        Exact.uncents(sum(col("sp_cents"))).as("total_spend"))
       .orderBy("r_seg", "f_seg")
   }
 
@@ -1842,17 +1840,17 @@ object Relational {
     // one scan: cents-sum and count strictly below each boundary value,
     // plus the global cents total (everything partial-aggregable)
     val belowAgg = price.agg(
-      coalesce(sum(when(col("v") < bv(0), Recon.cents(col("v")))), lit(0L)).as("s1"),
+      coalesce(sum(when(col("v") < bv(0), Exact.cents(col("v")))), lit(0L)).as("s1"),
       count_if(col("v") < bv(0)).as("c1"),
-      coalesce(sum(when(col("v") < bv(1), Recon.cents(col("v")))), lit(0L)).as("s2"),
+      coalesce(sum(when(col("v") < bv(1), Exact.cents(col("v")))), lit(0L)).as("s2"),
       count_if(col("v") < bv(1)).as("c2"),
-      coalesce(sum(when(col("v") < bv(2), Recon.cents(col("v")))), lit(0L)).as("s3"),
+      coalesce(sum(when(col("v") < bv(2), Exact.cents(col("v")))), lit(0L)).as("s3"),
       count_if(col("v") < bv(2)).as("c3"),
-      sum(Recon.cents(col("v"))).as("stot"),
+      sum(Exact.cents(col("v"))).as("stot"),
       // boundary prices re-quantized through the same cents cast the
       // sums use, so prefix arithmetic stays in one fixed-point system
-      max(Recon.cents(lit(bv(0)))).as("bc1"), max(Recon.cents(lit(bv(1)))).as("bc2"),
-      max(Recon.cents(lit(bv(2)))).as("bc3"))
+      max(Exact.cents(lit(bv(0)))).as("bc1"), max(Exact.cents(lit(bv(1)))).as("bc2"),
+      max(Exact.cents(lit(bv(2)))).as("bc3"))
     val a = belowAgg.collect().head
     def L(i: Int): Long = a.getLong(i)
     val (s, c, bc) = ((0 to 2).map(k => L(2 * k)), (0 to 2).map(k => L(2 * k + 1)),
@@ -1867,7 +1865,7 @@ object Relational {
     }
     quartiles.toDF("q", "n", "mn", "mx", "tc")
       .select(col("q"), col("n"), col("mn"), col("mx"),
-        Recon.uncents(col("tc")).as("total"))
+        Exact.uncents(col("tc")).as("total"))
       .orderBy("q")
   }
 
@@ -2057,11 +2055,11 @@ object Relational {
       .join(single.toDF("brand_b", "cb"), "brand_b")
       .crossJoin(broadcast(tot))
       .select(col("brand_a"), col("brand_b"), col("n_ab"),
-        Recon.ratioRound(col("n_ab"), col("n_orders"), 6).as("support"),
-        Recon.ratioRound(col("n_ab"), col("ca"), 6).as("confidence"),
-        Recon.ratioRound(
-          col("n_ab").cast(DecimalType(38, 0)) * col("n_orders"),
-          col("ca").cast(DecimalType(38, 0)) * col("cb"), 6).as("lift"))
+        Exact.ratioRound(col("n_ab"), col("n_orders"), 6).as("support"),
+        Exact.ratioRound(col("n_ab"), col("ca"), 6).as("confidence"),
+        Exact.ratioRound(
+          col("n_ab").cast(Huge) * col("n_orders"),
+          col("ca").cast(Huge) * col("cb"), 6).as("lift"))
       .orderBy(desc("lift"), col("brand_a"), col("brand_b")).limit(30)
   }
 
@@ -2085,29 +2083,28 @@ object Relational {
     * month) cells, then a priority-sized stats agg — nothing after the
     * first collapse is corpus-sized. */
   def trendForecast(spark: SparkSession, dir: String): DataFrame = {
-    val dec = DecimalType(38, 0)
     val m = Tables.orders(spark, dir)
       .groupBy(col("o_orderpriority").as("pri"),
         date_trunc("month", col("o_orderdate")).as("mon"))
-      .agg(sum(Recon.cents(col("o_totalprice"))).as("y"))
+      .agg(sum(Exact.cents(col("o_totalprice"))).as("y"))
     val fm = m.groupBy("pri").agg(min("mon").as("fm"))
     val s = m.join(broadcast(fm), "pri")
       .withColumn("x", months_between(col("mon"), col("fm")).cast("long"))
       .groupBy("pri").agg(
         count(lit(1)).as("n"), sum("x").as("sx"),
-        sum(col("y").cast(dec)).as("sy"),
-        sum(col("x").cast(dec) * col("y")).as("sxy"),
-        sum(col("x").cast(dec) * col("x")).as("sxx"),
-        sum(col("y").cast(dec) * col("y")).as("syy"),
+        sum(col("y").cast(Huge)).as("sy"),
+        sum(col("x").cast(Huge) * col("y")).as("sxy"),
+        sum(col("x").cast(Huge) * col("x")).as("sxx"),
+        sum(col("y").cast(Huge) * col("y")).as("syy"),
         max("x").as("mx"))
     val d = s.select(col("pri"), col("n"), col("mx"), col("sx"), col("sy"),
       (col("n") * col("sxy") - col("sx") * col("sy")).as("num"),
-      (col("n") * col("sxx") - col("sx").cast(dec) * col("sx")).as("denx"),
+      (col("n") * col("sxx") - col("sx").cast(Huge) * col("sx")).as("denx"),
       (col("n") * col("syy") - col("sy") * col("sy")).as("deny"))
     // slope/intercept/forecast are exact integer ratios once the mean
     // denominators clear — slope = num/(denx·10⁴), intercept =
     // (sy·denx − num·sx)/(10⁴·denx·n), forecast folds slope·(mx+1)
-    // into the same denominator — and round through Recon.ratioRound
+    // into the same denominator — and round through Exact.ratioRound
     // (the int/int tie class). r2 = num²/(denx·deny) deliberately
     // KEEPS the double spelling (RegistrySpec reviewed allowlist, the
     // weekly_spectrum class): num²·2·10⁶ overflows DECIMAL(38,0) ≡
@@ -2116,12 +2113,12 @@ object Relational {
     // double products sit off the reachable decimal lattice
     d.select(col("pri").as("o_orderpriority"), col("n").as("n_months"),
         when(col("denx") > 0,
-          Recon.ratioRound(col("num"), col("denx") * 10000, 6)).as("slope"),
+          Exact.ratioRound(col("num"), col("denx") * 10000, 6)).as("slope"),
         when(col("denx") > 0,
-          Recon.ratioRound(col("sy") * col("denx") - col("num") * col("sx"),
+          Exact.ratioRound(col("sy") * col("denx") - col("num") * col("sx"),
             col("denx") * col("n") * 10000, 2)).as("intercept"),
         when(col("denx") > 0,
-          Recon.ratioRound(
+          Exact.ratioRound(
             col("sy") * col("denx") - col("num") * col("sx")
               + col("num") * col("n") * (col("mx") + 1),
             col("denx") * col("n") * 10000, 2)).as("forecast_next"),
@@ -2157,7 +2154,7 @@ object Relational {
   private[graft] def paretoState(spark: SparkSession,
                                  orders: DataFrame): (DataFrame, Long, Long, Long) = {
     val rev = Checkpoint.truncate(orders.groupBy(col("o_custkey"))
-      .agg(sum(Recon.cents(col("o_totalprice"))).as("c")))
+      .agg(sum(Exact.cents(col("o_totalprice"))).as("c")))
     // min/max/total ride the vals materialization as observe metrics
     // (round-20 — the connectedComponents observe discipline): the old
     // form paid a separate 1-row agg job over the just-checkpointed
@@ -2207,11 +2204,10 @@ object Relational {
     // frame (round-20: the per-threshold head() was a separate job each)
     // — 128-bit products (DECIMAL(38,0) ≡ the oracle's HUGEINT): the
     // long form overflows (ANSI throw) past 4.6e17 micro-units total
-    val dec38 = DecimalType(38, 0)
     def thrCol(b: Long, off: Long, num: Long, den: Long) =
       min(when(col("b") === b &&
-        lit(den) * (lit(off) + col("cumb")).cast(dec38)
-          < lit(num) * lit(t).cast(dec38), col("v")))
+        lit(den) * (lit(off) + col("cumb")).cast(Huge)
+          < lit(num) * lit(t).cast(Huge), col("v")))
     val thr = boundary
       .agg(thrCol(b80, off80, 4L, 5L).as("t80"),
         thrCol(b95, off95, 19L, 20L).as("t95")).head()
@@ -2245,7 +2241,7 @@ object Relational {
     * Monotonicity of cumBefore in v proves the threshold form
     * (v ≥ t80 ⟺ 5·cumBefore(v) < 4T) equal to the oracle's direct
     * window spelling; the spec pins it on a boundary-splitting
-    * fixture. Money in exact 1e-4-unit longs ([[Recon.cents]]). */
+    * fixture. Money in exact 1e-4-unit longs ([[Exact.cents]]). */
   def paretoAbc(spark: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(spark, dir)
     val (rev, t80, t95, t) = paretoMemo((spark, dir), orders)(paretoState(spark, orders))
@@ -2255,8 +2251,8 @@ object Relational {
       .groupBy("abc_class")
       .agg(count(lit(1)).as("n_customers"), sum("c").as("cents"))
       .select(col("abc_class"), col("n_customers"),
-        Recon.ratioRound(col("cents"), lit(10000L), 2).as("revenue"),
-        Recon.ratioRound(col("cents"), lit(t), 6).as("revenue_share"))
+        Exact.ratioRound(col("cents"), lit(10000L), 2).as("revenue"),
+        Exact.ratioRound(col("cents"), lit(t), 6).as("revenue_share"))
       .orderBy("abc_class")
   }
 
@@ -2304,10 +2300,10 @@ object Relational {
       .select(col("threshold_days"), col("n_customers"), col("n_repeaters"),
         col("n_repeat_within"),
         when(col("n_repeaters") > 0,
-          Recon.ratioRound(col("n_repeat_within"), col("n_repeaters"), 6))
+          Exact.ratioRound(col("n_repeat_within"), col("n_repeaters"), 6))
           .as("share_of_repeaters"),
         when(col("n_customers") > 0,
-          Recon.ratioRound(col("n_repeat_within"), col("n_customers"), 6))
+          Exact.ratioRound(col("n_repeat_within"), col("n_customers"), 6))
           .as("share_of_customers"))
       .orderBy("threshold_days")
   }
@@ -2319,7 +2315,7 @@ object Relational {
     * their geometric mean.
     *
     * Exactness: per-(part, month) revenue in exact 1e-4-unit longs
-    * ([[graft.ops.Recon.cents]]) and quantity in 6-dp micro longs;
+    * ([[Exact.cents]]) and quantity in 6-dp micro longs;
     * each index term (a unit-price × quantity cross product — one
     * ratio of exact longs) is an identically-spelled double chain
     * rounded 6dp into micro-unit longs before the EXACT sums (the
@@ -2353,9 +2349,8 @@ object Relational {
       .repartition(col("l_partkey"))
       .groupBy(col("l_partkey").as("p"),
         date_trunc("month", col("l_shipdate")).as("m"))
-      .agg(sum(Recon.cents(col("l_extendedprice"))).as("rev4"),
-        sum(round(round(col("l_quantity"), 6) * 1e6, 0).cast("long"))
-          .as("qty6"))
+      .agg(sum(Exact.cents(col("l_extendedprice"))).as("rev4"),
+        sum(Exact.micros(col("l_quantity"))).as("qty6"))
       // a zero-quantity basket has no unit price — and unguarded it is
       // the IEEE split (Spark x/0 → Inf-then-ANSI-throw, DuckDB → NULL)
       .filter(col("qty6") > 0)
@@ -2395,9 +2390,9 @@ object Relational {
     // and ANSI would throw loudly if the bound logic ever went stale.
     def term(revC: Column, qtyC: Column, wC: Column): Column =
       when(revC < 300000000L && wC < 150000000L,
-        Recon.intDiv(revC * wC * 100 * 2 + qtyC, qtyC * 2))
-      .otherwise(Recon.ratioScaled(
-        revC.cast(DecimalType(38, 0)) * wC * 100, qtyC, 0))
+        Exact.intDiv(revC * wC * 100 * 2 + qtyC, qtyC * 2))
+      .otherwise(Exact.ratioScaled(
+        revC.cast(Huge) * wC * 100, qtyC, 0))
     // lden and pnum are algebraic identities — ratioScaled(rev·q·100, q)
     // ≡ rev·100 exactly (the half-away round of an exact integer is
     // itself), so they are plain long multiplies, not 128-bit decimal
@@ -2417,10 +2412,10 @@ object Relational {
         sum(col("pnum")).as("pnum"), sum(col("pden")).as("pden"))
       .select(col("month"), col("n_parts"),
         // the two index ratios are exact micro-long quotients
-        // (Recon.ratioRound); fisher keeps the double sqrt chain —
+        // (Exact.ratioRound); fisher keeps the double sqrt chain —
         // the geometric mean leaves the dyadic lattice
-        Recon.ratioRound(col("lnum"), col("lden"), 6).as("laspeyres"),
-        Recon.ratioRound(col("pnum"), col("pden"), 6).as("paasche"),
+        Exact.ratioRound(col("lnum"), col("lden"), 6).as("laspeyres"),
+        Exact.ratioRound(col("pnum"), col("pden"), 6).as("paasche"),
         round(sqrt(lr * pr), 6).as("fisher"))
       .orderBy("month")
   }
@@ -2431,7 +2426,7 @@ object Relational {
     * the standard LTV artifact every growth dashboard plots.
     *
     * Exactness: revenue in exact 1e-4-unit longs
-    * ([[graft.ops.Recon.cents]]); cohort ages are exact month diffs of
+    * ([[Exact.cents]]); cohort ages are exact month diffs of
     * month-truncated dates; activity counts are exact (the per-customer
     * month frame is already (customer, month)-distinct); the two
     * presentation divisions are identically spelled. The cumulative
@@ -2447,7 +2442,7 @@ object Relational {
     val om = Tables.orders(spark, dir)
       .groupBy(col("o_custkey").as("c"),
         date_trunc("month", col("o_orderdate")).as("m"))
-      .agg(sum(Recon.cents(col("o_totalprice"))).as("rev4"))
+      .agg(sum(Exact.cents(col("o_totalprice"))).as("rev4"))
     val coh = om.groupBy("c").agg(min(col("m")).as("cm"))
     val cs = coh.groupBy("cm").agg(count(lit(1)).as("cohort_size"))
     val agg = om.join(coh, "c")
@@ -2462,9 +2457,9 @@ object Relational {
       .join(broadcast(cs), "cm")
       .select(col("cm").as("cohort_month"), col("age").as("age_months"),
         col("n_active"), col("cohort_size"),
-        Recon.ratioRound(col("rev4"), lit(10000L), 2).as("revenue"),
-        Recon.ratioRound(col("crev4"), lit(10000L), 2).as("cum_revenue"),
-        Recon.ratioRound(col("crev4"), col("cohort_size") * lit(10000L), 6)
+        Exact.ratioRound(col("rev4"), lit(10000L), 2).as("revenue"),
+        Exact.ratioRound(col("crev4"), lit(10000L), 2).as("cum_revenue"),
+        Exact.ratioRound(col("crev4"), col("cohort_size") * lit(10000L), 6)
           .as("cum_ltv_per_customer"))
       .orderBy("cohort_month", "age_months")
   }
@@ -2476,7 +2471,7 @@ object Relational {
     *
     * Exactness: ages are exact day diffs against a 1-row as-of
     * broadcast; bucket edges are integer comparisons; revenue in exact
-    * 1e-4-unit longs ([[graft.ops.Recon.cents]]); the share is one
+    * 1e-4-unit longs ([[Exact.cents]]); the share is one
     * identically-spelled double division.
     *
     * 100 TB posture: one scan → map-side CASE bucketing → one
@@ -2490,7 +2485,7 @@ object Relational {
       .crossJoin(broadcast(ad0))
       .select(col("o_orderstatus").as("st"),
         datediff(col("ad"), col("o_orderdate")).as("age"),
-        Recon.cents(col("o_totalprice")).as("rev4"))
+        Exact.cents(col("o_totalprice")).as("rev4"))
       .withColumn("bucket",
         when(col("age") <= 30, "00-030d")
           .when(col("age") <= 90, "031-090d")
@@ -2501,8 +2496,8 @@ object Relational {
     val tot = agg.agg(sum(col("rev4")).as("t"))
     agg.crossJoin(broadcast(tot))
       .select(col("st").as("o_orderstatus"), col("bucket"), col("n_orders"),
-        Recon.ratioRound(col("rev4"), lit(10000L), 2).as("open_revenue"),
-        Recon.ratioRound(col("rev4"), col("t"), 6).as("revenue_share"))
+        Exact.ratioRound(col("rev4"), lit(10000L), 2).as("open_revenue"),
+        Exact.ratioRound(col("rev4"), col("t"), 6).as("revenue_share"))
       .orderBy("o_orderstatus", "bucket")
   }
 
@@ -2521,19 +2516,18 @@ object Relational {
     * 100 TB posture: one map-combined monthly collapse; everything
     * after is months-sized with a 1-row broadcast total. */
   def seasonalityIndex(spark: SparkSession, dir: String): DataFrame = {
-    val dec = DecimalType(38, 0)
     val mt = Tables.orders(spark, dir)
       .groupBy(date_trunc("month", col("o_orderdate")).as("m"))
-      .agg(sum(Recon.cents(col("o_totalprice"))).as("rev4"))
+      .agg(sum(Exact.cents(col("o_totalprice"))).as("rev4"))
     val tot = mt.agg(sum(col("rev4")).as("tr"), count(lit(1)).as("nm"))
     mt.groupBy(month(col("m")).as("moy"))
       .agg(count(lit(1)).as("n_months"), sum(col("rev4")).as("rev4"))
       .crossJoin(broadcast(tot))
       .select(col("moy").as("month_of_year"), col("n_months"),
-        Recon.ratioRound(col("rev4"), col("n_months") * lit(10000L), 2)
+        Exact.ratioRound(col("rev4"), col("n_months") * lit(10000L), 2)
           .as("avg_monthly_revenue"),
-        Recon.ratioRound(col("rev4").cast(dec) * col("nm"),
-          col("tr").cast(dec) * col("n_months"), 6)
+        Exact.ratioRound(col("rev4").cast(Huge) * col("nm"),
+          col("tr").cast(Huge) * col("n_months"), 6)
           .as("seasonal_index"))
       .orderBy("month_of_year")
   }
@@ -2556,7 +2550,6 @@ object Relational {
     * the 2-row period totals broadcast; the before/after full outer
     * join keys on customer; the matrix is ≤ 4×4 rows. */
   def spendMigration(spark: SparkSession, dir: String): DataFrame = {
-    val dec = DecimalType(38, 0)
     val o = Tables.orders(spark, dir)
     val b = o.agg(min(date_trunc("DAY", col("o_orderdate"))).as("d0"),
       max(date_trunc("DAY", col("o_orderdate"))).as("d1"))
@@ -2566,14 +2559,14 @@ object Relational {
       .groupBy(col("o_custkey").as("k"),
         (date_trunc("DAY", col("o_orderdate")).cast("date") < col("c"))
           .as("pre"))
-      .agg(sum(Recon.cents(col("o_totalprice"))).as("rev4"))
+      .agg(sum(Exact.cents(col("o_totalprice"))).as("rev4"))
     val pt = cp.groupBy("pre")
       .agg(sum(col("rev4")).as("ts"), count(lit(1)).as("nc"))
     val cls = cp.join(broadcast(pt), "pre")
       .select(col("k"), col("pre"),
-        when(lit(2) * col("rev4").cast(dec) * col("nc") < col("ts"), "low")
-          .when(lit(2) * col("rev4").cast(dec) * col("nc")
-            > lit(3) * col("ts").cast(dec), "high")
+        when(lit(2) * col("rev4").cast(Huge) * col("nc") < col("ts"), "low")
+          .when(lit(2) * col("rev4").cast(Huge) * col("nc")
+            > lit(3) * col("ts").cast(Huge), "high")
           .otherwise("mid").as("band"))
     // before/after fold as ONE conditional groupBy(k) — the q21 lesson
     // (round-20): each (k, pre) key holds exactly one row of cls, so
@@ -2591,7 +2584,7 @@ object Relational {
     val tot = m.agg(sum(col("n_customers")).as("t"))
     m.crossJoin(broadcast(tot))
       .select(col("band_before"), col("band_after"), col("n_customers"),
-        Recon.ratioRound(col("n_customers"), col("t"), 6).as("share"))
+        Exact.ratioRound(col("n_customers"), col("t"), 6).as("share"))
       .orderBy("band_before", "band_after")
   }
 
@@ -2618,7 +2611,6 @@ object Relational {
     * a crosstab is categories × categories), and the windows run over
     * the ≤ r·c-cell frame partitioned by status / priority. */
   def crosstabChisq(spark: SparkSession, dir: String): DataFrame = {
-    val dec = DecimalType(38, 0)
     val cells = Tables.orders(spark, dir)
       .groupBy(col("o_orderstatus").as("st"), col("o_orderpriority").as("pr"))
       .agg(count(lit(1)).as("o"))
@@ -2628,16 +2620,16 @@ object Relational {
       .withColumn("rt", sum("o").over(Window.partitionBy("st")))
       .withColumn("ct", sum("o").over(Window.partitionBy("pr")))
       .crossJoin(broadcast(tot))
-    val devC = col("o").cast(dec) * col("n") - col("rt").cast(dec) * col("ct")
-    // both micro terms are exact integer ratios — Recon.ratioScaled
+    val devC = col("o").cast(Huge) * col("n") - col("rt").cast(Huge) * col("ct")
+    // both micro terms are exact integer ratios — Exact.ratioScaled
     // (the int/int tie class): e = rt·ct/n, contrib = dev²/(n·rt·ct);
     // envelope: dev²·2·10⁶ inside DECIMAL(38,0) to ~10¹⁵ orders
     val t = m
       .withColumn("e_micro",
-        Recon.ratioScaled(col("rt").cast(dec) * col("ct"), col("n"), 6))
+        Exact.ratioScaled(col("rt").cast(Huge) * col("ct"), col("n"), 6))
       .withColumn("contrib_micro",
-        Recon.ratioScaled(devC * devC,
-          col("n").cast(dec) * col("rt") * col("ct"), 6))
+        Exact.ratioScaled(devC * devC,
+          col("n").cast(Huge) * col("rt") * col("ct"), 6))
     val s = t.agg(sum(col("contrib_micro")).as("chi2_micro"))
     t.crossJoin(broadcast(s))
       .select(col("st").as("o_orderstatus"), col("pr").as("o_orderpriority"),

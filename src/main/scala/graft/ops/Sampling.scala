@@ -3,6 +3,7 @@ package graft.ops
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Exact.Huge
 
 /** Dataset-assembly sampling for LLM-training-data pipelines (task north
   * star): stratified subsampling and weighted source mixing.
@@ -197,22 +198,20 @@ object Sampling {
     * 100 TB posture: one map-combined per-source aggregate; everything
     * after is sources-sized with a 1-row broadcast total. */
   def temperatureMix(spark: SparkSession, dir: String): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val sc = Tables.documents(spark, dir)
       .groupBy("source")
       .agg(sum(size(split(col("text"), " ")).cast("long")).as("n_tokens"),
         count(lit(1)).as("n_docs"))
     val r = sc.withColumn("rs",
-      round(round(sqrt(col("n_tokens").cast("double")), 6) * 1e6, 0)
-        .cast("long"))
+      Exact.micros(sqrt(col("n_tokens").cast("double"))))
     val tot = r.agg(sum(col("rs")).as("trs"), sum(col("n_tokens")).as("nt"))
     r.crossJoin(broadcast(tot))
       .select(col("source"), col("n_tokens"), col("n_docs"),
-        graft.ops.Recon.ratioRound(col("rs"), col("trs"), 6).as("weight"),
-        graft.ops.Recon.ratioRound(col("n_tokens"), col("nt"), 6)
+        Exact.ratioRound(col("rs"), col("trs"), 6).as("weight"),
+        Exact.ratioRound(col("n_tokens"), col("nt"), 6)
           .as("natural_share"),
-        graft.ops.Recon.ratioRound(col("rs").cast(dec) * col("nt"),
-          col("trs").cast(dec) * col("n_tokens"), 6).as("boost"))
+        Exact.ratioRound(col("rs").cast(Huge) * col("nt"),
+          col("trs").cast(Huge) * col("n_tokens"), 6).as("boost"))
       .orderBy("source")
   }
 }

@@ -4,6 +4,7 @@ import graft.{Checkpoint, Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.Huge
 
 /** Text-analysis + deduplication block for LLM-training-data pipelines
   * (SURVEY.md §2.9 + task north star): exact dedup, n-gram Jaccard,
@@ -19,8 +20,6 @@ import org.apache.spark.sql.functions._
   * the per-bucket cap ([[Text.MaxBucketDocs]]) handle that at scale.
   */
 object Text {
-
-  private val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
@@ -38,7 +37,7 @@ object Text {
     * fk_grade are single identically-spelled double expressions (their
     * non-dyadic literal coefficients keep them off the integer
     * lattice), while lix — a pure integer ratio — rounds through
-    * Recon.ratioRound (round 16); all three are NULL
+    * Exact.ratioRound (round 16); all three are NULL
     * for EMPTY documents on both engines — and "empty" is tested as
     * length(text) = 0, not w = 0: split("", " ") yields [""] so the
     * token count is never zero under the whitespace-token contract
@@ -72,14 +71,14 @@ object Text {
           round(lit(0.39) * wps + lit(11.8) * spw - lit(15.59), 6)).as("fk_grade"),
         // lix = w/s + 100·lw/w = (w² + 100·lw·s)/(s·w) — an exact
         // integer ratio, so the presentation round goes through
-        // Recon.ratioRound (the int/int tie class); fre/fk_grade keep
+        // Exact.ratioRound (the int/int tie class); fre/fk_grade keep
         // the double spelling: their non-dyadic literal coefficients
         // (206.835, 1.015, …) take the value off the integer lattice
         when(col("nz"),
-          Recon.ratioRound(
-            col("w").cast(dec38) * col("w")
-              + lit(100) * col("lw").cast(dec38) * col("s"),
-            col("s").cast(dec38) * col("w"), 6)).as("lix"))
+          Exact.ratioRound(
+            col("w").cast(Huge) * col("w")
+              + lit(100) * col("lw").cast(Huge) * col("s"),
+            col("s").cast(Huge) * col("w"), 6)).as("lix"))
       .orderBy("doc_id").limit(1000)
   }
 
@@ -169,7 +168,7 @@ object Text {
       .crossJoin(broadcast(total))
       .select(col("fam_size"), col("n_families"),
         (col("fam_size") * col("n_families")).as("n_docs"),
-        Recon.ratioRound(col("fam_size") * col("n_families"),
+        Exact.ratioRound(col("fam_size") * col("n_families"),
           col("n_total"), 6).as("corpus_share"))
       .orderBy("fam_size")
   }
@@ -185,7 +184,7 @@ object Text {
     * [[tokenStats]].
     *
     * Exactness: every moment is an integer (counts, Σ nᵢ(nᵢ−1)), both
-    * ratios present through [[Recon.ratioRound]]'s half-away integer
+    * ratios present through [[Exact.ratioRound]]'s half-away integer
     * arithmetic; the N(N−1) denominators build in DECIMAL(38,0)
     * BEFORE the multiply (a per-source token count squared passes 2⁶³
     * around 3×10⁹ tokens — reachable at 100 TB). Guards: D needs
@@ -202,14 +201,14 @@ object Text {
     val s = tc.groupBy("source").agg(
       sum(col("n")).as("n_tokens"),
       count(lit(1)).as("n_types"),
-      sum(col("n").cast(dec38) * (col("n") - 1)).as("rep0"))
-    val nn = col("n_tokens").cast(dec38) * (col("n_tokens").cast(dec38) - 1)
+      sum(col("n").cast(Huge) * (col("n") - 1)).as("rep0"))
+    val nn = col("n_tokens").cast(Huge) * (col("n_tokens").cast(Huge) - 1)
     s.select(col("source"), col("n_tokens"), col("n_types"),
         col("rep0").cast("long").as("repeat_pairs"),
         when(col("n_tokens") > 1,
-          Recon.ratioRound(col("rep0"), nn, 6)).as("simpson"),
+          Exact.ratioRound(col("rep0"), nn, 6)).as("simpson"),
         when(col("rep0") > 0,
-          Recon.ratioRound(nn, col("rep0"), 6)).as("inv_simpson"))
+          Exact.ratioRound(nn, col("rep0"), 6)).as("inv_simpson"))
       .orderBy("source")
   }
 
@@ -222,7 +221,7 @@ object Text {
     * the non-BMP fuzz vector exercises the agreement), classes are
     * negated ASCII character classes both regex dialects treat
     * identically, and every share is an integer ratio through
-    * [[Recon.ratioRound]].
+    * [[Exact.ratioRound]].
     *
     * 100 TB posture: row-local regex projections over the scan (four
     * bounded passes per document), one source-keyed map-combined
@@ -244,12 +243,12 @@ object Text {
       .select(col("source"), col("n_docs"), col("chars"), col("letters"),
         col("digits"), col("spaces"), col("other"),
         when(col("chars") > 0,
-          Recon.ratioRound(col("letters"), col("chars"), 6)).as("letter_share"),
+          Exact.ratioRound(col("letters"), col("chars"), 6)).as("letter_share"),
         when(col("chars") > 0,
-          Recon.ratioRound(col("digits"), col("chars"), 6)).as("digit_share"),
+          Exact.ratioRound(col("digits"), col("chars"), 6)).as("digit_share"),
         when(col("chars") > 0,
-          Recon.ratioRound(col("other"), col("chars"), 6)).as("other_share"),
-        Recon.ratioRound(col("chars"), col("n_docs"), 2).as("chars_per_doc"))
+          Exact.ratioRound(col("other"), col("chars"), 6)).as("other_share"),
+        Exact.ratioRound(col("chars"), col("n_docs"), 2).as("chars_per_doc"))
       .orderBy("source")
   }
 
@@ -262,7 +261,7 @@ object Text {
     * [[tokenStats]].
     *
     * Exactness: counts are exact longs, each coverage is one
-    * [[Recon.ratioRound]] integer ratio; the top-N cut sorts by
+    * [[Exact.ratioRound]] integer ratio; the top-N cut sorts by
     * (count, token) so ties cannot reorder between engines.
     *
     * 100 TB posture: one corpus-sized token collapse (map-side
@@ -286,7 +285,7 @@ object Text {
       .agg(count(lit(1)).as("n_types_used"), sum(col("n")).as("covered"))
       .crossJoin(broadcast(tot))
       .select(col("top_n"), col("n_types_used"), col("covered"),
-        Recon.ratioRound(col("covered"), col("total"), 6).as("coverage"))
+        Exact.ratioRound(col("covered"), col("total"), 6).as("coverage"))
       .orderBy("top_n")
   }
 
@@ -351,12 +350,12 @@ object Text {
     import graft.functions.NgramHashes.ngramHashes
     val w = size(split(col("text"), " ")).cast("long")
     // threshold metrics round via exact integer half-away arithmetic
-    // (Recon.ratioRound — the int/int tie class): a 4-dp tie on the
+    // (Exact.ratioRound — the int/int tie class): a 4-dp tie on the
     // 12.0/0.5 boundary would otherwise flip the verdict between
     // engines; stage 1 (w < 32) still short-circuits ahead of the
     // w − 1 denominator
-    val cpt = Recon.ratioRound(length(col("text")).cast("long"), w, 4)
-    val dup2 = Recon.ratioRound(
+    val cpt = Exact.ratioRound(length(col("text")).cast("long"), w, 4)
+    val dup2 = Exact.ratioRound(
       (w - 1) - size(ngramHashes(col("text"), 2)), w - 1, 4)
     val ent = round(
       graft.functions.TokenEntropy.tokenEntropy(col("text")).getField("entropy"), 4)
@@ -501,7 +500,7 @@ object Text {
   def textRepetition(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.NgramHashes.ngramHashes
     def dup(d: Column, t: Column): Column =
-      when(t > 0, Recon.ratioRound(t - d, t, 4))
+      when(t > 0, Exact.ratioRound(t - d, t, 4))
     docs(spark, dir)
       .select(col("doc_id"),
         (size(split(col("text"), " ")) - 1).cast("long").as("raw2"),
@@ -627,10 +626,10 @@ object Text {
                        maxDocs: Long = MaxJaccardDocs): DataFrame =
     saltedSourcePairs(spark, dir, "dedupContainment", maxDocs)
       .select(col("a_id"), col("b_id"), col("icnt").cast("long").as("n_common"),
-        Recon.ratioRound(col("icnt"), col("alen"), 6).as("cont_a_in_b"),
-        Recon.ratioRound(col("icnt"), col("blen"), 6).as("cont_b_in_a"),
-        greatest(Recon.ratioRound(col("icnt"), col("alen"), 6),
-          Recon.ratioRound(col("icnt"), col("blen"), 6)).as("max_cont"))
+        Exact.ratioRound(col("icnt"), col("alen"), 6).as("cont_a_in_b"),
+        Exact.ratioRound(col("icnt"), col("blen"), 6).as("cont_b_in_a"),
+        greatest(Exact.ratioRound(col("icnt"), col("alen"), 6),
+          Exact.ratioRound(col("icnt"), col("blen"), 6)).as("max_cont"))
       .orderBy(col("max_cont").desc, col("a_id"), col("b_id"))
       .limit(20)
 
@@ -719,7 +718,7 @@ object Text {
       .join(d.select("doc_id", "len"), "doc_id")
       .select(col("doc_id"), col("n_pos").as("n_dup_pos"), col("n_spans"),
         col("span_chars").as("dup_chars"),
-        Recon.ratioRound(col("span_chars"), col("len"), 6).as("dup_ratio"))
+        Exact.ratioRound(col("span_chars"), col("len"), 6).as("dup_ratio"))
       .orderBy(desc("dup_chars"), col("doc_id")).limit(100)
   }
 
@@ -794,7 +793,7 @@ object Text {
       .join(d.select("doc_id", "len"), "doc_id")
       .select(col("doc_id"), col("n_pos").as("n_hit_pos"), col("n_spans"),
         col("span_chars").as("contaminated_chars"),
-        Recon.ratioRound(col("span_chars"), col("len"), 6)
+        Exact.ratioRound(col("span_chars"), col("len"), 6)
           .as("contamination"))
       .orderBy(desc("contaminated_chars"), col("doc_id")).limit(100)
   }
@@ -988,9 +987,8 @@ object Text {
       .select(col("doc_id"),
         array_distinct(transform(split(col("text"), " "), t => xxhash64(t)))
           .as("toks"))
-    def mic(c: Column) = round(round(c, 6) * 1e6, 0).cast("long")
     // exact jaccard and |est − exact| are RATIONALS (int/int and
-    // int/(32·int)) — their 6-dp rounds go through Recon.ratioRound's
+    // int/(32·int)) — their 6-dp rounds go through Exact.ratioRound's
     // exact integer half-away arithmetic (the supplier_scorecard tie
     // class: a /2^k-denominatored rational ties exactly at the 6-dp
     // boundary); est = k/32 has ≤ 5 decimal digits, so its round is
@@ -1004,21 +1002,21 @@ object Text {
         (size(col("ta")) + size(col("tb")) - col("icnt")).cast("long"))
       .withColumn("k32", (col("est_jaccard") * 32).cast("long"))
       .select(floor(col("est_jaccard") * 10).cast("int").as("est_decile"),
-        mic(col("est_jaccard")).as("e6"),
-        round(Recon.ratioRound(col("icnt"), col("den"), 6) * 1e6, 0)
+        Exact.micros(col("est_jaccard")).as("e6"),
+        round(Exact.ratioRound(col("icnt"), col("den"), 6) * 1e6, 0)
           .cast("long").as("x6"),
-        round(Recon.ratioRound(
+        round(Exact.ratioRound(
             abs(col("k32") * col("den") - col("icnt") * 32),
             col("den") * 32, 6) * 1e6, 0)
           .cast("long").as("d6"))
       .groupBy("est_decile")
       .agg(count(lit(1)).as("n_pairs"),
-        Recon.ratioRound(sum(col("e6")),
-          Recon.micro(count(lit(1))), 6).as("mean_est"),
-        Recon.ratioRound(sum(col("x6")),
-          Recon.micro(count(lit(1))), 6).as("mean_exact"),
-        Recon.ratioRound(sum(col("d6")),
-          Recon.micro(count(lit(1))), 6).as("mean_abs_err"))
+        Exact.ratioRound(sum(col("e6")),
+          Exact.micro(count(lit(1))), 6).as("mean_est"),
+        Exact.ratioRound(sum(col("x6")),
+          Exact.micro(count(lit(1))), 6).as("mean_exact"),
+        Exact.ratioRound(sum(col("d6")),
+          Exact.micro(count(lit(1))), 6).as("mean_abs_err"))
       .orderBy("est_decile")
   }
 
@@ -1302,13 +1300,13 @@ object Text {
       .crossJoin(broadcast(tot))
       .select(col("lang"), col("n_true"), col("n_pred"), col("tp"),
         when(col("n_pred") > 0,
-          Recon.ratioRound(col("tp"), col("n_pred"), 6)).as("precision"),
+          Exact.ratioRound(col("tp"), col("n_pred"), 6)).as("precision"),
         when(col("n_true") > 0,
-          Recon.ratioRound(col("tp"), col("n_true"), 6)).as("recall"),
+          Exact.ratioRound(col("tp"), col("n_true"), 6)).as("recall"),
         when(col("n_true") + col("n_pred") > 0,
-          Recon.ratioRound(col("tp") * 2,
+          Exact.ratioRound(col("tp") * 2,
             col("n_true") + col("n_pred"), 6)).as("f1"),
-        Recon.ratioRound(col("tpAll"), col("nn"), 6).as("micro_accuracy"))
+        Exact.ratioRound(col("tpAll"), col("nn"), 6).as("micro_accuracy"))
       .orderBy("lang")
   }
 
@@ -1540,7 +1538,7 @@ object Text {
         count(lit(1)).over(Window.partitionBy("doc_id", "grp")))
       .filter(col("plen") <= RakeMaxLen)
     val ws = keep.groupBy("tok")
-      .agg(Recon.ratioScaled(sum(col("plen")), count(lit(1)), 6)
+      .agg(Exact.ratioScaled(sum(col("plen")), count(lit(1)), 6)
         .as("score_micro"))
     keep.join(ws, "tok")
       .groupBy(col("doc_id"), col("grp"))
@@ -1590,7 +1588,7 @@ object Text {
     val w = Window.partitionBy(lit(0)).orderBy(col("n_docs").desc, col("gram"))
     top.crossJoin(broadcast(total))
       .select(row_number().over(w).as("id"), col("gram"), col("n_docs"),
-        Recon.ratioRound(col("n_docs"), col("nd"), 6).as("doc_share"))
+        Exact.ratioRound(col("n_docs"), col("nd"), 6).as("doc_share"))
       .orderBy("id")
   }
 
@@ -1630,8 +1628,8 @@ object Text {
       .agg(count(lit(1)).as("n_types"),
         sum("cnt").as("n_tokens"),
         count_if(col("cnt") === 1).as("n_hapax"),
-        Recon.ratioRound(count(lit(1)), sum("cnt"), 6).as("ttr"),
-        Recon.ratioRound(count_if(col("cnt") === 1), count(lit(1)), 6)
+        Exact.ratioRound(count(lit(1)), sum("cnt"), 6).as("ttr"),
+        Exact.ratioRound(count_if(col("cnt") === 1), count(lit(1)), 6)
           .as("hapax_share"))
       .orderBy("lang")
   }
@@ -1675,12 +1673,12 @@ object Text {
       .withColumn("nd", count(lit(1)).over(Window.partitionBy("source")))
       .withColumn("decile", expr("(rn - 1) * 10 div nd"))
       .withColumn("nov6",
-        Recon.ratioRound(col("n_new"), col("n_types"), 6))
+        Exact.ratioRound(col("n_new"), col("n_types"), 6))
     ranked.groupBy("source", "decile")
       .agg(count(lit(1)).as("n_docs"),
         sum("n_new").as("new_types"),
-        Recon.ratioRound(sum(round(col("nov6") * 1e6, 0).cast("long")),
-          Recon.micro(count(lit(1))), 6).as("mean_novelty"))
+        Exact.ratioRound(sum(round(col("nov6") * 1e6, 0).cast("long")),
+          Exact.micro(count(lit(1))), 6).as("mean_novelty"))
       .orderBy("source", "decile")
   }
 
@@ -1708,7 +1706,7 @@ object Text {
       .join(broadcast(sizes.select(col("source").as("src_b"),
         col("n_types").as("nb"))), "src_b")
       .select(col("src_a"), col("src_b"), col("n_shared"),
-        Recon.ratioRound(col("n_shared"),
+        Exact.ratioRound(col("n_shared"),
           col("na") + col("nb") - col("n_shared"), 6).as("vocab_jaccard"))
       .orderBy("src_a", "src_b")
   }
@@ -1866,7 +1864,6 @@ object Text {
     * Spark's ANSI sum throws rather than wraps. [[jsProbeAgg]] is the
     * verdict-proof fallback: identical rp/rq summed BOTH ways. */
   def jsDivergence(spark: SparkSession, dir: String): DataFrame = {
-    val dec = dec38
     val g = jsLogFrame(spark, dir)
       .withColumn("rp", col("cs") * (lit(1000000L) - col("lp6u")))
       .withColumn("rq", col("cg") * (lit(1000000L) - col("lq6u")))
@@ -1878,13 +1875,13 @@ object Text {
         sum(col("rq")).as("srq"),
         sum(col("cg")).as("cgp"))
     g.select(col("source"), col("n_tokens"), col("vocab"),
-        (Recon.ratioScaled(
-            col("n_tokens").cast(dec) * (col("ng") + col("cgp")) * 1000000L
-              - (col("ng").cast(dec) * col("srp")
-                 + col("n_tokens").cast(dec) * col("srq")),
-            col("n_tokens").cast(dec) * col("ng") * 2, 0)
-          + Recon.ratioScaled(
-            (col("ng") - col("cgp")).cast(dec), col("ng").cast(dec) * 2, 6))
+        (Exact.ratioScaled(
+            col("n_tokens").cast(Huge) * (col("ng") + col("cgp")) * 1000000L
+              - (col("ng").cast(Huge) * col("srp")
+                 + col("n_tokens").cast(Huge) * col("srq")),
+            col("n_tokens").cast(Huge) * col("ng") * 2, 0)
+          + Exact.ratioScaled(
+            (col("ng") - col("cgp")).cast(Huge), col("ng").cast(Huge) * 2, 6))
           .cast("long").as("jsd_micro"))
       .orderBy("source")
   }
@@ -1918,7 +1915,6 @@ object Text {
     * order-free. */
   private def jsLogFrame(spark: SparkSession, dir: String,
                          keepDiag: Boolean = false): DataFrame = {
-    val dec = dec38
     val toks = docs(spark, dir)
       .select(col("source"), explode(split(lower(col("text")), " ")).as("tok"))
       .filter(col("tok") =!= "")
@@ -1950,9 +1946,9 @@ object Text {
       sc.join(gc, "tok").join(broadcast(na), "source").crossJoin(broadcast(ng))
     }
     val base0 = joined.withColumns(Map(
-      "den" -> (col("cs").cast(dec) * col("ng") + col("cg").cast(dec) * col("na")),
-      "np" -> (col("cs").cast(dec) * col("ng") * 2),
-      "nq" -> (col("cg").cast(dec) * col("na") * 2)))
+      "den" -> (col("cs").cast(Huge) * col("ng") + col("cg").cast(Huge) * col("na")),
+      "np" -> (col("cs").cast(Huge) * col("ng") * 2),
+      "nq" -> (col("cg").cast(Huge) * col("na") * 2)))
     val base = base0
     withLog2Micro(
       withLog2Micro(base, "lp", col("np"), col("den"), keepDiag),
@@ -2016,14 +2012,13 @@ object Text {
     *    case round 18's probes could not exclude) cannot cancel here.
     * Verify-only (diagnostic, not a perf surface). */
   def jsProbeTerm(spark: SparkSession, dir: String): DataFrame = {
-    val dec = dec38
     jsLogFrame(spark, dir)
       .withColumn("w",
         conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long") % 1009)
-      .withColumn("t6u", Recon.ratioScaled(
-        col("cs").cast(dec) * col("lp6u") * col("ng")
-          + col("cg").cast(dec) * col("lq6u") * col("na"),
-        col("na").cast(dec) * col("ng") * 2, 0))
+      .withColumn("t6u", Exact.ratioScaled(
+        col("cs").cast(Huge) * col("lp6u") * col("ng")
+          + col("cg").cast(Huge) * col("lq6u") * col("na"),
+        col("na").cast(Huge) * col("ng") * 2, 0))
       .groupBy("source")
       .agg(count(lit(1)).as("vocab"),
         sum(col("t6u")).as("st6u"),
@@ -2049,16 +2044,15 @@ object Text {
     * with no further round needed. Verify-only (diagnostic, not a
     * perf surface — benching it would re-time the shared frame). */
   def jsProbeAgg(spark: SparkSession, dir: String): DataFrame = {
-    val dec = dec38
     jsLogFrame(spark, dir)
       .withColumn("rp", col("cs") * (lit(1000000L) - col("lp6u")))
       .withColumn("rq", col("cg") * (lit(1000000L) - col("lq6u")))
       .groupBy("source")
       .agg(count(lit(1)).as("vocab"),
         sum(col("rp")).as("srp_big"),
-        sum(col("rp").cast(dec)).cast("long").as("srp_dec"),
+        sum(col("rp").cast(Huge)).cast("long").as("srp_dec"),
         sum(col("rq")).as("srq_big"),
-        sum(col("rq").cast(dec)).cast("long").as("srq_dec"))
+        sum(col("rq").cast(Huge)).cast("long").as("srq_dec"))
       .orderBy("source")
   }
 
@@ -2066,7 +2060,7 @@ object Text {
     * the only stage of [[jsDivergence]] no probe covered (the round-20
     * verdict's endgame prescription): `probe_agg` proved the groupBy
     * sums green on BOTH sum domains while the op stayed red, so the
-    * residual fault lives strictly in the combine — the dec38/HUGEINT
+    * residual fault lives strictly in the combine — the HUGEINT (`Exact.Huge`)
     * products, the A−B tail, the two ratioScaled half-away divisions
     * or the final addition. This probe dumps every intermediate of
     * that combine PRE-rounding, stage for stage, each as an exact
@@ -2090,7 +2084,6 @@ object Text {
     * (diagnostic, not a perf surface — benching it would re-time
     * [[jsDivergence]]'s frame). */
   def jsProbeCombine(spark: SparkSession, dir: String): DataFrame = {
-    val dec = dec38
     val g = jsLogFrame(spark, dir)
       .withColumn("rp", col("cs") * (lit(1000000L) - col("lp6u")))
       .withColumn("rq", col("cg") * (lit(1000000L) - col("lq6u")))
@@ -2101,12 +2094,12 @@ object Text {
         sum(col("rp")).as("srp"),
         sum(col("rq")).as("srq"),
         sum(col("cg")).as("cgp"))
-    val aa = col("n_tokens").cast(dec) * (col("ng") + col("cgp")) * 1000000L
-    val bb = col("ng").cast(dec) * col("srp") + col("n_tokens").cast(dec) * col("srq")
-    val tden = col("n_tokens").cast(dec) * col("ng") * 2
-    val pres = Recon.ratioScaled(aa - bb, tden, 0)
-    val absm = Recon.ratioScaled((col("ng") - col("cgp")).cast(dec),
-      col("ng").cast(dec) * 2, 6)
+    val aa = col("n_tokens").cast(Huge) * (col("ng") + col("cgp")) * 1000000L
+    val bb = col("ng").cast(Huge) * col("srp") + col("n_tokens").cast(Huge) * col("srq")
+    val tden = col("n_tokens").cast(Huge) * col("ng") * 2
+    val pres = Exact.ratioScaled(aa - bb, tden, 0)
+    val absm = Exact.ratioScaled((col("ng") - col("cgp")).cast(Huge),
+      col("ng").cast(Huge) * 2, 6)
     g.select(col("source"), col("n_tokens"), col("vocab"), col("ng"),
         col("cgp"), col("srp"), col("srq"),
         aa.cast("long").as("aa"), bb.cast("long").as("bb"),
@@ -2221,15 +2214,15 @@ object Text {
         // ulp of its integer — parity-safe; round is monotone, so
         // min/max of mb ≡ mb of the min/max doc); every 4-dp
         // presentation then goes through exact integer half-away
-        // arithmetic (Recon.ratioRound — the int/int tie class)
+        // arithmetic (Exact.ratioRound — the int/int tie class)
         round(-(col("s.sm") / 1e6) / col("s.n") * 1e6, 0).cast("long")
           .as("mb"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
-        Recon.ratioRound(sum(col("mb")),
-          Recon.micro(count(lit(1))), 4).as("avg_bits"),
-        Recon.ratioRound(min(col("mb")), lit(1000000L), 4).as("min_bits"),
-        Recon.ratioRound(max(col("mb")), lit(1000000L), 4).as("max_bits"))
+        Exact.ratioRound(sum(col("mb")),
+          Exact.micro(count(lit(1))), 4).as("avg_bits"),
+        Exact.ratioRound(min(col("mb")), lit(1000000L), 4).as("min_bits"),
+        Exact.ratioRound(max(col("mb")), lit(1000000L), 4).as("max_bits"))
       .orderBy("source")
 
   /** Zipf power-law fit over the token rank–frequency curve — the other
@@ -2433,7 +2426,7 @@ object Text {
         sum(col("sub")).as("subword_tokens"))
       .select(col("source"), col("n_docs"), col("ws_tokens"),
         col("symbols"), col("subword_tokens"),
-        Recon.ratioRound(col("subword_tokens"), col("symbols"), 6)
+        Exact.ratioRound(col("subword_tokens"), col("symbols"), 6)
           .as("subword_per_symbol"))
       .orderBy("source")
   }

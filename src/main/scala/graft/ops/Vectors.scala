@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import Exact.Huge
 
 /** Vector / embedding block (SURVEY.md §2.9): brute-force cosine kNN,
   * per-label centroids, LSH- and IVF-bucketed approximate NN, cosine
@@ -157,7 +158,7 @@ object Vectors {
     pred.groupBy(col("la").as("label"))
       .agg(count(lit(1)).as("n"),
         count_if(col("pred") === col("la")).as("n_correct"),
-        Recon.ratioRound(count_if(col("pred") === col("la")),
+        Exact.ratioRound(count_if(col("pred") === col("la")),
           count(lit(1)), 4).as("acc"))
       .orderBy("label")
   }
@@ -192,7 +193,7 @@ object Vectors {
       .agg(sum(round(col("v").cast("double") * 1e9, 0).cast("long")).as("ns"),
         count(lit(1)).as("n"))
       .select(col("label"), col("pos"),
-        (Recon.ratioScaled(col("ns"), col("n"), 0).cast("double") / 1e9)
+        (Exact.ratioScaled(col("ns"), col("n"), 0).cast("double") / 1e9)
           .as("c"))
       .orderBy("label", "pos")
 
@@ -225,7 +226,7 @@ object Vectors {
     * `list_inner_product`, the ann_ivf-proven parity); per-vector
     * distances round 6 dp into micro-longs before the exact mean (the
     * mean and the separation ratio are integer/integer quotients —
-    * [[graft.ops.Recon.ratioRound]] half-away exact arithmetic);
+    * [[Exact.ratioRound]] half-away exact arithmetic);
     * inter-centroid distances compute driver-side over the SAME
     * centroid doubles with the same association, rounded by the
     * oracle's OWN operational semantics (std::round(x·1e6)/1e6);
@@ -289,23 +290,23 @@ object Vectors {
       .filter(col("embedding").isNotNull)
       .select(col("label"), col("embedding").cast("array<double>").as("x"))
       .withColumn("cv", cvExpr)
-      .withColumn("d6m", round(round(d2, 6) * 1e6, 0).cast("long"))
+      .withColumn("d6m", Exact.micros(d2))
       .groupBy("label")
       .agg(count(lit(1)).as("n_vecs"), sum(col("d6m")).as("sm"))
       .join(broadcast(near), Seq("label"))
       // intra mean and the separation ratio are integer/integer
-      // quotients (micro-long sums, micro-long means) — Recon.ratioRound
+      // quotients (micro-long sums, micro-long means) — Exact.ratioRound
       // half-away exact arithmetic, the supplier_scorecard tie class;
       // im6 is the mean recovered as its exact micro-long so the ratio
       // clears both denominators, and im6 > 0 guards the division
       .withColumn("im6",
-        round(Recon.ratioRound(col("sm"), Recon.micro(col("n_vecs")), 6)
+        round(Exact.ratioRound(col("sm"), Exact.micro(col("n_vecs")), 6)
           * 1e6, 0).cast("long"))
       .select(col("label"), col("n_vecs"),
         (col("im6").cast("double") / 1e6).as("intra_mean_d2"),
         col("nearest_label"), col("inter_d2"),
         when(col("im6") > 0 && col("inter_d2").isNotNull,
-          Recon.ratioRound(round(col("inter_d2") * 1e6, 0).cast("long"),
+          Exact.ratioRound(round(col("inter_d2") * 1e6, 0).cast("long"),
             col("im6"), 6))
           .as("separation"))
       .orderBy("label")
@@ -564,9 +565,9 @@ object Vectors {
         sum(when(col("asim") === col("esim"), 1L).otherwise(0L)).as("n_tie_match"))
       .select(col("n_vectors"), col("n_found"), col("n_id_match"),
         col("n_tie_match"),
-        Recon.ratioRound(col("n_id_match"), col("n_vectors"), 6)
+        Exact.ratioRound(col("n_id_match"), col("n_vectors"), 6)
           .as("recall_id"),
-        Recon.ratioRound(col("n_tie_match"), col("n_vectors"), 6)
+        Exact.ratioRound(col("n_tie_match"), col("n_vectors"), 6)
           .as("recall_tie"))
   }
 
@@ -611,27 +612,25 @@ object Vectors {
     val scale = array_max(transform(v, x => abs(x)))
     val deq = transform(v,
       x => round(lit(127) * x / col("scale")) * col("scale") / lit(127))
-    def micro(c: Column) =
-      round(round(c, 6) * 1e6, 0).cast("long")
     val perRow = Tables.embeddings(spark, dir)
       .select(col("label"), col("embedding").cast("array<double>").as("v"))
       .withColumn("scale", scale)
       .filter(col("scale") > 0)
       .withColumn("d", deq)
       .select(col("label"),
-        micro(col("scale")).as("sc6"),
-        micro((dot(v, v) - lit(2) * dot(v, col("d")) + dot(col("d"), col("d")))
+        Exact.micros(col("scale")).as("sc6"),
+        Exact.micros((dot(v, v) - lit(2) * dot(v, col("d")) + dot(col("d"), col("d")))
           / size(v) * lit(1e6)).as("mse6"),
-        micro(dot(v, col("d"))
+        Exact.micros(dot(v, col("d"))
           / (sqrt(dot(v, v)) * sqrt(dot(col("d"), col("d"))))).as("cos6"))
     perRow.groupBy("label")
       .agg(count(lit(1)).as("n"),
-        Recon.ratioRound(sum(col("sc6")),
-          Recon.micro(count(lit(1))), 6).as("avg_scale"),
-        Recon.ratioRound(sum(col("mse6")),
-          Recon.micro(count(lit(1))), 6).as("avg_mse_x1e6"),
-        Recon.ratioRound(sum(col("cos6")),
-          Recon.micro(count(lit(1))), 6).as("avg_cosine"))
+        Exact.ratioRound(sum(col("sc6")),
+          Exact.micro(count(lit(1))), 6).as("avg_scale"),
+        Exact.ratioRound(sum(col("mse6")),
+          Exact.micro(count(lit(1))), 6).as("avg_mse_x1e6"),
+        Exact.ratioRound(sum(col("cos6")),
+          Exact.micro(count(lit(1))), 6).as("avg_cosine"))
       .orderBy("label")
   }
 
@@ -753,9 +752,9 @@ object Vectors {
       .filter(col("rn") === 1)
       .groupBy(col("m").as("subspace"), col("cid").as("centroid"))
       .agg(count(lit(1)).as("n_assigned"),
-        sum(round(round(col("d2"), 6) * 1e6, 0).cast("long")).as("dm"))
+        sum(Exact.micros(col("d2"))).as("dm"))
       .select(col("subspace"), col("centroid"), col("n_assigned"),
-        Recon.ratioRound(col("dm"), Recon.micro(col("n_assigned")), 6)
+        Exact.ratioRound(col("dm"), Exact.micro(col("n_assigned")), 6)
           .as("mean_distortion"))
       .orderBy("subspace", "centroid")
   }
@@ -837,7 +836,7 @@ object Vectors {
       .filter(col("embedding").isNotNull &&
         !exists(col("embedding"), v => v.isNull))
       .select(transform(col("embedding"), v =>
-        round(round(v.cast("double"), 6) * 1e6, 0).cast("long")).as("value"))
+        Exact.micros(v.cast("double"))).as("value"))
     gramOf(em)
   }
 
@@ -860,7 +859,6 @@ object Vectors {
     * mint a phantom j = d + 1 pair. Used by [[dimCorrelation]] (value
     * moments) and [[spearmanRedundancy]] (rank moments). */
   private def gramPairMoments(gram: DataFrame): DataFrame = {
-    val dec = DecimalType(38, 0)
     gram.select(expr(
       "inline(flatten(transform(sequence(1, d - 1), i -> " +
         "transform(sequence(i + 1, d), j -> struct(i, j, " +
@@ -872,12 +870,12 @@ object Vectors {
         "element_at(g, cast(2 + d + (i-1)*(2*d-i+2) div 2 + (j-i+1) AS int)) AS sij" +
         ")))))"))
       .select(col("i"), col("j"),
-        (col("n").cast(dec) * col("sij")
-          - col("sxi").cast(dec) * col("sxj")).as("num"),
-        (col("n").cast(dec) * col("sxxi")
-          - col("sxi").cast(dec) * col("sxi")).as("denx"),
-        (col("n").cast(dec) * col("sxxj")
-          - col("sxj").cast(dec) * col("sxj")).as("deny"))
+        (col("n").cast(Huge) * col("sij")
+          - col("sxi").cast(Huge) * col("sxj")).as("num"),
+        (col("n").cast(Huge) * col("sxxi")
+          - col("sxi").cast(Huge) * col("sxi")).as("denx"),
+        (col("n").cast(Huge) * col("sxxj")
+          - col("sxj").cast(Huge) * col("sxj")).as("deny"))
   }
 
   /** Top-20 presentation shared by the Gram-moment correlation ops:

@@ -70,7 +70,7 @@ class MemoRegistrySpec extends GraftSpec {
       "Vectors.pqBooks"))
   }
 
-  test("no memo map under ops/ bypasses Memo") {
+  test("no memo map in ops/, Schemas.scala, sources/ or streaming/ bypasses Memo") {
     // a hand-rolled ConcurrentHashMap/TrieMap in an operator module, in
     // Tables (Schemas.scala) or in the source and streaming surfaces is
     // a per-corpus cache outside the registry: MemoRegistry.evict would

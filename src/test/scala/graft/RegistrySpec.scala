@@ -84,7 +84,7 @@ class RegistrySpec extends GraftSpec {
     // double's shortest decimal string while DuckDB multiplies by 10^k
     // first — an integer/integer quotient can tie at scale k and split
     // the engines. Every such presentation must route through
-    // Recon.ratioRound/ratioScaled (exact half-away integer
+    // Exact.ratioRound/ratioScaled (exact half-away integer
     // arithmetic). This walk flags Round(_, k > 0) whose argument is a
     // RATIONAL composition (ints/decimals, +, −, ×, ÷, casts,
     // integer-valued double literals) containing a real division —
@@ -171,7 +171,7 @@ class RegistrySpec extends GraftSpec {
         if (hits.nonEmpty && !allowed(name)) Some(s"$name: ${hits.head}") else None
     }
     assert(offenders.isEmpty,
-      "raw round(int/int, k>0) presentations (route through Recon.ratioRound " +
+      "raw round(int/int, k>0) presentations (route through Exact.ratioRound " +
         s"or add a REVIEWED allowlist entry):\n${offenders.mkString("\n")}")
   }
 
@@ -192,11 +192,12 @@ class RegistrySpec extends GraftSpec {
       s"benched but missing a BASELINE.md budget row: ${unbudgeted.toSeq.sorted}")
   }
 
-  test("README names every recon_ query in the registry") {
+  test("README names every recon_ and streaming_ query in the registry") {
     val src = scala.io.Source.fromFile("README.md", "UTF-8")
     val readme = try src.mkString finally src.close()
     val undocumented = SparkEntry.table.map(_.name)
-      .filter(n => n.startsWith("recon_") && !readme.contains(s"`$n`"))
+      .filter(n => (n.startsWith("recon_") || n.startsWith("streaming_")) &&
+        !readme.contains(s"`$n`"))
     assert(undocumented.isEmpty,
       s"registered but not named in README.md: ${undocumented.sorted}")
   }

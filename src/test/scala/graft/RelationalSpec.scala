@@ -241,8 +241,8 @@ class RelationalSpec extends GraftSpec {
     val rows = Relational.qtyPriceBands(spark, sf).collect()
     val li = Tables.lineitem(spark, sf)
     assert(rows.map(_.getLong(2)).sum === li.count())
-    val totalRev = li.agg(graft.ops.Recon.uncents(
-      sum(graft.ops.Recon.cents(col("l_extendedprice"))))).head().getDouble(0)
+    val totalRev = li.agg(graft.ops.Exact.uncents(
+      sum(graft.ops.Exact.cents(col("l_extendedprice"))))).head().getDouble(0)
     assert(math.abs(rows.map(_.getDouble(3)).sum - totalRev) < 1e-6)
   }
 
@@ -319,7 +319,7 @@ class RelationalSpec extends GraftSpec {
       .join(Tables.supplier(spark, sf).filter(col("s_nationkey") === nk),
         col("l_suppkey") === col("s_suppkey"))
       .groupBy("l_suppkey")
-      .agg(sum(graft.ops.Recon.cents(
+      .agg(sum(graft.ops.Exact.cents(
         col("l_extendedprice") * (lit(1) - col("l_discount")))).as("rc"))
       .collect().map(_.getLong(1).toDouble)
     val tot = rev.sum
@@ -333,8 +333,8 @@ class RelationalSpec extends GraftSpec {
     assert(seg.map(_.getLong(2)).sum ===
       o.select("o_custkey").distinct().count(), "n_cust must partition")
     assert(seg.map(_.getLong(3)).sum === o.count(), "n_orders must total")
-    val spend = o.agg(graft.ops.Recon.uncents(
-      sum(graft.ops.Recon.cents(col("o_totalprice"))))).collect().head.getDouble(0)
+    val spend = o.agg(graft.ops.Exact.uncents(
+      sum(graft.ops.Exact.cents(col("o_totalprice"))))).collect().head.getDouble(0)
     assert(math.abs(seg.map(_.getDouble(4)).sum - spend) < 1e-6,
       "total_spend must reconcile with the global cent sum")
     assert(seg.map(r => (r.getString(0), r.getString(1))).distinct.length ===
