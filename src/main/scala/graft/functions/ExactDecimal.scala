@@ -12,7 +12,7 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, DoubleType}
 
 /** Shared kernel for [[ExactDecimal]] — one implementation for both the
-  * interpreted and generated paths (the [[ChecksumScan]] discipline).
+  * interpreted and generated paths (the [[RowDigest]] discipline).
   *
   * `Cast(x AS DECIMAL(p,s))` on a double is defined as: parse
   * `D = Double.toString(x)` as a BigDecimal, HALF_UP it to scale `s`,

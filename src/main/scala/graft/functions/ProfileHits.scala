@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * extraction delegates to [[CharNgramScan]] so the scorer sees EXACTLY
   * the grams the profile was trained on (including the short-text
   * whole-string gram and multi-byte boundaries). */
-class ProfileHitsScan(n: Int, profile: Map[String, Array[Int]], nLangs: Int)
+class ProfileHitsScan(n: Int, profile: Map[String, Seq[Int]], nLangs: Int)
     extends Serializable {
 
   @transient private lazy val scan = new CharNgramScan(n)
@@ -22,7 +22,7 @@ class ProfileHitsScan(n: Int, profile: Map[String, Array[Int]], nLangs: Int)
   // String decode; rebuilt lazily on each executor after deserialization
   @transient private lazy val table: java.util.HashMap[UTF8String, Array[Int]] = {
     val m = new java.util.HashMap[UTF8String, Array[Int]](profile.size * 2)
-    profile.foreach { case (g, langs) => m.put(UTF8String.fromString(g), langs) }
+    profile.foreach { case (g, langs) => m.put(UTF8String.fromString(g), langs.toArray) }
     m
   }
 
@@ -58,9 +58,11 @@ class ProfileHitsScan(n: Int, profile: Map[String, Array[Int]], nLangs: Int)
   * n languages — bounded by construction, like a broadcast dim) the
   * whole join+aggregate collapses into one linear pass per document:
   * zero-copy gram wrappers probe a UTF8String-keyed table and bump an
-  * int array. Map-only, so at any corpus scale the only thing that
+  * int array. The profile's language lists are immutable `Seq`s, so the
+  * expression prints, and compares, by value: two scorers over equal
+  * profiles are equal, and plan text is the same in every JVM. Map-only, so at any corpus scale the only thing that
   * shuffles afterward is the language-pair confusion matrix. */
-case class ProfileHits(child: Expression, profile: Map[String, Array[Int]],
+case class ProfileHits(child: Expression, profile: Map[String, Seq[Int]],
                        nLangs: Int, n: Int)
     extends NativeUnaryExpression("profile_hits", StringType) {
   require(nLangs >= 1, s"profile_hits: nLangs must be >= 1: $nLangs")
@@ -83,7 +85,7 @@ case class ProfileHits(child: Expression, profile: Map[String, Array[Int]],
 object ProfileHits {
   /** Column entry point: per-language hit counts of `text` against
     * `profile` (gram → ascending language indexes in [0, nLangs)). */
-  def profileHits(text: Column, profile: Map[String, Array[Int]],
+  def profileHits(text: Column, profile: Map[String, Seq[Int]],
                   nLangs: Int, n: Int = 2): Column =
     ExprBridge.column(ProfileHits(ExprBridge.expression(text), profile, nLangs, n))
 }

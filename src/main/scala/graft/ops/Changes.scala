@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Change-data-capture surface (SURVEY §2.1 adjacency): applying an
   * upsert/delete feed to a base snapshot and building type-2 history —
@@ -70,16 +71,49 @@ object Changes {
       .withColumnRenamed(versionCol, "valid_from")
   }
 
+  /** The first `n` rows of [[scd2]]`(df, key, versionCol, tiebreak)` in
+    * (`key`, valid_from, `tiebreak`) order, without shuffling or sorting
+    * the rows the answer never reaches. Before the history window only
+    * rows with `rank() OVER (ORDER BY key) <= n` survive. Spark's
+    * InferWindowGroupLimit plans that as a partial WindowGroupLimit in
+    * each scan task, so at most `n` rows per task plus the ties of its
+    * last key cross one single-partition exchange, and the history
+    * window, already clustered there, needs no exchange of its own.
+    *
+    * The cut is exact: a row's rank is one more than the number of rows
+    * with a strictly smaller key, so every key the first `n` rows can
+    * reach keeps all its rows and lead() sees its whole timeline, and
+    * the rank's ASC NULLS FIRST is the final sort's. Past
+    * `spark.sql.optimizer.windowGroupLimitThreshold` Spark plans no
+    * group limit and the rank would pull the whole frame into one
+    * partition, so there the plain window plus `orderBy.limit` runs. At
+    * scale the one partition holds what the TakeOrderedAndProject the op
+    * ends in reads anyway: `n` rows per scan task plus key ties. */
+  def scd2Head(df: DataFrame, key: String, versionCol: String,
+               tiebreak: String, n: Int): DataFrame = {
+    val threshold = df.sparkSession.conf.get(SQLConf.WINDOW_GROUP_LIMIT_THRESHOLD.key).toInt
+    val head =
+      if (n > threshold) df
+      else {
+        require(!df.columns.contains("__rank"),
+          "scd2Head: input must not already contain a __rank column")
+        df.withColumn("__rank", rank().over(Window.orderBy(col(key))))
+          .filter(col("__rank") <= n)
+          .drop("__rank")
+      }
+    scd2(head, key, versionCol, tiebreak)
+      .orderBy(col(key), col("valid_from"), col(tiebreak))
+      .limit(n)
+  }
+
   /** Harness op: orders as a CDC feed over the customer's "latest order
     * state" — SCD2 history rows with validity ranges, first 500 by
     * (custkey, valid_from, orderkey). */
   def scd2Orders(spark: SparkSession, dir: String): DataFrame =
-    scd2(Tables.orders(spark, dir), "o_custkey", "o_orderdate", "o_orderkey")
+    scd2Head(Tables.orders(spark, dir), "o_custkey", "o_orderdate", "o_orderkey", 500)
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderstatus"),
         col("o_totalprice"), col("valid_from"), col("valid_to"),
         col("is_current"))
-      .orderBy("o_custkey", "valid_from", "o_orderkey")
-      .limit(500)
 
   /** Harness op: a synthetic I/U/D feed applied to a base snapshot of
     * orders, verified by per-status rowcount + exact DECIMAL money sum +

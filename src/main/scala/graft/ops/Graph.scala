@@ -45,7 +45,8 @@ object Graph {
       .distinct())
     // Size-gated broadcast for the per-round joins (round-20 Probe
     // decomposition): the checkpointed label frame is a LogicalRDD
-    // with no stats, so AQE never discovers that a small graph's
+    // carrying its origin plan's ESTIMATED statistics (terabytes for
+    // a few thousand rows), so AQE never discovers that a small graph's
     // label/neighbor-min frames are broadcastable and every round pays
     // full shuffle-join exchanges — on the sf0.1 strong co-purchase
     // graph (14k undirected edges, 6k nodes, 8 rounds) that is most of
@@ -311,7 +312,8 @@ object Graph {
     // measured-gate pattern as [[CcBroadcastEdgeGate]], read off the
     // caps row so it costs NO extra job): the rank/contrib frames are
     // node-sized (3 longs/row, ≤ ~12 MB at the gate) but derive from a
-    // checkpointed LogicalRDD with no stats, so the planner gave every
+    // checkpointed LogicalRDD whose statistics are its origin plan's
+    // terabyte-scale estimates, so the planner gave every
     // one of the 8 contribution joins a full SortMergeJoin — re-sorting
     // and re-exchanging the EDGE-sized side every round. Under the gate
     // the rank side broadcasts (edges are never shuffled at all; the
@@ -601,7 +603,8 @@ object Graph {
       .select(col("s").as("a"), col("t").as("b")))
     // Measured broadcast gate (round-20, the CcBroadcastEdgeGate
     // precedent spread to the census family): the checkpointed edge
-    // frame is a LogicalRDD with NO stats, so AQE never discovers that
+    // frame is a LogicalRDD carrying its origin plan's ESTIMATED stats
+    // (2.7–4.1 TiB for thousands of rows), so AQE never discovers that
     // a small graph's adjacency / degree / common-count frames (each
     // ≤ 2·edges rows) are broadcastable, and all five joins here paid
     // full shuffle exchanges. The count is a ~ms scan of the

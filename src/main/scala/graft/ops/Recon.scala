@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{Checkpoint, Tables}
 import graft.functions.ExactDecimal.exactDecimal
+import graft.functions.Md5ConcatWs.md5ConcatWs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,6 +38,15 @@ object Recon {
     * orders row hash in this object uses (the stream parity op keeps
     * `StreamingOps`' literal Cast). */
   private def hashPrice(price: Column): Column = exactDecimal(price, 12, 2)
+
+  /** [[hashPrice]] of `round(price, 0)`, without Round's per-row
+    * `BigDecimal.valueOf(x).setScale(0, HALF_UP)`: both round the same
+    * `Double.toString(x)` HALF_UP to whole units, so
+    * `CAST(price AS DECIMAL(12,0))` — [[ExactDecimal]]'s primitive
+    * kernel — widened to DECIMAL(12,2) is the same value, the same null
+    * past DECIMAL(12,2)'s range and, under ANSI, the same error class
+    * (RowHashProps checks it). */
+  private def wholeHashPrice(price: Column): Column = hashPrice(exactDecimal(price, 12, 0))
 
   /** The orders demo row hash: (o_custkey, o_orderstatus, [[hashPrice]])
     * through the in-flight [[rowHash64]], or through `hash` where a demo
@@ -93,14 +103,18 @@ object Recon {
     * zero shuffles (round 1 self-joined the table with itself and paid a
     * double scan plus a key shuffle for nothing). Doubles are normalized
     * through DECIMAL(12,2) so the concat text is identical in any engine.
-    * For genuinely two-sided recon (source ≠ target) use [[hashDiffTables]]. */
+    * Each hash is the typed kernel [[graft.functions.Md5ConcatWs]] —
+    * `md5(concat_ws("|", CAST(… AS STRING)))` byte for byte, with the
+    * custkey and the decimal price digested from their typed values
+    * instead of formatted into strings — and the rounded side's price
+    * is [[wholeHashPrice]], not a double `round`. For genuinely
+    * two-sided recon (source ≠ target) use [[hashDiffTables]]. */
   def hashDiff(spark: SparkSession, dir: String): DataFrame = {
-    def rowHash(price: Column) = md5(concat_ws("|",
-      col("o_custkey").cast("string"), col("o_orderstatus"),
-      hashPrice(price).cast("string")))
+    def rowHash(price: Column) =
+      md5ConcatWs("|", Seq(col("o_custkey"), col("o_orderstatus"), price))
     Tables.orders(spark, dir)
-      .select(rowHash(col("o_totalprice")).as("h_src"),
-        rowHash(round(col("o_totalprice"), 0)).as("h_tgt"))
+      .select(rowHash(hashPrice(col("o_totalprice"))).as("h_src"),
+        rowHash(wholeHashPrice(col("o_totalprice"))).as("h_tgt"))
       .filter(col("h_src") =!= col("h_tgt"))
       .agg(count(lit(1)).as("mismatches"))
   }
@@ -260,14 +274,19 @@ object Recon {
     * the native [[graft.functions.RowChecksumMd5]] expression —
     * byte-identical to the Column spelling
     * `md5(concat_ws("|", coalesce(concat(length(s)::string, ":", s),
-    * "~null~"), …))` that every DuckDB twin still renders (ReconSpec
-    * asserts the equivalence on nulls/emoji/pipes), but it streams
-    * each piece into a thread-local digest inside whole-stage codegen
-    * instead of allocating four intermediate strings and a fresh
-    * MessageDigest per row — this is the recon engine's per-row hot
-    * loop at any scale (2.3x measured on the checksum projection). */
+    * "~null~"), …))` with `s = CAST(c AS STRING)` that every DuckDB twin
+    * still renders (ReconSpec and RowHashProps assert the equivalence
+    * on nulls/emoji/pipes and typed columns), but it streams each piece
+    * into a thread-local digest inside whole-stage codegen instead of
+    * allocating four intermediate strings and a fresh MessageDigest per
+    * row — this is the recon engine's per-row hot loop at any scale
+    * (2.3x measured on the checksum projection). The columns go in
+    * uncast: the typed kernel ([[graft.functions.TypedRowHash]]) writes
+    * integral and compact-decimal values' digits itself and casts only
+    * the other types, so the length prefix is still the cast string's
+    * character count. */
   private[graft] def rowChecksumOf(cols: Seq[Column]): Column =
-    graft.functions.RowChecksumMd5.rowChecksumMd5(cols.map(_.cast("string")))
+    graft.functions.RowChecksumMd5.rowChecksumMd5(cols)
 
   /** Null-safe 64-bit row hash for IN-FLIGHT compares (both sides hashed
     * by this session, nothing persisted): each column contributes its
@@ -1100,7 +1119,7 @@ object Recon {
     val month = date_trunc("month", col("o_orderdate"))
     val pSrc = hashPrice(col("o_totalprice"))
     val pTgt = when(col("o_orderdate") >= lit("1997-01-01").cast("timestamp"),
-      hashPrice(round(col("o_totalprice"), 0))).otherwise(pSrc)
+      wholeHashPrice(col("o_totalprice"))).otherwise(pSrc)
     def h(p: Column) = rowHash64(Seq(col("o_orderkey"),
       col("o_custkey"), col("o_orderstatus"), p))
     sameBaseKeys(Tables.orders(spark, dir), col("o_orderkey"), lit(true),

@@ -1248,8 +1248,8 @@ object Text {
         lit(0L).as("n_docs")).limit(0)
     }
     val idx = langs.zipWithIndex.toMap
-    val gramLangs: Map[String, Array[Int]] = rows.groupBy(_.getString(1))
-      .map { case (g, rs) => g -> rs.map(r => idx(r.getString(0))).sorted.toArray }
+    val gramLangs: Map[String, Seq[Int]] = rows.groupBy(_.getString(1))
+      .map { case (g, rs) => g -> rs.map(r => idx(r.getString(0))).sorted.toSeq }
     val langsLit = array(langs.toIndexedSeq.map(lit): _*)
     val hits = graft.functions.ProfileHits
       .profileHits(col("text"), gramLangs, langs.length)

@@ -54,6 +54,34 @@ class ChangesSpec extends GraftSpec {
     assert(hist.nonEmpty)
   }
 
+  test("scd2Head equals the plain history window + orderBy.limit(n)") {
+    import org.apache.spark.sql.DataFrame
+    def plain(df: DataFrame, n: Int) = Changes.scd2(df, "k", "v", "t")
+      .orderBy(col("k"), col("valid_from"), col("t")).limit(n)
+    def same(df: DataFrame, n: Int): Unit = {
+      val got = Changes.scd2Head(df, "k", "v", "t", n)
+      // a frame of at most n rows needs no cut, and Spark plans none
+      if (n < df.count())
+        assert(got.queryExecution.executedPlan.toString.contains("WindowGroupLimit"))
+      assert(got.collect().toSeq === plain(df, n).collect().toSeq, s"n = $n")
+    }
+    val orders = Tables.orders(spark, sf)
+      .select(col("o_custkey").as("k"), col("o_orderdate").as("v"), col("o_orderkey").as("t"))
+    Seq(1, 37, 500).foreach(same(orders, _))
+    // NULL keys sort first; key 2 has three versions tied across the cut
+    // at n = 3 and n = 4; a key's timeline spans both sides of a cut
+    val tied = Seq[(Option[Long], Long, Long)]((None, 5L, 1L), (None, 3L, 2L),
+      (Some(2L), 9L, 3L), (Some(2L), 1L, 4L), (Some(2L), 1L, 5L), (Some(1L), 4L, 6L),
+      (Some(3L), 2L, 7L)).toDF("k", "v", "t")
+    (1 to 8).foreach(same(tied, _))
+    // fewer than n rows
+    same(tied, 500)
+    // past the group-limit threshold the plain form runs
+    val big = Changes.scd2Head(tied, "k", "v", "t", 1001)
+    assert(!big.queryExecution.executedPlan.toString.contains("WindowGroupLimit"))
+    assert(big.collect().toSeq === plain(tied, 1001).collect().toSeq)
+  }
+
   test("mergeUpsertOrders: totals reconcile with a driver-side replay") {
     val got = Changes.mergeUpsertOrders(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(3))).toSeq

@@ -182,7 +182,7 @@ class GraphSpec extends GraftSpec {
     // checks the whole distributed loop, not just its arithmetic
     val pairs = Graph.copurchaseEdges(spark, sf)
       .filter(col("w") >= 2 && col("s") < col("t"))
-      .select("s", "t").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .select("s", "t").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val census = Graph.unionFindLocal(pairs).groupBy(_._2)
       .map { case (lbl, m) => (m.size.toLong, lbl) }.toSeq
       .groupBy(_._1).map { case (cs, xs) =>

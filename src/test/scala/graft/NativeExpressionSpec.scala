@@ -68,7 +68,7 @@ class NativeExpressionSpec extends GraftSpec {
     Case("min_shingle_md5", StringType, MinShingleMd5(_, 3), noText, text),
     Case("ngram_hashes", StringType, NgramHashes(_, 2), noText, text),
     Case("profile_hits", StringType,
-      ProfileHits(_, Map("hé" -> Array(0), "ll" -> Array(0, 1)), 2, 2), noText, text),
+      ProfileHits(_, Map("hé" -> Seq(0), "ll" -> Seq(0, 1)), 2, 2), noText, text),
     Case("simhash64", stringArray, SimHash64(_), noTokens, tokens),
     Case("token_entropy", StringType, TokenEntropy(_), noText, text),
     Case("wav_meta", BinaryType, WavMeta(_), Array.emptyByteArray, wav),
@@ -118,6 +118,37 @@ class NativeExpressionSpec extends GraftSpec {
           .select(ExprBridge.column(c.make(ExprBridge.expression(col("x")))))
       }
       assert(err.getMessage.contains(s"${c.name} expects"), err.getMessage)
+    }
+  }
+
+  test("row hashes: a shipped copy agrees with the generated projection") {
+    import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, IntegerType}
+    val in = Seq(BoundReference(0, IntegerType, nullable = true),
+      BoundReference(1, DecimalType(12, 2), nullable = true),
+      BoundReference(2, StringType, nullable = true),
+      BoundReference(3, DoubleType, nullable = true))
+    val rows = Seq(InternalRow(null, null, null, null),
+      InternalRow(Int.MinValue, Decimal(-50L, 12, 2), utf8("a|b"), 2.5),
+      InternalRow(0, Decimal(0L, 12, 2), noText, -0.0))
+    Seq(Md5ConcatWs("|", in, Some("UTC")), RowChecksumMd5(in, Some("UTC"))).foreach { e =>
+      val interpreted = InterpretedUnsafeProjection.createProjection(Seq(shipped(e)))
+      val generated = GenerateUnsafeProjection.generate(Seq(e))
+      val outs = rows.map { row =>
+        val (i, g) = (interpreted(row).copy(), generated(row).copy())
+        assert(i === g, s"${e.prettyName} on $row")
+        i.getUTF8String(0).toString
+      }
+      assert(outs.distinct.size === rows.size, e.prettyName)
+    }
+  }
+
+  test("profile_hits prints and compares its profile by value") {
+    val in = BoundReference(0, StringType, nullable = true)
+    assert(ProfileHits(in, Map("ab" -> Seq(0, 1)), 2, 2) ===
+      ProfileHits(in, Map("ab" -> Array(0, 1).toSeq), 2, 2))
+    Seq("text_langid", "langid_eval_metrics").foreach { q =>
+      val plan = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
+      assert(plan.contains("profile_hits") && !plan.contains("[I@"), s"$q:\n$plan")
     }
   }
 

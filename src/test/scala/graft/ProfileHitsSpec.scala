@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ProfileHitsSpec extends AnyFunSuite {
   import TestSpark.{sf, spark}
 
-  private def score(text: String, profile: Map[String, Array[Int]],
+  private def score(text: String, profile: Map[String, Seq[Int]],
                     nLangs: Int): Seq[Int] = {
     val arr = new ProfileHitsScan(2, profile, nLangs)
       .hits(UTF8String.fromString(text))
@@ -21,22 +21,22 @@ class ProfileHitsSpec extends AnyFunSuite {
   }
 
   test("per-language occurrence counts, including repeats and zero hits") {
-    val profile = Map("ab" -> Array(0), "ba" -> Array(1))
+    val profile = Map("ab" -> Seq(0), "ba" -> Seq(1))
     // "ababa" bigrams: ab, ba, ab, ba
     assert(score("ababa", profile, 3) === Seq(2, 2, 0))
     assert(score("zzzz", profile, 3) === Seq(0, 0, 0))
   }
 
   test("a gram shared by several languages bumps every owner") {
-    val profile = Map("ab" -> Array(0, 2))
+    val profile = Map("ab" -> Seq(0, 2))
     assert(score("abab", profile, 3) === Seq(2, 0, 2))
   }
 
   test("short-text and multi-byte grams match the CharNgrams contract") {
     // text shorter than n grams as the whole string — a 1-char profile
     // entry trained from short docs must score short docs
-    assert(score("a", Map("a" -> Array(0)), 1) === Seq(1))
-    assert(score("日本語", Map("日本" -> Array(0), "本語" -> Array(1)), 2) === Seq(1, 1))
+    assert(score("a", Map("a" -> Seq(0)), 1) === Seq(1))
+    assert(score("日本語", Map("日本" -> Seq(0), "本語" -> Seq(1)), 2) === Seq(1, 1))
   }
 
   test("executes inside whole-stage codegen over a parquet scan") {
@@ -45,7 +45,7 @@ class ProfileHitsSpec extends AnyFunSuite {
     val path = java.nio.file.Files.createTempDirectory("graft-ph").toString
     Seq((1L, "hehe")).toDF("id", "t").write.mode("overwrite").parquet(path)
     val df = spark.read.parquet(path)
-      .select(col("id"), profileHits(col("t"), Map("he" -> Array(1)), 2).as("h"))
+      .select(col("id"), profileHits(col("t"), Map("he" -> Seq(1)), 2).as("h"))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*(1) Project") && plan.contains("profile_hits"), plan)
     assert(df.collect().head.getSeq[Int](1) === Seq(0, 2))

@@ -101,7 +101,7 @@ class ReconSpec extends GraftSpec {
     val o = Tables.orders(spark, sf)
     val cols = Seq("o_custkey", "o_orderstatus", "o_totalprice")
     val keys = o.select("o_orderkey").orderBy("o_orderkey").limit(9)
-      .collect().map(_.getLong(0))
+      .collect().map(_.getLong(0)).toSeq
     val (perturb, drop, onlyTgt) = (keys.slice(0, 3), keys.slice(3, 6), keys.slice(6, 9))
     val src = o.filter(!col("o_orderkey").isin(onlyTgt: _*))
     val tgt = o.filter(!col("o_orderkey").isin(drop: _*))
@@ -173,7 +173,7 @@ class ReconSpec extends GraftSpec {
   test("reconcileAll: one consolidated report across pairs, all checks localized") {
     val o = Tables.orders(spark, sf)
     val keys = o.select("o_orderkey").orderBy("o_orderkey").limit(6)
-      .collect().map(_.getLong(0))
+      .collect().map(_.getLong(0)).toSeq
     val (perturb, drop, onlySrc) = (keys.slice(0, 2), keys.slice(2, 4), keys.slice(4, 6))
     val src = o.filter(!col("o_orderkey").isin(onlySrc: _*))
     val tgt = o.filter(!col("o_orderkey").isin(drop: _*))
@@ -261,7 +261,7 @@ class ReconSpec extends GraftSpec {
   test("toleranceDiff: within-tolerance drift passes, material drift counts") {
     val o = Tables.orders(spark, sf)
     val keys = o.select("o_orderkey").orderBy("o_orderkey").limit(4)
-      .collect().map(_.getLong(0))
+      .collect().map(_.getLong(0)).toSeq
     val (small, big) = (keys.take(2), keys.drop(2))
     val tgt = o.withColumn("o_totalprice",
       when(col("o_orderkey").isin(small: _*), col("o_totalprice") + 0.2)

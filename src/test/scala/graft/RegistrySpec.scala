@@ -32,7 +32,7 @@ class RegistrySpec extends GraftSpec {
 
   test("unpartitioned WindowExec appears only at the known answer-sized sites") {
     // An unpartitioned window moves ALL data to one partition — the
-    // classic 100 TB cliff. The five allowed sites window frames that
+    // classic 100 TB cliff. The allowed sites window frames that
     // are provably answer-sized (a year grid, a top-k vocab slice, a
     // calendar-day rollup) or size-gated small forms; any NEW query
     // planning one fails here, which replaces the WindowExec warning
@@ -49,7 +49,10 @@ class RegistrySpec extends GraftSpec {
       // (Text.jsLogFrame under JsCoalesceDocsGate — the ntile_funcs
       // precedent; over the gate the op plans joins, no window)
       "text_js_divergence", "text_js_probe_norm", "text_js_probe_interp",
-      "text_js_probe_term", "text_js_probe_agg", "text_js_probe_combine")
+      "text_js_probe_term", "text_js_probe_agg", "text_js_probe_combine",
+      // rank() over the whole orders frame, capped at 500 plus key ties by
+      // the partial WindowGroupLimit in each scan task (Changes.scd2Head)
+      "scd2_history")
     // a query that fails PLANNING here would escape both detection
     // channels (the WindowExec warning is silenced in the harness
     // mains) — collect ANALYSIS failures and fail loud instead of

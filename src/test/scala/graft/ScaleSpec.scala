@@ -567,6 +567,37 @@ class ScaleSpec extends GraftSpec {
     }
   }
 
+  test("recon_hash_diff hashes typed values: no Md5, ConcatWs, Round or cast to string") {
+    import graft.functions.Md5ConcatWs
+    import org.apache.spark.sql.catalyst.expressions.{Cast, ConcatWs, Md5, Round}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.types.StringType
+    val plan = SparkEntry.queries("recon_hash_diff")(spark, sf).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val exprs = plan.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    assert(exprs.count(_.isInstanceOf[Md5ConcatWs]) >= 2, plan)
+    val formatted = exprs.collect {
+      case e @ (_: Md5 | _: ConcatWs | _: Round) => e
+      case c: Cast if c.dataType == StringType => c
+    }
+    assert(formatted.isEmpty, s"$formatted\n$plan")
+  }
+
+  test("scd2_history cuts to the first 500 keys in the scan tasks: no key exchange") {
+    val exec = SparkEntry.queries("scd2_history")(spark, sf)
+      .queryExecution.executedPlan.toString
+    val partial = "WindowGroupLimit \\[o_custkey#\\d+L ASC NULLS FIRST\\], rank\\(o_custkey#\\d+L\\), 500, Partial"
+      .r.findFirstMatchIn(exec)
+    assert(partial.isDefined, exec)
+    val exchanges = "Exchange SinglePartition".r.findAllMatchIn(exec).map(_.start).toSeq
+    assert(exchanges.size == 1 && exchanges.head < partial.get.start,
+      s"the partial limit must run below the one single-partition exchange:\n$exec")
+    assert(!exec.contains("hashpartitioning(o_custkey"),
+      s"the history window must reuse the single partition:\n$exec")
+  }
+
   test("dim stats: single-column scan, one dim-sized exchange, no join") {
     val exec = graft.ops.Vectors.dimStats(spark, sf)
       .queryExecution.executedPlan.toString
